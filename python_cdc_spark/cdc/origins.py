@@ -29,25 +29,47 @@ from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from python_cdc_spark.cdc.pgoutput import EVENT_TAGS
+
+
+def _origin_name(frame_col: str) -> Column:
+    """The name an ``O`` frame carries. All-JVM: it is the trailing
+    cstring of the frame (tag byte + Int64 commit LSN + name + NUL),
+    sliced with binary substring/decode — no UDF."""
+    return F.decode(
+        F.expr(f"substring({frame_col}, 10, length({frame_col}) - 10)"),
+        "UTF-8",
+    )
+
+
+def last_marker_col(frame_col: str = "frame") -> Column:
+    """Aggregate over frames: ``struct(lsn, origin)`` of the last
+    transaction marker by LSN — origin NULL for a BEGIN (reset to
+    local), the name for an Origin frame — or NULL when the frames hold
+    no marker. Non-marker rows have a NULL ordering, which ``max_by``
+    skips, so this composes into any other aggregate over the same
+    frames (one scan answers both)."""
+    tag = F.substring(frame_col, 1, 1)
+    return F.max_by(
+        F.struct(
+            "lsn", F.when(tag == "O", _origin_name(frame_col)).alias("origin")
+        ),
+        F.when(tag.isin("B", "O"), F.col("lsn")),
+    )
 
 
 def txn_markers(frames: DataFrame, frame_col: str = "frame") -> DataFrame:
     """``(lsn, origin)`` for every BEGIN (origin NULL — local) and
-    Origin frame (origin = its name). All-JVM: the name is the
-    trailing cstring of the ``O`` frame (tag byte + Int64 commit LSN +
-    name + NUL), sliced with binary substring/decode — no UDF."""
+    Origin frame (origin = its name)."""
     tag = F.substring(frame_col, 1, 1)
     begins = frames.filter(tag == F.lit("B")).select(
         "lsn", F.lit(None).cast("string").alias("origin")
     )
-    name = F.decode(
-        F.expr(f"substring({frame_col}, 10, length({frame_col}) - 10)"),
-        "UTF-8",
-    )
     origins = frames.filter(tag == F.lit("O")).select(
-        "lsn", name.alias("origin")
+        "lsn", _origin_name(frame_col).alias("origin")
     )
     return begins.unionByName(origins)
 
@@ -68,10 +90,11 @@ def annotate_origins(
     governing marker arrived in an earlier micro-batch.
 
     The occupied-bucket probe runs against ``frames`` (tag-sliced to the
-    event-bearing messages I/U/D/T), not against ``events``: this
-    function's contract is that ``events`` was decoded FROM ``frames``
-    (decode only ever drops frames), so the frame-derived bucket set is
-    a superset of the events' — and a superset is exact here, because a
+    event-bearing messages, ``pgoutput.EVENT_TAGS``), not against
+    ``events``: this function's contract is that ``events`` was decoded
+    FROM ``frames`` (decode only ever drops frames), so the frame-derived
+    bucket set is a superset of the events' — and a superset is exact
+    here, because a
     bucket's carry depends only on the markers BELOW it (extra carry
     rows join no event row). Probing the binary frames avoids running
     the whole Arrow decode once per invocation just to learn which
@@ -86,19 +109,11 @@ def annotate_origins(
     """
     tag = F.substring(frame_col, 1, 1)
     bucket = (F.col("lsn") / F.lit(int(bucket_width))).cast("bigint")
-    # same name slice as txn_markers, gated to O frames (B resets to NULL)
-    name = F.decode(
-        F.expr(f"substring({frame_col}, 10, length({frame_col}) - 10)"),
-        "UTF-8",
-    )
     probe = (
         frames.groupBy(bucket.alias("__b"))
         .agg(
-            F.max(tag.isin("I", "U", "D", "T").cast("int")).alias("__has_ev"),
-            F.max_by(
-                F.struct(F.when(tag == "O", name).alias("origin")),
-                F.when(tag.isin("B", "O"), F.col("lsn")),
-            ).alias("__last"),
+            F.max(tag.isin(*EVENT_TAGS).cast("int")).alias("__has_ev"),
+            last_marker_col(frame_col).alias("__last"),
         )
         .collect()
     )
@@ -240,12 +255,10 @@ def filter_by_origin(
 
 def last_marker(frames: DataFrame, frame_col: str = "frame"):
     """The (lsn, origin) of the feed's final marker, or None — the
-    carry state a streaming consumer persists across micro-batches."""
-    row = (
-        txn_markers(frames, frame_col)
-        .agg(F.max_by(F.struct("lsn", "origin"), "lsn").alias("m"))
-        .first()
-    )
-    if row is None or row["m"] is None:
+    carry state a streaming consumer persists across micro-batches. A
+    caller already aggregating over ``frames`` should fold
+    :func:`last_marker_col` into that aggregate instead (one scan)."""
+    m = frames.agg(last_marker_col(frame_col).alias("m")).first()["m"]
+    if m is None:
         return None
-    return {"lsn": row["m"]["lsn"], "origin": row["m"]["origin"]}
+    return {"lsn": m["lsn"], "origin": m["origin"]}

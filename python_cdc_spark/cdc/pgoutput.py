@@ -57,6 +57,11 @@ from pyspark.sql import functions as F
 
 from python_cdc_spark.schemas import CDC_EVENT_SCHEMA, UNCHANGED_SENTINEL
 
+#: Tags of the frames ``decode_frames`` turns into events (Insert,
+#: Update, Delete, Truncate); every other tag decodes to nothing. Shared
+#: with the origins probe, which must see every event-bearing frame.
+EVENT_TAGS = ("I", "U", "D", "T")
+
 # ---------------------------------------------------------------------------
 # encoding (fixture/test producer side)
 # ---------------------------------------------------------------------------
@@ -371,6 +376,8 @@ def decode_frames(
                 try:
                     buf = bytes(buf)
                     tag = chr(buf[0]) if buf else "?"
+                    if tag not in EVENT_TAGS:
+                        continue
                     if tag == "T":
                         # Truncate: Int32 nrelations, Int8 options
                         # (CASCADE/RESTART IDENTITY — decoded, not
@@ -393,8 +400,6 @@ def decode_frames(
                             out["old_values"].append(None)
                             out["new_values"].append(None)
                             out["ts"].append(ts)
-                        continue
-                    if tag not in ("I", "U", "D"):
                         continue
                     relid = struct.unpack_from(">i", buf, 1)[0]
                     rel = rel_at(relid, int(lsn))

@@ -45,16 +45,6 @@ def enable_table_cache(spark: SparkSession, sf_dir: str) -> None:
             _TABLE_CACHE[key] = df
 
 
-def clear_table_cache() -> None:
-    for df in _TABLE_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _TABLE_CACHE.clear()
-    _SCHEMA_CACHE.clear()
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table. Filters/projections applied by the caller
     push down to the parquet scan (verify with ``.explain``: PushedFilters,

@@ -583,19 +583,6 @@ def incremental_dedup_update(
     return new_comp
 
 
-def _cdc_delta_fingerprint(
-    delta: DataFrame, id_col: str, op_col: str, text_col: str
-) -> str:
-    """Content tag for a CDC delta: like ``_delta_fingerprint`` but the
-    digest covers (op, id, TEXT) — op so an INSERT-then-DELETE of the
-    same ids in two later folds cannot collide, and text (r10 ADVICE)
-    so a second UPDATE wave over the same id multiset with different
-    content cannot alias an earlier fold's tag and rewrite its
-    generation (which would let later generations' evicted lists
-    suppress the newest images)."""
-    return _cdc_delta_fingerprint_and_width(delta, id_col, op_col, text_col)[0]
-
-
 def _corpus_count(spark: SparkSession, path: str, ptr: dict) -> int | None:
     """Pointer-tracked corpus-size ESTIMATE for the reroute-fraction
     checks: base ``n_docs`` (recorded at build/compact) adjusted by
@@ -627,7 +614,14 @@ def _cdc_delta_fingerprint_and_width(
     delta: DataFrame, id_col: str, op_col: str, text_col: str
 ) -> tuple[str, int, int, int]:
     """``(tag, distinct id count, evicted id count, placed id count)``
-    from ONE aggregate action — the fold needs all four (the tag names
+    from ONE aggregate action. The tag is a content tag for the CDC
+    delta: like ``_delta_fingerprint`` but the digest covers (op, id,
+    TEXT) — op so an INSERT-then-DELETE of the same ids in two later
+    folds cannot collide, and text (r10 ADVICE) so a second UPDATE wave
+    over the same id multiset with different content cannot alias an
+    earlier fold's tag and rewrite its generation (which would let later
+    generations' evicted lists suppress the newest images). The fold
+    needs all four (the tag names
     the delta dir; the width feeds the reroute-fraction check; the
     evicted/placed counts maintain the pointer-tracked corpus size),
     and fusing them saves whole Spark jobs per fold (r13 pass)."""

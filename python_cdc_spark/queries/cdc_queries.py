@@ -1036,7 +1036,7 @@ def cdc_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
         frames = spark.read.schema("lsn bigint, ts timestamp, frame binary").parquet(
             wire_dir
         )
-        return _composite_from_wire(spark, sf_dir, root, wire_dir, frames, s_lsn)
+        return _composite_from_wire(spark, sf_dir, root, frames, s_lsn)
 
     mid_txn = (max_eid // 10) // 2
     txn_of = F.floor(F.col("event_id") / 10).cast("long")
@@ -1149,14 +1149,13 @@ def cdc_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames = spark.read.schema("lsn bigint, ts timestamp, frame binary").parquet(
         wire_dir
     )
-    return _composite_from_wire(spark, sf_dir, root, wire_dir, frames, s_lsn)
+    return _composite_from_wire(spark, sf_dir, root, frames, s_lsn)
 
 
 def _composite_from_wire(
     spark: SparkSession,
     sf_dir: str,
     root: str,
-    wire_dir: str,
     frames: DataFrame,
     s_lsn: int,
 ) -> DataFrame:

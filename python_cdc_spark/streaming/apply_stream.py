@@ -377,7 +377,6 @@ class StreamingApplyChanges:
                 F.lit(None).cast("long").alias("del_lsn"),
             )
             .withColumn("bucket", self._bucket(F.col(self.key_col)))
-            .repartition(max(1, self.n_buckets // 4), "bucket")
         )
         if existing is not None:
             # repeat multi-table seed: commit() replaces every touched
@@ -413,13 +412,21 @@ class StreamingApplyChanges:
         aux = [c for c in _AUX_COLS if c in batch.columns]
         if len(aux) != len(_AUX_COLS):
             aux = []  # need BOTH columns for per-table semantics
-        batch = batch.select(
-            "lsn", "operation", "new_values", *aux, F.col(self.key_col)
-        ).withColumn("bucket", self._bucket(F.col(self.key_col)))
+        # The keyed batch is read by two actions: the probe below and the
+        # fold+commit write. Materialise it once (lazily: the probe's job
+        # fills it) so the write reads those blocks instead of re-running
+        # the batch's upstream lineage — for a wire batch, the Python
+        # frame decode, key extraction and the origins window.
+        batch = (
+            batch.select(
+                "lsn", "operation", "new_values", *aux, F.col(self.key_col)
+            )
+            .withColumn("bucket", self._bucket(F.col(self.key_col)))
+            .localCheckpoint(eager=False)
+        )
 
         # one probe job answers both questions (bucket set + truncate
-        # presence) — two separate actions would each re-execute the
-        # batch's upstream lineage (decode, key extraction)
+        # presence)
         probe = (
             batch.groupBy("bucket")
             .agg(
@@ -508,11 +515,11 @@ class StreamingApplyChanges:
             )
         new_state = new_state.withColumn(
             "bucket", self._bucket(F.col(self.key_col))
-        ).repartition(max(1, len(touched)), "bucket")
-        # The store writes a NEW immutable version dir while the fold's
-        # lineage reads the old one (no self-overwrite hazard), then the
-        # manifest swap commits atomically; vacuum reclaims superseded
-        # and orphaned versions.
+        )
+        # The store clusters by bucket and writes a NEW immutable version
+        # dir while the fold's lineage reads the old one (no
+        # self-overwrite hazard), then the manifest swap commits
+        # atomically; vacuum reclaims superseded and orphaned versions.
         self.store.commit(new_state, touched)
         self.store.vacuum(retain_last=self.retention)
         return touched
@@ -603,21 +610,15 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
             with open(self._origin_path) as fh:
                 self._origin_state = json.load(fh)
 
-    def _save_origin_state(self) -> None:
-        import json
+    @staticmethod
+    def _save_json(path: str, obj) -> None:
+        """Atomic tmp+rename save beside the state; the state path's
+        parent may not exist yet (the first batch runs before the store's
+        first commit creates it)."""
+        from python_cdc_spark import fsops
 
-        tmp = self._origin_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self._origin_state, fh)
-        os.replace(tmp, self._origin_path)
-
-    def _save_registry(self) -> None:
-        import json
-
-        tmp = self._registry_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self.registry, fh)
-        os.replace(tmp, self._registry_path)
+        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+        fsops.publish_json(path, obj)
 
     def merge_wire_batch(self, frames: DataFrame, batch_id: int | None = None) -> None:
         """One micro-batch of raw frames: registry refresh → decode → merge.
@@ -627,7 +628,7 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         handful), which runs the Python frame decode nearly serially on
         a wide executor — at 10M events that serialization, not the
         decode loop itself, was the 0.72/decade exponent. The batch is
-        materialized ONCE (so the R-frame/stats aggregate, the decode,
+        materialized ONCE (so the pre-decode aggregate, the decode,
         and the merge all read memory, not three separate file scans),
         and a wide batch is repartitioned to the session's parallelism
         so the decode runs executor-wide; small batches skip the
@@ -649,6 +650,7 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         re-expresses the ROW gate in bytes, so a feed with fat frames
         (large text payloads) widens at the same row count as a lean
         one instead of at 14× fewer rows."""
+        from python_cdc_spark.cdc.origins import last_marker_col
         from python_cdc_spark.cdc.pgoutput import (
             _LSN_MIN,
             _parse_relation_frame,
@@ -664,6 +666,8 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         if in_bytes is not None and in_bytes >= wide_bytes:
             frames = frames.repartition(par)
         frames = frames.localCheckpoint(eager=True)
+        # the one pre-decode scan: lag stamp, row count, the batch's R
+        # frames and the origin carry's last B/O marker
         one = frames.agg(
             F.max("ts").alias("mx"),
             F.count(F.lit(1)).alias("n"),
@@ -674,6 +678,7 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
                     F.struct("lsn", "frame"),
                 )
             ).alias("rels"),
+            last_marker_col().alias("marker"),
         ).first()
         if in_bytes is not None and int(one["n"] or 0) > 0:
             self._bytes_per_row = in_bytes / int(one["n"])
@@ -695,14 +700,13 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
                 relid, rel = _parse_relation_frame(bytes(row["frame"]))
                 versions.setdefault(relid, []).append((int(row["lsn"]), rel))
                 self.registry[relid] = rel  # latest-wins carry for the NEXT batch
-            self._save_registry()
+            self._save_json(self._registry_path, self.registry)
 
         events = decode_frames(self.spark, frames, registry=versions)
         if self.origin != "any":
             from python_cdc_spark.cdc.origins import (
                 annotate_origins,
                 filter_by_origin,
-                last_marker,
             )
 
             st = self._origin_state
@@ -711,7 +715,7 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
                 if batch_id is not None and st["batch_id"] == batch_id
                 else st["after"]
             )
-            marker = last_marker(frames)
+            marker = one["marker"]
             events = filter_by_origin(
                 annotate_origins(
                     self.spark, events, frames, initial_origin=seed
@@ -723,7 +727,7 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
                 "before": seed,
                 "after": marker["origin"] if marker is not None else seed,
             }
-            self._save_origin_state()
+            self._save_json(self._origin_path, self._origin_state)
         self.merge_batch(self.key_extractor(events), batch_id)
         # state is durable now — the capture→applied gap is the e2e lag
         self.record_latency(batch_id, one["mx"], one["n"])

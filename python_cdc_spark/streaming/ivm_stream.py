@@ -92,7 +92,6 @@ class StreamingIncrementalAgg(StreamingApplyChanges):
                 F.min(val).alias("min_dec"),
                 F.max(val).alias("max_dec"),
             )
-            .repartition(max(1, len(touched)), "bucket")
         )
         self.agg_store.commit(per_bucket, touched)
         self.agg_store.vacuum(retain_last=self.retention)

@@ -87,7 +87,6 @@ class StreamingScd2:
                 F.lit(snapshot_lsn).cast("long").alias("lsn"),
             )
             .withColumn("bucket", self._bucket(F.col(self.key_col)))
-            .repartition(max(1, self.n_buckets // 4), "bucket")
         )
         self.store.commit(state, list(range(self.n_buckets)))
 
@@ -140,12 +139,11 @@ class StreamingScd2:
         )
         if closed is not None:
             out = closed.drop("bucket").unionByName(out)
-        out = out.withColumn("bucket", self._bucket(F.col(self.key_col))).repartition(
-            max(1, len(touched)), "bucket"
-        )
+        out = out.withColumn("bucket", self._bucket(F.col(self.key_col)))
         # New immutable version dir + manifest swap: the plan reads the
         # old version's files while writing the new one, and the commit
-        # is crash-atomic (see state_store module docs).
+        # is crash-atomic and clusters by bucket itself (see state_store
+        # module docs).
         self.store.commit(out, touched)
         self.store.vacuum()
 

@@ -33,6 +33,13 @@ unchanged: read / commit / vacuum).
 Scale: per-batch write cost stays O(touched buckets), manifest size is
 O(n_buckets) (a few KB at 64–4096 buckets), and vacuum is O(versions)
 directory removals — nothing here scans the full state.
+
+Clustering is the store's job, not the caller's: ``commit`` hash-
+repartitions its input on ``bucket`` into ``min(touched, parallelism)``
+write tasks. Each bucket lands in exactly one task, so every
+``v<N>/b=<bucket>/`` holds one file, while a 64-bucket commit on a
+4-core executor runs 4 write tasks instead of 64 (a task's fixed cost,
+not its rows, set the commit time of small batches).
 """
 
 from __future__ import annotations
@@ -42,6 +49,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _MANIFEST = "_manifest.json"
 #: sentinel: unconditional manifest save (non-commit callers)
@@ -161,6 +169,12 @@ class BucketedStateStore:
         A touched bucket with no surviving rows is dropped from the
         manifest (its state is now empty).
 
+        The commit owns the bucket clustering, so callers pass ``state``
+        in whatever partitioning their plan left: it is repartitioned on
+        ``bucket`` into ``min(len(touched), defaultParallelism)`` write
+        tasks. A bucket never spans two tasks, so each touched bucket's
+        directory holds exactly one parquet file.
+
         r13: the commit follows the maintained structures'
         stage-and-claim + CAS protocol (fsops): the version's files are
         staged into a writer-private dir, claimed into the first free
@@ -180,11 +194,14 @@ class BucketedStateStore:
             manifest = {"version": 0, "buckets": {}}
         os.makedirs(self.path, exist_ok=True)
         staging = os.path.join(self.path, f"_v_staging_{uuid.uuid4().hex[:12]}")
+        par = int(self.spark.sparkContext.defaultParallelism)
+        n_tasks = max(1, min(len(touched), par))
         # ``b`` duplicates ``bucket`` as the partition column so the data
         # files keep ``bucket`` readable without partition discovery
         # (per-bucket dirs are read individually, basePath-free).
         (
-            state.withColumn("b", state["bucket"])
+            state.repartition(n_tasks, "bucket")
+            .withColumn("b", F.col("bucket"))
             .write.mode("errorifexists")
             .partitionBy("b")
             .parquet(staging)

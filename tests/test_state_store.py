@@ -29,6 +29,39 @@ def test_roundtrip_and_bucket_pruned_read(spark, store):
     assert [(r["key"], r["bucket"]) for r in only0] == [("a", 0)]
 
 
+def test_commit_clusters_one_file_per_bucket(spark, store):
+    """``commit`` owns the bucket clustering: whatever partitioning the
+    caller's plan left, each touched bucket's ``v<N>/b=<bucket>/`` holds
+    exactly one parquet file, written by ``min(touched, parallelism)``
+    tasks — fewer tasks than buckets here."""
+    sc = spark.sparkContext
+    n = 2 * sc.defaultParallelism + 1
+    # round-robin buckets over contiguous input slices: every bucket
+    # arrives spread over all of the input partitions
+    rows = [(f"k{i}", i, i % n) for i in range(10 * n)]
+    df = spark.createDataFrame(rows, "key string, val long, bucket int")
+    sc.setJobGroup("commit_layout", "commit_layout")
+    try:
+        v = store.commit(df, touched=list(range(n)))
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    write_job = max(tracker.getJobIdsForGroup("commit_layout"))
+    write_stage = max(tracker.getJobInfo(write_job).stageIds)
+    assert tracker.getStageInfo(write_stage).numTasks == sc.defaultParallelism < n
+    vdir = os.path.join(store.path, f"v{v}")
+    assert sorted(os.listdir(vdir)) == sorted(
+        [f"b={b}" for b in range(n)] + ["_SUCCESS", "._SUCCESS.crc"]
+    )
+    for b in range(n):
+        files = [
+            f for f in os.listdir(os.path.join(vdir, f"b={b}"))
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1, (b, files)
+    assert store.read().count() == 10 * n
+
+
 def test_untouched_buckets_survive_later_commits(spark, store):
     store.commit(_df(spark, [("a", 1, 0), ("b", 2, 1)]), touched=[0, 1])
     store.commit(_df(spark, [("b", 20, 1)]), touched=[1])

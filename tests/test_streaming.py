@@ -1565,6 +1565,88 @@ def test_wire_stream_origin_filter_across_batches(spark, tmp_path):
     assert fresh._origin_state["after"] is None
 
 
+def _wire_feed(spark, n_txns: int, lsn0: int = 1):
+    """A fixed pgoutput feed as an in-memory (lsn, ts, frame) batch: one
+    Relation frame, then ``n_txns`` two-insert transactions over 50
+    keys, every third one replayed from a remote origin."""
+    import datetime as dt
+
+    from python_cdc_spark.cdc.pgoutput import (
+        encode_begin,
+        encode_commit,
+        encode_insert,
+        encode_origin,
+        encode_relation,
+    )
+
+    frames = [encode_relation(9, "public", "users", ["id", "v"])]
+    for t in range(n_txns):
+        frames.append(encode_begin())
+        if t % 3 == 0:
+            frames.append(encode_origin(99, "region_b"))
+        frames += [
+            encode_insert(9, [str((2 * t + j) % 50), f"{lsn0}-{t}-{j}"])
+            for j in range(2)
+        ]
+        frames.append(encode_commit())
+    t0 = dt.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [(lsn0 + i, t0, bytearray(f)) for i, f in enumerate(frames)],
+        "lsn bigint, ts timestamp, frame binary",
+    )
+
+
+def _wire_applier(spark, state_path, **kw):
+    from python_cdc_spark.streaming import StreamingWireApplyChanges
+
+    return StreamingWireApplyChanges(
+        spark,
+        state_path,
+        key_extractor=lambda ev: ev.withColumn(
+            "key", F.coalesce(F.col("new_values")["id"], F.col("old_values")["id"])
+        ),
+        n_buckets=4,
+        **kw,
+    )
+
+
+def test_wire_batch_creates_missing_state_parent(spark, tmp_path):
+    """The registry and origin-carry files sit beside the state path and
+    are saved before the store's first commit: a state path whose parent
+    directory does not exist yet must not fail the first batch."""
+    state_path = str(tmp_path / "not_yet" / "state")
+    applier = _wire_applier(spark, state_path, origin="none")
+    applier.merge_wire_batch(_wire_feed(spark, 6), batch_id=0)
+    assert os.path.isfile(state_path + "_registry.json")
+    assert os.path.isfile(state_path + "_origin.json")
+    # txns 0 and 3 were region_b's replays (keys 0, 1, 6, 7)
+    assert sorted(int(r["key"]) for r in applier.current_state().collect()) == [
+        2, 3, 4, 5, 8, 9, 10, 11,
+    ]
+
+
+def test_wire_batch_job_count(spark, tmp_path):
+    """Job receipt for one warm wire micro-batch (origin filter on):
+    one pre-decode scan answers the lag stamp, R frames and the origin
+    carry, the keyed batch is materialised once for the bucket probe and
+    the write, and the store writes with executor-width tasks. Each of
+    those lost jobs; a re-added scan or re-run shows up here."""
+    sc = spark.sparkContext
+    applier = _wire_applier(spark, str(tmp_path / "state"), origin="none")
+    applier.merge_wire_batch(_wire_feed(spark, 60), batch_id=0)  # prior state
+    batch = _wire_feed(spark, 60, lsn0=1000)
+    sc.setJobGroup("wire_receipt", "wire_receipt")
+    try:
+        applier.merge_wire_batch(batch, batch_id=1)
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("wire_receipt")
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    assert (len(jobs), stages) == (11, 19)
+    assert applier.current_state().count() == 50
+
+
 def test_fold_plan_auto_detects_bucket_skew(spark, tmp_path):
     """fold_plan='auto' picks the single-shuffle array plan for a
     balanced batch and falls back to the skew-safe argmax plan when one

@@ -176,7 +176,7 @@ def main() -> None:
                 )
             new_state = new_state.withColumn(
                 "bucket", applier._bucket(F.col("key"))
-            ).repartition(max(1, len(touched)), "bucket").localCheckpoint(eager=True)
+            ).localCheckpoint(eager=True)
             phases["fold"].append(time.perf_counter() - t0)
 
             t0 = time.perf_counter()
