@@ -47,12 +47,13 @@ def latest_per_key(
     )
 
 
-def _delete_boundary(events: DataFrame, key_col: str) -> DataFrame:
-    """Per key: the lsn of the last DELETE (row lifetimes restart after
-    it), or -1 if never deleted — plus the key's FIRST event lsn (the
-    state-merge fast-path guard, free in the same aggregate)."""
+def _delete_boundary(events: DataFrame, keys: list[str]) -> DataFrame:
+    """Per key (``keys`` are the grouping columns): the lsn of the last
+    DELETE (row lifetimes restart after it), or -1 if never deleted —
+    plus the key's FIRST event lsn (the state-merge fast-path guard,
+    free in the same aggregate)."""
     return (
-        events.groupBy(key_col)
+        events.groupBy(*keys)
         .agg(
             F.coalesce(
                 F.max(F.when(F.col("operation") == OP_DELETE, F.col("lsn"))),
@@ -63,7 +64,9 @@ def _delete_boundary(events: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def expand_truncates(events: DataFrame, key_col: str) -> DataFrame:
+def expand_truncates(
+    events: DataFrame, key_col: str, bucket_col: str | None = None
+) -> DataFrame:
     """Honor TRUNCATE events (pgoutput ``T`` frames decode to one
     keyless event per relation): a truncate at LSN T clears the whole
     relation, i.e. acts as a DELETE at T for EVERY key of that table.
@@ -77,7 +80,12 @@ def expand_truncates(events: DataFrame, key_col: str) -> DataFrame:
     enumeration reuses the feed's own key set (grouped per table when
     ``schema``/``table`` columns are present, one global boundary
     otherwise). With no truncate in the feed the broadcast side is
-    empty and AQE prunes the join to nothing."""
+    empty and AQE prunes the join to nothing.
+
+    ``bucket_col`` (a function of the key) is carried into the DELETE
+    rows it synthesizes, so a bucket-grouped fold sees them in their
+    key's bucket."""
+    carry = [bucket_col] if bucket_col else []
     is_t = F.col("operation") == "TRUNCATE"
     group_cols = [c for c in ("schema", "table") if c in events.columns]
     rest = events.filter(~is_t)
@@ -85,7 +93,7 @@ def expand_truncates(events: DataFrame, key_col: str) -> DataFrame:
     if group_cols:
         bnd = t.groupBy(*group_cols).agg(F.max("lsn").alias("__trunc_lsn"))
         keyed = (
-            rest.select(*group_cols, key_col)
+            rest.select(*group_cols, key_col, *carry)
             .distinct()
             .join(F.broadcast(bnd), group_cols)
         )
@@ -93,11 +101,13 @@ def expand_truncates(events: DataFrame, key_col: str) -> DataFrame:
         bnd = t.agg(F.max("lsn").alias("__trunc_lsn")).filter(
             F.col("__trunc_lsn").isNotNull()
         )
-        keyed = rest.select(key_col).distinct().crossJoin(F.broadcast(bnd))
+        keyed = (
+            rest.select(key_col, *carry).distinct().crossJoin(F.broadcast(bnd))
+        )
     # synthesize DELETE@T rows matching the feed's full schema
     cols = []
     for c, dtype in rest.dtypes:
-        if c == key_col or c in group_cols:
+        if c == key_col or c in group_cols or c in carry:
             cols.append(F.col(c))
         elif c == "lsn":
             cols.append(F.col("__trunc_lsn").cast(dtype).alias("lsn"))
@@ -109,11 +119,13 @@ def expand_truncates(events: DataFrame, key_col: str) -> DataFrame:
 
 
 def _fold_array(
-    events: DataFrame, key_col: str, with_first_lsn: bool = False
+    events: DataFrame, keys: list[str], with_first_lsn: bool = False
 ) -> DataFrame:
-    """Single-shuffle fold plan: ONE groupBy(key) collects each key's
-    events and a JVM ``aggregate`` over the lsn-sorted array replays
-    them — DELETE resets the accumulator (and records the boundary),
+    """Single-shuffle fold plan: ONE groupBy(key) — over ``keys``, the
+    key led by the carried bucket when there is one, which a feed
+    clustered on that bucket satisfies with no shuffle at all — collects
+    each key's events and a JVM ``aggregate`` over the lsn-sorted array
+    replays them — DELETE resets the accumulator (and records the boundary),
     a non-delete event merges its non-sentinel cells later-wins and
     advances ``last_lsn`` iff it carried any. Catalyst higher-order
     functions throughout; no Python, no extra shuffles.
@@ -161,10 +173,10 @@ def _fold_array(
     if with_first_lsn:
         aggs.append(F.min("lsn").alias("first_lsn"))
     return (
-        events.groupBy(key_col)
+        events.groupBy(*keys)
         .agg(*aggs)
         .select(
-            key_col,
+            *keys,
             # sorted entries match the argmax plan's map key order, so
             # the two plans are value-identical downstream (the driver's
             # hash stringifies maps in entry order)
@@ -185,6 +197,7 @@ def apply_changes_with_tombstones(
     plan: str = "argmax",
     has_truncates: bool | None = None,
     with_first_lsn: bool = False,
+    bucket_col: str | None = None,
 ) -> DataFrame:
     """Fold a CDC feed into per-key state INCLUDING tombstones.
 
@@ -209,49 +222,55 @@ def apply_changes_with_tombstones(
     or ``"array_fold"`` (one shuffle, per-key event-array replay in
     JVM higher-order functions — see :func:`_fold_array` for when each
     wins). Both produce identical values.
+
+    ``bucket_col`` names a column that is a function of the key (the
+    state store's ``bucket``). It becomes the LEADING grouping column of
+    every shuffle and is carried through the fold into the output (last
+    column), so a feed already clustered on it folds with no exchange of
+    its own and the result stays clustered for the store's commit. The
+    values are the same with or without it.
     """
+    keys = [bucket_col, key_col] if bucket_col else [key_col]
+    out = [
+        key_col, "values", "last_lsn", "del_lsn",
+        *(["first_lsn"] if with_first_lsn else []),
+        *([bucket_col] if bucket_col else []),
+    ]
     if has_truncates is None or has_truncates:
-        events = expand_truncates(events, key_col)
+        events = expand_truncates(events, key_col, bucket_col)
     if plan == "array_fold":
-        return _fold_array(events, key_col, with_first_lsn=with_first_lsn)
+        return _fold_array(events, keys, with_first_lsn=with_first_lsn).select(*out)
     if plan != "argmax":
         raise ValueError(f"unknown fold plan {plan!r}")
-    boundaries = _delete_boundary(events, key_col)
+    boundaries = _delete_boundary(events, keys)
     live = (
         events.filter(F.col("operation") != OP_DELETE)
-        .join(boundaries, key_col)
+        .join(boundaries, keys)
         .filter(F.col("lsn") > F.col("__last_delete_lsn"))
     )
     # Explode images to (key, column, value, lsn); the sentinel marks a
     # column NOT carried by this event, so it must not win the argmax.
     cells = (
-        live.select(key_col, "lsn", F.explode("new_values").alias("column", "value"))
+        live.select(*keys, "lsn", F.explode("new_values").alias("column", "value"))
         .filter(F.col("value").isNull() | (F.col("value") != UNCHANGED_SENTINEL))
     )
-    latest_cells = cells.groupBy(key_col, "column").agg(
+    latest_cells = cells.groupBy(*keys, "column").agg(
         F.max_by("value", "lsn").alias("value"), F.max("lsn").alias("__lsn")
     )
-    state = latest_cells.groupBy(key_col).agg(
+    state = latest_cells.groupBy(*keys).agg(
         F.map_from_entries(
             F.array_sort(F.collect_list(F.struct("column", "value")))
         ).alias("values"),
         F.max("__lsn").alias("last_lsn"),
     )
     return (
-        boundaries.join(state, key_col, "left")
-        .select(
-            key_col,
-            "values",
-            "last_lsn",
-            F.when(F.col("__last_delete_lsn") >= 0, F.col("__last_delete_lsn")).alias(
-                "del_lsn"
-            ),
-            *(
-                [F.col("__first_lsn").alias("first_lsn")]
-                if with_first_lsn
-                else []
-            ),
+        boundaries.join(state, keys, "left")
+        .withColumn(
+            "del_lsn",
+            F.when(F.col("__last_delete_lsn") >= 0, F.col("__last_delete_lsn")),
         )
+        .withColumnRenamed("__first_lsn", "first_lsn")
+        .select(*out)
     )
 
 
@@ -261,6 +280,7 @@ def apply_changes_with_tombstones_multi(
     plan: str = "argmax",
     has_truncates: bool | None = None,
     with_first_lsn: bool = False,
+    bucket_col: str | None = None,
 ) -> DataFrame:
     """Tombstoned fold for a MULTI-TABLE feed: state is keyed by
     ``(schema, table, key)``, so equal key values in different tables
@@ -276,11 +296,16 @@ def apply_changes_with_tombstones_multi(
     the expanded feed then folds on a composite key and the table
     identity is split back out into state columns.
 
-    Returns ``(schema, table, key_col, values, last_lsn, del_lsn)``.
+    Returns ``(schema, table, key_col, values, last_lsn, del_lsn)``,
+    plus ``first_lsn`` and then ``bucket_col`` when asked for. As in
+    :func:`apply_changes_with_tombstones`, ``bucket_col`` leads the
+    grouping (ahead of the composite key) and is carried through.
     """
     sep = "\x1f"  # ASCII unit separator — cannot occur in identifiers
     expanded = (
-        events if has_truncates is False else expand_truncates(events, key_col)
+        events
+        if has_truncates is False
+        else expand_truncates(events, key_col, bucket_col)
     )
     composite = expanded.withColumn(
         "__tk",
@@ -295,7 +320,7 @@ def apply_changes_with_tombstones_multi(
     # must not pay a second distinct-keys pass over the composite feed
     folded = apply_changes_with_tombstones(
         composite, "__tk", plan=plan, has_truncates=False,
-        with_first_lsn=with_first_lsn,
+        with_first_lsn=with_first_lsn, bucket_col=bucket_col,
     )
     parts = F.split(F.col("__tk"), sep, 3)
 
@@ -310,6 +335,7 @@ def apply_changes_with_tombstones_multi(
         "last_lsn",
         "del_lsn",
         *(["first_lsn"] if with_first_lsn else []),
+        *([bucket_col] if bucket_col else []),
     )
 
 

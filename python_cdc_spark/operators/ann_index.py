@@ -120,7 +120,14 @@ def needs_refit(out_dir: str, threshold: float = 0.3) -> bool:
 def index_is_current(out_dir: str, fingerprint: str, params: dict) -> bool:
     """True iff a persisted index exists at ``out_dir`` and was built
     from sources matching ``fingerprint`` with the same ``params``."""
-    meta = fsops.read_json(os.path.join(out_dir, "_meta.json"))
+    return meta_is_current(
+        fsops.read_json(os.path.join(out_dir, "_meta.json")), fingerprint, params
+    )
+
+
+def meta_is_current(meta: dict | None, fingerprint: str, params: dict) -> bool:
+    """:func:`index_is_current` on an already-read ``_meta.json`` (None
+    when missing), for callers that use the same meta object further."""
     if meta is None:
         return False
     return meta.get("fingerprint") == fingerprint and meta.get("params") == params

@@ -986,7 +986,7 @@ def cdc_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_update,
     )
     from python_cdc_spark.operators.ann_index import (
-        index_is_current,
+        meta_is_current,
         source_fingerprint,
     )
 
@@ -1008,11 +1008,14 @@ def cdc_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire_dir = os.path.join(root, "wire.parquet")
     wire_fp = source_fingerprint(os.path.join(sf_dir, "events.parquet"))
     wire_meta_path = os.path.join(wire_dir, "_meta.json")
-    wire_current = index_is_current(wire_dir, wire_fp, {"v": 1})
-    prior_meta = fsops.read_json(wire_meta_path) if wire_current else None
+    # one read answers both the currency check and the derived scalar,
+    # so a concurrent fixture rewrite cannot pair a stale verdict with
+    # fresh contents
+    prior_meta = fsops.read_json(wire_meta_path)
+    wire_current = meta_is_current(prior_meta, wire_fp, {"v": 1})
 
     max_eid = None
-    if prior_meta is not None and "derived" in prior_meta:
+    if wire_current and "derived" in prior_meta:
         max_eid = int(prior_meta["derived"]["max_eid"])
 
     if max_eid is None:
@@ -1024,7 +1027,7 @@ def cdc_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     split_eid = max_eid // 2
     s_lsn = 8 * split_eid
 
-    if wire_current and prior_meta is not None and "derived" not in prior_meta:
+    if wire_current and "derived" not in prior_meta:
         # legacy fixture (pre-r14): backfill the derived scalar once
         # (atomic replace; idempotent content, so a concurrent backfill
         # is harmless)

@@ -18,8 +18,11 @@ format (Delta/Iceberg MERGE) remains the managed-production upgrade.
 
 Scale design: state is hash-bucketed on key into ``n_buckets``
 partitions; a micro-batch rewrites ONLY the buckets its keys touch
-(the store reads and commits per-bucket directories), so per-batch cost
-is O(batch + touched_state), not O(total_state).
+(the store reads just the touched buckets' rows and commits them as a
+new version of one file per write task), so per-batch cost is
+O(batch + touched_state), not O(total_state). The fold groups on
+``(bucket, key)`` and, on the array plan, starts from the store's own
+bucket clustering, so fold and commit share one shuffle.
 """
 
 from __future__ import annotations
@@ -482,12 +485,12 @@ class StreamingApplyChanges:
                     "multi-table stream)"
                 )
 
-        events = batch.drop("bucket")
         fold = (
             apply_changes_with_tombstones_multi
             if aux
             else apply_changes_with_tombstones
         )
+        bucket = self._bucket(F.col(self.key_col))
         if (
             self.merge_plan == "state_merge"
             and prior is not None
@@ -497,29 +500,38 @@ class StreamingApplyChanges:
             # late keys fall back to replay inside the operator
             self.last_merge_plan = "state_merge"
             new_state = merge_state_with_batch(
-                prior.drop("bucket"), events, self.key_col, plan=plan
-            )
+                prior.drop("bucket"), batch.drop("bucket"), self.key_col,
+                plan=plan,
+            ).withColumn("bucket", bucket)
         else:
             # replay plan: prior state re-encoded as events rides
             # through the same fold as the batch. Tombstoned fold:
             # every previously-present key yields a row, so a touched
             # bucket can never silently vanish from the commit.
             self.last_merge_plan = "replay"
+            events = batch
             if prior is not None:
                 events = events.unionByName(
                     self._state_as_events(prior.drop("bucket"))
+                    .withColumn("bucket", bucket)
                 )
+            if plan == "array_fold":
+                # Cluster the fold input exactly as the commit will: the
+                # fold's groupBy(bucket, key) then needs no exchange, and
+                # Spark drops the commit's own repartition (the
+                # partitioning already matches), so the fold runs inside
+                # the write tasks. The argmax plan is left alone — its
+                # per-column shuffles are its hot-key protection — and
+                # the commit clusters its output instead.
+                events = self.store.cluster(events, touched)
             new_state = fold(
                 events, self.key_col,
-                plan=plan, has_truncates=has_truncate,
+                plan=plan, has_truncates=has_truncate, bucket_col="bucket",
             )
-        new_state = new_state.withColumn(
-            "bucket", self._bucket(F.col(self.key_col))
-        )
-        # The store clusters by bucket and writes a NEW immutable version
-        # dir while the fold's lineage reads the old one (no
-        # self-overwrite hazard), then the manifest swap commits
-        # atomically; vacuum reclaims superseded and orphaned versions.
+        # The store writes a NEW immutable version dir while the fold's
+        # lineage reads the old one (no self-overwrite hazard), then the
+        # manifest swap commits atomically; vacuum reclaims superseded
+        # and orphaned versions.
         self.store.commit(new_state, touched)
         self.store.vacuum(retain_last=self.retention)
         return touched

@@ -11,17 +11,20 @@ transactional table formats (Delta/Iceberg) use, reduced to exactly what
 the bucketed-state access pattern needs:
 
 - Data files are IMMUTABLE. Version ``N`` of the state writes only the
-  touched buckets under ``<path>/v<N>/b=<bucket>/``; nothing is ever
-  overwritten in place.
+  touched buckets' rows, as plain ``<path>/v<N>/part-*.parquet`` files;
+  nothing is ever overwritten in place.
 - A single JSON manifest maps bucket → the version that holds its
   current data. Commit = write the new version's files, then swap the
   manifest via write-temp + atomic rename. A crash anywhere before the
   rename leaves the old manifest — and therefore a fully consistent
   old state — in place; the orphaned ``v<N>`` directory is garbage,
   reclaimed by :meth:`vacuum`.
-- Reads resolve the manifest to a list of bucket directories and read
-  exactly those (partition-pruned by construction: a touched-bucket
-  read lists only the touched buckets' paths).
+- Reads group the live buckets by the version that holds them and scan
+  each of those version dirs once, filtered to ``bucket IN (the
+  buckets the manifest maps to that version)``; the scans are unioned.
+  The filter is what makes the layout correct, not only fast: a
+  version dir still holds the rows of buckets that a later version has
+  rewritten, and those stale rows must never be served.
 
 Single-writer by design: ``foreachBatch`` serializes micro-batches, so
 no manifest lock is needed. The atomic-rename primitive is
@@ -34,30 +37,42 @@ Scale: per-batch write cost stays O(touched buckets), manifest size is
 O(n_buckets) (a few KB at 64–4096 buckets), and vacuum is O(versions)
 directory removals — nothing here scans the full state.
 
-Clustering is the store's job, not the caller's: ``commit`` hash-
-repartitions its input on ``bucket`` into ``min(touched, parallelism)``
-write tasks. Each bucket lands in exactly one task, so every
-``v<N>/b=<bucket>/`` holds one file, while a 64-bucket commit on a
-4-core executor runs 4 write tasks instead of 64 (a task's fixed cost,
-not its rows, set the commit time of small batches).
+Layout (manifest ``"format": 2``): one file per write task, not one per
+bucket. ``commit`` hash-repartitions its input on ``bucket`` into
+``min(touched, parallelism)`` write tasks (:meth:`BucketedStateStore.
+cluster`), sorts each task's rows by bucket and writes one file per
+task, so each bucket's rows sit in exactly one file of its version and
+a 64-bucket commit on a 4-core executor creates 4 files instead of 64
+(at micro-batch sizes a file's create, checksum and committer rename
+cost more than its rows). A caller that ends its plan in ``cluster``
+(the streaming apply fold) gets the commit's repartition dropped by
+Spark, whose partitioning check finds the input already clustered; its
+work then runs inside the write tasks. Manifests of the earlier
+directory-per-bucket layout carry no ``format`` and are refused with a
+``ValueError`` — drop the state and its streaming checkpoint and
+rebuild.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from python_cdc_spark import fsops
 
 _MANIFEST = "_manifest.json"
-#: sentinel: unconditional manifest save (non-commit callers)
-_UNCONDITIONAL = object()
+#: on-disk layout version every manifest records (module docstring)
+_FORMAT = 2
 
 
 class BucketedStateStore:
-    """Versioned bucket-partitioned parquet state with atomic commits."""
+    """Versioned bucketed parquet state with atomic commits."""
 
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
@@ -69,22 +84,32 @@ class BucketedStateStore:
     def _manifest_path(self) -> str:
         return os.path.join(self.path, _MANIFEST)
 
+    @staticmethod
+    def _checked(manifest: dict | None, path: str) -> dict:
+        """``manifest`` (an empty one when ``None``), refusing any layout
+        but the current one."""
+        if manifest is None:
+            return {"format": _FORMAT, "version": 0, "buckets": {}}
+        if manifest.get("format") != _FORMAT:
+            raise ValueError(
+                f"{path}: state store manifest has format "
+                f"{manifest.get('format', 1)}, this engine reads format "
+                f"{_FORMAT}; drop the state and its streaming checkpoint "
+                "and rebuild"
+            )
+        return manifest
+
     def _load_manifest(self) -> dict:
-        if not os.path.isfile(self._manifest_path):
-            return {"version": 0, "buckets": {}}
-        with open(self._manifest_path) as fh:
-            return json.load(fh)
+        manifest = None
+        if os.path.isfile(self._manifest_path):
+            with open(self._manifest_path) as fh:
+                manifest = json.load(fh)
+        return self._checked(manifest, self._manifest_path)
 
-    def _save_manifest(self, manifest: dict, expected_token=_UNCONDITIONAL) -> None:
-        from python_cdc_spark import fsops
-
-        os.makedirs(self.path, exist_ok=True)
-        if expected_token is _UNCONDITIONAL:
-            fsops.publish_json(self._manifest_path, manifest)  # the commit point
-        else:
-            # conditional commit point (fsops.cas_publish): a racing
-            # writer's manifest swap loses cleanly
-            fsops.cas_publish(self._manifest_path, manifest, expected_token)
+    def _save_manifest(self, manifest: dict, expected_token) -> None:
+        # conditional commit point (fsops.cas_publish): a racing
+        # writer's manifest swap loses cleanly
+        fsops.cas_publish(self._manifest_path, manifest, expected_token)
         # Per-version snapshot (a few hundred bytes) AFTER the commit
         # point, so a crash in between loses only this version's
         # read_at() — it can never advertise an uncommitted version.
@@ -100,39 +125,12 @@ class BucketedStateStore:
 
     # -- read -------------------------------------------------------------
 
-    def _bucket_dir(self, version: int, bucket: int) -> str:
-        return os.path.join(self.path, f"v{version}", f"b={bucket}")
-
     def read(self, buckets: list[int] | None = None) -> DataFrame | None:
         """Current state as a DataFrame (``bucket`` is a data column), or
         ``None`` if the store holds no state. ``buckets`` restricts the
-        read to those buckets' directories — the partition-pruned path
-        used by touched-bucket merges."""
-        manifest = self._load_manifest()
-        live = manifest["buckets"]
-        if buckets is not None:
-            wanted = {str(b) for b in buckets}
-            live = {b: v for b, v in live.items() if b in wanted}
-        paths = [self._bucket_dir(v, int(b)) for b, v in live.items()]
-        if not paths:
-            return None
-        return self._open(manifest, paths)
-
-    def _open(self, manifest: dict, paths: list[str]) -> DataFrame:
-        """Open bucket dirs with the schema recorded at commit time —
-        a schemaless read costs one parquet-footer-inference Spark job
-        per micro-batch (r13 job-floor pass). Legacy manifests without
-        ``schema`` fall back to inference. Files committed before a
-        column was added read as NULL for it, which is exactly the
-        schema-evolution semantics the apply store wants."""
-        sj = manifest.get("schema")
-        if sj:
-            from pyspark.sql.types import StructType
-
-            return self.spark.read.schema(StructType.fromJson(json.loads(sj))).parquet(
-                *paths
-            )
-        return self.spark.read.parquet(*paths)
+        read to those buckets: only the version dirs holding them are
+        scanned, each filtered to its live buckets (:meth:`_scan`)."""
+        return self._scan(self._load_manifest(), buckets)
 
     def read_at(self, version: int, buckets: list[int] | None = None) -> DataFrame | None:
         """Time travel: the state exactly as committed at ``version``.
@@ -150,16 +148,44 @@ class BucketedStateStore:
             raise FileNotFoundError(f"no committed manifest for version {version}")
         with open(snap) as fh:
             manifest = json.load(fh)
-        live = manifest["buckets"]
-        if buckets is not None:
-            wanted = {str(b) for b in buckets}
-            live = {b: v for b, v in live.items() if b in wanted}
-        paths = [self._bucket_dir(v, int(b)) for b, v in live.items()]
-        if not paths:
+        return self._scan(self._checked(manifest, snap), buckets)
+
+    def _scan(self, manifest: dict, buckets: list[int] | None) -> DataFrame | None:
+        """Union of one scan per version dir holding live buckets, each
+        filtered to ``bucket IN`` the buckets ``manifest`` maps to that
+        version — the filter drops the stale rows an older version still
+        holds for buckets a later version rewrote. Every scan uses the
+        schema recorded at commit time (a schemaless read costs one
+        footer-inference job per micro-batch); files committed before a
+        column was added read as NULL for it, which is exactly the
+        schema-evolution semantics the apply store wants."""
+        wanted = None if buckets is None else {int(b) for b in buckets}
+        by_version: dict[int, list[int]] = {}
+        for b, v in manifest["buckets"].items():
+            if wanted is None or int(b) in wanted:
+                by_version.setdefault(v, []).append(int(b))
+        if not by_version:
             return None
-        return self._open(manifest, paths)
+        schema = StructType.fromJson(json.loads(manifest["schema"]))
+        scans = [
+            self.spark.read.schema(schema)
+            .parquet(os.path.join(self.path, f"v{v}"))
+            .filter(F.col("bucket").isin(sorted(bs)))
+            for v, bs in sorted(by_version.items())
+        ]
+        return functools.reduce(DataFrame.union, scans)
 
     # -- write ------------------------------------------------------------
+
+    def cluster(self, df: DataFrame, touched: list[int]) -> DataFrame:
+        """``df`` hash-partitioned on ``bucket`` into the commit's write
+        tasks, ``min(len(touched), defaultParallelism)``. ``commit``
+        applies it to its input; a caller that applies it first, with
+        the same ``touched``, hands the commit a plan whose partitioning
+        already matches, so Spark drops the commit's repartition and the
+        caller's work between the two runs inside the write tasks."""
+        par = int(self.spark.sparkContext.defaultParallelism)
+        return df.repartition(max(1, min(len(touched), par)), "bucket")
 
     def commit(self, state: DataFrame, touched: list[int]) -> int:
         """Atomically replace the state of ``touched`` buckets.
@@ -170,10 +196,12 @@ class BucketedStateStore:
         manifest (its state is now empty).
 
         The commit owns the bucket clustering, so callers pass ``state``
-        in whatever partitioning their plan left: it is repartitioned on
-        ``bucket`` into ``min(len(touched), defaultParallelism)`` write
-        tasks. A bucket never spans two tasks, so each touched bucket's
-        directory holds exactly one parquet file.
+        in whatever partitioning their plan left: it goes through
+        :meth:`cluster`, is sorted by bucket within each task and
+        written as one ``v<N>/part-*.parquet`` file per task. A bucket
+        never spans two tasks, so each touched bucket's rows sit in
+        exactly one file. The buckets actually written come from an
+        ``Observation`` on the write itself (no extra job).
 
         r13: the commit follows the maintained structures'
         stage-and-claim + CAS protocol (fsops): the version's files are
@@ -187,30 +215,19 @@ class BucketedStateStore:
         (fsops.ConcurrentWriterError) instead of corrupting state."""
         import uuid
 
-        from python_cdc_spark import fsops
-
         manifest, tok = fsops.read_json_with_token(self._manifest_path)
-        if manifest is None:
-            manifest = {"version": 0, "buckets": {}}
+        manifest = self._checked(manifest, self._manifest_path)
         os.makedirs(self.path, exist_ok=True)
         staging = os.path.join(self.path, f"_v_staging_{uuid.uuid4().hex[:12]}")
-        par = int(self.spark.sparkContext.defaultParallelism)
-        n_tasks = max(1, min(len(touched), par))
-        # ``b`` duplicates ``bucket`` as the partition column so the data
-        # files keep ``bucket`` readable without partition discovery
-        # (per-bucket dirs are read individually, basePath-free).
+        obs = Observation()
         (
-            state.repartition(n_tasks, "bucket")
-            .withColumn("b", F.col("bucket"))
+            self.cluster(state, touched)
+            .sortWithinPartitions("bucket")
+            .observe(obs, F.collect_set("bucket").alias("written"))
             .write.mode("errorifexists")
-            .partitionBy("b")
             .parquet(staging)
         )
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(staging)
-            if d.startswith("b=")
-        }
+        written = {int(b) for b in obs.get["written"]}
         new_version = manifest["version"] + 1
         while not fsops.rename_no_clobber(
             staging, os.path.join(self.path, f"v{new_version}")
@@ -224,11 +241,11 @@ class BucketedStateStore:
                 buckets.pop(str(b), None)  # bucket emptied by this batch
         self._save_manifest(
             {
+                "format": _FORMAT,
                 "version": new_version,
                 "buckets": buckets,
                 # recorded so reads open with an explicit schema (zero
-                # inference job); the data files carry exactly the
-                # state columns ("b" is the lifted partition column)
+                # inference job)
                 "schema": state.schema.json(),
             },
             expected_token=tok,
@@ -279,8 +296,6 @@ class BucketedStateStore:
             if entry.startswith("_v_staging_"):
                 # a crashed writer's private staging (age-gated: young
                 # staging may belong to a live concurrent writer)
-                from python_cdc_spark import fsops
-
                 if fsops.staging_is_stale(full):
                     shutil.rmtree(full, ignore_errors=True)
                     removed.append(full)

@@ -163,6 +163,17 @@ def test_fold_plans_agree_truncate_multi_and_hint(spark):
     assert as_map[("public", "t2", "k1")] == {"id": "k1", "b": "7"}
     assert as_map[("public", "t1", "k2")] == {"id": "k2", "c": None}
 
+    # a carried bucket (a function of the key) changes no value, and
+    # every output row, the truncate's synthesized deletes included,
+    # keeps its own key's bucket
+    bkt = F.pmod(F.xxhash64(F.col("key")), F.lit(4))
+    for plan in ("argmax", "array_fold"):
+        out = apply_changes_with_tombstones_multi(
+            df.withColumn("bucket", bkt), "key", plan=plan, bucket_col="bucket"
+        )
+        assert norm_multi(out) == a
+        assert out.filter(F.col("bucket") != bkt).count() == 0
+
     # truncate-free feed: the has_truncates=False fast path must equal
     # the unconditional-expansion default on both plans
     clean = df.filter(F.col("operation") != "TRUNCATE")

@@ -29,13 +29,23 @@ def test_roundtrip_and_bucket_pruned_read(spark, store):
     assert [(r["key"], r["bucket"]) for r in only0] == [("a", 0)]
 
 
-def test_commit_clusters_one_file_per_bucket(spark, store):
+def _files_per_bucket(df):
+    """bucket -> the set of data files its rows were read from."""
+    out: dict[int, set[str]] = {}
+    for r in df.select("bucket", F.input_file_name().alias("f")).collect():
+        out.setdefault(r["bucket"], set()).add(r["f"])
+    return out
+
+
+def test_commit_writes_one_file_per_task(spark, store):
     """``commit`` owns the bucket clustering: whatever partitioning the
-    caller's plan left, each touched bucket's ``v<N>/b=<bucket>/`` holds
-    exactly one parquet file, written by ``min(touched, parallelism)``
-    tasks — fewer tasks than buckets here."""
+    caller's plan left, a version is written by ``min(touched,
+    parallelism)`` tasks — fewer tasks than buckets here — as at most
+    that many parquet files, and each bucket's rows sit in exactly one
+    of them."""
     sc = spark.sparkContext
-    n = 2 * sc.defaultParallelism + 1
+    par = sc.defaultParallelism
+    n = 2 * par + 1
     # round-robin buckets over contiguous input slices: every bucket
     # arrives spread over all of the input partitions
     rows = [(f"k{i}", i, i % n) for i in range(10 * n)]
@@ -48,18 +58,19 @@ def test_commit_clusters_one_file_per_bucket(spark, store):
     tracker = sc.statusTracker()
     write_job = max(tracker.getJobIdsForGroup("commit_layout"))
     write_stage = max(tracker.getJobInfo(write_job).stageIds)
-    assert tracker.getStageInfo(write_stage).numTasks == sc.defaultParallelism < n
+    assert tracker.getStageInfo(write_stage).numTasks == par < n
     vdir = os.path.join(store.path, f"v{v}")
-    assert sorted(os.listdir(vdir)) == sorted(
-        [f"b={b}" for b in range(n)] + ["_SUCCESS", "._SUCCESS.crc"]
-    )
-    for b in range(n):
-        files = [
-            f for f in os.listdir(os.path.join(vdir, f"b={b}"))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == 1, (b, files)
+    parquet = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
+    assert 0 < len(parquet) <= min(n, par)
+    assert not [d for d in os.listdir(vdir) if os.path.isdir(os.path.join(vdir, d))]
+    per_bucket = _files_per_bucket(store.read())
+    assert sorted(per_bucket) == list(range(n))
+    assert all(len(files) == 1 for files in per_bucket.values()), per_bucket
     assert store.read().count() == 10 * n
+    # a one-bucket commit is one task and one file
+    v = store.commit(_df(spark, [("z", 1, 3)]), touched=[3])
+    vdir = os.path.join(store.path, f"v{v}")
+    assert len([f for f in os.listdir(vdir) if f.endswith(".parquet")]) == 1
 
 
 def test_untouched_buckets_survive_later_commits(spark, store):
@@ -75,10 +86,7 @@ def test_crash_before_manifest_swap_preserves_old_state(spark, store):
     store.commit(_df(spark, [("a", 1, 0)]), touched=[0])
     # simulate a crash mid-commit: the new version's files land on disk
     # but the process dies before the manifest rename
-    doomed = _df(spark, [("a", 99, 0)])
-    doomed.withColumn("b", doomed["bucket"]).write.partitionBy("b").parquet(
-        os.path.join(store.path, "v2")
-    )
+    _df(spark, [("a", 99, 0)]).write.parquet(os.path.join(store.path, "v2"))
     got = [(r["key"], r["val"]) for r in store.read().collect()]
     assert got == [("a", 1)]  # old manifest, old state — fully consistent
     # recovery: the orphan is unreferenced garbage, vacuum reclaims it
@@ -111,13 +119,50 @@ def test_empty_store_reads_none(store):
     assert store.vacuum() == []
 
 
-def test_read_filters_are_path_pruned(spark, store):
-    """A touched-bucket read lists only the touched buckets' dirs — the
-    scan never opens untouched buckets' files."""
+def test_read_scans_only_versions_holding_wanted_buckets(spark, store):
+    """A touched-bucket read opens only the version dirs the manifest
+    maps those buckets to — the scan never opens a version that holds
+    none of them."""
     store.commit(_df(spark, [("a", 1, 0), ("b", 2, 1), ("c", 3, 2)]), [0, 1, 2])
-    df = store.read([1])
-    files = [r[0] for r in df.select(F.input_file_name()).distinct().collect()]
-    assert files and all("/b=1/" in f for f in files)
+    store.commit(_df(spark, [("b", 20, 1)]), [1])
+    files = {f for fs in _files_per_bucket(store.read([1])).values() for f in fs}
+    assert files and all("/v2/" in f for f in files)
+    files = {f for fs in _files_per_bucket(store.read([0, 2])).values() for f in fs}
+    assert files and all("/v1/" in f for f in files)
+
+
+def test_read_drops_stale_rows_of_rewritten_buckets(spark, store):
+    """A version dir keeps the rows of buckets a later version rewrote;
+    the per-version bucket filter must hide them from every read and
+    time-travel read."""
+    v1 = store.commit(
+        _df(spark, [("a", 1, 0), ("b", 2, 1), ("c", 3, 2)]), [0, 1, 2]
+    )
+    v2 = store.commit(_df(spark, [("b", 20, 1)]), [1])
+
+    def rows(df):
+        return sorted((r["key"], r["val"], r["bucket"]) for r in df.collect())
+
+    assert rows(store.read()) == [("a", 1, 0), ("b", 20, 1), ("c", 3, 2)]
+    assert rows(store.read([0, 1])) == [("a", 1, 0), ("b", 20, 1)]
+    assert rows(store.read_at(v1)) == [("a", 1, 0), ("b", 2, 1), ("c", 3, 2)]
+    assert rows(store.read_at(v2)) == [("a", 1, 0), ("b", 20, 1), ("c", 3, 2)]
+
+
+def test_legacy_manifest_is_refused(spark, store):
+    """Manifests of the directory-per-bucket layout (no ``format``) are
+    refused by name instead of being read through a fallback path."""
+    os.makedirs(store.path)
+    legacy = os.path.join(store.path, "_manifest.json")
+    with open(legacy, "w") as fh:
+        json.dump({"version": 1, "buckets": {"0": 1}}, fh)
+    for op in (
+        store.read,
+        lambda: store.commit(_df(spark, [("a", 1, 0)]), [0]),
+    ):
+        with pytest.raises(ValueError, match="rebuild") as err:
+            op()
+        assert legacy in str(err.value)
 
 
 def test_crash_replay_commits_over_orphan(spark, store):
@@ -129,10 +174,8 @@ def test_crash_replay_commits_over_orphan(spark, store):
     racing writer's committed dir); the orphan stays unreferenced for
     vacuum."""
     store.commit(_df(spark, [("a", 1, 0)]), touched=[0])
-    doomed = _df(spark, [("a", 99, 0)])
-    doomed.withColumn("b", doomed["bucket"]).write.partitionBy("b").parquet(
-        os.path.join(store.path, "v2")
-    )  # crash happened here: v2 on disk, manifest still at v1
+    # crash happened here: v2 on disk, manifest still at v1
+    _df(spark, [("a", 99, 0)]).write.parquet(os.path.join(store.path, "v2"))
     # the replayed batch (possibly with different data) must succeed
     v = store.commit(_df(spark, [("a", 2, 0)]), touched=[0])
     assert v == 3  # claimed past the orphan, never reused/deleted it

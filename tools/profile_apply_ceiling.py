@@ -50,8 +50,9 @@ def main() -> None:
                     help="how prior state combines with the batch fold")
     ap.add_argument("--store", default="dirs",
                     choices=["dirs", "table"],
-                    help="state backend: bucket directories (default) or "
-                    "a bucketed TABLE (shuffle-free merge join)")
+                    help="state backend: the versioned bucket store, one "
+                    "file per write task (default), or a bucketed TABLE "
+                    "(shuffle-free merge join)")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -161,22 +162,26 @@ def main() -> None:
                 r["bucket"] for r in batch.select("bucket").distinct().collect()
             ]
             prior = applier.store.read(touched)
-            ev = batch.drop("bucket")
+            bucket = applier._bucket(F.col("key"))
             if args.merge == "state_merge" and prior is not None:
                 new_state = merge_state_with_batch(
-                    prior.drop("bucket"), ev, "key", plan=args.plan
-                )
+                    prior.drop("bucket"), batch.drop("bucket"), "key",
+                    plan=args.plan,
+                ).withColumn("bucket", bucket)
             else:
+                ev = batch
                 if prior is not None:
                     ev = ev.unionByName(
                         applier._state_as_events(prior.drop("bucket"))
+                        .withColumn("bucket", bucket)
                     )
+                if args.plan == "array_fold":
+                    ev = applier.store.cluster(ev, touched)
                 new_state = apply_changes_with_tombstones_multi(
-                    ev, "key", plan=args.plan, has_truncates=False
+                    ev, "key", plan=args.plan, has_truncates=False,
+                    bucket_col="bucket",
                 )
-            new_state = new_state.withColumn(
-                "bucket", applier._bucket(F.col("key"))
-            ).localCheckpoint(eager=True)
+            new_state = new_state.localCheckpoint(eager=True)
             phases["fold"].append(time.perf_counter() - t0)
 
             t0 = time.perf_counter()
