@@ -49,9 +49,7 @@ def latest_per_key(
 
 def _delete_boundary(events: DataFrame, keys: list[str]) -> DataFrame:
     """Per key (``keys`` are the grouping columns): the lsn of the last
-    DELETE (row lifetimes restart after it), or -1 if never deleted —
-    plus the key's FIRST event lsn (the state-merge fast-path guard,
-    free in the same aggregate)."""
+    DELETE (row lifetimes restart after it), or -1 if never deleted."""
     return (
         events.groupBy(*keys)
         .agg(
@@ -59,7 +57,6 @@ def _delete_boundary(events: DataFrame, keys: list[str]) -> DataFrame:
                 F.max(F.when(F.col("operation") == OP_DELETE, F.col("lsn"))),
                 F.lit(-1).cast("long"),
             ).alias("__last_delete_lsn"),
-            F.min("lsn").alias("__first_lsn"),
         )
     )
 
@@ -118,9 +115,7 @@ def expand_truncates(
     return rest.unionByName(keyed.select(*cols))
 
 
-def _fold_array(
-    events: DataFrame, keys: list[str], with_first_lsn: bool = False
-) -> DataFrame:
+def _fold_array(events: DataFrame, keys: list[str]) -> DataFrame:
     """Single-shuffle fold plan: ONE groupBy(key) — over ``keys``, the
     key led by the carried bucket when there is one, which a feed
     clustered on that bucket satisfies with no shuffle at all — collects
@@ -136,8 +131,9 @@ def _fold_array(
     per-column spreading), so the argmax plan remains the safer choice
     for feeds with adversarially hot keys. For the streaming state
     merge — where each batch contributes a bounded number of events per
-    key and prior state exactly one — the array plan measures ~2×
-    faster (tools/profile_apply_ceiling.py)."""
+    key and prior state exactly one — the array plan's fold measures
+    ~1.7× faster: 2.34 vs 3.90 s per 125k-event batch
+    (``BENCH_APPLY_PROFILE.json``)."""
     sent = UNCHANGED_SENTINEL.replace("'", "''")
     filt = (
         "map_filter(coalesce(e.new_values, cast(map() as "
@@ -169,12 +165,9 @@ def _fold_array(
         'last_lsn', cast(null as bigint),
         'del_lsn', cast(null as bigint)),
       (acc, e) -> {step})"""
-    aggs = [F.expr(fold).alias("__a")]
-    if with_first_lsn:
-        aggs.append(F.min("lsn").alias("first_lsn"))
     return (
         events.groupBy(*keys)
-        .agg(*aggs)
+        .agg(F.expr(fold).alias("__a"))
         .select(
             *keys,
             # sorted entries match the argmax plan's map key order, so
@@ -186,7 +179,6 @@ def _fold_array(
             ).alias("values"),
             F.col("__a.last_lsn").alias("last_lsn"),
             F.col("__a.del_lsn").alias("del_lsn"),
-            *([F.col("first_lsn")] if with_first_lsn else []),
         )
     )
 
@@ -196,7 +188,6 @@ def apply_changes_with_tombstones(
     key_col: str = "key",
     plan: str = "argmax",
     has_truncates: bool | None = None,
-    with_first_lsn: bool = False,
     bucket_col: str | None = None,
 ) -> DataFrame:
     """Fold a CDC feed into per-key state INCLUDING tombstones.
@@ -233,13 +224,12 @@ def apply_changes_with_tombstones(
     keys = [bucket_col, key_col] if bucket_col else [key_col]
     out = [
         key_col, "values", "last_lsn", "del_lsn",
-        *(["first_lsn"] if with_first_lsn else []),
         *([bucket_col] if bucket_col else []),
     ]
     if has_truncates is None or has_truncates:
         events = expand_truncates(events, key_col, bucket_col)
     if plan == "array_fold":
-        return _fold_array(events, keys, with_first_lsn=with_first_lsn).select(*out)
+        return _fold_array(events, keys).select(*out)
     if plan != "argmax":
         raise ValueError(f"unknown fold plan {plan!r}")
     boundaries = _delete_boundary(events, keys)
@@ -269,7 +259,6 @@ def apply_changes_with_tombstones(
             "del_lsn",
             F.when(F.col("__last_delete_lsn") >= 0, F.col("__last_delete_lsn")),
         )
-        .withColumnRenamed("__first_lsn", "first_lsn")
         .select(*out)
     )
 
@@ -279,7 +268,6 @@ def apply_changes_with_tombstones_multi(
     key_col: str = "key",
     plan: str = "argmax",
     has_truncates: bool | None = None,
-    with_first_lsn: bool = False,
     bucket_col: str | None = None,
 ) -> DataFrame:
     """Tombstoned fold for a MULTI-TABLE feed: state is keyed by
@@ -297,7 +285,7 @@ def apply_changes_with_tombstones_multi(
     identity is split back out into state columns.
 
     Returns ``(schema, table, key_col, values, last_lsn, del_lsn)``,
-    plus ``first_lsn`` and then ``bucket_col`` when asked for. As in
+    plus ``bucket_col`` when asked for. As in
     :func:`apply_changes_with_tombstones`, ``bucket_col`` leads the
     grouping (ahead of the composite key) and is carried through.
     """
@@ -319,8 +307,7 @@ def apply_changes_with_tombstones_multi(
     # expansion already ran (or was ruled out) above — the inner fold
     # must not pay a second distinct-keys pass over the composite feed
     folded = apply_changes_with_tombstones(
-        composite, "__tk", plan=plan, has_truncates=False,
-        with_first_lsn=with_first_lsn, bucket_col=bucket_col,
+        composite, "__tk", plan=plan, has_truncates=False, bucket_col=bucket_col
     )
     parts = F.split(F.col("__tk"), sep, 3)
 
@@ -334,7 +321,6 @@ def apply_changes_with_tombstones_multi(
         "values",
         "last_lsn",
         "del_lsn",
-        *(["first_lsn"] if with_first_lsn else []),
         *([bucket_col] if bucket_col else []),
     )
 
@@ -406,8 +392,7 @@ def state_as_events(state: DataFrame, key_col: str = "key") -> DataFrame:
     row becomes INSERT@last_lsn, a tombstone DELETE@del_lsn (BOTH rows
     for keys that were deleted then re-inserted). Table-identity columns
     (multi-table state) ride along. The replay-path building block of
-    the streaming merge (``streaming/apply_stream.py``) and of
-    :func:`merge_state_with_batch`'s late-event fallback."""
+    the streaming merge (``streaming/apply_stream.py``)."""
     aux = [F.col(c) for c in ("schema", "table") if c in state.columns]
     inserts = state.filter(F.col("values").isNotNull()).select(
         F.col("last_lsn").alias("lsn"),
@@ -424,125 +409,3 @@ def state_as_events(state: DataFrame, key_col: str = "key") -> DataFrame:
         F.col(key_col),
     )
     return inserts.unionByName(deletes)
-
-
-def merge_state_with_batch(
-    prior: DataFrame,
-    batch_events: DataFrame,
-    key_col: str = "key",
-    plan: str = "array_fold",
-) -> DataFrame:
-    """Fold ONLY the batch, then merge the two folded states per key —
-    the cheap alternative to replaying the whole prior state as events
-    through the fold every micro-batch.
-
-    The replay plan's cost is O(batch + state) EVENT-fold work per
-    merge: every prior row is re-encoded as events and pushed through
-    collect_list + array_sort + aggregate again, although it is already
-    folded. Here the prior state crosses only a join, and the per-key
-    combination is a handful of map expressions. Correctness hinges on
-    one precondition per key: every batch event must be LATER than
-    everything the prior row already folded (``first_lsn >
-    greatest(last_lsn, del_lsn)``) — true for every key of an in-order
-    replication stream, where batch N+1's LSNs all exceed batch N's.
-    Keys that violate it (late events below the prior row's horizon —
-    the cross-batch arrivals tombstones exist for) are detected from
-    the two folded rows alone and routed through the full replay fold,
-    so the merge NEVER changes semantics, only the physical plan; a
-    hypothesis property test pins merge == replay across random batch
-    splits including late and boundary-straddling events
-    (tests/test_apply_property.py).
-
-    Merge rules for a key present on both sides (all derivable from
-    the fold's own invariants — values non-null ⇒ last_lsn non-null;
-    tombstone ⇒ del_lsn non-null):
-
-    - batch folded to a tombstone or delete-then-reinsert
-      (``b.del_lsn`` set): the batch row wins outright — a delete
-      resets the accumulator, so nothing of the prior row survives.
-    - batch carried only sentinel cells (``b.values`` null, no
-      delete): the prior row rides through unchanged.
-    - otherwise: per-column later-wins — prior columns not present in
-      the batch map persist, batch columns override
-      (``map_concat(filter(prior), batch)``), entry-sorted to match
-      the fold plans' canonical map order.
-
-    Returns the same ``(aux?, key, values, last_lsn, del_lsn)`` shape
-    as the fold itself. TRUNCATE batches must take the replay path
-    (a truncate's expansion needs the full key set); this function
-    assumes ``batch_events`` contains none.
-    """
-    aux = [c for c in ("schema", "table") if c in prior.columns]
-    keys = aux + [key_col]
-    fold = (
-        apply_changes_with_tombstones_multi
-        if aux
-        else apply_changes_with_tombstones
-    )
-    ev = batch_events.select("lsn", "operation", "new_values", *keys)
-    # The folded batch-state is referenced by BOTH branches (the merge
-    # join and the slow-key detection); an eager checkpoint folds the
-    # batch exactly once per merge instead of once per branch — and in
-    # the streaming path it also stops the second branch from
-    # re-decoding the batch's wire lineage.
-    b = (
-        fold(ev, key_col, plan=plan, has_truncates=False, with_first_lsn=True)
-        .select(
-            *keys,
-            F.col("values").alias("__bv"),
-            F.col("last_lsn").alias("__bl"),
-            F.col("del_lsn").alias("__bd"),
-            F.col("first_lsn").alias("__bf"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    p = prior.select(*keys, "values", "last_lsn", "del_lsn")
-    j = p.join(b, keys, "full_outer")
-
-    pv, pl, pd_ = F.col("values"), F.col("last_lsn"), F.col("del_lsn")
-    bv, bl, bd, bf = F.col("__bv"), F.col("__bl"), F.col("__bd"), F.col("__bf")
-    p_absent = pl.isNull() & pd_.isNull()  # live rows carry last_lsn,
-    b_absent = bf.isNull()                 # tombstones carry del_lsn
-    fast = bf > F.greatest(pl, pd_)        # greatest skips nulls
-    take = b_absent | p_absent | fast
-
-    empty = F.expr("cast(map() as map<string,string>)")
-    merged = F.map_from_entries(
-        F.array_sort(
-            F.map_entries(
-                F.map_concat(
-                    F.map_filter(
-                        F.coalesce(pv, empty),
-                        lambda k, v: ~F.map_contains_key(bv, k),
-                    ),
-                    bv,
-                )
-            )
-        )
-    )
-    res_fast = j.filter(take).select(
-        *keys,
-        F.when(b_absent, pv)
-        .when(p_absent | bd.isNotNull(), bv)
-        .when(bv.isNull(), pv)
-        .otherwise(merged)
-        .alias("values"),
-        F.when(b_absent, pl)
-        .when(p_absent | bd.isNotNull(), bl)
-        .when(bv.isNull(), pl)
-        .otherwise(bl)
-        .alias("last_lsn"),
-        F.greatest(pd_, bd).alias("del_lsn"),
-    )
-
-    # late/straddling keys: full replay, identical to the classic path
-    slow_keys = j.filter(~take).select(*keys)
-    ev_slow = ev.join(slow_keys, keys, "left_semi")
-    pr_slow = p.join(slow_keys, keys, "left_semi")
-    replay = fold(
-        ev_slow.unionByName(state_as_events(pr_slow, key_col)),
-        key_col,
-        plan=plan,
-        has_truncates=False,
-    )
-    return res_fast.unionByName(replay.select(*res_fast.columns))

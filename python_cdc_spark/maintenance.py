@@ -123,35 +123,9 @@ def _finalize_dedup(path: str) -> None:
 
 
 def _vacuum_bm25(spark, path: str, retain_last: int) -> tuple[list[str], set[str]]:
-    from python_cdc_spark.operators.bm25_index import read_ptr
+    from python_cdc_spark.operators.bm25_index import read_ptr, vacuum_plan
 
-    ptr = read_ptr(path)
-    live = set()
-    if ptr["meta"] >= 0:
-        live.add(f"meta_v{ptr['meta']:06d}")
-    for table in ("postings", "doclen"):
-        for b, v in ptr[table].items():
-            live.add(os.path.join(table, f"b{int(b):04d}_v{int(v):06d}"))
-    removed = []
-    for entry in fsops.list_dir(path):
-        # _meta_staging_*: a crashed writer's private staging dir that
-        # never got claimed — reclaim only past the age gate (young
-        # staging may belong to a live concurrent writer)
-        if entry.startswith("meta_v") and entry not in live:
-            removed.append(entry)
-        elif entry.startswith("_meta_staging_") and fsops.staging_is_stale(
-            os.path.join(path, entry)
-        ):
-            removed.append(entry)
-    for table in ("postings", "doclen"):
-        for entry in fsops.list_dir(os.path.join(path, table)):
-            rel = os.path.join(table, entry)
-            if entry.startswith("_staging_"):
-                if fsops.staging_is_stale(os.path.join(path, rel)):
-                    removed.append(rel)
-            elif rel not in live:
-                removed.append(rel)
-    return removed, live
+    return vacuum_plan(path, read_ptr(path))
 
 
 # --- dedup (operators/incremental_dedup.py) ---------------------------------
@@ -202,33 +176,7 @@ def _vacuum_dedup(spark, path: str, retain_last: int) -> tuple[list[str], set[st
 def _vacuum_state_store(spark, path: str, retain_last: int) -> tuple[list[str], set[str]]:
     from python_cdc_spark.streaming.state_store import BucketedStateStore
 
-    store = BucketedStateStore(spark, path)
-    manifest = store._load_manifest()
-    live = {f"v{v}" for v in manifest["buckets"].values()}
-    cur = manifest["version"]
-    # retain_last = superseded versions kept BELOW the current one — the
-    # same meaning as the dedup/rollup kinds (module docstring): the
-    # current manifest is always live, plus retain_last snapshots of
-    # history, so read_at(cur - retain_last) keeps working after vacuum
-    retained = set(range(max(1, cur - retain_last), cur + 1))
-    for version in retained:
-        snap = fsops.read_json(os.path.join(path, f"_manifest_v{version}.json"))
-        if snap is not None:
-            live |= {f"v{v}" for v in snap["buckets"].values()}
-        live.add(f"_manifest_v{version}.json")
-    removed = []
-    for entry in fsops.list_dir(path):
-        if entry.startswith("_manifest_v") and entry.endswith(".json"):
-            if entry not in live:
-                removed.append(entry)
-        elif entry.startswith("_v_staging_") and fsops.staging_is_stale(
-            os.path.join(path, entry)
-        ):
-            # a crashed writer's private staging (age-gated)
-            removed.append(entry)
-        elif entry.startswith("v") and entry[1:].isdigit() and entry not in live:
-            removed.append(entry)
-    return removed, live
+    return BucketedStateStore(spark, path).vacuum_plan(retain_last)
 
 
 # --- rollup catalog (plans/rollup.py) ----------------------------------------

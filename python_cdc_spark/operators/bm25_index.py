@@ -197,33 +197,45 @@ def _meta_dir(path: str, version: int) -> str:
     return os.path.join(path, f"meta_v{int(version):06d}")
 
 
-def _cleanup(path: str, ptr: dict) -> None:
-    """Delete every directory the pointer does not reference — old
-    versions of rewritten buckets, superseded meta, and partial writes
-    from a crashed fold. Pure cleanup: readers only follow the pointer,
-    so a crash mid-cleanup costs disk, never correctness."""
+def vacuum_plan(path: str, ptr: dict) -> tuple[list[str], set[str]]:
+    """``(removable, live)``, both relative to the index root. ``live``
+    is every directory ``ptr`` references; ``removable`` is every other
+    meta/bucket version dir plus crashed writers' staging dirs that
+    never got claimed. YOUNG staging may belong to a live concurrent
+    writer, so staging is removable only past the age gate
+    (``fsops.STAGING_TTL_SECS``). The one derivation behind both the
+    fold's :func:`_cleanup` and ``maintenance.vacuum``."""
     live = {os.path.relpath(_meta_dir(path, ptr["meta"]), path)} if ptr["meta"] >= 0 else set()
     for table in ("postings", "doclen"):
         for b, v in ptr[table].items():
             live.add(os.path.relpath(_bucket_dir(path, table, int(b), v), path))
+    removable = []
     for entry in fsops.list_dir(path):
         if entry.startswith("meta_v") and entry not in live:
-            fsops.remove_tree(os.path.join(path, entry))
+            removable.append(entry)
         elif entry.startswith(("_meta_staging_", "_union_staging_")) and (
             fsops.staging_is_stale(os.path.join(path, entry))
         ):
-            # a crashed writer's private staging never got claimed;
-            # YOUNG staging may belong to a live concurrent writer —
-            # never sweep it mid-write (age gate, fsops.STAGING_TTL_SECS)
-            fsops.remove_tree(os.path.join(path, entry))
+            removable.append(entry)
     for table in ("postings", "doclen"):
-        root = os.path.join(path, table)
-        for entry in fsops.list_dir(root):
+        for entry in fsops.list_dir(os.path.join(path, table)):
+            rel = os.path.join(table, entry)
             if entry.startswith("_staging_"):
-                if fsops.staging_is_stale(os.path.join(root, entry)):
-                    fsops.remove_tree(os.path.join(root, entry))
-            elif os.path.join(table, entry) not in live:
-                fsops.remove_tree(os.path.join(root, entry))
+                if fsops.staging_is_stale(os.path.join(path, rel)):
+                    removable.append(rel)
+            elif rel not in live:
+                removable.append(rel)
+    return removable, live
+
+
+def _cleanup(path: str, ptr: dict) -> None:
+    """Delete every directory the pointer does not reference — old
+    versions of rewritten buckets, superseded meta, and partial writes
+    from a crashed fold (:func:`vacuum_plan`). Pure cleanup: readers
+    only follow the pointer, so a crash mid-cleanup costs disk, never
+    correctness."""
+    for rel in vacuum_plan(path, ptr)[0]:
+        fsops.remove_tree(os.path.join(path, rel))
 
 
 # --- reads -----------------------------------------------------------------
@@ -307,44 +319,11 @@ def _write_meta(
     return v
 
 
-def _write_buckets(
-    path: str, table: str, frame: DataFrame, touched: list[int], versions: dict
-) -> dict[str, int]:
-    """Stage new version dirs for ``touched`` buckets in ONE Spark write
-    (``partitionBy`` into a transient staging dir, then metadata-only
-    renames into the versioned locations — not one job per bucket).
-    Buckets emptied by the fold simply get no directory (and leave the
-    pointer map). Returns the updated bucket→version entries
-    (stringified keys, JSON round-trip-stable)."""
-    # writer-PRIVATE staging dir (random suffix): racing writers stage
-    # side by side instead of clobbering one shared _staging tree
-    import uuid
-
-    staging = os.path.join(path, table, f"_staging_{uuid.uuid4().hex[:12]}")
-    fsops.remove_tree(staging)
-    # duplicate the partition column so the data files keep ``bucket``
-    # (partitionBy lifts its column out of the files); repartition ON the
-    # bucket value first so each bucket directory gets ONE file instead
-    # of one per upstream task — without it a 32-task frame × 64 buckets
-    # staging write fragments into ~2k tiny files and every later
-    # directory-pruned read pays file-open overhead per fragment (a
-    # deployment sizes N_BUCKETS so one file per bucket sits near the
-    # object-store sweet spot)
-    frame.withColumn("pb", F.col("bucket")).repartition(F.col("pb")).write.partitionBy(
-        "pb"
-    ).mode("overwrite").parquet(staging)
-    allowed = {int(b) for b in touched}
-    out = _claim_bucket_slots(path, table, staging, allowed, versions)
-    fsops.remove_tree(staging)
-    return out
-
-
 def _claim_bucket_slots(
     path: str, table: str, staged_root: str, allowed: set[int], versions: dict
 ) -> dict[str, int]:
     """Rename every staged ``pb=<b>`` partition dir under ``staged_root``
-    into its versioned bucket location (metadata-only). Shared by the
-    per-table writer and the fused postings+doclen writer."""
+    into its versioned bucket location (metadata-only)."""
     out = {}
     for entry in fsops.list_dir(staged_root):
         if not entry.startswith("pb="):
@@ -405,8 +384,10 @@ def _write_buckets_fused(
     )
     staging = os.path.join(path, f"_union_staging_{uuid.uuid4().hex[:12]}")
     fsops.remove_tree(staging)
-    # one file per (kind, bucket) — same fragmentation reasoning as
-    # _write_buckets's repartition on the bucket value
+    # Repartition ON (kind, bucket) so each staged bucket dir gets ONE
+    # file instead of one per upstream task: without it a 32-task frame
+    # x 64 buckets fragments into ~2k tiny files and every later
+    # directory-pruned read pays file-open overhead per fragment.
     (
         p_part.unionByName(d_part)
         .withColumn("pb", F.col("bucket"))
@@ -416,9 +397,8 @@ def _write_buckets_fused(
         .parquet(staging)
     )
     allowed = {int(b) for b in touched}
-    # the per-table staging used to create these parents as a side
-    # effect; the fused staging lives at the index root, so a first
-    # build must create them before the renames
+    # the staging lives at the index root, so a first build must create
+    # the per-table parents before the renames
     os.makedirs(os.path.join(path, "postings"), exist_ok=True)
     os.makedirs(os.path.join(path, "doclen"), exist_ok=True)
     p_out = _claim_bucket_slots(

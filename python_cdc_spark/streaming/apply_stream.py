@@ -27,7 +27,6 @@ bucket clustering, so fold and commit share one shuffle.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,7 +36,6 @@ from pyspark.sql.streaming import StreamingQuery
 from python_cdc_spark.cdc.apply import (
     apply_changes_with_tombstones,
     apply_changes_with_tombstones_multi,
-    merge_state_with_batch,
     state_as_events,
 )
 from python_cdc_spark.streaming.state_store import BucketedStateStore
@@ -168,7 +166,6 @@ class StreamingApplyChanges:
         n_buckets: int = 64,
         retention: int = 2,
         fold_plan: str = "auto",
-        merge_plan: str = "replay",
     ) -> None:
         self.spark = spark
         self.state_path = state_path
@@ -177,8 +174,8 @@ class StreamingApplyChanges:
         # Physical fold strategy for the per-batch merge. The streaming
         # merge is the case the single-shuffle array plan was built for:
         # prior state contributes exactly ONE event per key and a batch
-        # a bounded burst, so per-key arrays stay small and the plan is
-        # ~2x the argmax plan's throughput (profile_apply_ceiling.py).
+        # a bounded burst, so per-key arrays stay small and the fold is
+        # ~1.7x faster than the argmax plan's (BENCH_APPLY_PROFILE.json).
         # "auto" (the default) reads the probe's per-bucket histogram
         # and falls back to the skew-safe argmax plan for a batch whose
         # largest bucket is both over auto_skew_ratio x the mean and
@@ -188,29 +185,8 @@ class StreamingApplyChanges:
         self.fold_plan = fold_plan
         self.auto_skew_ratio = 4.0
         self.auto_skew_min_rows = 100_000
-        # How prior state combines with a batch. "replay" (the default)
-        # re-encodes prior state as events and folds batch ∪ state in
-        # ONE single-shuffle array fold. "state_merge" folds only the
-        # batch and full-outer-joins the two folded states
-        # (cdc/apply.merge_state_with_batch; value-identical — merge ==
-        # replay pinned by hypothesis in tests/test_apply_property.py;
-        # late keys auto-fall back to replay). MEASURED (r8,
-        # BENCH_APPLY_PROFILE_r8.json): state_merge LOSES at both
-        # steady-state shapes on local[32] — fold 2.23→3.11 s at
-        # 125k-batch/200k-state and 1.79→2.93 s at 20k-batch — because
-        # the r7 array fold already made re-folding singleton state
-        # events cheap, while the merge pays a batch-fold checkpoint
-        # job plus two join executions (fast filter + slow-key
-        # detection) over the same state rows. Kept as an explicit
-        # plan: it is the shape that wins once state lives in a
-        # BUCKETED table whose join needs no prior-side shuffle — the
-        # named next lever in SCALE.md. TRUNCATE batches always take
-        # the replay plan (expansion needs the key set).
-        self.merge_plan = merge_plan
         #: plan the most recent merge actually used (observability)
         self.last_fold_plan: str | None = None
-        #: state-combination plan the most recent merge actually used
-        self.last_merge_plan: str | None = None
         # versions of history read_at() can time-travel to (storage
         # cost: superseded bucket files for that many commits)
         self.retention = retention
@@ -490,44 +466,29 @@ class StreamingApplyChanges:
             if aux
             else apply_changes_with_tombstones
         )
-        bucket = self._bucket(F.col(self.key_col))
-        if (
-            self.merge_plan == "state_merge"
-            and prior is not None
-            and not has_truncate
-        ):
-            # fold the batch alone, join-merge with prior folded state;
-            # late keys fall back to replay inside the operator
-            self.last_merge_plan = "state_merge"
-            new_state = merge_state_with_batch(
-                prior.drop("bucket"), batch.drop("bucket"), self.key_col,
-                plan=plan,
-            ).withColumn("bucket", bucket)
-        else:
-            # replay plan: prior state re-encoded as events rides
-            # through the same fold as the batch. Tombstoned fold:
-            # every previously-present key yields a row, so a touched
-            # bucket can never silently vanish from the commit.
-            self.last_merge_plan = "replay"
-            events = batch
-            if prior is not None:
-                events = events.unionByName(
-                    self._state_as_events(prior.drop("bucket"))
-                    .withColumn("bucket", bucket)
-                )
-            if plan == "array_fold":
-                # Cluster the fold input exactly as the commit will: the
-                # fold's groupBy(bucket, key) then needs no exchange, and
-                # Spark drops the commit's own repartition (the
-                # partitioning already matches), so the fold runs inside
-                # the write tasks. The argmax plan is left alone — its
-                # per-column shuffles are its hot-key protection — and
-                # the commit clusters its output instead.
-                events = self.store.cluster(events, touched)
-            new_state = fold(
-                events, self.key_col,
-                plan=plan, has_truncates=has_truncate, bucket_col="bucket",
+        # Prior state re-encoded as events rides through the same fold as
+        # the batch. Tombstoned fold: every previously-present key yields
+        # a row, so a touched bucket can never silently vanish from the
+        # commit.
+        events = batch
+        if prior is not None:
+            events = events.unionByName(
+                self._state_as_events(prior.drop("bucket"))
+                .withColumn("bucket", self._bucket(F.col(self.key_col)))
             )
+        if plan == "array_fold":
+            # Cluster the fold input exactly as the commit will: the
+            # fold's groupBy(bucket, key) then needs no exchange, and
+            # Spark drops the commit's own repartition (the partitioning
+            # already matches), so the fold runs inside the write tasks.
+            # The argmax plan is left alone — its per-column shuffles are
+            # its hot-key protection — and the commit clusters its output
+            # instead.
+            events = self.store.cluster(events, touched)
+        new_state = fold(
+            events, self.key_col,
+            plan=plan, has_truncates=has_truncate, bucket_col="bucket",
+        )
         # The store writes a NEW immutable version dir while the fold's
         # lineage reads the old one (no self-overwrite hazard), then the
         # manifest swap commits atomically; vacuum reclaims superseded
@@ -769,89 +730,3 @@ def drop_checkpoint(checkpoint_path: str) -> None:
 
     if os.path.isdir(checkpoint_path):
         shutil.rmtree(checkpoint_path)
-
-
-class StreamingApplyChangesTable:
-    """The r9 lever, wired end-to-end: streaming apply over a BUCKETED
-    TABLE state (``BucketedTableStateStore``) merged with
-    ``cdc/apply.merge_state_with_batch`` — the join plan that loses on
-    plain parquet state (BENCH_APPLY_PROFILE_r8.json) precisely because
-    the prior side must shuffle; a bucketed prior removes that exchange
-    (tools/bench_bucketed_join.py: 2 → 1 exchanges, ~2.2× on the join).
-
-    Deliberately minimal next to :class:`StreamingApplyChanges`: no
-    per-bucket pruning (a bucketed table rewrites the WHOLE state per
-    commit, so this backend fits full-touch merge shapes — the
-    saturation profile — while the directory store keeps the
-    O(touched) contract for localized batches), same fold semantics
-    (TRUNCATE batches and the cold start take the replay fold; steady
-    batches take the state-merge join with its late-event fallback).
-    Value-equality with the batch fold is pinned by
-    ``test_streaming_table_backend_matches_batch``.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_path: str,
-        key_col: str = "key",
-        n_buckets: int = 64,
-        table_name: str | None = None,
-        retention: int = 1,
-        fold_plan: str = "array_fold",
-    ) -> None:
-        from python_cdc_spark.streaming.state_store import (
-            BucketedTableStateStore,
-        )
-
-        self.spark = spark
-        self.key_col = key_col
-        self.fold_plan = fold_plan
-        self.retention = retention
-        name = table_name or (
-            "state_" + hashlib.md5(state_path.encode()).hexdigest()[:12]
-        )
-        self.store = BucketedTableStateStore(
-            spark, state_path, name, key_col=key_col, n_buckets=n_buckets
-        )
-        self.last_merge_plan: str | None = None
-
-    def merge_batch(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        aux = [c for c in _AUX_COLS if c in batch.columns]
-        if len(aux) != len(_AUX_COLS):
-            aux = []
-        events = batch.select(
-            "lsn", "operation", "new_values", *aux, F.col(self.key_col)
-        )
-        has_truncate = bool(
-            events.filter(F.col("operation") == "TRUNCATE").head(1)
-        )
-        prior = self.store.read()
-        fold = (
-            apply_changes_with_tombstones_multi
-            if aux
-            else apply_changes_with_tombstones
-        )
-        if prior is not None and not has_truncate:
-            self.last_merge_plan = "state_merge"
-            new_state = merge_state_with_batch(
-                prior, events, self.key_col, plan=self.fold_plan
-            )
-        else:
-            self.last_merge_plan = "replay"
-            if prior is not None:
-                events = events.unionByName(
-                    state_as_events(prior, self.key_col)
-                )
-            new_state = fold(
-                events, self.key_col,
-                plan=self.fold_plan, has_truncates=has_truncate,
-            )
-        self.store.commit(new_state)
-        self.store.vacuum(retain_last=self.retention)
-
-    def current_state(self) -> DataFrame:
-        state = self.store.read()
-        if state is None:
-            raise ValueError("no state committed yet")
-        return state.filter(F.col("values").isNotNull()).drop("del_lsn")

@@ -254,196 +254,56 @@ class BucketedStateStore:
 
     # -- maintenance ------------------------------------------------------
 
-    def vacuum(self, retain_last: int = 0) -> list[str]:
-        """Delete version directories no manifest entry references —
-        superseded bucket data and orphans from interrupted commits.
-        Safe under the single-writer model (nothing reads a version that
-        the current manifest does not reference). Returns removed dirs.
+    def vacuum_plan(self, retain_last: int = 0) -> tuple[list[str], set[str]]:
+        """``(removable, live)``, both relative to the store path.
 
-        ``retain_last=N`` keeps N SUPERSEDED manifest snapshots below
-        the always-live current one — the same meaning as
-        ``maintenance.vacuum`` and every other maintained structure
-        (maintenance.py module docstring), so ``read_at(cur - N)``
-        survives a vacuum through EITHER path. Pinned equivalent to the
-        unified layer by ``tests/test_maintenance.py`` (r12 verdict
-        "what's wrong" #1: this method previously counted the current
-        version inside the window, giving one fewer time-travel step)."""
-        if not os.path.isdir(self.path):
-            return []
+        ``live`` holds every version dir the current manifest or a
+        retained snapshot references, plus the retained snapshots
+        themselves. ``retain_last=N`` keeps N SUPERSEDED manifest
+        snapshots below the always-live current one, so ``read_at(cur -
+        N)`` keeps working — the meaning every maintained structure
+        gives it (``maintenance.py`` module docstring). ``removable``
+        holds the unreferenced version dirs (superseded bucket data and
+        orphans from interrupted commits), the snapshots outside the
+        window (their data files are about to go) and crashed writers'
+        staging dirs past the age gate (young staging may belong to a
+        live concurrent writer). The one derivation behind both
+        :meth:`vacuum` and ``maintenance.vacuum``."""
         manifest = self._load_manifest()
-        referenced = {v for v in manifest["buckets"].values()}
+        live = {f"v{v}" for v in manifest["buckets"].values()}
         cur = manifest["version"]
-        retained = set(range(max(1, cur - retain_last), cur + 1))
-        for version in retained:
-            snap = os.path.join(self.path, f"_manifest_v{version}.json")
-            if os.path.isfile(snap):
-                with open(snap) as fh:
-                    referenced |= set(json.load(fh)["buckets"].values())
-        removed = []
-        for entry in os.listdir(self.path):
-            full = os.path.join(self.path, entry)
-            # snapshots outside the retention window: their data files
-            # are about to go, so the time-travel entry goes with them
-            # (otherwise one file per commit accumulates forever)
+        for version in range(max(1, cur - retain_last), cur + 1):
+            snap = f"_manifest_v{version}.json"
+            m = fsops.read_json(os.path.join(self.path, snap))
+            if m is not None:
+                live |= {f"v{v}" for v in m["buckets"].values()}
+            live.add(snap)
+        removable = []
+        for entry in fsops.list_dir(self.path):
             if entry.startswith("_manifest_v") and entry.endswith(".json"):
-                try:
-                    version = int(entry[len("_manifest_v"):-len(".json")])
-                except ValueError:
-                    continue
-                if version not in retained:
-                    os.remove(full)  # housekeeping; not a data dir, not reported
+                if entry not in live:
+                    removable.append(entry)
+            elif entry.startswith("_v_staging_") and fsops.staging_is_stale(
+                os.path.join(self.path, entry)
+            ):
+                removable.append(entry)
+            elif entry.startswith("v") and entry[1:].isdigit() and entry not in live:
+                removable.append(entry)
+        return removable, live
+
+    def vacuum(self, retain_last: int = 0) -> list[str]:
+        """Delete what :meth:`vacuum_plan` finds removable. Safe under
+        the single-writer model (nothing reads a version that the
+        current manifest does not reference). Returns the removed dirs;
+        the dropped snapshots are housekeeping and are not reported.
+        Pinned equivalent to ``maintenance.vacuum`` by
+        ``tests/test_maintenance.py``."""
+        removed = []
+        for entry in self.vacuum_plan(retain_last)[0]:
+            full = os.path.join(self.path, entry)
+            if entry.startswith("_manifest_v"):
+                os.remove(full)
                 continue
-            if entry.startswith("_v_staging_"):
-                # a crashed writer's private staging (age-gated: young
-                # staging may belong to a live concurrent writer)
-                if fsops.staging_is_stale(full):
-                    shutil.rmtree(full, ignore_errors=True)
-                    removed.append(full)
-                continue
-            if not entry.startswith("v"):
-                continue
-            try:
-                version = int(entry[1:])
-            except ValueError:
-                continue
-            if version not in referenced:
-                shutil.rmtree(full)
-                removed.append(full)
+            shutil.rmtree(full, ignore_errors=entry.startswith("_v_staging_"))
+            removed.append(full)
         return removed
-
-
-class BucketedTableStateStore:
-    """Versioned state as Spark BUCKETED TABLES — the r9 apply-ceiling
-    lever's storage brick (SCALE.md §CDC apply; premise measured in
-    `tools/bench_bucketed_join.py`: a bucketed prior side removes the
-    state's hash exchange from the merge join, 2 → 1 exchanges and
-    ~2.2× on the join at 200k × 125k).
-
-    Differences from :class:`BucketedStateStore` (the default):
-
-    - Each version is a whole CATALOG TABLE ``<name>_v<N>`` written via
-      ``bucketBy(n_buckets, key_col)`` + ``saveAsTable`` — Spark then
-      reports ``HashPartitioning(key, n)`` from the scan, so a join or
-      groupBy on the key needs NO prior-side shuffle. That is exactly
-      the shape ``cdc/apply.merge_state_with_batch`` wins in.
-    - The trade: a commit rewrites the WHOLE state (bucketed tables
-      cannot selectively replace buckets), so this store fits
-      full-touch merge shapes (every batch touches most buckets — the
-      saturation-profile shape), while the directory store keeps the
-      O(touched) write contract for localized batches. The r9 wiring
-      decision is per-deployment, both stores behind the same
-      read/commit/vacuum surface.
-    - Crash atomicity is the same manifest pattern: write the new
-      version's table, then swap a JSON pointer via ``os.replace``. A
-      crash before the swap leaves the old pointer and a consistent
-      old state; the orphaned table is dropped on the next commit of
-      that version number (replay) or by :meth:`vacuum`.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        name: str,
-        key_col: str = "key",
-        n_buckets: int = 64,
-    ) -> None:
-        self.spark = spark
-        self.path = path.rstrip("/")
-        self.name = name
-        self.key_col = key_col
-        self.n_buckets = n_buckets
-        os.makedirs(self.path, exist_ok=True)
-
-    @property
-    def _pointer_path(self) -> str:
-        return os.path.join(self.path, "_current.json")
-
-    def _load(self) -> dict:
-        if not os.path.isfile(self._pointer_path):
-            return {"version": 0}
-        with open(self._pointer_path) as fh:
-            return json.load(fh)
-
-    def _swap(self, meta: dict) -> None:
-        tmp = self._pointer_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, self._pointer_path)
-
-    def _table(self, version: int) -> str:
-        return f"{self.name}_v{version}"
-
-    @property
-    def version(self) -> int:
-        return self._load()["version"]
-
-    def read(self) -> DataFrame | None:
-        """Current state as a BUCKETED scan (`HashPartitioning(key, n)`
-        — join/groupBy on the key without a prior-side exchange), or
-        None before the first commit."""
-        v = self.version
-        if v == 0:
-            return None
-        return self.spark.table(self._table(v))
-
-    def commit(self, state: DataFrame) -> int:
-        """Write the full state as the next version's bucketed table,
-        then atomically swap the pointer. Returns the new version."""
-        v = self.version + 1
-        tbl = self._table(v)
-        # replay after a crash-past-the-write: the orphan is
-        # unreferenced (the swap never happened), reclaim it. If the
-        # catalog still knows the table (same-session replay), resolve
-        # its REAL managed location from the catalog — correct under any
-        # database/location config — before dropping; only the restart
-        # case (catalog forgot the table but its managed LOCATION
-        # survives on disk and blocks the write with
-        # LOCATION_ALREADY_EXISTS) falls back to the warehouse-dir
-        # naming heuristic. Either way the rmtree is guarded to paths
-        # UNDER the session warehouse dir so a pathological config can
-        # never delete something else.
-        warehouse = os.path.realpath(
-            self.spark.conf.get(
-                "spark.sql.warehouse.dir", "spark-warehouse"
-            ).replace("file:", "")
-        )
-        loc = None
-        if self.spark.catalog.tableExists(tbl):
-            for row in self.spark.sql(f"DESCRIBE EXTENDED {tbl}").collect():
-                if row["col_name"] == "Location":
-                    loc = row["data_type"].replace("file:", "")
-                    break
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        if loc is None:  # restart-orphan: catalog had forgotten the table
-            loc = os.path.join(warehouse, tbl.lower())
-        loc = os.path.realpath(loc)
-        if os.path.isdir(loc) and loc.startswith(warehouse + os.sep):
-            shutil.rmtree(loc)
-        (
-            state.write.mode("overwrite")
-            .bucketBy(self.n_buckets, self.key_col)
-            .sortBy(self.key_col)
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
-        self._swap({"version": v})
-        return v
-
-    def vacuum(self, retain_last: int = 1) -> list[str]:
-        """Drop superseded version tables, keeping ``retain_last``
-        below the current pointer (time-travel window)."""
-        cur = self.version
-        dropped = []
-        for row in self.spark.sql(
-            f"SHOW TABLES LIKE '{self.name}_v*'"
-        ).collect():
-            t = row["tableName"]
-            try:
-                v = int(t.rsplit("_v", 1)[1])
-            except (IndexError, ValueError):
-                continue
-            if v < cur - retain_last:
-                self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-                dropped.append(t)
-        return dropped

@@ -182,99 +182,3 @@ def test_fold_plans_agree_truncate_multi_and_hint(spark):
             apply_changes_with_tombstones(clean, "key", plan=plan,
                                           has_truncates=False)
         ) == _norm_tomb(apply_changes_with_tombstones(clean, "key", plan=plan))
-
-
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
-)
-@given(
-    st.lists(event_st, min_size=1, max_size=25),
-    st.lists(st.booleans(), min_size=25, max_size=25),
-)
-def test_state_merge_equals_replay(spark, events, to_batch):
-    """merge_state_with_batch == the classic replay fold for ANY split
-    of an event sequence into (prior batch, next batch) — INCLUDING
-    splits that put late events (lsns below the prior fold's horizon)
-    into the next batch, which must route through the operator's
-    replay fallback. The replay plan is the pinned cross-batch
-    semantics (streamed == batch); the merge plan may only change the
-    physical shape."""
-    from python_cdc_spark.cdc.apply import (
-        apply_changes_with_tombstones,
-        merge_state_with_batch,
-        state_as_events,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows0, rows1 = [], []
-    for lsn, (op, key, vals) in enumerate(events, start=1):
-        new = None if op == "DELETE" else {**vals, "id": key}
-        old = {"id": key} if op != "INSERT" else None
-        row = (lsn, op, "public", "t", COLS, old, new, t0 + dt.timedelta(seconds=lsn))
-        # interleaved assignment: the "next" batch freely contains lsns
-        # BELOW prior-batch lsns (the late-arrival case)
-        (rows1 if to_batch[lsn - 1] else rows0).append(row)
-    if not rows1:
-        rows1 = rows0[-1:]  # ensure a non-empty batch
-    key_expr = F.coalesce(F.col("new_values")["id"], F.col("old_values")["id"])
-    df0 = spark.createDataFrame(rows0 or [], CDC_EVENT_SCHEMA).withColumn(
-        "key", key_expr
-    )
-    df1 = spark.createDataFrame(rows1, CDC_EVENT_SCHEMA).withColumn("key", key_expr)
-
-    prior = apply_changes_with_tombstones(df0, "key", plan="array_fold")
-    merged = merge_state_with_batch(prior, df1, "key", plan="array_fold")
-    replay = apply_changes_with_tombstones(
-        df1.select("lsn", "operation", "new_values", "key").unionByName(
-            state_as_events(prior, "key")
-        ),
-        "key",
-        plan="array_fold",
-        has_truncates=False,
-    )
-    assert _norm_tomb(merged) == _norm_tomb(replay)
-
-
-def test_state_merge_argmax_plan_matches_array_fold(spark):
-    """merge_state_with_batch must be value-identical under BOTH inner
-    fold plans (the streaming merge inherits fold_plan='auto', which
-    can pick argmax for a skewed batch) — deterministic corners:
-    sentinel-only update, delete+reinsert, late event, fresh key."""
-    from python_cdc_spark.cdc.apply import (
-        apply_changes_with_tombstones,
-        merge_state_with_batch,
-    )
-
-    prior_events = [
-        (1, "INSERT", {"id": "k1", "a": "1", "b": "2"}),
-        (2, "INSERT", {"id": "k2", "a": "9"}),
-        (3, "DELETE", None),  # k3 deleted at 3
-        (2, "INSERT", {"id": "k3", "a": "x"}),
-    ]
-    rows0 = [
-        (lsn, op, None if v is None else v, key)
-        for (lsn, op, v), key in zip(prior_events, ["k1", "k2", "k3", "k3"])
-    ]
-    batch = [
-        (10, "UPDATE", {"id": "k1", "a": "7", "b": UNCHANGED_SENTINEL}, "k1"),
-        (11, "DELETE", None, "k2"),
-        (12, "INSERT", {"id": "k2", "a": "re"}, "k2"),
-        (1, "UPDATE", {"id": "k3", "a": "GHOST"}, "k3"),  # late, below del
-        (13, "INSERT", {"id": "k4", "a": "new"}, "k4"),
-    ]
-    schema = "lsn bigint, operation string, new_values map<string,string>, key string"
-    df0 = spark.createDataFrame(rows0, schema)
-    df1 = spark.createDataFrame(batch, schema)
-    outs = []
-    for plan in ("array_fold", "argmax"):
-        prior = apply_changes_with_tombstones(df0, "key", plan=plan)
-        outs.append(_norm_tomb(merge_state_with_batch(prior, df1, "key", plan=plan)))
-    assert outs[0] == outs[1]
-    live = {k: v for k, v, _, _ in outs[0] if v is not None}
-    assert live == {
-        "k1": {"id": "k1", "a": "7", "b": "2"},  # sentinel kept prior b
-        "k2": {"id": "k2", "a": "re"},           # delete+reinsert in batch
-        "k4": {"id": "k4", "a": "new"},
-    }  # k3 stays dead: the late event fell below its delete horizon

@@ -64,6 +64,29 @@ def test_bm25_vacuum_reclaims_orphans_and_reports_clean(spark, tmp_path):
     assert after == before
 
 
+def test_bm25_vacuum_reclaims_stale_fused_write_staging(spark, tmp_path):
+    """The fused postings+doclen write stages at the index root as
+    ``_union_staging_*``; a crashed writer's stale one must be reclaimed
+    like ``_meta_staging_*``, while a young one (possibly a live
+    concurrent writer's) is kept."""
+    import time
+
+    from python_cdc_spark import fsops
+    from python_cdc_spark.operators.bm25_index import build_bm25_index
+
+    idx = str(tmp_path / "idx")
+    build_bm25_index(spark, _docs(spark, BASE), idx)
+    old = time.time() - 2 * fsops.STAGING_TTL_SECS
+    for name in ("_union_staging_old", "_meta_staging_old", "_union_staging_young"):
+        os.makedirs(os.path.join(idx, name, "kind=postings"))
+        if name.endswith("_old"):
+            os.utime(os.path.join(idx, name), (old, old))
+    rep = vacuum(spark, idx)
+    assert rep["removed"] == ["_meta_staging_old", "_union_staging_old"]
+    assert os.path.isdir(os.path.join(idx, "_union_staging_young"))
+    assert not os.path.exists(os.path.join(idx, "_union_staging_old"))
+
+
 def test_dedup_vacuum_reclaims_and_prunes_includes(spark, tmp_path):
     from python_cdc_spark.operators.incremental_dedup import (
         _read_base_ptr,

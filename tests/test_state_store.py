@@ -239,82 +239,3 @@ def test_time_travel_read_at(spark, tmp_path):
     store.vacuum()
     cur = {(r["k"], r["x"]) for r in store.read().collect()}
     assert cur == at2
-
-
-def test_bucketed_table_store_roundtrip_and_shuffle_free_join(spark, tmp_path):
-    """The r9-lever storage brick: commits are crash-atomic versioned
-    bucketed TABLES, reads report join-compatible partitioning (the
-    merge join plans ONE hash exchange — the batch side — instead of
-    two), replay of a crashed commit overwrites its orphan, and vacuum
-    drops superseded versions."""
-    from pyspark.sql import functions as F
-
-    from python_cdc_spark.streaming.state_store import BucketedTableStateStore
-
-    store = BucketedTableStateStore(
-        spark, str(tmp_path / "ptr"), "t_state_test", key_col="key", n_buckets=4
-    )
-    assert store.read() is None
-
-    state1 = spark.range(100).select(
-        F.col("id").cast("string").alias("key"),
-        F.map_from_arrays(F.array(F.lit("v")), F.array(F.col("id").cast("string"))).alias("values"),
-        F.col("id").alias("last_lsn"),
-        F.lit(None).cast("long").alias("del_lsn"),
-    )
-    assert store.commit(state1) == 1
-    got = store.read()
-    assert got.count() == 100
-
-    # join-compatibility: with broadcast disabled, the bucketed prior
-    # contributes NO exchange — only the probe side shuffles
-    probe = spark.range(50, 150).select(F.col("id").cast("string").alias("key"))
-    with_conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = got.join(probe, "key", "full_outer")
-        n_exch = j._jdf.queryExecution().toString().count("Exchange hashpartitioning")
-        assert n_exch == 1, f"bucketed prior must not shuffle (got {n_exch})"
-        plain = spark.read.parquet(
-            spark.sql(f"DESCRIBE EXTENDED {store._table(1)}")
-            .filter("col_name = 'Location'").first()["data_type"].replace("file:", "")
-        )
-        n_plain = (
-            plain.join(probe, "key", "full_outer")
-            ._jdf.queryExecution().toString().count("Exchange hashpartitioning")
-        )
-        assert n_plain == 2  # the same files WITHOUT bucket metadata shuffle twice
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", with_conf)
-
-    # crash replay: pre-create the orphan table v2 (crash past the
-    # write, before the swap), then commit again — must overwrite
-    state2 = state1.withColumn("last_lsn", F.col("last_lsn") + 1000)
-    spark.sql("DROP TABLE IF EXISTS t_state_test_v2")
-    state1.limit(3).write.bucketBy(4, "key").sortBy("key").format(
-        "parquet"
-    ).saveAsTable("t_state_test_v2")
-    assert store.version == 1  # the orphan is not visible
-    assert store.commit(state2) == 2
-    assert store.read().agg(F.max("last_lsn")).first()[0] == 1099
-
-    # RESTART-orphan: a fresh session's in-memory catalog forgets the
-    # table but its managed LOCATION survives and would block the next
-    # write (LOCATION_ALREADY_EXISTS) — simulate by dropping v3 from
-    # the catalog while recreating its directory on disk
-    import os
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
-    orphan = os.path.join(wh, "t_state_test_v3")
-    spark.sql("DROP TABLE IF EXISTS t_state_test_v3")
-    os.makedirs(orphan, exist_ok=True)
-    open(os.path.join(orphan, "part-junk.parquet"), "w").close()
-    assert store.commit(state1) == 3  # reclaims the orphan location
-    assert store.read().count() == 100
-
-    # vacuum: with retain_last=0 only the current table survives
-    dropped = store.vacuum(retain_last=0)
-    assert "t_state_test_v1" in dropped and "t_state_test_v2" in dropped
-    assert store.read().count() == 100
-    for t in ("t_state_test_v1", "t_state_test_v2", "t_state_test_v3"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -1757,30 +1757,48 @@ def test_streaming_pca_matches_batch(spark, tmp_path):
         )
 
 
-def test_streaming_state_merge_plan_multi_table_and_late_events(spark, tmp_path):
-    """The state_merge plan (fold batch, join-merge prior state) through
-    the real streaming merge in MULTI-TABLE mode: colliding key values
-    across tables stay separate, TOAST sentinels carry prior columns
-    forward across batches, and a late event below a key's delete
-    horizon routes through the operator's replay fallback and must NOT
-    resurrect the row. End state must equal the one-shot batch fold of
-    the concatenated feed (the pinned cross-batch semantics)."""
-    from python_cdc_spark.cdc.apply import apply_changes_with_tombstones_multi
+def test_streaming_apply_across_batches_matches_one_shot_fold(spark, tmp_path):
+    """Streamed == batch: merging a feed batch by batch must end in the
+    one-shot batch fold's state of the concatenated feed (the pinned
+    cross-batch semantics). Two feeds:
+
+    - MULTI-TABLE: colliding key values across tables stay separate,
+      TOAST sentinels carry prior columns forward across batches, and a
+      late event below a key's delete horizon must NOT resurrect the
+      row.
+    - SINGLE-TABLE: a late event below a delete horizon, then a TRUNCATE
+      batch that clears every key committed before it."""
+    from python_cdc_spark.cdc.apply import (
+        apply_changes_with_tombstones,
+        apply_changes_with_tombstones_multi,
+    )
     from python_cdc_spark.schemas import UNCHANGED_SENTINEL
     from python_cdc_spark.streaming.apply_stream import StreamingApplyChanges
 
-    applier = StreamingApplyChanges(
-        spark, str(tmp_path / "state"), "key", n_buckets=8,
-        merge_plan="state_merge",
-    )
+    def stream_and_fold(name, batches, to_df, fold, key):
+        applier = StreamingApplyChanges(
+            spark, str(tmp_path / name), "key", n_buckets=8
+        )
+        fed = []
+        for bid, rows in enumerate(batches):
+            applier.merge_batch(to_df(rows), bid)
+            fed += rows
+            got = {
+                key(r): dict(r["values"])
+                for r in applier.current_state().collect()
+            }
+            full = fold(to_df(fed), "key", plan="array_fold").filter(
+                F.col("values").isNotNull()
+            )
+            assert got == {key(r): dict(r["values"]) for r in full.collect()}, bid
+        return got
+
     b1 = [
         (1, "INSERT", "public", "users", {"id": "1", "name": "Ada", "mail": "a@x"}, "1"),
         (2, "INSERT", "public", "orders", {"id": "1", "total": "9"}, "1"),
         (3, "INSERT", "public", "users", {"id": "2", "name": "Lin"}, "2"),
         (4, "DELETE", "public", "users", None, "2"),
     ]
-    applier.merge_batch(_truncate_ev_df(spark, b1), 0)
-    assert applier.last_merge_plan == "replay"  # no prior state yet
     b2 = [
         # sentinel: mail must carry forward from batch 1
         (10, "UPDATE", "public", "users",
@@ -1788,89 +1806,39 @@ def test_streaming_state_merge_plan_multi_table_and_late_events(spark, tmp_path)
         # same key VALUE, other table: must not touch users.1
         (11, "UPDATE", "public", "orders", {"id": "1", "total": "12"}, "1"),
         # LATE event below users.2's delete horizon (del_lsn=4): the
-        # per-key fast-path guard must send it to the replay fallback,
-        # where the tombstone keeps it dead
+        # carried tombstone keeps it dead
         (2, "UPDATE", "public", "users", {"id": "2", "name": "GHOST"}, "2"),
     ]
-    applier.merge_batch(_truncate_ev_df(spark, b2), 1)
-    assert applier.last_merge_plan == "state_merge"
-
-    got = {
-        (r["table"], r["key"]): dict(r["values"])
-        for r in applier.current_state().collect()
-    }
+    got = stream_and_fold(
+        "multi", [b1, b2], lambda rows: _truncate_ev_df(spark, rows),
+        apply_changes_with_tombstones_multi, lambda r: (r["table"], r["key"]),
+    )
     assert got == {
         ("users", "1"): {"id": "1", "name": "Ada L", "mail": "a@x"},
         ("orders", "1"): {"id": "1", "total": "12"},
     }
 
-    # streamed == batch: the one-shot multi fold over the whole feed
-    full = apply_changes_with_tombstones_multi(
-        _truncate_ev_df(spark, b1 + b2), "key", plan="array_fold"
-    ).filter(F.col("values").isNotNull())
-    want = {
-        (r["table"], r["key"]): dict(r["values"]) for r in full.collect()
-    }
-    assert got == want
-
-
-def test_streaming_table_backend_matches_batch(spark, tmp_path):
-    """The bucketed-TABLE state backend (StreamingApplyChangesTable:
-    BucketedTableStateStore + merge_state_with_batch) must fold a
-    multi-batch feed to exactly the one-shot batch fold's state —
-    including a TRUNCATE batch (replay plan), a steady batch
-    (state_merge plan over the shuffle-free bucketed prior), and a
-    late event below a delete horizon."""
-    from python_cdc_spark.cdc.apply import apply_changes_with_tombstones
-    from python_cdc_spark.streaming.apply_stream import (
-        StreamingApplyChangesTable,
-    )
-
-    applier = StreamingApplyChangesTable(
-        spark, str(tmp_path / "ptr"), "key", n_buckets=4,
-        table_name="t_apply_test",
-    )
-    schema = (
-        "lsn bigint, operation string, schema string, table string, "
-        "new_values map<string,string>, key string"
-    )
-    b1 = [
+    s1 = [
         (1, "INSERT", "public", "t", {"id": "1", "v": "a"}, "1"),
         (2, "INSERT", "public", "t", {"id": "2", "v": "b"}, "2"),
         (3, "DELETE", "public", "t", None, "2"),
         (4, "INSERT", "public", "t", {"id": "3", "v": "c"}, "3"),
     ]
-    b2 = [
+    s2 = [
         (10, "UPDATE", "public", "t", {"id": "1", "v": "a2"}, "1"),
         (2, "UPDATE", "public", "t", {"id": "2", "v": "GHOST"}, "2"),  # late
         (11, "INSERT", "public", "t", {"id": "4", "v": "d"}, "4"),
     ]
-    b3 = [
+    s3 = [
         (20, "TRUNCATE", "public", "t", None, None),
         (21, "INSERT", "public", "t", {"id": "5", "v": "e"}, "5"),
     ]
-    applier.merge_batch(spark.createDataFrame(b1, schema).drop("schema", "table"), 0)
-    assert applier.last_merge_plan == "replay"  # cold start
-    applier.merge_batch(spark.createDataFrame(b2, schema).drop("schema", "table"), 1)
-    assert applier.last_merge_plan == "state_merge"
-    got2 = {r["key"]: dict(r["values"]) for r in applier.current_state().collect()}
-    assert got2 == {
-        "1": {"id": "1", "v": "a2"},
-        "3": {"id": "3", "v": "c"},
-        "4": {"id": "4", "v": "d"},
-    }  # key 2 stays dead: late event below its delete horizon
-    applier.merge_batch(spark.createDataFrame(b3, schema).drop("schema", "table"), 2)
-    assert applier.last_merge_plan == "replay"  # truncate batches replay
-    got = {r["key"]: dict(r["values"]) for r in applier.current_state().collect()}
-
-    full = apply_changes_with_tombstones(
-        spark.createDataFrame(b1 + b2 + b3, schema).drop("schema", "table"),
-        "key", plan="array_fold",
-    ).filter(F.col("values").isNotNull())
-    want = {r["key"]: dict(r["values"]) for r in full.collect()}
-    assert got == want == {"5": {"id": "5", "v": "e"}}
-    for v in (1, 2, 3):
-        spark.sql(f"DROP TABLE IF EXISTS t_apply_test_v{v}")
+    got = stream_and_fold(
+        "single", [s1, s2, s3],
+        lambda rows: _truncate_ev_df(spark, rows).drop("schema", "table"),
+        apply_changes_with_tombstones, lambda r: r["key"],
+    )
+    assert got == {"5": {"id": "5", "v": "e"}}
 
 
 def test_streaming_ann_index_matches_rebuild_and_replays_safely(spark, tmp_path):
