@@ -49,6 +49,8 @@ import struct
 import time
 from typing import Any, Callable, Iterator
 
+from python_cdc_spark import fsops
+
 #: microseconds between the PostgreSQL epoch (2000-01-01) and the Unix
 #: epoch — XLogData/keepalive timestamps are PG-epoch micros
 PG_EPOCH_OFFSET_US = 946_684_800_000_000
@@ -197,7 +199,7 @@ class LogicalReplicationClient:
             c.create_slot("cdc_slot")          # idempotent-ish helper
             c.start_replication("cdc_slot", publication="cdc_publication")
             for lsn, ts, frame in c.frames():  # raw pgoutput payloads
-                ...
+                ...  # persist, then c.flushed_lsn = lsn to ack it
             # or: c.dump_parquet(out_dir, max_frames=..., max_seconds=...)
     """
 
@@ -504,7 +506,9 @@ class LogicalReplicationClient:
         server ends the copy (CopyDone) or ``max_seconds`` elapses.
         Keepalives are answered inline; a status update also goes out
         every ``status_interval`` seconds (the reference's
-        status_interval=10, postgre_cdc_consumer.py:83)."""
+        status_interval=10, postgre_cdc_consumer.py:83). Receiving a
+        frame does not ack it: the status reports ``flushed_lsn``,
+        which only the consumer advances once its copy is durable."""
         deadline = None if max_seconds is None else time.monotonic() + max_seconds
         last_status = time.monotonic()
         while True:
@@ -527,7 +531,6 @@ class LogicalReplicationClient:
                 ts = _dt.datetime.fromtimestamp(
                     (send_us + PG_EPOCH_OFFSET_US) / 1e6, tz=_dt.timezone.utc
                 )
-                self.flushed_lsn = max(self.flushed_lsn, start)
                 yield start, ts, frame
             elif kind == b"k":  # keepalive
                 _wal_end, _ts = struct.unpack(">QQ", payload[1:17])
@@ -577,12 +580,13 @@ class LogicalReplicationClient:
             final = os.path.join(out_dir, f"batch-{batch_no:06d}.parquet")
             tmp = final + ".tmp"
             pq.write_table(tbl, tmp)
-            os.replace(tmp, final)
+            fsops.durable_replace(tmp, final)
+            # durable on disk → safe to ack
+            self.flushed_lsn = max(self.flushed_lsn, max(lsns))
             if on_batch is not None:
                 on_batch(final, len(lsns))
             batch_no += 1
             lsns, tss, frames_ = [], [], []
-            # durable on disk → safe to ack
             self._standby_status()
 
         for lsn, ts, frame in self.frames(max_seconds=max_seconds):

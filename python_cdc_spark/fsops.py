@@ -16,9 +16,9 @@ Semantics the callers rely on:
   object-store backend must substitute a conditional-put or
   metadata-service swap — this is the single primitive every
   structure's commit point uses).
-- ``publish_json`` = write sidecar + fsync + ``replace``: a crash at
-  any point leaves either the old pointer or the new one, never a
-  torn file.
+- ``durable_replace`` = fsync + ``replace``; ``publish_json`` =
+  write sidecar + ``durable_replace``: a crash at any point leaves
+  either the old pointer or the new one, never a torn file.
 - ``remove_tree`` / ``remove_file`` are idempotent (missing target is
   a no-op): vacuum and post-publish cleanup retry safely.
 - ``list_dir`` of a missing directory is ``[]``: callers enumerate
@@ -129,14 +129,24 @@ def remove_file(path: str) -> None:
         pass
 
 
-def publish_json(path: str, obj: dict) -> None:
-    """Crash-atomic JSON pointer publish: temp write + fsync + rename."""
+def durable_replace(tmp: str, dst: str) -> None:
+    """Make a fully written temp file durable, then publish it: fsync +
+    atomic rename. A crash at any point leaves either the old ``dst``
+    or the complete new one, never an empty or torn file."""
+    fd = os.open(tmp, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+    replace(tmp, dst)
+
+
+def publish_json(path: str, obj) -> None:
+    """Crash-atomic JSON publish: temp write + fsync + rename."""
     tmp = path + ".tmp"
     with open(tmp, "w") as fh:
         json.dump(obj, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    replace(tmp, path)
+    durable_replace(tmp, path)
 
 
 def read_json(path: str, default=None):
@@ -231,9 +241,7 @@ def write_marker(path: str, content: str = "") -> None:
     tmp = path + ".tmp"
     with open(tmp, "w") as fh:
         fh.write(content)
-        fh.flush()
-        os.fsync(fh.fileno())
-    replace(tmp, path)
+    durable_replace(tmp, path)
 
 
 def tree_bytes(path: str) -> int:

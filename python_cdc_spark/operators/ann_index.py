@@ -576,13 +576,15 @@ def maintain_ivf_lists_cdc(
     present = {int(r["cell"]) for r in new_contents.select("cell").distinct().collect()}
 
     # dynamic overwrite replaces exactly the partitions present in the
-    # written frame; restore the session mode afterwards
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        write_partitioned(new_contents, cells_path, ["cell"])
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    # written frame; set per write, so an overwrite another thread runs
+    # in this session keeps the session's mode
+    (
+        new_contents.repartition("cell")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell")
+        .parquet(cells_path)
+    )
     # a touched cell with zero survivors and zero arrivals vanishes from
     # the dynamic write — drop its directory so readers don't resurrect
     # pre-fold rows

@@ -87,6 +87,7 @@ through Spark's Hadoop FS).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -95,6 +96,7 @@ from pyspark.sql import functions as F
 from python_cdc_spark import fsops
 from python_cdc_spark.functions.literals import literal_df
 from python_cdc_spark.functions.text import tokens
+from python_cdc_spark.session import run_concurrent
 
 
 def phrase_df(spark: SparkSession, phrase: tuple[str, ...]) -> DataFrame:
@@ -437,8 +439,6 @@ def build_bm25_index(
     parquet read is column-pruned); phrase search refuses the index
     with a clear error. The mode is recorded in the pointer and every
     CDC fold inherits it."""
-    from concurrent.futures import ThreadPoolExecutor
-
     old, tok = _read_ptr_with_token(path)
     tf = _doc_tf(docs, text_col, id_col, store_positions).localCheckpoint(eager=True)
     meta_v = old["meta"] + 1
@@ -451,18 +451,19 @@ def build_bm25_index(
     # the two staged outputs are path-disjoint → concurrent jobs
     # (postings + derived doclen fused into ONE bucket write, r14)
     all_buckets = list(range(_N_BUCKETS))
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_bkts = pool.submit(_write_buckets_fused, path, tf, all_buckets, old)
-        f_meta = pool.submit(_write_meta, spark, path, meta_v, df_table)
-        p_entries, d_entries = f_bkts.result()
-        ptr = {
-            "meta": f_meta.result(),
-            "postings": p_entries,
-            "doclen": d_entries,
-            "folds": [],
-            "pos": bool(store_positions),
-            "globals": {"n_docs": int(g["n"] or 0), "sum_dl": int(g["s"] or 0)},
-        }
+    (p_entries, d_entries), meta_v = run_concurrent(
+        spark,
+        functools.partial(_write_buckets_fused, path, tf, all_buckets, old),
+        functools.partial(_write_meta, spark, path, meta_v, df_table),
+    )
+    ptr = {
+        "meta": meta_v,
+        "postings": p_entries,
+        "doclen": d_entries,
+        "folds": [],
+        "pos": bool(store_positions),
+        "globals": {"n_docs": int(g["n"] or 0), "sum_dl": int(g["s"] or 0)},
+    }
     _write_ptr(path, ptr, tok)
     _cleanup(path, ptr)
     return int(g["n"] or 0)
@@ -583,8 +584,6 @@ def cdc_bm25_update(
     # the three staged outputs share no paths and all derive from the
     # checkpointed frame, so they run as CONCURRENT Spark jobs — the
     # publish (pointer swap) still happens only after every one landed
-    from concurrent.futures import ThreadPoolExecutor
-
     kept = combined.filter(~F.col("__ev")).select(
         "doc_id", "token", "tf", "positions", "bucket"
     )
@@ -592,13 +591,12 @@ def cdc_bm25_update(
     # the filtered rollup IS the new doclen rows — no second groupBy
     kept_dl = per_doc.filter(~F.col("__ev")).select("doc_id", "dl", "bucket")
     meta_v = ptr["meta"] + 1
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_meta = pool.submit(_write_meta, spark, path, meta_v, new_df)
-        f_bkts = pool.submit(
-            _write_buckets_fused, path, kept, touched, ptr, kept_dl
-        )
-        meta_v = f_meta.result()  # the CLAIMED slot (≥ the hint)
-        p_entries, d_entries = f_bkts.result()
+    # the CLAIMED meta slot (≥ the hint) comes back from _write_meta
+    meta_v, (p_entries, d_entries) = run_concurrent(
+        spark,
+        functools.partial(_write_meta, spark, path, meta_v, new_df),
+        functools.partial(_write_buckets_fused, path, kept, touched, ptr, kept_dl),
+    )
     nxt = {
         "meta": meta_v,
         "postings": {

@@ -63,6 +63,7 @@ fold-once guarantee (same constraint as ``streaming/state_store.py``).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +72,7 @@ from pyspark.sql import functions as F
 from python_cdc_spark import fsops
 from python_cdc_spark.operators.components import connected_components
 from python_cdc_spark.operators.dedup import _gram_cells, minhash_signatures
+from python_cdc_spark.session import run_concurrent
 
 _N, _K, _BANDS, _THRESHOLD = 3, 8, 4, 0.5
 _TABLES = ("cells", "bands", "sizes")
@@ -743,23 +745,21 @@ def cdc_dedup_index_update(
     # checkpointed frame — submit them as CONCURRENT jobs (guide §2.6:
     # overlap independent jobs) instead of paying four job floors in
     # sequence; the _COMMITTED marker still lands only after all four
-    from concurrent.futures import ThreadPoolExecutor
-
     writes = [
         ("cells", d_cells),
         ("bands", d_bands),
         ("sizes", d_sizes),
         ("evicted", evicted),
     ]
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        list(
-            pool.map(
-                lambda nd: nd[1]
-                .write.mode("overwrite")
-                .parquet(os.path.join(delta_dir, nd[0])),
-                writes,
+    run_concurrent(
+        spark,
+        *(
+            functools.partial(
+                df.write.mode("overwrite").parquet, os.path.join(delta_dir, name)
             )
-        )
+            for name, df in writes
+        ),
+    )
     # corpus-size sidecar (metadata: feeds _corpus_count) rides in the
     # delta dir, before the marker so a committed delta always has it
     fsops.publish_json(

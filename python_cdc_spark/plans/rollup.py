@@ -51,6 +51,7 @@ so a later ``define`` against fresh sources rebuilds.
 
 from __future__ import annotations
 
+import functools
 import os
 from typing import Optional
 
@@ -59,6 +60,7 @@ from pyspark.sql import functions as F
 
 from python_cdc_spark import fsops
 from python_cdc_spark.operators.ann_index import index_is_current
+from python_cdc_spark.session import run_concurrent
 
 _DEC = "decimal(30,10)"
 _KINDS = ("sum", "count", "min", "max", "hll")
@@ -261,10 +263,6 @@ class RollupCatalog:
             jobs.append(("data", scalar_df))
         jobs.extend((f"hll_{a}", df) for a, df in hll_dfs.items())
         schemas = {sub: df.schema.json() for sub, df in jobs}
-        if len(jobs) <= 1:
-            for sub, df in jobs:
-                df.write.parquet(os.path.join(out, sub))
-            return self._claim_vslot(name, out, version), schemas
         # The version's tables are independent plans writing to disjoint
         # subdirectories — submit them as CONCURRENT Spark jobs. For an
         # incremental refresh each job is small and overhead-bound
@@ -274,14 +272,13 @@ class RollupCatalog:
         # version is not live until _commit_meta swaps the pointer, so
         # a failure in any job (re-raised here) leaves only an orphaned
         # dir for the next attempt's rmtree.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write(job):
-            sub, df = job
-            df.write.parquet(os.path.join(out, sub))
-
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            list(pool.map(_write, jobs))
+        run_concurrent(
+            self.spark,
+            *(
+                functools.partial(df.write.parquet, os.path.join(out, sub))
+                for sub, df in jobs
+            ),
+        )
         return self._claim_vslot(name, out, version), schemas
 
     def _read_version_table(self, name: str, meta: dict, sub: str) -> DataFrame:

@@ -9,6 +9,8 @@ delete/reinsert lifetimes (SURVEY.md §7 hard parts 2–3).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,6 +21,7 @@ from python_cdc_spark.cdc.scd2 import scd2_history
 from python_cdc_spark.queries.helpers import dec_sum
 from python_cdc_spark.queries.registry import register
 from python_cdc_spark.queries.sketches import _sql_mix32
+from python_cdc_spark.session import run_concurrent
 
 # The derived feed, as DuckDB SQL (must mirror events_as_cdc_feed exactly).
 _FEED_CTE = """
@@ -1215,8 +1218,6 @@ def _composite_from_wire(
     # are only sequential because driver code calls them sequentially).
     # Both states are genuinely required: signed_state_deltas needs an
     # independently derived before AND after image.
-    from concurrent.futures import ThreadPoolExecutor
-
     # plan="array_fold": one keyed shuffle per fold instead of the argmax
     # plan's three-plus-a-join (apply.py module docstring; value-identity
     # pinned by tests/test_apply_property.py and the streaming merge uses
@@ -1229,22 +1230,23 @@ def _composite_from_wire(
             apply_changes_all_tables(src, "key", plan="array_fold")
         ).localCheckpoint(eager=True)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f0 = pool.submit(_fold, feed.filter(~is_delta))
-        f1 = pool.submit(_fold, feed)
-        state0, state1 = f0.result(), f1.result()
+    state0, state1 = run_concurrent(
+        spark,
+        functools.partial(_fold, feed.filter(~is_delta)),
+        functools.partial(_fold, feed),
+    )
 
     state_dir = os.path.join(root, "state1")
     cat = RollupCatalog(spark, os.path.join(root, "cubes"))
     # the partitioned state write (from state1) and the base-cube define
     # (from state0) touch disjoint paths — two more concurrent jobs
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fw = pool.submit(
-            lambda: state1.write.mode("overwrite")
-            .partitionBy("key_band")
-            .parquet(state_dir)
-        )
-        fd = pool.submit(
+    run_concurrent(
+        spark,
+        functools.partial(
+            state1.write.mode("overwrite").partitionBy("key_band").parquet,
+            state_dir,
+        ),
+        functools.partial(
             cat.define,
             "e2e_cube",
             state0,
@@ -1255,9 +1257,8 @@ def _composite_from_wire(
                 "max_lsn": ("max", "last_lsn"),
             },
             fingerprint=source_fingerprint(os.path.join(sf_dir, "events.parquet")),
-        )
-        fw.result()
-        fd.result()
+        ),
+    )
     plus, minus = signed_state_deltas(
         state0, state1, feed.filter(is_delta).select(F.col("table").alias("tbl"), "key"),
         ["tbl", "key"],

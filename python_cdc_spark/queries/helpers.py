@@ -145,26 +145,19 @@ def ensure_cached_base(cache_dir: str, fingerprint: str, params: dict, build) ->
     work-dir copy — for gates that fold IN PLACE on the cached base
     (fold delta, read, fold the inverse delta back; the copy-free shape
     of r12 verdict #5). Returns True on a cache miss/rebuild."""
-    import json
     import os
     import shutil
 
+    from python_cdc_spark import fsops
+
     meta_path = os.path.join(cache_dir, "_gate_meta.json")
-    fresh = True
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        fresh = not (
-            meta.get("fingerprint") == fingerprint and meta.get("params") == params
-        )
-    except (OSError, ValueError):
-        pass
+    meta = fsops.read_json(meta_path, {})
+    fresh = not (
+        meta.get("fingerprint") == fingerprint and meta.get("params") == params
+    )
     if fresh:
         shutil.rmtree(cache_dir, ignore_errors=True)
         os.makedirs(cache_dir, exist_ok=True)
         build(cache_dir)
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"fingerprint": fingerprint, "params": params}, f)
-        os.replace(tmp, meta_path)
+        fsops.publish_json(meta_path, {"fingerprint": fingerprint, "params": params})
     return fresh

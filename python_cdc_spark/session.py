@@ -16,8 +16,11 @@ Spark partition.  Defaults below are tuned so the same code runs on
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def get_spark(
@@ -96,3 +99,25 @@ def tune_for_harness(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # immutable in some deployments; defaults are acceptable
     return spark
+
+
+def run_concurrent(spark: SparkSession, *fns: Callable[[], Any]) -> list:
+    """Run independent Spark jobs side by side: one worker thread per
+    callable, results in argument order.
+
+    This is the engine's ONE thread pool. Each worker inherits the
+    caller's thread-local Spark properties (job tags, job group,
+    scheduler pool), so jobs it submits are charged to the caller's
+    tag like jobs submitted inline. ``spark`` is passed explicitly:
+    inside another pool's thread ``getActiveSession()`` can be None,
+    and the session-less wrapper drops session tags.
+
+    A worker's exception is raised only after EVERY worker finished,
+    so no sibling write is still running when the caller's error path
+    (cleanup, retry) starts."""
+    # one wrapper per callable: each clones the caller's properties, so a
+    # worker that sets its own property cannot leak it into a sibling
+    with ThreadPoolExecutor(max_workers=max(len(fns), 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+    # leaving the block waited for every worker
+    return [f.result() for f in futures]

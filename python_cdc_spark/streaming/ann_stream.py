@@ -27,13 +27,13 @@ re-fit exactly as on the batch path.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from python_cdc_spark import fsops
 from python_cdc_spark.streaming.state_store import BucketedStateStore
 
 
@@ -79,18 +79,13 @@ class StreamingAnnIndex:
         return df
 
     def _load_meta(self) -> dict:
-        try:
-            with open(self._meta_path) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return {"base_rows": 0, "appended_rows": 0}
+        return fsops.read_json(
+            self._meta_path, {"base_rows": 0, "appended_rows": 0}
+        )
 
     def _save_meta(self, meta: dict) -> None:
         os.makedirs(self.path, exist_ok=True)
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, self._meta_path)
+        fsops.publish_json(self._meta_path, meta)
 
     def appended_fraction(self) -> float:
         meta = self._load_meta()

@@ -241,7 +241,9 @@ class StreamingApplyChanges:
         measurably further behind; small positive slopes are ambient
         jitter, as the sweep's first calibration run showed (a +0.15
         slope at a rate whose p50 was LOWER than the slower phase's).
-        The knee is measured by ``tools/bench_latency.py --sweep``."""
+        ``perfbench/run.py --workload wire`` measures this lag
+        (``latency_p50_s``, ``latency.p95_s``) under an open loop at a
+        fixed offered rate."""
         if not self._latency:
             return {"batches_measured": 0}
         lags = sorted(s["capture_to_apply_sec"] for s in self._latency)

@@ -27,11 +27,11 @@ through Spark's Hadoop FS — an object-store URI would split the two
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from python_cdc_spark import fsops
 from python_cdc_spark.operators.incremental_dedup import (
     build_dedup_index,
     cdc_dedup_index_update,
@@ -57,19 +57,12 @@ class StreamingCorpusDedup:
         return os.path.join(self.index_path, "_folded.json")
 
     def _folded_ids(self) -> set:
-        try:
-            with open(self._folded_path) as f:
-                return set(json.load(f))
-        except (OSError, ValueError):
-            return set()
+        return set(fsops.read_json(self._folded_path, []))
 
     def _mark_folded(self, batch_id: int) -> None:
         ids = self._folded_ids()
         ids.add(batch_id)
-        tmp = self._folded_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(sorted(ids), f)
-        os.replace(tmp, self._folded_path)
+        fsops.publish_json(self._folded_path, sorted(ids))
 
     def bootstrap(self, docs: DataFrame) -> None:
         """Seed the index from an existing corpus (batch build)."""

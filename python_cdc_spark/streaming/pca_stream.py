@@ -26,11 +26,11 @@ broadcast the latest model without ever touching history.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from python_cdc_spark import fsops
 from python_cdc_spark.operators.pca import model_from_suffstats, suffstats
 
 
@@ -57,23 +57,19 @@ class StreamingPCA:
         return os.path.join(self.state_path, "_meta.json")
 
     def _meta(self) -> dict:
-        try:
-            with open(self._meta_path) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {
+        return fsops.read_json(
+            self._meta_path,
+            {
                 "n": 0,
                 "s": [0.0] * self.dims,
                 "g": [0.0] * (self.dims * self.dims),
                 "folded": [],
                 "dims": self.dims,
-            }
+            },
+        )
 
     def _commit(self, meta: dict) -> None:
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._meta_path)
+        fsops.publish_json(self._meta_path, meta)
 
     # -- fold -------------------------------------------------------------
 

@@ -25,12 +25,12 @@ Single writer per rollup name; ``base_dir`` must be a LOCAL path
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_cdc_spark import fsops
 from python_cdc_spark.plans.rollup import RollupCatalog
 from python_cdc_spark.streaming.apply_stream import StreamingApplyChanges
 
@@ -159,17 +159,10 @@ class StreamingCdcRollupMaintenance(StreamingApplyChanges):
         return os.path.join(self.state_path, "_cube_prebatch.json")
 
     def _pins(self) -> dict:
-        try:
-            with open(self._pin_path) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {}
+        return fsops.read_json(self._pin_path, {})
 
     def _write_pins(self, pins: dict) -> None:
-        tmp = self._pin_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(pins, f)
-        os.replace(tmp, self._pin_path)
+        fsops.publish_json(self._pin_path, pins)
 
     # -- merge + fold ---------------------------------------------------
 

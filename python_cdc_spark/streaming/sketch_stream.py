@@ -33,13 +33,13 @@ same constraint as ``streaming/state_store.py`` and the dedup index).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_cdc_spark import fsops
 from python_cdc_spark.queries.sketches import _GOLD, _mix32
 
 #: On-disk sketch-state format. Bumped when the hash geometry (or any
@@ -106,27 +106,20 @@ class StreamingSketchAggregator:
         return os.path.join(self.state_path, "_meta.json")
 
     def _meta(self) -> dict:
-        try:
-            with open(self._meta_path) as f:
-                meta = json.load(f)
-        except (OSError, ValueError):
-            return {"version": 0, "folded": []}
+        meta = fsops.read_json(self._meta_path, {"version": 0, "folded": []})
         return _check_format(meta, _HLL_CM_FORMAT, self.state_path)
 
     def _commit(self, version: int, folded: list) -> None:
         # Spark only replays recent uncommitted batches, so the replay
         # guard needs a bounded tail, not every id since stream birth
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "folded": sorted(folded)[-1000:],
-                    "format": _HLL_CM_FORMAT,
-                },
-                f,
-            )
-        os.replace(tmp, self._meta_path)
+        fsops.publish_json(
+            self._meta_path,
+            {
+                "version": version,
+                "folded": sorted(folded)[-1000:],
+                "format": _HLL_CM_FORMAT,
+            },
+        )
 
     def _vdir(self, version: int) -> str:
         return os.path.join(self.state_path, f"v{version}")
@@ -347,25 +340,18 @@ class KllStreamSketch:
         return os.path.join(self.state_path, "_meta.json")
 
     def _meta(self) -> dict:
-        try:
-            with open(self._meta_path) as f:
-                meta = json.load(f)
-        except (OSError, ValueError):
-            return {"version": 0, "folded": []}
+        meta = fsops.read_json(self._meta_path, {"version": 0, "folded": []})
         return _check_format(meta, _KLL_FORMAT, self.state_path)
 
     def _commit(self, version: int, folded: list) -> None:
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "folded": sorted(folded)[-1000:],
-                    "format": _KLL_FORMAT,
-                },
-                f,
-            )
-        os.replace(tmp, self._meta_path)
+        fsops.publish_json(
+            self._meta_path,
+            {
+                "version": version,
+                "folded": sorted(folded)[-1000:],
+                "format": _KLL_FORMAT,
+            },
+        )
 
     def _vdir(self, version: int) -> str:
         return os.path.join(self.state_path, f"v{version}")
@@ -539,24 +525,19 @@ class MgStreamSketch:
         return os.path.join(self.state_path, "_meta.json")
 
     def _meta(self) -> dict:
-        try:
-            with open(self._meta_path) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {"version": 0, "folded": [], "n_total": 0}
+        return fsops.read_json(
+            self._meta_path, {"version": 0, "folded": [], "n_total": 0}
+        )
 
     def _commit(self, version: int, folded: list, n_total: int) -> None:
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "folded": sorted(folded)[-1000:],
-                    "n_total": int(n_total),
-                },
-                f,
-            )
-        os.replace(tmp, self._meta_path)
+        fsops.publish_json(
+            self._meta_path,
+            {
+                "version": version,
+                "folded": sorted(folded)[-1000:],
+                "n_total": int(n_total),
+            },
+        )
 
     def _vdir(self, version: int) -> str:
         return os.path.join(self.state_path, f"v{version}")

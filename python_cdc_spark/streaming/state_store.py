@@ -114,10 +114,10 @@ class BucketedStateStore:
         # point, so a crash in between loses only this version's
         # read_at() — it can never advertise an uncommitted version.
         # read_at additionally refuses versions above the committed one.
-        snap = os.path.join(self.path, f"_manifest_v{manifest['version']}.json")
-        with open(snap + ".tmp", "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(snap + ".tmp", snap)
+        fsops.publish_json(
+            os.path.join(self.path, f"_manifest_v{manifest['version']}.json"),
+            manifest,
+        )
 
     @property
     def version(self) -> int:

@@ -1291,15 +1291,19 @@ def test_bpe_learn_merges_greedy_semantics(spark):
     assert len(learn_bpe_merges(tiny, 5)) == 1
 
 
-def test_ann_cdc_fold_touches_only_affected_cells(spark, tmp_path):
+def test_ann_cdc_fold_touches_only_affected_cells(spark, tmp_path, monkeypatch):
     """Pin the O(touched) contract of maintain_ivf_lists_cdc: a surgical
     3-op delta (one insert, one update, one delete) rewrites only the
     affected cell directories — every untouched cell dir keeps its exact
     file set with unchanged mtimes — evicts the deleted/updated ids,
-    places the new row images, and advances the drift counters."""
+    places the new row images, and advances the drift counters. The
+    dynamic overwrite is a per-write option: the fold never sets the
+    session-wide mode, which would change any overwrite another thread
+    runs in the same session meanwhile."""
     import os
 
     from pyspark.sql import functions as F
+    from pyspark.sql.conf import RuntimeConfig
 
     from python_cdc_spark.io import table
     from python_cdc_spark.operators.ann_index import (
@@ -1358,8 +1362,18 @@ def test_ann_cdc_fold_touches_only_affected_cells(spark, tmp_path):
                 F.lit("D").alias("op"), "vec_id", "embedding")
         )
     )
+    conf_keys_set = []
+    real_set = RuntimeConfig.set
+
+    def spy_set(self, key, value):
+        conf_keys_set.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
     stats = maintain_ivf_lists_cdc(spark, idx_dir, delta, payload=payload,
                                    exact=True, dims=_DIMS)
+    monkeypatch.undo()
+    assert "spark.sql.sources.partitionOverwriteMode" not in conf_keys_set
     # a 3-op delta touches at most 4 cells (ins + upd old/new + del)
     assert 1 <= stats["touched_cells"] <= 4
     assert stats["touched_cells"] < stats["total_cells"]

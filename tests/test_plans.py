@@ -294,6 +294,48 @@ def test_runtime_bloom_filter_prunes_join_probe_side(spark):
     assert li2.join(o2, li2.l_orderkey == o2.o_orderkey).count() == n_bloom
 
 
+def test_run_concurrent_keeps_tags_order_and_waits(spark):
+    """The engine's one thread pool (RollupCatalog version writes, the
+    BM25/dedup folds, the composite's fold pairs): workers inherit the
+    caller's job tags, results come back in argument order, and a
+    worker's error reaches the caller only after its siblings finished."""
+    import threading
+    import time
+
+    from python_cdc_spark.session import run_concurrent
+
+    sc = spark.sparkContext
+    tag = "run-concurrent-test"
+
+    def job(n, delay):
+        def fn():
+            time.sleep(delay)  # the first argument finishes last
+            return n, spark.range(n).count(), tag in sc.getJobTags()
+
+        return fn
+
+    sc.addJobTag(tag)
+    try:
+        got = run_concurrent(spark, job(3, 0.3), job(1, 0.0), job(2, 0.1))
+    finally:
+        sc.removeJobTag(tag)
+    assert got == [(3, 3, True), (1, 1, True), (2, 2, True)]
+
+    finished = threading.Event()
+
+    def slow():
+        time.sleep(0.3)
+        spark.range(1).count()
+        finished.set()
+
+    def boom():
+        raise RuntimeError("boom")
+
+    with pytest.raises(RuntimeError, match="boom"):
+        run_concurrent(spark, boom, slow)
+    assert finished.is_set()
+
+
 def test_rollup_rewrite_equals_direct_and_scans_mv_only(spark, tmp_path):
     """A dims-subset query rewritten onto the materialized cube must be
     bit-identical to the direct aggregation over the fact table, and

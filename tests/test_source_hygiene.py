@@ -1,0 +1,29 @@
+"""Source checks that keep each concern in one module (no Spark).
+
+- Concurrent Spark jobs go through ``session.run_concurrent``, the one
+  pool whose workers keep the caller's job tags, so ``ThreadPoolExecutor``
+  appears only in ``session.py``.
+- JSON files are written through ``fsops.publish_json`` (temp write,
+  fsync, rename), so ``json.dump(`` appears only in ``fsops.py``.
+"""
+
+from __future__ import annotations
+
+import pathlib
+
+import pytest
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "python_cdc_spark"
+
+
+@pytest.mark.parametrize(
+    "needle, owner",
+    [("ThreadPoolExecutor", "session.py"), ("json.dump(", "fsops.py")],
+)
+def test_concern_lives_in_one_module(needle, owner):
+    offenders = sorted(
+        str(p.relative_to(PKG))
+        for p in PKG.rglob("*.py")
+        if p.relative_to(PKG) != pathlib.Path(owner) and needle in p.read_text()
+    )
+    assert offenders == [], f"{needle!r} outside {owner}: {offenders}"
