@@ -1,14 +1,32 @@
 """Filesystem primitives for the CDC-maintained structures.
 
-The four maintained structures (rollup cube, ANN inverted lists, dedup
-index, BM25 text index), the bucketed state store, and the unified
-vacuum layer all share one durability shape: immutable version
-directories published by an atomic pointer rename. This module is the
-ONLY place they touch the filesystem for that shape — list / atomic
-replace / recursive delete / pointer publish / size accounting — so a
-transactional backend (object store + a real table format, or a
-metadata service) is a port of ONE module, not a grep across five
-(r10/r11 verdicts' "fs-helper seam").
+The versioned structures (rollup cube, dedup index, BM25 text index,
+bucketed state store) commit through ONE protocol, whose primitives
+live here; each structure keeps only its own on-disk naming (which
+slot a version number maps to, which pointer file is the commit point)
+and its live-set derivation for vacuum. The ANN index meta uses only
+step 3, the publish and its format check (its folds rewrite cell
+partitions in place):
+
+1. **stage** — write the new version into a writer-private directory
+   named by :func:`staging` (``_staging_<uuid>``). Nothing reads it.
+2. **claim** — :func:`claim` renames the staged directory into the
+   first free version slot at-or-past a hint, never clobbering an
+   occupied one (:func:`rename_no_clobber`), and returns the claimed
+   version: the pointer must record that, not the hint.
+3. **publish** — :func:`cas_publish` swaps the pointer only if it has
+   not moved since the writer read it (:func:`read_json_with_token`).
+   Every pointer carries a ``"format"`` stamp; readers refuse any other
+   with :func:`check_format` instead of keeping fallback read paths.
+4. **vacuum** — whatever the committed pointer does not reference is
+   garbage. A staging directory is garbage only once
+   :func:`is_stale_staging` says its writer is presumed dead.
+
+This module is the ONLY place they touch the filesystem for that shape
+— list / atomic replace / recursive delete / pointer publish / size
+accounting — so a transactional backend (object store + a real table
+format, or a metadata service) is a port of ONE module, not a grep
+across five.
 
 Semantics the callers rely on:
 
@@ -24,15 +42,14 @@ Semantics the callers rely on:
 - ``list_dir`` of a missing directory is ``[]``: callers enumerate
   optional subtrees without existence preflights.
 
-LOCAL paths. Writes were single-writer by constraint through r12; r13
-adds OPTIMISTIC CONCURRENCY at the pointer swap (``cas_publish`` +
-``read_json_with_token``): a writer records the committed pointer's
-identity token when it reads, stages freely (staged dirs are invisible
-until published), and commits only if the token is unchanged — the
-local-FS analog of an object-store conditional-put / ETag
-if-match. Two racing writers: exactly one wins; the loser raises
-:class:`ConcurrentWriterError` with its staged dirs unreferenced (the
-next vacuum reclaims them) and retries from a fresh read or refuses.
+LOCAL paths. Concurrency is OPTIMISTIC at the pointer swap: a writer
+records the committed pointer's identity token when it reads, stages
+freely (staged dirs are invisible until published), and commits only
+if the token is unchanged — the local-FS analog of an object-store
+conditional-put / ETag if-match. Two racing writers: exactly one wins;
+the loser raises :class:`ConcurrentWriterError` with its claimed slots
+unreferenced (the next vacuum reclaims them) and retries from a fresh
+read or refuses.
 """
 
 from __future__ import annotations
@@ -41,6 +58,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -99,6 +117,20 @@ def rename_no_clobber(src: str, dst: str) -> bool:
         raise
 
 
+def claim(staged: str, slot_path, first: int) -> int:
+    """Rename the ``staged`` directory into the first free slot
+    ``slot_path(v)`` for ``v = first, first + 1, ...`` and return the
+    claimed ``v``. Occupied slots (a crashed attempt's orphan, a racing
+    writer's claim or a committed version) are skipped, never
+    replaced."""
+    v = first
+    while not rename_no_clobber(staged, slot_path(v)):
+        v += 1
+    return v
+
+
+_STAGING = "_staging_"
+
 #: how old a writer-private staging dir must be before cleanup/vacuum
 #: may presume its writer dead and reclaim it. Staging normally lives
 #: seconds-to-minutes; a CONCURRENT writer's active staging must never
@@ -106,14 +138,41 @@ def rename_no_clobber(src: str, dst: str) -> bool:
 STAGING_TTL_SECS = 3600.0
 
 
-def staging_is_stale(path: str, ttl: float = STAGING_TTL_SECS) -> bool:
-    """True when a staging directory is old enough to reclaim (its
-    writer crashed or lost long ago); False for missing paths and for
-    young dirs that may belong to a live concurrent writer."""
+def staging(root: str) -> str:
+    """A fresh writer-private staging path under ``root`` (not created:
+    the first write into it does that)."""
+    return os.path.join(root, f"{_STAGING}{uuid.uuid4().hex[:12]}")
+
+
+def is_stale_staging(root: str, entry: str) -> bool:
+    """True when ``root/entry`` is a staging directory old enough to
+    reclaim (its writer crashed or lost long ago). Any name containing
+    ``_staging_`` counts, which also covers the per-structure prefixes
+    earlier writers used (``_v_``, ``_base_``, ``_components_``,
+    ``_meta_``, ``_union_staging_``). False for young staging, which
+    may belong to a live concurrent writer, and for missing paths."""
+    if _STAGING not in entry:
+        return False
     try:
-        return (time.time() - os.path.getmtime(path)) > ttl
+        age = time.time() - os.path.getmtime(os.path.join(root, entry))
     except OSError:
         return False
+    return age > STAGING_TTL_SECS
+
+
+def check_format(obj, want: int, path: str):
+    """``obj`` (a pointer read from ``path``) when it carries
+    ``"format": want``; otherwise ``ValueError`` naming the path. A
+    layout no current writer produces is refused instead of being read
+    through a fallback path."""
+    have = obj.get("format") if isinstance(obj, dict) else None
+    if have != want:
+        raise ValueError(
+            f"{path}: on-disk format {have or 'unversioned'} is not the "
+            f"format {want} this engine reads; delete it (and any "
+            "streaming checkpoint resuming from it) and rebuild"
+        )
+    return obj
 
 
 def remove_tree(path: str) -> None:

@@ -51,13 +51,30 @@ def source_fingerprint(*paths: str) -> str:
     return "|".join(parts)
 
 
+#: ``format`` stamp of every ``_meta.json`` this module (and the rollup
+#: catalog, which shares its currency gate) writes; ``meta_is_current``
+#: treats any other meta as stale and the readers refuse it
+META_FORMAT = 2
+
+
+def _meta_path(out_dir: str) -> str:
+    return os.path.join(out_dir, "_meta.json")
+
+
+def _read_meta_with_token(out_dir: str) -> tuple[dict, object]:
+    """The index's meta and identity token, refused unless it carries
+    :data:`META_FORMAT` (fsops.check_format)."""
+    meta, tok = fsops.read_json_with_token(_meta_path(out_dir))
+    return fsops.check_format(meta, META_FORMAT, _meta_path(out_dir)), tok
+
+
 def _write_meta(
     out_dir: str, fingerprint: str, params: dict, extra: dict | None = None
 ) -> None:
-    meta = {"fingerprint": fingerprint, "params": params}
+    meta = {"format": META_FORMAT, "fingerprint": fingerprint, "params": params}
     if extra:
         meta.update(extra)
-    fsops.publish_json(os.path.join(out_dir, "_meta.json"), meta)
+    fsops.publish_json(_meta_path(out_dir), meta)
 
 
 def _schemas_entry(**dfs: DataFrame) -> dict[str, str]:
@@ -70,20 +87,15 @@ def _schemas_entry(**dfs: DataFrame) -> dict[str, str]:
 
 def _read_index_table(spark: SparkSession, out_dir: str, sub: str) -> DataFrame:
     """Open ``<out_dir>/<sub>.parquet`` with the schema recorded in
-    ``_meta.json`` (zero-job); legacy metas fall back to inference."""
-    sj = (
-        (fsops.read_json(os.path.join(out_dir, "_meta.json")) or {})
-        .get("schemas", {})
-        .get(sub)
+    ``_meta.json`` (zero-job)."""
+    import json as _json
+
+    from pyspark.sql.types import StructType
+
+    sj = _read_meta_with_token(out_dir)[0]["schemas"][sub]
+    return spark.read.schema(StructType.fromJson(_json.loads(sj))).parquet(
+        os.path.join(out_dir, f"{sub}.parquet")
     )
-    p = os.path.join(out_dir, f"{sub}.parquet")
-    if sj:
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        return spark.read.schema(StructType.fromJson(_json.loads(sj))).parquet(p)
-    return spark.read.parquet(p)
 
 
 def appended_fraction(out_dir: str) -> float:
@@ -91,8 +103,8 @@ def appended_fraction(out_dir: str) -> float:
     DRIFT signal: frozen-quantizer appends are encoded only as well as
     the stale codebook represents them, so recall decays as this ratio
     grows (measured in SCALE.md; tools/bench_ann_drift.py). 0.0 for a
-    fresh or legacy index."""
-    meta = fsops.read_json(os.path.join(out_dir, "_meta.json"))
+    missing index or one that records no append counters."""
+    meta = fsops.read_json(_meta_path(out_dir))
     if meta is None:
         return 0.0
     base = meta.get("base_rows") or 0
@@ -120,15 +132,15 @@ def needs_refit(out_dir: str, threshold: float = 0.3) -> bool:
 def index_is_current(out_dir: str, fingerprint: str, params: dict) -> bool:
     """True iff a persisted index exists at ``out_dir`` and was built
     from sources matching ``fingerprint`` with the same ``params``."""
-    return meta_is_current(
-        fsops.read_json(os.path.join(out_dir, "_meta.json")), fingerprint, params
-    )
+    return meta_is_current(fsops.read_json(_meta_path(out_dir)), fingerprint, params)
 
 
 def meta_is_current(meta: dict | None, fingerprint: str, params: dict) -> bool:
     """:func:`index_is_current` on an already-read ``_meta.json`` (None
-    when missing), for callers that use the same meta object further."""
-    if meta is None:
+    when missing), for callers that use the same meta object further.
+    A meta without :data:`META_FORMAT` is never current, so an index
+    written by an older layout is rebuilt rather than read."""
+    if meta is None or meta.get("format") != META_FORMAT:
         return False
     return meta.get("fingerprint") == fingerprint and meta.get("params") == params
 
@@ -421,16 +433,13 @@ def append_to_ivfpq_index(
         .partitionBy("cell")
         .parquet(os.path.join(out_dir, "cells.parquet"))
     )
-    meta_path = os.path.join(out_dir, "_meta.json")
     # conditional meta publish (fsops.cas_publish): a racing
     # append/fold loses at the swap instead of silently dropping the
     # winner's fingerprint lineage
-    meta, tok = fsops.read_json_with_token(
-        meta_path, {"fingerprint": "", "params": {}}
-    )
-    meta["fingerprint"] = f"{meta.get('fingerprint', '')}+append:{n}"
+    meta, tok = _read_meta_with_token(out_dir)
+    meta["fingerprint"] = f"{meta['fingerprint']}+append:{n}"
     meta["appended_rows"] = (meta.get("appended_rows") or 0) + n
-    fsops.cas_publish(meta_path, meta, tok)
+    fsops.cas_publish(_meta_path(out_dir), meta, tok)
     return n
 
 
@@ -598,15 +607,12 @@ def maintain_ivf_lists_cdc(
     total_cells = sum(
         1 for d in fsops.list_dir(cells_path) if d.startswith("cell=")
     )
-    meta_path = os.path.join(out_dir, "_meta.json")
     # conditional meta publish — same CAS discipline as the append path
-    meta, tok = fsops.read_json_with_token(
-        meta_path, {"fingerprint": "", "params": {}}
-    )
+    meta, tok = _read_meta_with_token(out_dir)
     meta["maintained"] = True
-    meta["fingerprint"] = f"{meta.get('fingerprint', '')}+cdc:{n_upserts}/{n_victims}"
+    meta["fingerprint"] = f"{meta['fingerprint']}+cdc:{n_upserts}/{n_victims}"
     meta["appended_rows"] = (meta.get("appended_rows") or 0) + n_upserts
-    fsops.cas_publish(meta_path, meta, tok)
+    fsops.cas_publish(_meta_path(out_dir), meta, tok)
     return {
         "touched_cells": len(touched),
         "total_cells": total_cells,
@@ -621,11 +627,7 @@ def ivf_lists_need_rebuild(out_dir: str, fingerprint: str, params: dict) -> bool
     already maintained (a prior fold mutated them — the gate re-derives
     base + delta deterministically each run, so a maintained tree must
     rebuild from scratch first)."""
-    meta = fsops.read_json(os.path.join(out_dir, "_meta.json"))
-    if meta is None:
-        return True
-    return (
-        meta.get("fingerprint") != fingerprint
-        or meta.get("params") != params
-        or bool(meta.get("maintained"))
+    meta = fsops.read_json(_meta_path(out_dir))
+    return not meta_is_current(meta, fingerprint, params) or bool(
+        meta.get("maintained")
     )

@@ -43,11 +43,11 @@ replay-idempotent, so the fold is staged-then-published — all new
 bucket directories and the new meta (df) version are written first,
 then ONE atomic ``os.replace`` of the ``_ptr`` manifest makes the whole
 fold visible: {meta version, bucket → version map, folded tags, corpus
-globals}. The pointer's compatibility is ONE-WAY: this code reads
-older pointers (no ``globals`` key ⇒ the meta version's
-``globals.parquet``), but it no longer writes ``globals.parquet``, so
-an older reader cannot open an index this code built or folded; the
-pointer carries no format version to refuse it by. A crash at any
+globals}. The pointer carries ``"format": 2`` and readers refuse any
+other (``fsops.check_format``): every unstamped pointer — including
+pre-r12 ones without ``pos`` and pre-r14 ones whose globals sit in a
+per-meta ``globals.parquet`` — raises a ``ValueError`` that says to
+rebuild, instead of being read through a fallback. A crash at any
 earlier point leaves the previous pointer — and therefore a fully
 consistent previous index — in place; deleting the
 superseded directories afterward is pure cleanup, retried by the next
@@ -109,6 +109,8 @@ def phrase_df(spark: SparkSession, phrase: tuple[str, ...]) -> DataFrame:
 
 _N_BUCKETS = 64
 _PTR = "_ptr"
+#: ``format`` stamp of the pointer (module docstring)
+_FORMAT = 2
 _POSTINGS_SCHEMA = "doc_id long, token string, tf long, positions array<int>, bucket int"
 _DOCLEN_SCHEMA = "doc_id long, dl long, bucket int"
 
@@ -164,23 +166,23 @@ def _ptr_path(path: str) -> str:
 
 
 def read_ptr(path: str) -> dict:
-    """{"meta": M, "postings": {b: v}, "doclen": {b: v}, "folds": [...],
-    "pos": bool} — ``pos`` records whether this index stores positional
-    postings (absent in pre-r12 pointers ⇒ True, positions were always
-    stored then); folds inherit it, phrase search requires it."""
+    """{"format", "meta": M, "postings": {b: v}, "doclen": {b: v},
+    "folds": [...], "pos": bool, "globals": {...}} — ``pos`` records
+    whether this index stores positional postings; folds inherit it,
+    phrase search requires it."""
     return _read_ptr_with_token(path)[0]
 
 
 def _read_ptr_with_token(path: str) -> tuple[dict, object]:
     """Pointer plus its identity token — every writer reads through
     this so its eventual ``_write_ptr`` can be conditional (optimistic
-    concurrency at the pointer swap; fsops.cas_publish)."""
-    ptr, tok = fsops.read_json_with_token(
-        _ptr_path(path),
-        {"meta": -1, "postings": {}, "doclen": {}, "folds": [], "pos": True},
-    )
-    ptr.setdefault("pos", True)
-    return ptr, tok
+    concurrency at the pointer swap; fsops.cas_publish). A missing
+    pointer reads as an empty index; one without the current format
+    is refused."""
+    ptr, tok = fsops.read_json_with_token(_ptr_path(path))
+    if tok is None:
+        return {"meta": -1, "postings": {}, "doclen": {}, "folds": []}, tok
+    return fsops.check_format(ptr, _FORMAT, _ptr_path(path)), tok
 
 
 def _write_ptr(path: str, ptr: dict, expected_token: object) -> None:
@@ -188,7 +190,7 @@ def _write_ptr(path: str, ptr: dict, expected_token: object) -> None:
     since this writer's read — two racing folds/builds resolve to
     exactly one winner, the loser raising ConcurrentWriterError with
     its staged dirs left for vacuum."""
-    fsops.cas_publish(_ptr_path(path), ptr, expected_token)
+    fsops.cas_publish(_ptr_path(path), {**ptr, "format": _FORMAT}, expected_token)
 
 
 def _bucket_dir(path: str, table: str, bucket: int, version: int) -> str:
@@ -211,22 +213,20 @@ def vacuum_plan(path: str, ptr: dict) -> tuple[list[str], set[str]]:
     for table in ("postings", "doclen"):
         for b, v in ptr[table].items():
             live.add(os.path.relpath(_bucket_dir(path, table, int(b), v), path))
-    removable = []
-    for entry in fsops.list_dir(path):
-        if entry.startswith("meta_v") and entry not in live:
-            removable.append(entry)
-        elif entry.startswith(("_meta_staging_", "_union_staging_")) and (
-            fsops.staging_is_stale(os.path.join(path, entry))
-        ):
-            removable.append(entry)
+    removable = [
+        e
+        for e in fsops.list_dir(path)
+        if (e.startswith("meta_v") and e not in live)
+        or fsops.is_stale_staging(path, e)
+    ]
     for table in ("postings", "doclen"):
-        for entry in fsops.list_dir(os.path.join(path, table)):
-            rel = os.path.join(table, entry)
-            if entry.startswith("_staging_"):
-                if fsops.staging_is_stale(os.path.join(path, rel)):
-                    removable.append(rel)
-            elif rel not in live:
-                removable.append(rel)
+        root = os.path.join(path, table)
+        removable += [
+            os.path.join(table, e)
+            for e in fsops.list_dir(root)
+            if (e.startswith("b") and os.path.join(table, e) not in live)
+            or fsops.is_stale_staging(root, e)
+        ]
     return removable, live
 
 
@@ -285,40 +285,24 @@ def read_df_table(spark: SparkSession, path: str) -> DataFrame:
 
 def read_globals(spark: SparkSession, path: str):
     """``{"n_docs": int, "sum_dl": int}``. Two counters do not need a
-    parquet file and a Spark job per read: since r14 they ride in the
-    pointer itself (same atomic publish; the pointer swap was already
-    the commit point for the meta version that carried them). Legacy
-    indexes (pre-r14 pointers without a ``globals`` key) fall back to
-    the old per-meta-version ``globals.parquet``."""
-    ptr = read_ptr(path)
-    g = ptr.get("globals")
-    if g is not None:
-        return {"n_docs": int(g["n_docs"]), "sum_dl": int(g["sum_dl"])}
-    row = (
-        spark.read.schema("n_docs long, sum_dl long")
-        .parquet(os.path.join(_meta_dir(path, ptr["meta"]), "globals.parquet"))
-        .first()
-    )
-    return {"n_docs": int(row["n_docs"]), "sum_dl": int(row["sum_dl"])}
+    parquet file and a Spark job per read: they ride in the pointer
+    itself (same atomic publish as the meta version they belong to)."""
+    g = read_ptr(path)["globals"]
+    return {"n_docs": int(g["n_docs"]), "sum_dl": int(g["sum_dl"])}
 
 
 def _write_meta(
     spark: SparkSession, path: str, version: int, df_table: DataFrame
 ) -> int:
-    """Stage the df table into a writer-private dir, then claim the
-    first free ``meta_v*`` slot at-or-past the hinted version (racing
-    writers never clobber each other). Returns the CLAIMED version —
-    the pointer must record this, not the hint. The two corpus globals
-    ride in the pointer (read_globals), not in a parquet file here —
-    one fewer write job per fold and one fewer read job per search."""
-    import uuid
-
-    staging = os.path.join(path, f"_meta_staging_{uuid.uuid4().hex[:12]}")
+    """Stage the df table, then claim the first free ``meta_v*`` slot
+    at-or-past the hinted version (fsops.claim). Returns the CLAIMED
+    version — the pointer must record this, not the hint. The two
+    corpus globals ride in the pointer (read_globals), not in a parquet
+    file here — one fewer write job per fold and one fewer read job
+    per search."""
+    staging = fsops.staging(path)
     df_table.write.mode("overwrite").parquet(os.path.join(staging, "df.parquet"))
-    v = version
-    while not fsops.rename_no_clobber(staging, _meta_dir(path, v)):
-        v += 1
-    return v
+    return fsops.claim(staging, functools.partial(_meta_dir, path), version)
 
 
 def _claim_bucket_slots(
@@ -334,16 +318,13 @@ def _claim_bucket_slots(
         # a staged bucket outside the touched set means the frame and the
         # delta's bucketing drifted — corrupting an un-versioned bucket
         assert b in allowed, f"staged bucket {b} outside touched set for {table}"
-        # claim the first FREE versioned slot at-or-past the hint: an
-        # occupied slot (crashed prior attempt, or a racing writer's
-        # staged/committed dir) is never clobbered — the losing
-        # pointer's unreferenced slots are reclaimed by cleanup/vacuum
-        v = int(versions.get(str(b), -1)) + 1
-        while not fsops.rename_no_clobber(
-            os.path.join(staged_root, entry), _bucket_dir(path, table, b, v)
-        ):
-            v += 1
-        out[str(b)] = v
+        # claim the first FREE versioned slot past the current one: the
+        # losing pointer's unreferenced slots are reclaimed by vacuum
+        out[str(b)] = fsops.claim(
+            os.path.join(staged_root, entry),
+            functools.partial(_bucket_dir, path, table, b),
+            int(versions.get(str(b), -1)) + 1,
+        )
     return out
 
 
@@ -368,8 +349,6 @@ def _write_buckets_fused(
     caller that already rolled the kept rows up per doc passes it to
     skip the second aggregation. Returns (postings entries, doclen
     entries)."""
-    import uuid
-
     dl_null = F.lit(None).cast("long").alias("dl")
     p_part = postings.select(
         "doc_id", "token", "tf", "positions", dl_null, "bucket",
@@ -384,8 +363,7 @@ def _write_buckets_fused(
         "bucket",
         F.lit("doclen").alias("kind"),
     )
-    staging = os.path.join(path, f"_union_staging_{uuid.uuid4().hex[:12]}")
-    fsops.remove_tree(staging)
+    staging = fsops.staging(path)
     # Repartition ON (kind, bucket) so each staged bucket dir gets ONE
     # file instead of one per upstream task: without it a 32-task frame
     # x 64 buckets fragments into ~2k tiny files and every later

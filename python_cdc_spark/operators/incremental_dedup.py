@@ -22,8 +22,9 @@ Storage layout under ``path`` (all parquet):
   base_v<N>/{cells,bands,sizes}/
                               — versioned base tables (bootstrap or
                                 compaction output)
-  _base_ptr                   — JSON {version, includes}: the current
-                                base and the delta tags it absorbed
+  _base_ptr                   — JSON {format, version, includes,
+                                n_docs}: the current base, the delta
+                                tags it absorbed and its corpus size
   deltas/<tag>/{cells,bands,sizes}/ + _COMMITTED
                               — one subdirectory per folded delta,
                                 committed all-or-nothing by the marker
@@ -33,7 +34,14 @@ Storage layout under ``path`` (all parquet):
                                 whose earlier-generation images the
                                 delta evicts (UPDATE/DELETE)
   components_v<N>/            — versioned cluster tables
-  _components_ptr             — points at the current version
+  _components_ptr             — JSON {format, version}: the current one
+
+Both pointers carry ``"format": 2`` and there is no other layout. An
+unstamped ``_base_ptr`` or the bare-int ``_components_ptr`` of earlier
+writers is refused with a ``ValueError`` that says to rebuild; the old
+flat layout (base tables directly under ``path``) has no ``_base_ptr``
+at all and is not read. New bases and components versions go through
+the package's one stage → claim → CAS-publish protocol (``fsops``).
 
 An index read = current base ∪ committed deltas not yet absorbed into
 the base (the ``includes`` list) — so compaction is crash-safe too: the
@@ -49,10 +57,10 @@ replays the fold; re-deriving the same tag from the same delta rows
 makes the rewrite byte-equivalent, and re-merging already-merged pairs
 is a fixpoint of the contracted closure — both endpoints map to the
 same canonical, so the merge graph is empty). The component swap never
-deletes the live version: it writes ``components_v<N+1>``, atomically
-repoints ``_components_ptr`` via ``os.replace``, then prunes versions
-older than N — a concurrent reader of version N keeps a complete
-directory.
+deletes the live version: it claims ``components_v<N+1>`` (or the next
+free slot), atomically repoints ``_components_ptr``, then prunes
+versions older than N — a concurrent reader of version N keeps a
+complete directory.
 
 Single-writer assumption, and ``path`` must be a LOCAL filesystem path:
 the ``_COMMITTED`` / ``_components_ptr`` markers use ``os`` primitives
@@ -76,6 +84,10 @@ from python_cdc_spark.session import run_concurrent
 
 _N, _K, _BANDS, _THRESHOLD = 3, 8, 4, 0.5
 _TABLES = ("cells", "bands", "sizes")
+#: ``format`` stamp of ``_base_ptr`` and ``_components_ptr`` (module
+#: docstring); a pointer without it is refused, not read through a
+#: fallback
+_FORMAT = 2
 # Fixed on-disk schemas (ids are longs by layout contract — the
 # components table has always been "v long"; ``_delta_tables`` casts).
 # Passing them to every read skips the per-directory parquet
@@ -175,17 +187,19 @@ def _base_pointer(path: str) -> str:
 
 
 def _read_base_ptr(path: str) -> dict:
-    """{"version": N, "includes": [tags]} — or the legacy flat layout
-    (base tables directly under ``path``, nothing absorbed)."""
+    """{"format", "version": N, "includes": [tags], "n_docs"}, or
+    version -1 with nothing absorbed before the first build."""
     return _read_base_ptr_with_token(path)[0]
 
 
 def _read_base_ptr_with_token(path: str) -> tuple[dict, object]:
     """Pointer plus identity token for a conditional ``_write_base_ptr``
-    (optimistic concurrency at the swap; fsops.cas_publish)."""
-    return fsops.read_json_with_token(
-        _base_pointer(path), {"version": -1, "includes": []}
-    )
+    (optimistic concurrency at the swap; fsops.cas_publish). A pointer
+    without the current format is refused (fsops.check_format)."""
+    ptr, tok = fsops.read_json_with_token(_base_pointer(path))
+    if tok is None:
+        return {"version": -1, "includes": []}, tok
+    return fsops.check_format(ptr, _FORMAT, _base_pointer(path)), tok
 
 
 def _write_base_ptr(
@@ -193,41 +207,39 @@ def _write_base_ptr(
     version: int,
     includes: list[str],
     expected_token: object,
-    n_docs: int | None = None,
+    n_docs: int,
 ) -> None:
     """Commit point: conditional on the pointer not having moved since
     this writer's read — racing rebuild/compact/prune writers resolve
     to one winner, the loser raising ConcurrentWriterError. ``n_docs``
-    (when known) records the base corpus size so folds can derive the
-    reroute-check denominator from metadata instead of an O(corpus)
-    scan per fold (r13; see ``_corpus_count``)."""
-    ptr = {"version": version, "includes": sorted(includes)}
-    if n_docs is not None:
-        ptr["n_docs"] = int(n_docs)
-    fsops.cas_publish(_base_pointer(path), ptr, expected_token)
+    records the base corpus size so folds can derive the reroute-check
+    denominator from metadata instead of an O(corpus) scan per fold
+    (r13; see ``_corpus_count``)."""
+    fsops.cas_publish(
+        _base_pointer(path),
+        {
+            "format": _FORMAT,
+            "version": version,
+            "includes": sorted(includes),
+            "n_docs": int(n_docs),
+        },
+        expected_token,
+    )
+
+
+def _base_dir(path: str, version: int) -> str:
+    return os.path.join(path, f"base_v{version}")
 
 
 def _claim_base(path: str, hint: int, write_tables) -> tuple[str, int]:
-    """Stage a new base into a writer-private dir (``write_tables`` is
-    called with the staging path), then claim the first free
-    ``base_v*`` slot at-or-past ``hint`` via non-clobbering rename.
-    Returns (claimed dir, claimed version) — the pointer must record
-    the claimed version, not the hint. Racing writers each claim a
-    distinct slot; the losing pointer's slot is vacuum fodder."""
-    import uuid
-
-    stage = os.path.join(path, f"_base_staging_{uuid.uuid4().hex[:12]}")
+    """Stage a new base (``write_tables`` is called with the staging
+    path), then claim the first free ``base_v*`` slot at-or-past
+    ``hint`` (fsops.claim). Returns (claimed dir, claimed version) —
+    the pointer must record the claimed version, not the hint."""
+    stage = fsops.staging(path)
     write_tables(stage)
-    v = hint
-    while not fsops.rename_no_clobber(stage, os.path.join(path, f"base_v{v}")):
-        v += 1
-    return os.path.join(path, f"base_v{v}"), v
-
-
-def _base_dir(path: str, ptr: dict) -> str:
-    if ptr["version"] < 0:
-        return path  # legacy flat layout: cells/ bands/ sizes/ at top level
-    return os.path.join(path, f"base_v{ptr['version']}")
+    v = fsops.claim(stage, functools.partial(_base_dir, path), hint)
+    return _base_dir(path, v), v
 
 
 def _committed_delta_dirs(path: str, ptr: dict | None = None) -> list[str]:
@@ -251,17 +263,26 @@ def _prune_uncommitted_deltas(path: str) -> None:
     root = _deltas_root(path)
     if not fsops.is_dir(root):
         return
-    ptr, tok = _read_base_ptr_with_token(path)
-    absorbed = set(ptr["includes"])
+    absorbed = set(_read_base_ptr(path)["includes"])
     for d in fsops.list_dir(root):
         full = os.path.join(root, d)
         if d in absorbed or not fsops.is_file(os.path.join(full, "_COMMITTED")):
             fsops.remove_tree(full)
-    # drop includes entries whose directories are now gone, so a future
-    # fold that legitimately reuses the tag isn't silently masked
+    prune_includes(path)
+
+
+def prune_includes(path: str) -> None:
+    """Drop ``includes`` entries whose delta directories are gone, so a
+    future fold that legitimately reuses the tag isn't silently masked.
+    Runs AFTER the directories are deleted: a crash in between leaves
+    only stale entries pointing at missing dirs, never an absorbed
+    delta read twice. ``n_docs`` passes through unchanged. The fold's
+    prune and ``maintenance.vacuum`` both end with it."""
+    ptr, tok = _read_base_ptr_with_token(path)
+    root = _deltas_root(path)
     live = [t for t in ptr["includes"] if fsops.is_dir(os.path.join(root, t))]
-    if ptr["version"] >= 0 and live != sorted(ptr["includes"]):
-        _write_base_ptr(path, ptr["version"], live, tok, n_docs=ptr.get("n_docs"))
+    if ptr["version"] >= 0 and live != ptr["includes"]:
+        _write_base_ptr(path, ptr["version"], live, tok, ptr["n_docs"])
 
 
 def _cdc_gen(dirpath: str) -> int:
@@ -325,7 +346,7 @@ def read_index_tables(
 
     out: dict[str, DataFrame] = {}
     for name in names:
-        dirs = [(0, os.path.join(_base_dir(path, ptr), name))] + [
+        dirs = [(0, os.path.join(_base_dir(path, ptr["version"]), name))] + [
             (_cdc_gen(d), os.path.join(d, name)) for d in deltas
         ]
         schema = _TABLE_SCHEMAS[name]  # fixed layout: no inference job per dir
@@ -354,13 +375,22 @@ def _components_pointer(path: str) -> str:
     return os.path.join(path, "_components_ptr")
 
 
+def _components_dir(path: str, version: int) -> str:
+    return os.path.join(path, f"components_v{version}")
+
+
+def _read_components_version(path: str) -> tuple[int, object]:
+    """Current components version (-1 before the first build) and the
+    pointer's identity token. A pointer without the current format (the
+    bare-int pointer of earlier layouts) is refused."""
+    got, tok = fsops.read_json_with_token(_components_pointer(path))
+    if tok is None:
+        return -1, tok
+    return fsops.check_format(got, _FORMAT, _components_pointer(path))["version"], tok
+
+
 def _current_components_dir(path: str) -> str:
-    got = fsops.read_json(_components_pointer(path))
-    try:
-        return os.path.join(path, f"components_v{int(got)}")
-    except (TypeError, ValueError):
-        # legacy layout (pre-versioning) fallback
-        return os.path.join(path, "components")
+    return _components_dir(path, _read_components_version(path)[0])
 
 
 def read_components(spark: SparkSession, path: str) -> DataFrame:
@@ -372,35 +402,55 @@ def read_components(spark: SparkSession, path: str) -> DataFrame:
 
 def _swap_components(path: str, new_comp: DataFrame) -> None:
     """Publish a new components version without ever leaving the index
-    table-less: write v<N+1>, conditionally repoint (CAS on the
-    pointer read — a racing writer loses cleanly), prune versions < N
-    (the immediately-previous version survives one generation so a
-    racing reader of the old pointer still finds a complete dir)."""
-    import uuid
-
-    got, tok = fsops.read_json_with_token(_components_pointer(path))
-    try:
-        cur = int(got) if got is not None else -1
-    except (TypeError, ValueError):
-        cur = -1
-    # stage-and-claim, then CAS the pointer at the claimed version
-    stage = os.path.join(path, f"_components_staging_{uuid.uuid4().hex[:12]}")
+    table-less: stage, claim the first free slot past the current one
+    (fsops.claim), conditionally repoint (CAS on the pointer read — a
+    racing writer loses cleanly), prune versions < N (the
+    immediately-previous version survives one generation so a racing
+    reader of the old pointer still finds a complete dir)."""
+    cur, tok = _read_components_version(path)
+    stage = fsops.staging(path)
     new_comp.write.mode("overwrite").parquet(stage)
-    nxt = cur + 1
-    while not fsops.rename_no_clobber(stage, os.path.join(path, f"components_v{nxt}")):
-        nxt += 1
-    fsops.cas_publish(_components_pointer(path), nxt, tok)
+    nxt = fsops.claim(stage, functools.partial(_components_dir, path), cur + 1)
+    fsops.cas_publish(
+        _components_pointer(path), {"format": _FORMAT, "version": nxt}, tok
+    )
     for d in fsops.list_dir(path):
-        if d.startswith("components_v"):
-            try:
-                v = int(d[len("components_v"):])
-            except ValueError:
-                continue
-            if v < cur:
-                fsops.remove_tree(os.path.join(path, d))
-    legacy = os.path.join(path, "components")
-    if cur == -1 and fsops.is_dir(legacy):
-        fsops.remove_tree(legacy)
+        v = d[len("components_v"):]
+        if d.startswith("components_v") and v.isdigit() and int(v) < cur:
+            fsops.remove_tree(os.path.join(path, d))
+
+
+def vacuum_plan(path: str, retain_last: int) -> tuple[list[str], set[str]]:
+    """``(removable, live)``, both relative to the index root. ``live``
+    is the current base, the committed deltas it has not absorbed, the
+    current components version and ``retain_last`` versions below it
+    (a racing reader of an old pointer keeps a complete directory).
+    Every other base, components or delta dir is removable, and so is
+    staging past the age gate (``fsops.is_stale_staging``). The dedup
+    entry of ``maintenance.vacuum``."""
+    ptr = _read_base_ptr(path)
+    cur = _read_components_version(path)[0]
+    live = {
+        os.path.basename(_components_dir(path, v))
+        for v in range(max(0, cur - retain_last), cur + 1)
+    }
+    if ptr["version"] >= 0:
+        live.add(os.path.basename(_base_dir(path, ptr["version"])))
+    live |= {
+        os.path.relpath(d, path) for d in _committed_delta_dirs(path, ptr)
+    }
+    removable = [
+        e
+        for e in fsops.list_dir(path)
+        if (e.startswith(("base_v", "components_v")) and e not in live)
+        or fsops.is_stale_staging(path, e)
+    ]
+    removable += [
+        os.path.join("deltas", e)
+        for e in fsops.list_dir(_deltas_root(path))
+        if os.path.join("deltas", e) not in live
+    ]
+    return removable, live
 
 
 def _delta_fingerprint(delta_docs: DataFrame, id_col: str) -> str:
@@ -435,7 +485,7 @@ def build_dedup_index(
     absorbs nothing, and stale delta directories are cleared."""
     ptr, tok = _read_base_ptr_with_token(path)
     nxt = ptr["version"] + 1
-    # stage-and-claim (fsops.rename_no_clobber): build into a
+    # stage-and-claim (fsops.claim): build into a
     # writer-private dir, then claim the first free base_v slot — a
     # racing writer's staged/committed base is never clobbered; the
     # CAS'd pointer publish below then picks exactly one winner
@@ -454,10 +504,10 @@ def build_dedup_index(
         .parquet(os.path.join(base, "sizes"))
         .count()
     )
-    _write_base_ptr(path, nxt, [], tok, n_docs=n_docs)
+    _write_base_ptr(path, nxt, [], tok, n_docs)
     fsops.remove_tree(_deltas_root(path))  # fresh bootstrap
     if ptr["version"] >= 0:
-        fsops.remove_tree(_base_dir(path, ptr))
+        fsops.remove_tree(_base_dir(path, ptr["version"]))
     b = spark.read.schema(_TABLE_SCHEMAS["bands"]).parquet(os.path.join(base, "bands"))
     x, y = b.alias("x"), b.alias("y")
     cand = (
@@ -592,18 +642,15 @@ def _corpus_count(spark: SparkSession, path: str, ptr: dict) -> int | None:
     ``_counts.json`` sidecar. Metadata-only — the exact
     ``post_sizes.count()`` it replaces was an O(corpus) scan inside
     the O(delta) fold path (r13). Returns None (caller falls back to
-    the exact count) for legacy indexes without ``n_docs`` or with
-    insert-only delta dirs that predate the sidecar.
+    the exact count) when an insert-only fold's delta dir, which
+    writes no sidecar, is live.
 
     Estimate semantics, deliberately: a DELETE of an absent id or an
     INSERT of an existing id drifts the estimate by one; both reroute
     tiers are COST-PLACEMENT decisions between two exact plans
     (module docstring), so drift can only shift which exact plan runs.
     Compaction re-counts exactly and resets the base."""
-    base_n = ptr.get("n_docs")
-    if base_n is None:
-        return None
-    n = int(base_n)
+    n = int(ptr["n_docs"])
     for d in _committed_delta_dirs(path, ptr):
         c = fsops.read_json(os.path.join(d, "_counts.json"))
         if c is None:
@@ -785,7 +832,7 @@ def cdc_dedup_index_update(
     # the rebuild plan, reading the just-folded index. Exact either way.
     # The denominator comes from pointer metadata when available
     # (_corpus_count) — the exact count was an O(corpus) scan inside
-    # the O(delta) path; legacy indexes fall back to it.
+    # the O(delta) path; live insert-only deltas fall back to it.
     ptr_now = _read_base_ptr(path)
     n_corpus = _corpus_count(spark, path, ptr_now)
     if n_corpus is None:
@@ -930,9 +977,9 @@ def compact_dedup_index(spark: SparkSession, path: str) -> int:
         .parquet(os.path.join(newbase, "sizes"))
         .count()
     )
-    _write_base_ptr(path, nxt, absorbed, tok, n_docs=n_docs)
+    _write_base_ptr(path, nxt, absorbed, tok, n_docs)
     for d in deltas:
         fsops.remove_tree(d)
     if ptr["version"] >= 0:
-        fsops.remove_tree(_base_dir(path, ptr))
+        fsops.remove_tree(_base_dir(path, ptr["version"]))
     return len(deltas)

@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_cdc_spark import fsops
-from python_cdc_spark.operators.ann_index import index_is_current
+from python_cdc_spark.operators.ann_index import META_FORMAT, index_is_current
 from python_cdc_spark.session import run_concurrent
 
 _DEC = "decimal(30,10)"
@@ -67,8 +67,9 @@ _KINDS = ("sum", "count", "min", "max", "hll")
 # bumped when the on-disk layout changes: participates in the params
 # key, so caches written by an older layout rebuild instead of
 # misresolving (v3: hidden __n support column in the scalar table,
-# required by the signed-delta CDC refresh to drop net-dead groups)
-_LAYOUT = 3
+# required by the signed-delta CDC refresh to drop net-dead groups;
+# v4: meta carries the ann_index ``format`` stamp and always ``schemas``)
+_LAYOUT = 4
 # hidden per-group support count: lets refresh_cdc drop groups whose
 # row support nets to zero without consulting any caller measure
 _SUPPORT = "__n"
@@ -146,6 +147,15 @@ class RollupCatalog:
         """Meta plus identity token: writers read through this so their
         ``_commit_meta`` is conditional (fsops.cas_publish)."""
         return fsops.read_json_with_token(self._meta_path(name))
+
+    def _live_meta_with_token(self, name: str) -> tuple[dict, object]:
+        """``_meta_with_token`` for a rollup that must exist in the
+        current format (refreshes): LookupError when missing,
+        ValueError (fsops.check_format) for an older layout."""
+        meta, tok = self._meta_with_token(name)
+        if meta is None:
+            raise LookupError(f"no rollup named {name!r}")
+        return fsops.check_format(meta, META_FORMAT, self._meta_path(name)), tok
 
     def _commit_meta(self, name: str, meta: dict, expected_token: object) -> None:
         """Commit point — CAS on the token from ``_meta_with_token``:
@@ -253,11 +263,7 @@ class RollupCatalog:
         read passes an explicit schema (skipping the one-job parquet
         footer inference Spark runs per schemaless read — r13
         job-floor pass; measured 1 job per spark.read.parquet call)."""
-        import uuid
-
-        out = os.path.join(
-            self.base_dir, name, f"_v_staging_{uuid.uuid4().hex[:12]}"
-        )
+        out = fsops.staging(os.path.join(self.base_dir, name))
         jobs = []
         if scalar_df is not None:
             jobs.append(("data", scalar_df))
@@ -279,29 +285,18 @@ class RollupCatalog:
                 for sub, df in jobs
             ),
         )
-        return self._claim_vslot(name, out, version), schemas
+        return fsops.claim(out, functools.partial(self._vdir, name), version), schemas
 
     def _read_version_table(self, name: str, meta: dict, sub: str) -> DataFrame:
         """Read one of a version's tables with the schema recorded at
-        write time (zero-job open); legacy metas without ``schemas``
-        fall back to inference."""
-        path = os.path.join(self._vdir(name, meta["version"]), sub)
-        sj = (meta.get("schemas") or {}).get(sub)
-        if sj:
-            import json as _json
+        write time (zero-job open)."""
+        import json as _json
 
-            from pyspark.sql.types import StructType
+        from pyspark.sql.types import StructType
 
-            return self.spark.read.schema(
-                StructType.fromJson(_json.loads(sj))
-            ).parquet(path)
-        return self.spark.read.parquet(path)
-
-    def _claim_vslot(self, name: str, staged: str, hint: int) -> int:
-        v = hint
-        while not fsops.rename_no_clobber(staged, self._vdir(name, v)):
-            v += 1
-        return v
+        return self.spark.read.schema(
+            StructType.fromJson(_json.loads(meta["schemas"][sub]))
+        ).parquet(os.path.join(self._vdir(name, meta["version"]), sub))
 
     def _gc(self, name: str, keep_from: int) -> None:
         """Drop version dirs older than ``keep_from`` (the previous
@@ -351,6 +346,7 @@ class RollupCatalog:
         self._commit_meta(
             name,
             {
+                "format": META_FORMAT,
                 "fingerprint": fingerprint,
                 "params": params,
                 "version": version,
@@ -382,14 +378,11 @@ class RollupCatalog:
         leaves the previous version intact. The fingerprint is extended
         so ``index_is_current`` no longer matches the raw source — a
         later ``define`` against a fresh source fingerprint rebuilds."""
-        meta, tok = self._meta_with_token(name)
-        if meta is None:
-            raise LookupError(f"no rollup named {name!r}")
+        meta, tok = self._live_meta_with_token(name)
         if batch_id is not None and batch_id in meta["folded"]:
             return  # checkpoint replay after a crash past the commit
         params = meta["params"]
         dims = params["dims"]
-        cur = meta["version"]
         dim_cols = [F.expr(e).alias(a) for a, e in dims.items()]
         measures = {a: tuple(v) for a, v in params["measures"].items()}
         scalar = {a: v for a, v in measures.items() if v[0] != "hll"}
@@ -419,18 +412,7 @@ class RollupCatalog:
                 .groupBy(*dims, "bucket")
                 .agg(F.max("r").cast("int").alias("r"))
             )
-        meta["version"], meta["schemas"] = self._write_version(
-            name, cur + 1, scalar_df, hll_dfs
-        )
-        # mark once (idempotent): the point is to stop matching the raw
-        # source fingerprint, not to count folds
-        if not meta.get("fingerprint", "").endswith("+delta"):
-            meta["fingerprint"] = meta.get("fingerprint", "") + "+delta"
-        if batch_id is not None:
-            # bounded replay-guard tail (Spark only replays recent batches)
-            meta["folded"] = sorted(meta["folded"] + [batch_id])[-1000:]
-        self._commit_meta(name, meta, tok)
-        self._gc(name, cur)
+        self._publish_refresh(name, meta, tok, scalar_df, hll_dfs, batch_id)
 
     def _read_affected_partitions(
         self,
@@ -546,14 +528,11 @@ class RollupCatalog:
         "partition_pruned_fold", "affected_fold", "full_rebuild").
         Crash atomicity, replay (``batch_id``), fingerprint extension,
         and version GC are identical to ``refresh``."""
-        meta, tok = self._meta_with_token(name)
-        if meta is None:
-            raise LookupError(f"no rollup named {name!r}")
+        meta, tok = self._live_meta_with_token(name)
         if batch_id is not None and batch_id in meta["folded"]:
             return  # checkpoint replay after a crash past the commit
         params = meta["params"]
         dims = params["dims"]
-        cur = meta["version"]
         dim_cols = [F.expr(e).alias(a) for a, e in dims.items()]
         measures = {a: tuple(v) for a, v in params["measures"].items()}
         scalar = {a: v for a, v in measures.items() if v[0] != "hll"}
@@ -609,15 +588,7 @@ class RollupCatalog:
                 scalar_df, hll_dfs = self._build_tables(
                     state, dims, measures, checkpoint=True
                 )
-                meta["version"], meta["schemas"] = self._write_version(
-                    name, cur + 1, scalar_df, hll_dfs
-                )
-                if not meta.get("fingerprint", "").endswith("+delta"):
-                    meta["fingerprint"] = meta.get("fingerprint", "") + "+delta"
-                if batch_id is not None:
-                    meta["folded"] = sorted(meta["folded"] + [batch_id])[-1000:]
-                self._commit_meta(name, meta, tok)
-                self._gc(name, cur)
+                self._publish_refresh(name, meta, tok, scalar_df, hll_dfs, batch_id)
                 return
             if state_path is None:
                 self.last_refresh_plan = "affected_fold"
@@ -745,11 +716,29 @@ class RollupCatalog:
                     reg_cols
                 ).unionByName(regs.select(reg_cols))
 
+        self._publish_refresh(name, meta, tok, scalar_df, hll_dfs, batch_id)
+
+    def _publish_refresh(
+        self,
+        name: str,
+        meta: dict,
+        tok: object,
+        scalar_df: Optional[DataFrame],
+        hll_dfs: dict[str, DataFrame],
+        batch_id: Optional[int],
+    ) -> None:
+        """Every refresh path's commit: claim the refreshed tables as a
+        new version, CAS the meta, then drop versions below the previous
+        one. The fingerprint is marked ``+delta`` once (idempotent: the
+        point is to stop matching the raw source fingerprint, not to
+        count folds) and ``batch_id`` joins the bounded replay-guard
+        tail (Spark only replays recent batches)."""
+        cur = meta["version"]
         meta["version"], meta["schemas"] = self._write_version(
             name, cur + 1, scalar_df, hll_dfs
         )
-        if not meta.get("fingerprint", "").endswith("+delta"):
-            meta["fingerprint"] = meta.get("fingerprint", "") + "+delta"
+        if not meta["fingerprint"].endswith("+delta"):
+            meta["fingerprint"] += "+delta"
         if batch_id is not None:
             meta["folded"] = sorted(meta["folded"] + [batch_id])[-1000:]
         self._commit_meta(name, meta, tok)
@@ -874,3 +863,27 @@ def finalize_sum_double(df: DataFrame, aliases: list[str]) -> DataFrame:
     for a in aliases:
         out = out.withColumn(a, F.round(F.col(a), 4).cast("double"))
     return out
+
+
+def vacuum_plan(path: str, retain_last: int) -> tuple[list[str], set[str]]:
+    """``(removable, live)`` for the catalog at ``path``, both relative
+    to it. Each rollup keeps its current version and ``retain_last``
+    versions below it; every other ``v<N>`` dir is removable, and so is
+    staging past the age gate (``fsops.is_stale_staging``). The rollup
+    entry of ``maintenance.vacuum``."""
+    removable, live = [], set()
+    for name in fsops.list_dir(path):
+        meta = fsops.read_json(os.path.join(path, name, "_meta.json"))
+        if meta is None:
+            continue
+        cur = int(meta["version"])
+        keep = {f"v{v}" for v in range(max(1, cur - retain_last), cur + 1)}
+        live |= {os.path.join(name, k) for k in keep}
+        root = os.path.join(path, name)
+        removable += [
+            os.path.join(name, e)
+            for e in fsops.list_dir(root)
+            if (e.startswith("v") and e[1:].isdigit() and e not in keep)
+            or fsops.is_stale_staging(root, e)
+        ]
+    return removable, live

@@ -989,6 +989,7 @@ def cdc_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_update,
     )
     from python_cdc_spark.operators.ann_index import (
+        META_FORMAT,
         meta_is_current,
         source_fingerprint,
     )
@@ -1015,34 +1016,20 @@ def cdc_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so a concurrent fixture rewrite cannot pair a stale verdict with
     # fresh contents
     prior_meta = fsops.read_json(wire_meta_path)
-    wire_current = meta_is_current(prior_meta, wire_fp, {"v": 1})
-
-    max_eid = None
-    if wire_current and "derived" in prior_meta:
-        max_eid = int(prior_meta["derived"]["max_eid"])
-
-    if max_eid is None:
-        ev = table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-        head = ev.agg(F.max("event_id"), F.min("ts")).first()
-        max_eid, ts0 = int(head[0]), head[1]
-    split_eid = max_eid // 2
-    s_lsn = 8 * split_eid
-
-    if wire_current and "derived" not in prior_meta:
-        # legacy fixture (pre-r14): backfill the derived scalar once
-        # (atomic replace; idempotent content, so a concurrent backfill
-        # is harmless)
-        prior_meta["derived"] = {"max_eid": max_eid}
-        fsops.publish_json(wire_meta_path, prior_meta)
-
-    if wire_current:
+    if meta_is_current(prior_meta, wire_fp, {"v": 2}):
         # fixed wire schema: skips the one-job parquet footer inference
         frames = spark.read.schema("lsn bigint, ts timestamp, frame binary").parquet(
             wire_dir
         )
+        s_lsn = 8 * (int(prior_meta["derived"]["max_eid"]) // 2)
         return _composite_from_wire(spark, sf_dir, root, frames, s_lsn)
+
+    ev = table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    head = ev.agg(F.max("event_id"), F.min("ts")).first()
+    max_eid, ts0 = int(head[0]), head[1]
+    s_lsn = 8 * (max_eid // 2)
 
     mid_txn = (max_eid // 10) // 2
     txn_of = F.floor(F.col("event_id") / 10).cast("long")
@@ -1147,8 +1134,9 @@ def cdc_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     fsops.publish_json(
         wire_meta_path,
         {
+            "format": META_FORMAT,
             "fingerprint": wire_fp,
-            "params": {"v": 1},
+            "params": {"v": 2},
             "derived": {"max_eid": max_eid},
         },
     )

@@ -756,7 +756,7 @@ def dedup_index_cdc_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory() as tmp:
         work = os.path.join(tmp, "idx")
         cached_pristine_base(
-            cache, fp, {"v": 1}, lambda d: build_dedup_index(spark, base, d), work
+            cache, fp, {"v": 2}, lambda d: build_dedup_index(spark, base, d), work
         )
         # eagerly checkpointed inside the update → outlives the tempdir
         return cdc_dedup_index_update(spark, work, delta)
@@ -1141,7 +1141,7 @@ def dedup_fold_narrow_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory() as tmp:
         work = os.path.join(tmp, "idx")
         cached_pristine_base(
-            cache, fp, {"v": 1, "scope": "full"},
+            cache, fp, {"v": 2, "scope": "full"},
             lambda d: build_dedup_index(spark, docs, d), work,
         )
         # eagerly checkpointed inside the update → outlives the tempdir

@@ -563,7 +563,7 @@ def _folded_bm25_index(spark: SparkSession, sf_dir: str, refold: bool = False) -
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     work = os.path.join(tmp, "idx")
     cached_pristine_base(
-        cache, fp, {"v": 4},  # v4 = globals in pointer (v3: positional postings)
+        cache, fp, {"v": 5},  # v5 = format-stamped pointer (v4: globals in it)
         lambda d: build_bm25_index(spark, base, d), work,
     )
     cdc_bm25_update(spark, work, delta)
@@ -855,7 +855,7 @@ def _folded_bm25_narrow(spark: SparkSession, sf_dir: str) -> str:
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     work = os.path.join(tmp, "idx")
     cached_pristine_base(
-        cache, fp, {"v": 4, "scope": "full"},
+        cache, fp, {"v": 5, "scope": "full"},
         lambda d: build_bm25_index(spark, docs, d), work,
     )
     stats = cdc_bm25_update(spark, work, delta)

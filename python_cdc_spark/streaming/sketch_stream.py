@@ -52,20 +52,15 @@ _HLL_CM_FORMAT = 2
 _KLL_FORMAT = 1
 
 
-def _check_format(meta: dict, want: int, state_path: str) -> dict:
-    """Refuse to resume state written under a different sketch format:
-    folding new-geometry updates into old-geometry registers never
-    errors but double-places keys (ADVICE r6 #5). The caller must
-    rebuild (delete the state dir or point at a fresh one)."""
-    have = meta.get("format", 1)
-    if meta.get("version", 0) > 0 and have != want:
-        raise ValueError(
-            f"sketch state at {state_path} was written with format "
-            f"v{have}, this build writes v{want}: register/bucket "
-            "placements are incompatible — delete the state directory "
-            "(or use a fresh path) and re-fold from the source stream"
-        )
-    return meta
+def _read_meta(meta_path: str, want: int) -> dict:
+    """The committed meta (an empty one before the first fold),
+    refusing state written under a different sketch format: folding
+    new-geometry updates into old-geometry registers never errors but
+    double-places keys (ADVICE r6 #5), so the caller must rebuild."""
+    meta = fsops.read_json(meta_path)
+    if meta is None:
+        return {"version": 0, "folded": []}
+    return fsops.check_format(meta, want, meta_path)
 
 
 class StreamingSketchAggregator:
@@ -106,8 +101,7 @@ class StreamingSketchAggregator:
         return os.path.join(self.state_path, "_meta.json")
 
     def _meta(self) -> dict:
-        meta = fsops.read_json(self._meta_path, {"version": 0, "folded": []})
-        return _check_format(meta, _HLL_CM_FORMAT, self.state_path)
+        return _read_meta(self._meta_path, _HLL_CM_FORMAT)
 
     def _commit(self, version: int, folded: list) -> None:
         # Spark only replays recent uncommitted batches, so the replay
@@ -340,8 +334,7 @@ class KllStreamSketch:
         return os.path.join(self.state_path, "_meta.json")
 
     def _meta(self) -> dict:
-        meta = fsops.read_json(self._meta_path, {"version": 0, "folded": []})
-        return _check_format(meta, _KLL_FORMAT, self.state_path)
+        return _read_meta(self._meta_path, _KLL_FORMAT)
 
     def _commit(self, version: int, folded: list) -> None:
         fsops.publish_json(

@@ -58,7 +58,6 @@ from __future__ import annotations
 import functools
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -84,27 +83,17 @@ class BucketedStateStore:
     def _manifest_path(self) -> str:
         return os.path.join(self.path, _MANIFEST)
 
-    @staticmethod
-    def _checked(manifest: dict | None, path: str) -> dict:
-        """``manifest`` (an empty one when ``None``), refusing any layout
-        but the current one."""
-        if manifest is None:
-            return {"format": _FORMAT, "version": 0, "buckets": {}}
-        if manifest.get("format") != _FORMAT:
-            raise ValueError(
-                f"{path}: state store manifest has format "
-                f"{manifest.get('format', 1)}, this engine reads format "
-                f"{_FORMAT}; drop the state and its streaming checkpoint "
-                "and rebuild"
-            )
-        return manifest
+    def _load_manifest_with_token(self) -> tuple[dict, object]:
+        """The committed manifest (an empty one before the first commit)
+        and its identity token, refusing any layout but the current one
+        (fsops.check_format)."""
+        manifest, tok = fsops.read_json_with_token(self._manifest_path)
+        if tok is None:  # no manifest file; an unreadable one is refused
+            return {"format": _FORMAT, "version": 0, "buckets": {}}, tok
+        return fsops.check_format(manifest, _FORMAT, self._manifest_path), tok
 
     def _load_manifest(self) -> dict:
-        manifest = None
-        if os.path.isfile(self._manifest_path):
-            with open(self._manifest_path) as fh:
-                manifest = json.load(fh)
-        return self._checked(manifest, self._manifest_path)
+        return self._load_manifest_with_token()[0]
 
     def _save_manifest(self, manifest: dict, expected_token) -> None:
         # conditional commit point (fsops.cas_publish): a racing
@@ -118,6 +107,9 @@ class BucketedStateStore:
             os.path.join(self.path, f"_manifest_v{manifest['version']}.json"),
             manifest,
         )
+
+    def _vdir(self, version: int) -> str:
+        return os.path.join(self.path, f"v{version}")
 
     @property
     def version(self) -> int:
@@ -146,9 +138,8 @@ class BucketedStateStore:
         snap = os.path.join(self.path, f"_manifest_v{version}.json")
         if not os.path.isfile(snap):
             raise FileNotFoundError(f"no committed manifest for version {version}")
-        with open(snap) as fh:
-            manifest = json.load(fh)
-        return self._scan(self._checked(manifest, snap), buckets)
+        manifest = fsops.check_format(fsops.read_json(snap), _FORMAT, snap)
+        return self._scan(manifest, buckets)
 
     def _scan(self, manifest: dict, buckets: list[int] | None) -> DataFrame | None:
         """Union of one scan per version dir holding live buckets, each
@@ -169,7 +160,7 @@ class BucketedStateStore:
         schema = StructType.fromJson(json.loads(manifest["schema"]))
         scans = [
             self.spark.read.schema(schema)
-            .parquet(os.path.join(self.path, f"v{v}"))
+            .parquet(self._vdir(v))
             .filter(F.col("bucket").isin(sorted(bs)))
             for v, bs in sorted(by_version.items())
         ]
@@ -213,12 +204,9 @@ class BucketedStateStore:
         within one stream, so in the common case the CAS always wins;
         a second WRITER PROCESS on the same store now loses cleanly
         (fsops.ConcurrentWriterError) instead of corrupting state."""
-        import uuid
-
-        manifest, tok = fsops.read_json_with_token(self._manifest_path)
-        manifest = self._checked(manifest, self._manifest_path)
+        manifest, tok = self._load_manifest_with_token()
         os.makedirs(self.path, exist_ok=True)
-        staging = os.path.join(self.path, f"_v_staging_{uuid.uuid4().hex[:12]}")
+        staging = fsops.staging(self.path)
         obs = Observation()
         (
             self.cluster(state, touched)
@@ -228,11 +216,7 @@ class BucketedStateStore:
             .parquet(staging)
         )
         written = {int(b) for b in obs.get["written"]}
-        new_version = manifest["version"] + 1
-        while not fsops.rename_no_clobber(
-            staging, os.path.join(self.path, f"v{new_version}")
-        ):
-            new_version += 1
+        new_version = fsops.claim(staging, self._vdir, manifest["version"] + 1)
         buckets = dict(manifest["buckets"])
         for b in touched:
             if b in written:
@@ -283,11 +267,9 @@ class BucketedStateStore:
             if entry.startswith("_manifest_v") and entry.endswith(".json"):
                 if entry not in live:
                     removable.append(entry)
-            elif entry.startswith("_v_staging_") and fsops.staging_is_stale(
-                os.path.join(self.path, entry)
+            elif fsops.is_stale_staging(self.path, entry) or (
+                entry.startswith("v") and entry[1:].isdigit() and entry not in live
             ):
-                removable.append(entry)
-            elif entry.startswith("v") and entry[1:].isdigit() and entry not in live:
                 removable.append(entry)
         return removable, live
 
@@ -302,8 +284,8 @@ class BucketedStateStore:
         for entry in self.vacuum_plan(retain_last)[0]:
             full = os.path.join(self.path, entry)
             if entry.startswith("_manifest_v"):
-                os.remove(full)
+                fsops.remove_file(full)
                 continue
-            shutil.rmtree(full, ignore_errors=entry.startswith("_v_staging_"))
+            fsops.remove_tree(full)
             removed.append(full)
         return removed

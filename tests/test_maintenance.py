@@ -24,6 +24,19 @@ def _delta(spark, rows):
     return spark.createDataFrame(rows, "operation string, doc_id long, text string")
 
 
+def _inject_staging(root, stale, young):
+    """A crashed writer's staging dir past the age gate (``stale``) and
+    a possibly-live writer's young one (``young``) under ``root``."""
+    import time
+
+    from python_cdc_spark import fsops
+
+    for name in (stale, young):
+        os.makedirs(os.path.join(root, name, "part"))
+    old = time.time() - 2 * fsops.STAGING_TTL_SECS
+    os.utime(os.path.join(root, stale), (old, old))
+
+
 BASE = [
     (1, "join scan filter alpha beta"),
     (2, "merge join gamma"),
@@ -116,19 +129,26 @@ def test_dedup_vacuum_reclaims_and_prunes_includes(spark, tmp_path):
         os.path.join(idx, f"base_v{ptr['version'] + 7}"),
     )
     # make base_v<cur+7> stale by NOT pointing at it (ptr still at cur)
+    _inject_staging(idx, "_staging_old", "_components_staging_young")
     rep = vacuum(spark, idx)
     assert rep["kind"] == "dedup"
     assert any("crashed" in r for r in rep["removed"])
     assert any(f"base_v{ptr['version'] + 7}" in r for r in rep["removed"])
+    assert "_staging_old" in rep["removed"]
+    assert os.path.isdir(os.path.join(idx, "_components_staging_young"))
     assert sorted(map(tuple, read_components(spark, idx).collect())) == comps
 
     # after compaction, vacuum drops nothing new and includes stay true
     compact_dedup_index(spark, idx)
+    n_docs = _read_base_ptr(idx)["n_docs"]
     rep2 = vacuum(spark, idx)
     ptr2 = _read_base_ptr(idx)
     droot = os.path.join(idx, "deltas")
     live_tags = set(os.listdir(droot)) if os.path.isdir(droot) else set()
     assert set(ptr2["includes"]) <= live_tags
+    # the includes prune keeps the corpus size folds read instead of
+    # counting the corpus
+    assert ptr2["n_docs"] == n_docs
     assert sorted(map(tuple, read_components(spark, idx).collect())) == comps
 
 
@@ -144,8 +164,11 @@ def test_state_store_vacuum_bounds_versions(spark, tmp_path):
     # five commits → five version dirs on disk
     vdirs = [d for d in os.listdir(store.path) if d.startswith("v") and d[1:].isdigit()]
     assert len(vdirs) == 5
+    _inject_staging(store.path, "_v_staging_old", "_staging_young")
     rep = vacuum(spark, store.path, retain_last=2)
     assert rep["kind"] == "state_store"
+    assert "_v_staging_old" in rep["removed"]
+    assert os.path.isdir(os.path.join(store.path, "_staging_young"))
     # retain_last means the SAME thing as for dedup/rollup: that many
     # superseded versions kept BELOW the current one (current + 2 here)
     vdirs = [d for d in os.listdir(store.path) if d.startswith("v") and d[1:].isdigit()]
@@ -177,9 +200,14 @@ def test_rollup_catalog_vacuum(spark, tmp_path):
         os.path.join(str(tmp_path / "cat"), "cube", "v2"),
         os.path.join(str(tmp_path / "cat"), "cube", "v9"),
     )
+    _inject_staging(
+        os.path.join(str(tmp_path / "cat"), "cube"), "_staging_old", "_v_staging_young"
+    )
     rep = vacuum(spark, str(tmp_path / "cat"), retain_last=1)
     assert rep["kind"] == "rollup_catalog"
     assert any(r.endswith("v9") for r in rep["removed"])
+    assert os.path.join("cube", "_staging_old") in rep["removed"]
+    assert os.path.isdir(os.path.join(str(tmp_path / "cat"), "cube", "_v_staging_young"))
     got = {
         r["g"]: float(r["sx"])
         for r in cat.rewrite(["g"], {"sx": ("sum", "x")}).collect()

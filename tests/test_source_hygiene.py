@@ -5,6 +5,9 @@
   appears only in ``session.py``.
 - JSON files are written through ``fsops.publish_json`` (temp write,
   fsync, rename), so ``json.dump(`` appears only in ``fsops.py``.
+- Versioned slots are claimed through ``fsops.claim``, the one
+  non-clobbering rename loop, so ``rename_no_clobber(`` appears only in
+  ``fsops.py``.
 """
 
 from __future__ import annotations
@@ -18,7 +21,11 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "python_cdc_spark"
 
 @pytest.mark.parametrize(
     "needle, owner",
-    [("ThreadPoolExecutor", "session.py"), ("json.dump(", "fsops.py")],
+    [
+        ("ThreadPoolExecutor", "session.py"),
+        ("json.dump(", "fsops.py"),
+        ("rename_no_clobber(", "fsops.py"),
+    ],
 )
 def test_concern_lives_in_one_module(needle, owner):
     offenders = sorted(
