@@ -183,6 +183,61 @@ def _fold_array(events: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
+def _fold(
+    events: DataFrame,
+    keys: list[str],
+    plan: str,
+    has_truncates: bool | None,
+    bucket_col: str | None,
+) -> DataFrame:
+    """The tombstoned fold both public entry points share. ``keys`` are
+    the state's identity columns, the row key last (``[key]`` or
+    ``[schema, table, key]``); the grouping is ``[bucket_col, *keys]``,
+    so a feed clustered on the bucket folds with no exchange of its
+    own. Returns ``(*keys, values, last_lsn, del_lsn[, bucket_col])``."""
+    key_col = keys[-1]
+    group = [bucket_col, *keys] if bucket_col else keys
+    out = [
+        *keys, "values", "last_lsn", "del_lsn",
+        *([bucket_col] if bucket_col else []),
+    ]
+    if has_truncates is None or has_truncates:
+        events = expand_truncates(events, key_col, bucket_col)
+    if plan == "array_fold":
+        return _fold_array(events, group).select(*out)
+    if plan != "argmax":
+        raise ValueError(f"unknown fold plan {plan!r}")
+    boundaries = _delete_boundary(events, group)
+    live = (
+        events.filter(F.col("operation") != OP_DELETE)
+        .join(boundaries, group)
+        .filter(F.col("lsn") > F.col("__last_delete_lsn"))
+    )
+    # Explode images to (key, column, value, lsn); the sentinel marks a
+    # column NOT carried by this event, so it must not win the argmax.
+    cells = (
+        live.select(*group, "lsn", F.explode("new_values").alias("column", "value"))
+        .filter(F.col("value").isNull() | (F.col("value") != UNCHANGED_SENTINEL))
+    )
+    latest_cells = cells.groupBy(*group, "column").agg(
+        F.max_by("value", "lsn").alias("value"), F.max("lsn").alias("__lsn")
+    )
+    state = latest_cells.groupBy(*group).agg(
+        F.map_from_entries(
+            F.array_sort(F.collect_list(F.struct("column", "value")))
+        ).alias("values"),
+        F.max("__lsn").alias("last_lsn"),
+    )
+    return (
+        boundaries.join(state, group, "left")
+        .withColumn(
+            "del_lsn",
+            F.when(F.col("__last_delete_lsn") >= 0, F.col("__last_delete_lsn")),
+        )
+        .select(*out)
+    )
+
+
 def apply_changes_with_tombstones(
     events: DataFrame,
     key_col: str = "key",
@@ -221,46 +276,7 @@ def apply_changes_with_tombstones(
     its own and the result stays clustered for the store's commit. The
     values are the same with or without it.
     """
-    keys = [bucket_col, key_col] if bucket_col else [key_col]
-    out = [
-        key_col, "values", "last_lsn", "del_lsn",
-        *([bucket_col] if bucket_col else []),
-    ]
-    if has_truncates is None or has_truncates:
-        events = expand_truncates(events, key_col, bucket_col)
-    if plan == "array_fold":
-        return _fold_array(events, keys).select(*out)
-    if plan != "argmax":
-        raise ValueError(f"unknown fold plan {plan!r}")
-    boundaries = _delete_boundary(events, keys)
-    live = (
-        events.filter(F.col("operation") != OP_DELETE)
-        .join(boundaries, keys)
-        .filter(F.col("lsn") > F.col("__last_delete_lsn"))
-    )
-    # Explode images to (key, column, value, lsn); the sentinel marks a
-    # column NOT carried by this event, so it must not win the argmax.
-    cells = (
-        live.select(*keys, "lsn", F.explode("new_values").alias("column", "value"))
-        .filter(F.col("value").isNull() | (F.col("value") != UNCHANGED_SENTINEL))
-    )
-    latest_cells = cells.groupBy(*keys, "column").agg(
-        F.max_by("value", "lsn").alias("value"), F.max("lsn").alias("__lsn")
-    )
-    state = latest_cells.groupBy(*keys).agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("column", "value")))
-        ).alias("values"),
-        F.max("__lsn").alias("last_lsn"),
-    )
-    return (
-        boundaries.join(state, keys, "left")
-        .withColumn(
-            "del_lsn",
-            F.when(F.col("__last_delete_lsn") >= 0, F.col("__last_delete_lsn")),
-        )
-        .select(*out)
-    )
+    return _fold(events, [key_col], plan, has_truncates, bucket_col)
 
 
 def apply_changes_with_tombstones_multi(
@@ -277,79 +293,40 @@ def apply_changes_with_tombstones_multi(
     pgoutput scopes ``T`` to the listed relids, which decode_frames
     preserves as one event per relation).
 
-    ``events`` must carry non-null ``schema``/``table`` columns on every
-    keyed row (decoded wire events always do). TRUNCATE expansion runs
-    FIRST, while the per-table columns are still separate, so the
-    per-table boundary branch of :func:`expand_truncates` applies;
-    the expanded feed then folds on a composite key and the table
-    identity is split back out into state columns.
+    The fold groups on the real ``schema``, ``table`` and ``key_col``
+    columns — there is no composite key string — so every value,
+    ``''`` included, comes back exactly as it went in. Decoded wire
+    events always carry ``schema`` and ``table``; keyed rows should
+    also carry a non-null key, since the argmax plan joins on all
+    three (as the single-table fold joins on its key).
 
     Returns ``(schema, table, key_col, values, last_lsn, del_lsn)``,
     plus ``bucket_col`` when asked for. As in
     :func:`apply_changes_with_tombstones`, ``bucket_col`` leads the
-    grouping (ahead of the composite key) and is carried through.
+    grouping and is carried through.
     """
-    sep = "\x1f"  # ASCII unit separator — cannot occur in identifiers
-    expanded = (
-        events
-        if has_truncates is False
-        else expand_truncates(events, key_col, bucket_col)
-    )
-    composite = expanded.withColumn(
-        "__tk",
-        F.concat_ws(
-            sep,
-            F.coalesce(F.col("schema").cast("string"), F.lit("")),
-            F.coalesce(F.col("table").cast("string"), F.lit("")),
-            F.coalesce(F.col(key_col).cast("string"), F.lit("")),
-        ),
-    ).drop("schema", "table", key_col)
-    # expansion already ran (or was ruled out) above — the inner fold
-    # must not pay a second distinct-keys pass over the composite feed
-    folded = apply_changes_with_tombstones(
-        composite, "__tk", plan=plan, has_truncates=False, bucket_col=bucket_col
-    )
-    parts = F.split(F.col("__tk"), sep, 3)
-
-    def _blank_null(c: Column) -> Column:
-        return F.when(c != "", c)
-
-    return folded.select(
-        _blank_null(parts.getItem(0)).alias("schema"),
-        _blank_null(parts.getItem(1)).alias("table"),
-        _blank_null(parts.getItem(2)).alias(key_col),
-        "values",
-        "last_lsn",
-        "del_lsn",
-        *([bucket_col] if bucket_col else []),
+    return _fold(
+        events, ["schema", "table", key_col], plan, has_truncates, bucket_col
     )
 
 
 def apply_changes_all_tables(
     events: DataFrame, key_col: str = "key", plan: str = "argmax"
 ) -> DataFrame:
-    """Apply-changes for a multi-table feed in one pass: state is keyed
-    by (schema, table, key), so one job materializes every replicated
-    table — the shape of a real publication with many tables
-    (``/root/reference/init.sql:15`` publishes per-table; a fleet of
-    tables shares the WAL stream). Output adds ``schema``/``table``.
+    """Apply-changes for a multi-table feed in one pass: the live rows
+    of :func:`apply_changes_with_tombstones_multi`, keyed by (schema,
+    table, key), so one job materializes every replicated table — the
+    shape of a real publication with many tables (the reference's
+    ``init.sql:15`` publishes per-table; a fleet of tables shares the
+    WAL stream). Output adds ``schema``/``table``.
     ``plan`` selects the physical fold strategy (argmax/array_fold, see
     :func:`apply_changes_with_tombstones` — value-identical, pinned by
     tests/test_apply_property.py).
     """
-    sep = "\x1f"  # ASCII unit separator — cannot occur in identifiers
-    composite = events.withColumn(
-        "__tk",
-        F.concat_ws(sep, F.col("schema"), F.col("table"), F.col(key_col)),
-    )
-    folded = apply_changes(composite, "__tk", plan=plan)
-    parts = F.split(F.col("__tk"), sep)
-    return folded.select(
-        parts.getItem(0).alias("schema"),
-        parts.getItem(1).alias("table"),
-        parts.getItem(2).alias(key_col),
-        "values",
-        "last_lsn",
+    return (
+        apply_changes_with_tombstones_multi(events, key_col, plan=plan)
+        .filter(F.col("values").isNotNull())
+        .select("schema", "table", key_col, "values", "last_lsn")
     )
 
 

@@ -209,13 +209,18 @@ def publish_json(path: str, obj) -> None:
 
 
 def read_json(path: str, default=None):
-    """Parsed JSON, or ``default`` when missing/torn (a torn file can
-    only be a ``.tmp`` never renamed — the committed pointer is intact)."""
+    """Parsed JSON, or ``default`` when the file does not exist. Every
+    writer publishes with fsync + rename (a torn write can only be a
+    ``.tmp`` never renamed), so a committed file that cannot be read or
+    parsed is corruption, not a missing file: that raises a
+    ``ValueError`` naming the path instead of reading as ``default``."""
     try:
         with open(path) as fh:
             return json.load(fh)
-    except (OSError, ValueError):
+    except FileNotFoundError:
         return default
+    except (OSError, ValueError) as err:
+        raise ValueError(f"unreadable committed JSON file {path}: {err}") from err
 
 
 def file_token(path: str):

@@ -22,7 +22,9 @@ same reason.
 
 Quantizer drift: upsert counts accumulate in the store-side meta and
 ``appended_fraction``/``needs_refit`` (re-exported here) escalate to a
-re-fit exactly as on the batch path.
+re-fit exactly as on the batch path. The meta records the last counted
+batch id, so a replayed batch re-commits its cells but is not counted
+twice.
 """
 
 from __future__ import annotations
@@ -172,7 +174,11 @@ class StreamingAnnIndex:
             state = new_rows
         self.store.commit(state, touched)
         meta = self._load_meta()
+        if batch_id is not None and meta.get("counted_batch") == batch_id:
+            return  # a replay: its upserts are already in appended_rows
         meta["appended_rows"] = (meta.get("appended_rows") or 0) + n_upserts
+        if batch_id is not None:
+            meta["counted_batch"] = batch_id
         self._save_meta(meta)
 
     # -- read -----------------------------------------------------------------

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from python_cdc_spark import fsops
 from python_cdc_spark.cdc.apply import (
     apply_changes_with_tombstones,
     apply_changes_with_tombstones_multi,
@@ -44,111 +45,16 @@ from python_cdc_spark.streaming.state_store import BucketedStateStore
 #: them — they scope TRUNCATE expansion (and the state fold) per table
 _AUX_COLS = ("schema", "table")
 
-#: Wire micro-batches at or above this row count are repartitioned to
-#: executor parallelism before the Python frame decode (a file-source
-#: batch has only file-count partitions). Below it the shuffle's fixed
-#: cost beats the decode win — latency-sized batches stay zero-copy.
+#: Wire micro-batches of at least this many rows are repartitioned to
+#: executor parallelism before the Python frame decode: a file-source
+#: batch has only file-count partitions, so a big batch would otherwise
+#: decode nearly serially. The count comes from the batch's one
+#: pre-decode aggregate, so the gate costs nothing extra. Below it the
+#: shuffle's fixed cost beats the decode win, and latency-sized batches
+#: stay zero-copy. Widening pays at scale: a 400k-frame, 7.8 MB
+#: single-file batch through ``merge_wire_batch`` on 4 cores took a
+#: median 6.3 s widened (4 decode tasks) and 9.4 s narrow (2 tasks).
 _WIDE_DECODE_ROWS = 200_000
-
-#: Bytes-based twin of the row gate, decided from the batch's SOURCE
-#: FILE SIZES (driver metadata) BEFORE the batch is materialized — a
-#: huge batch never has to be checkpointed at file-count width just to
-#: count its rows. 3 MiB ≈ the row gate's 200k events at the measured
-#: ~14 B/row parquet footprint of encoded I/U/D frames; non-file
-#: sources (no input files to size) fall back to the row gate.
-_WIDE_DECODE_BYTES = 3 * 1024 * 1024
-
-
-def _stat_uris(files: list[str]) -> int | None:
-    """Sum of on-disk sizes for file:// (or bare-path) URIs; None as
-    soon as any entry is remote or un-stat-able."""
-    from urllib.parse import unquote, urlparse
-
-    total = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(unquote(p.path))
-        except OSError:
-            return None
-    return total
-
-
-def _batch_input_bytes(frames: DataFrame) -> int | None:
-    """Total on-disk size of a BATCH DataFrame's source files, or None
-    when the frame has no enumerable local files. Streaming micro-batch
-    frames report NO input files (the plan is a streaming-relation
-    wrapper) — those go through ``_source_log_bytes`` instead.
-
-    Assumption: the frame covers its input files EXACTLY. A caller that
-    passes a filtered subset of a scan still reports the whole scan's
-    bytes here, which inflates the self-tuned bytes/row ratio in
-    ``merge_wire_batch`` and makes later batches widen later than
-    intended (perf drift only — results are unaffected). Wire feeds
-    pass whole micro-batches, which satisfy the assumption."""
-    try:
-        files = frames.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    return _stat_uris(files)
-
-
-def _source_log_bytes(checkpoint_path: str | None, batch_id: int | None) -> int | None:
-    """Micro-batch size from the file source's checkpoint metadata log —
-    the driver-side record of exactly which files this batch reads,
-    available BEFORE the batch materializes. Sums across EVERY
-    ``<ckpt>/sources/*`` directory (multi-source queries keep one log
-    per source), and for each source reads ``<batch_id>`` or — on
-    compaction-interval batches, which the file source writes as
-    ``<batch_id>.compact`` holding ALL entries since stream start — the
-    compact file filtered to entries whose ``batchId`` equals this
-    batch. None for non-file sources, a missing log, or
-    remote/un-stat-able paths."""
-    import json
-
-    if not checkpoint_path or batch_id is None:
-        return None
-    sources_dir = os.path.join(checkpoint_path, "sources")
-    try:
-        source_ids = sorted(os.listdir(sources_dir))
-    except OSError:
-        return None
-    total = 0
-    saw_any = False
-    for sid in source_ids:
-        files = []
-        for name, is_compact in ((str(batch_id), False), (f"{batch_id}.compact", True)):
-            p = os.path.join(sources_dir, sid, name)
-            try:
-                with open(p) as fh:
-                    lines = fh.read().splitlines()
-            except OSError:
-                continue
-            ok = True
-            for ln in lines[1:]:  # line 0 is the log-format version marker
-                try:
-                    entry = json.loads(ln)
-                    if is_compact and int(entry.get("batchId", -1)) != batch_id:
-                        continue  # compact files replay the whole history
-                    files.append(entry["path"])
-                except (ValueError, KeyError, TypeError):
-                    ok = False
-                    break
-            if ok:
-                break  # parsed this source's log; don't also read the twin
-            files = []
-        if not files:
-            continue  # source contributed no files this batch (or no log)
-        sz = _stat_uris(files)
-        if sz is None:
-            return None
-        total += sz
-        saw_any = True
-    return total if saw_any else None
 
 
 class StreamingApplyChanges:
@@ -286,15 +192,6 @@ class StreamingApplyChanges:
             f"{self.key_col} string, values map<string,string>, "
             "last_lsn bigint, del_lsn bigint",
         )
-
-    def _state_as_events(self, state: DataFrame) -> DataFrame:
-        """Re-encode state rows as events so the batch fold's sentinel /
-        delete-boundary semantics compose across batches: a live row
-        becomes INSERT@last_lsn, a tombstone becomes DELETE@del_lsn (both
-        for keys that were deleted then re-inserted). Table-identity
-        columns (multi-table state) ride along so a later batch's
-        TRUNCATE expands against the right table's keys."""
-        return state_as_events(state, self.key_col)
 
     # -- initial snapshot --------------------------------------------------
 
@@ -475,7 +372,7 @@ class StreamingApplyChanges:
         events = batch
         if prior is not None:
             events = events.unionByName(
-                self._state_as_events(prior.drop("bucket"))
+                state_as_events(prior.drop("bucket"), self.key_col)
                 .withColumn("bucket", self._bucket(F.col(self.key_col)))
             )
         if plan == "array_fold":
@@ -574,57 +471,32 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         self._load_registry()
 
     def _load_registry(self) -> None:
-        import json
-
-        if os.path.isfile(self._registry_path):
-            with open(self._registry_path) as fh:
-                persisted = {int(k): v for k, v in json.load(fh).items()}
-            # learned schemas win over the constructor's initial seed
-            self.registry = {**self.registry, **persisted}
-        if os.path.isfile(self._origin_path):
-            with open(self._origin_path) as fh:
-                self._origin_state = json.load(fh)
+        persisted = fsops.read_json(self._registry_path, {})
+        # learned schemas win over the constructor's initial seed
+        self.registry.update({int(k): v for k, v in persisted.items()})
+        self._origin_state = fsops.read_json(self._origin_path, self._origin_state)
 
     @staticmethod
     def _save_json(path: str, obj) -> None:
         """Atomic tmp+rename save beside the state; the state path's
         parent may not exist yet (the first batch runs before the store's
         first commit creates it)."""
-        from python_cdc_spark import fsops
-
         os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
         fsops.publish_json(path, obj)
 
     def merge_wire_batch(self, frames: DataFrame, batch_id: int | None = None) -> None:
         """One micro-batch of raw frames: registry refresh → decode → merge.
 
-        Wire-profile shape (r11 verdict #3): a file-source micro-batch
-        arrives with as many partitions as it has FILES (often a
-        handful), which runs the Python frame decode nearly serially on
-        a wide executor — at 10M events that serialization, not the
-        decode loop itself, was the 0.72/decade exponent. The batch is
-        materialized ONCE (so the pre-decode aggregate, the decode,
-        and the merge all read memory, not three separate file scans),
-        and a wide batch is repartitioned to the session's parallelism
-        so the decode runs executor-wide; small batches skip the
-        shuffle (its fixed cost would dominate a latency-sized batch).
-
-        Wide is decided by SOURCE FILE BYTES (>= _WIDE_DECODE_BYTES) —
-        known on the driver BEFORE materialization, so a huge batch is
-        widened first and checkpointed once, never held in memory at
-        file-count width just to count rows. The size comes from the
-        batch frame's own input files (batch-mode calls) or the file
-        source's checkpoint metadata log (streaming micro-batches
-        report no input files). Sourceless batches fall back to the
-        row gate (>= _WIDE_DECODE_ROWS), which costs a second
-        checkpoint only on the rare wide in-memory batch.
-
-        The byte threshold SELF-TUNES: _WIDE_DECODE_BYTES only seeds
-        the first decision (calibrated to ~14 B/row parquet frames);
-        once a batch has been counted, the observed bytes/row ratio
-        re-expresses the ROW gate in bytes, so a feed with fat frames
-        (large text payloads) widens at the same row count as a lean
-        one instead of at 14× fewer rows."""
+        A file-source micro-batch arrives with as many partitions as it
+        has FILES (often a handful), which runs the Python frame decode
+        nearly serially on a wide executor. The batch is materialized
+        ONCE, so the pre-decode aggregate, the decode and the merge all
+        read memory, not three file scans. That aggregate also counts
+        the batch's rows, and the count alone decides the decode width:
+        a batch of at least ``_WIDE_DECODE_ROWS`` rows is repartitioned
+        to the session's parallelism so the decode runs executor-wide,
+        and a smaller one skips the shuffle, whose fixed cost would
+        dominate a latency-sized batch."""
         from python_cdc_spark.cdc.origins import last_marker_col
         from python_cdc_spark.cdc.pgoutput import (
             _LSN_MIN,
@@ -632,14 +504,6 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
             decode_frames,
         )
 
-        in_bytes = _batch_input_bytes(frames)
-        if in_bytes is None:
-            in_bytes = _source_log_bytes(getattr(self, "_wire_ckpt", None), batch_id)
-        par = max(int(self.spark.sparkContext.defaultParallelism), 1)
-        bpr = getattr(self, "_bytes_per_row", None)
-        wide_bytes = _WIDE_DECODE_BYTES if bpr is None else bpr * _WIDE_DECODE_ROWS
-        if in_bytes is not None and in_bytes >= wide_bytes:
-            frames = frames.repartition(par)
         frames = frames.localCheckpoint(eager=True)
         # the one pre-decode scan: lag stamp, row count, the batch's R
         # frames and the origin carry's last B/O marker
@@ -655,10 +519,9 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
             ).alias("rels"),
             last_marker_col().alias("marker"),
         ).first()
-        if in_bytes is not None and int(one["n"] or 0) > 0:
-            self._bytes_per_row = in_bytes / int(one["n"])
         rel_rows = one["rels"] or []
-        if in_bytes is None and int(one["n"] or 0) >= _WIDE_DECODE_ROWS:
+        if one["n"] >= _WIDE_DECODE_ROWS:
+            par = self.spark.sparkContext.defaultParallelism
             frames = frames.repartition(par).localCheckpoint(eager=True)
         # The batch decodes with an LSN-VERSIONED registry: the carried
         # registry (previous batches / snapshot seed) is valid from the
@@ -714,7 +577,6 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         available_now: bool = False,
     ) -> StreamingQuery:
         """Attach to a streaming RAW-frame feed (lsn, ts, frame binary)."""
-        self._wire_ckpt = checkpoint_path  # for the per-batch bytes signal
         writer = (
             frames.writeStream.outputMode("update")
             .option("checkpointLocation", checkpoint_path)

@@ -74,14 +74,9 @@ class StreamingBm25Index:
         from pyspark.sql import functions as F
 
         if self.seq_col is not None:
-            from pyspark.sql import Window
+            from python_cdc_spark.cdc.apply import latest_per_key
 
-            w = Window.partitionBy(self.id_col).orderBy(F.desc(self.seq_col))
-            batch = (
-                batch.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            batch = latest_per_key(batch, [self.id_col], self.seq_col)
         else:
             dup = (
                 batch.groupBy(self.id_col)

@@ -60,9 +60,11 @@ class StreamingCorpusDedup:
         return set(fsops.read_json(self._folded_path, []))
 
     def _mark_folded(self, batch_id: int) -> None:
+        # Spark replays only recent uncommitted batches, so the last 1000
+        # ids suffice (the sketch and PCA guards keep the same tail)
         ids = self._folded_ids()
         ids.add(batch_id)
-        fsops.publish_json(self._folded_path, sorted(ids))
+        fsops.publish_json(self._folded_path, sorted(ids)[-1000:])
 
     def bootstrap(self, docs: DataFrame) -> None:
         """Seed the index from an existing corpus (batch build)."""

@@ -159,20 +159,39 @@ def test_latest_per_key(spark):
 
 def test_apply_changes_all_tables(spark):
     """One pass materializes independent per-table states; same key in
-    different tables does not collide."""
-    from python_cdc_spark.cdc.apply import apply_changes_all_tables
+    different tables does not collide. An empty-string key or schema (a
+    valid Postgres text value) comes back as ``''``, not NULL, from both
+    the live-row fold and the tombstoned multi-table fold."""
+    from python_cdc_spark.cdc.apply import (
+        apply_changes_all_tables,
+        apply_changes_with_tombstones_multi,
+    )
 
+    blank_schema = _ev(5, "INSERT", None, new={"id": "2", "v": "blank-schema"})
     rows = [
         _ev(1, "INSERT", None, new={"id": "1", "v": "users-row"}, table="users"),
         _ev(2, "INSERT", None, new={"id": "1", "v": "orders-row"}, table="orders"),
         _ev(3, "DELETE", None, old={"id": "1"}, table="orders"),
+        _ev(4, "INSERT", None, new={"id": "", "v": "blank-key"}),
+        blank_schema[:2] + ("",) + blank_schema[3:],
     ]
     feed = _feed(spark, rows)
     got = {
-        (r["table"], r["key"]): dict(r["values"])
+        (r["schema"], r["table"], r["key"]): dict(r["values"])
         for r in apply_changes_all_tables(feed, "key").collect()
     }
-    assert got == {("users", "1"): {"id": "1", "v": "users-row"}}
+    assert got == {
+        ("public", "users", "1"): {"id": "1", "v": "users-row"},
+        ("public", "users", ""): {"id": "", "v": "blank-key"},
+        ("", "users", "2"): {"id": "2", "v": "blank-schema"},
+    }
+    multi = {
+        (r["schema"], r["table"], r["key"]): (
+            None if r["values"] is None else dict(r["values"])
+        )
+        for r in apply_changes_with_tombstones_multi(feed, "key").collect()
+    }
+    assert multi == {**got, ("public", "orders", "1"): None}
 
 
 def test_scd2_sentinel_carry_forward(spark):

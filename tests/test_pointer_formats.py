@@ -4,7 +4,8 @@ fallbacks (no Spark session: the checks run on the pointer alone).
 Every versioned structure's pointer carries a ``"format"`` stamp and
 its reader calls ``fsops.check_format``; the cache gate
 ``ann_index.meta_is_current`` treats an unstamped meta as stale so
-caches rebuild instead of raising.
+caches rebuild instead of raising. ``fsops.read_json`` reads a missing
+file as its default and refuses a corrupt one.
 """
 
 from __future__ import annotations
@@ -61,3 +62,15 @@ def test_unformatted_pointer_is_refused(tmp_path, name, legacy, read):
     meta = {"fingerprint": "fp", "params": {"v": 1}}
     assert not meta_is_current(meta, "fp", {"v": 1})
     assert meta_is_current({**meta, "format": META_FORMAT}, "fp", {"v": 1})
+
+
+def test_read_json_refuses_a_corrupt_file(tmp_path):
+    from python_cdc_spark import fsops
+
+    path = str(tmp_path / "_meta.json")
+    assert fsops.read_json(path, {"version": 0}) == {"version": 0}
+    with open(path, "w") as fh:
+        fh.write('{"ver')
+    with pytest.raises(ValueError) as err:
+        fsops.read_json(path, {"version": 0})
+    assert path in str(err.value)

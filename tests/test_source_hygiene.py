@@ -8,6 +8,9 @@
 - Versioned slots are claimed through ``fsops.claim``, the one
   non-clobbering rename loop, so ``rename_no_clobber(`` appears only in
   ``fsops.py``.
+- JSON files are read through ``fsops.read_json``, which tells a missing
+  file from a corrupt one, so ``json.load(`` appears only in
+  ``fsops.py``.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "python_cdc_spark"
         ("ThreadPoolExecutor", "session.py"),
         ("json.dump(", "fsops.py"),
         ("rename_no_clobber(", "fsops.py"),
+        ("json.load(", "fsops.py"),
     ],
 )
 def test_concern_lives_in_one_module(needle, owner):

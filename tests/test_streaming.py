@@ -824,15 +824,24 @@ def test_streaming_corpus_dedup_replay_is_skipped(spark, tmp_path):
     assert read_index_table(spark, idx, "cells").count() == n_cells
 
 
-def test_wide_decode_bytes_gate(spark, tmp_path, monkeypatch):
-    """The wire decode's wide gate is decided from SOURCE FILE BYTES
-    (driver metadata, known before the batch materializes): a
-    file-backed batch sums its files' on-disk sizes exactly; a
-    sourceless in-memory batch reports None and falls back to the row
-    gate; and a batch widened by the bytes path merges the same state
-    as one below it."""
+def test_corpus_dedup_folded_ids_keep_a_bounded_tail(tmp_path):
+    """``_folded.json`` keeps the last 1000 batch ids, not every id since
+    the stream began (no Spark: the marker is plain JSON)."""
+    from python_cdc_spark import fsops
+    from python_cdc_spark.streaming.dedup_stream import StreamingCorpusDedup
+
+    dd = StreamingCorpusDedup(None, str(tmp_path))
+    fsops.publish_json(dd._folded_path, list(range(1000)))
+    dd._mark_folded(1000)
+    ids = dd._folded_ids()
+    assert len(ids) == 1000 and 1000 in ids and 0 not in ids
+
+
+def test_wide_decode_row_gate(spark, tmp_path, monkeypatch):
+    """A wire batch widened by the row gate (repartitioned to executor
+    parallelism before the decode) merges the same state as one decoded
+    at its file-count width."""
     import datetime as dt
-    import glob
 
     from python_cdc_spark.cdc.pgoutput import encode_insert, encode_relation
     from python_cdc_spark.streaming import StreamingWireApplyChanges
@@ -850,15 +859,7 @@ def test_wide_decode_bytes_gate(spark, tmp_path, monkeypatch):
         rows, "lsn bigint, ts timestamp, frame binary"
     ).coalesce(2).write.parquet(wire_dir)
 
-    batch = spark.read.parquet(wire_dir)
-    expect = sum(
-        os.path.getsize(f) for f in glob.glob(os.path.join(wire_dir, "*.parquet"))
-    )
-    assert ap._batch_input_bytes(batch) == expect
-    # sourceless frame: no files to size -> row-gate fallback
-    assert ap._batch_input_bytes(spark.range(5)) is None
-
-    def build(path, tag):
+    def build(tag):
         a = StreamingWireApplyChanges(
             spark,
             str(tmp_path / f"state_{tag}"),
@@ -867,83 +868,16 @@ def test_wide_decode_bytes_gate(spark, tmp_path, monkeypatch):
             ),
             n_buckets=4,
         )
-        a.merge_wire_batch(spark.read.parquet(path), batch_id=0)
+        a.merge_wire_batch(spark.read.parquet(wire_dir), batch_id=0)
         return sorted(
             (r["key"], dict(r["values"])["name"]) for r in a.current_state().collect()
         )
 
-    monkeypatch.setattr(ap, "_WIDE_DECODE_BYTES", 1)  # force the wide path
-    wide = build(wire_dir, "wide")
-    monkeypatch.setattr(ap, "_WIDE_DECODE_BYTES", 1 << 40)  # force narrow
-    narrow = build(wire_dir, "narrow")
+    monkeypatch.setattr(ap, "_WIDE_DECODE_ROWS", 1)  # force the wide path
+    wide = build("wide")
+    monkeypatch.setattr(ap, "_WIDE_DECODE_ROWS", 1 << 40)  # force narrow
+    narrow = build("narrow")
     assert wide == narrow and len(wide) == 200
-
-    # the byte threshold self-tunes: after one counted batch the
-    # applier knows THIS feed's bytes/row and re-expresses the row
-    # gate in bytes from it (the seed constant only covers batch 0)
-    tune = StreamingWireApplyChanges(
-        spark,
-        str(tmp_path / "state_tune"),
-        key_extractor=lambda ev: ev.withColumn(
-            "key", F.coalesce(F.col("new_values")["id"], F.col("old_values")["id"])
-        ),
-        n_buckets=4,
-    )
-    tune.merge_wire_batch(spark.read.parquet(wire_dir), batch_id=0)
-    assert abs(tune._bytes_per_row - expect / 201) < 1e-9  # 200 DML + 1 R frame
-
-    # STREAMING micro-batches report no input files; the signal must
-    # come from the file source's checkpoint metadata log instead, and
-    # it must equal the batch's true on-disk size
-    ckpt = str(tmp_path / "ckpt_probe")
-    probe = []
-
-    def fb(df, bid):
-        assert ap._batch_input_bytes(df) is None  # the streaming gap
-        probe.append(ap._source_log_bytes(ckpt, bid))
-
-    q = (
-        spark.readStream.schema("lsn bigint, ts timestamp, frame binary")
-        .parquet(wire_dir)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(fb)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert probe == [expect]
-    # non-file / missing-log cases degrade to None (row-gate fallback)
-    assert ap._source_log_bytes(ckpt, 999) is None
-    assert ap._source_log_bytes(None, 0) is None
-
-    # compaction-interval batches land as '<id>.compact' holding the
-    # WHOLE history tagged by batchId, and multi-source queries keep
-    # one log per sources/<i> dir — both must still produce the exact
-    # per-batch byte sum instead of falling back to the row gate
-    import json as _json
-
-    files = sorted(glob.glob(os.path.join(wire_dir, "*.parquet")))
-    assert len(files) == 2
-    synth = str(tmp_path / "ckpt_synth")
-    os.makedirs(os.path.join(synth, "sources", "0"))
-    os.makedirs(os.path.join(synth, "sources", "1"))
-    with open(os.path.join(synth, "sources", "0", "9.compact"), "w") as fh:
-        fh.write("v1\n")
-        # history entry from an OLD batch must be filtered out
-        fh.write(_json.dumps({"path": files[0], "batchId": 3}) + "\n")
-        fh.write(_json.dumps({"path": files[0], "batchId": 9}) + "\n")
-    with open(os.path.join(synth, "sources", "1", "9"), "w") as fh:
-        fh.write("v1\n")
-        fh.write(_json.dumps({"path": files[1], "batchId": 9}) + "\n")
-    assert ap._source_log_bytes(synth, 9) == (
-        os.path.getsize(files[0]) + os.path.getsize(files[1])
-    )
-    # batch where only ONE source contributed files still sums correctly
-    assert ap._source_log_bytes(synth, 3) is None  # no plain log for 3
-    with open(os.path.join(synth, "sources", "1", "3"), "w") as fh:
-        fh.write("v1\n")
-        fh.write(_json.dumps({"path": files[1], "batchId": 3}) + "\n")
-    assert ap._source_log_bytes(synth, 3) == os.path.getsize(files[1])
 
 
 def test_wire_apply_latency_metric_exists_and_bounded(spark, tmp_path):
@@ -1938,6 +1872,12 @@ def test_streaming_ann_index_matches_rebuild_and_replays_safely(spark, tmp_path)
     }
     assert again == got
     assert si.store.version == v_before + 1  # a new version, same contents
+
+    # a replayed batch id re-commits its cells but is not counted again
+    # toward the drift fraction (the stream merged batch ids 0 and 1)
+    frac = si.appended_fraction()
+    si.merge_batch(replay, batch_id=1)
+    assert si.appended_fraction() == frac
 
     # probe path: partition-pruned read returns exactly the probed cells
     some_cell = next(iter(got.values()))[0]
