@@ -61,6 +61,20 @@ def _delete_boundary(events: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
+def _join_null_safe(
+    left: DataFrame, right: DataFrame, on: list[str], how: str = "inner"
+) -> DataFrame:
+    """``left.join(right, on, how)`` where a NULL in an ``on`` column
+    matches NULL: a keyless row is a group of its own, as ``groupBy``
+    (and so the array fold) treats it."""
+    r = right.select(
+        *[F.col(c).alias(f"__r_{c}") for c in on],
+        *[c for c in right.columns if c not in on],
+    )
+    cond = [F.col(c).eqNullSafe(F.col(f"__r_{c}")) for c in on]
+    return left.join(r, cond, how).drop(*[f"__r_{c}" for c in on])
+
+
 def expand_truncates(
     events: DataFrame, key_col: str, bucket_col: str | None = None
 ) -> DataFrame:
@@ -209,8 +223,9 @@ def _fold(
         raise ValueError(f"unknown fold plan {plan!r}")
     boundaries = _delete_boundary(events, group)
     live = (
-        events.filter(F.col("operation") != OP_DELETE)
-        .join(boundaries, group)
+        _join_null_safe(
+            events.filter(F.col("operation") != OP_DELETE), boundaries, group
+        )
         .filter(F.col("lsn") > F.col("__last_delete_lsn"))
     )
     # Explode images to (key, column, value, lsn); the sentinel marks a
@@ -229,7 +244,7 @@ def _fold(
         F.max("__lsn").alias("last_lsn"),
     )
     return (
-        boundaries.join(state, group, "left")
+        _join_null_safe(boundaries, state, group, "left")
         .withColumn(
             "del_lsn",
             F.when(F.col("__last_delete_lsn") >= 0, F.col("__last_delete_lsn")),
@@ -295,10 +310,9 @@ def apply_changes_with_tombstones_multi(
 
     The fold groups on the real ``schema``, ``table`` and ``key_col``
     columns — there is no composite key string — so every value,
-    ``''`` included, comes back exactly as it went in. Decoded wire
-    events always carry ``schema`` and ``table``; keyed rows should
-    also carry a non-null key, since the argmax plan joins on all
-    three (as the single-table fold joins on its key).
+    ``''`` included, comes back exactly as it went in. A NULL in any of
+    the three is a group of its own on both plans (the argmax plan's
+    joins are null-safe).
 
     Returns ``(schema, table, key_col, values, last_lsn, del_lsn)``,
     plus ``bucket_col`` when asked for. As in

@@ -160,6 +160,18 @@ def is_stale_staging(root: str, entry: str) -> bool:
     return age > STAGING_TTL_SECS
 
 
+#: how many folded batch ids a streaming sink's replay ledger keeps
+FOLD_LEDGER_TAIL = 1000
+
+
+def record_fold(ledger: list, batch_id: int) -> list:
+    """``ledger`` (folded micro-batch ids) with ``batch_id`` added, as
+    the sorted tail a sink commits beside its state. Spark replays only
+    recent uncommitted batches, so the replay guard needs a bounded
+    tail, not every id since the stream began."""
+    return sorted({*ledger, batch_id})[-FOLD_LEDGER_TAIL:]
+
+
 def check_format(obj, want: int, path: str):
     """``obj`` (a pointer read from ``path``) when it carries
     ``"format": want``; otherwise ``ValueError`` naming the path. A

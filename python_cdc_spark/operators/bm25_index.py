@@ -94,6 +94,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_cdc_spark import fsops
+from python_cdc_spark.functions.digest import content_tag
 from python_cdc_spark.functions.literals import literal_df
 from python_cdc_spark.functions.text import tokens
 from python_cdc_spark.session import run_concurrent
@@ -484,17 +485,11 @@ def cdc_bm25_update(
         F.col("doc_id").cast("string"),
         F.coalesce(F.col(text_col), F.lit("\x00")),
     )
-    row = delta.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.conv(F.substring(F.sha2(key, 256), 1, 15), 16, 10).cast("decimal(38,0)")
-        ).alias("d1"),
-        F.sum(
-            F.conv(F.substring(F.sha2(key, 256), 17, 15), 16, 10).cast("decimal(38,0)")
-        ).alias("d2"),
-        F.collect_set(_bucket(F.col("doc_id"))).alias("bs"),
-    ).first()
-    tag = batch_tag if batch_tag is not None else f"n{row['n']}_a{row['d1']}_b{row['d2']}"
+    tag, row = content_tag(
+        delta, key, F.collect_set(_bucket(F.col("doc_id"))).alias("bs")
+    )
+    if batch_tag is not None:
+        tag = batch_tag
     touched = sorted(int(b) for b in row["bs"])
     ptr, tok = _read_ptr_with_token(path)
     if tag in ptr["folds"]:

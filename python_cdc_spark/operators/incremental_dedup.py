@@ -78,6 +78,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_cdc_spark import fsops
+from python_cdc_spark.functions.digest import content_tag
 from python_cdc_spark.operators.components import connected_components
 from python_cdc_spark.operators.dedup import _gram_cells, minhash_signatures
 from python_cdc_spark.session import run_concurrent
@@ -454,23 +455,9 @@ def vacuum_plan(path: str, retain_last: int) -> tuple[list[str], set[str]]:
 
 
 def _delta_fingerprint(delta_docs: DataFrame, id_col: str) -> str:
-    """Deterministic content tag for a delta: count + two commutative
-    60-bit id digests (order-independent sums, so the tag is stable
-    across partitionings and replays of the same delta)."""
-    row = delta_docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.conv(F.substring(F.sha2(F.col(id_col).cast("string"), 256), 1, 15), 16, 10).cast(
-                "decimal(38,0)"
-            )
-        ).alias("d1"),
-        F.sum(
-            F.conv(F.substring(F.sha2(F.col(id_col).cast("string"), 256), 17, 15), 16, 10).cast(
-                "decimal(38,0)"
-            )
-        ).alias("d2"),
-    ).first()
-    return f"n{row['n']}_a{row['d1']}_b{row['d2']}"
+    """Deterministic content tag for a delta over its ids (see
+    ``functions/digest``)."""
+    return content_tag(delta_docs, F.col(id_col).cast("string"))[0]
 
 
 def build_dedup_index(
@@ -680,14 +667,9 @@ def _cdc_delta_fingerprint_and_width(
         F.col(id_col).cast("string"),
         F.coalesce(F.col(text_col), F.lit("\x00")),
     )
-    row = delta.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.conv(F.substring(F.sha2(key, 256), 1, 15), 16, 10).cast("decimal(38,0)")
-        ).alias("d1"),
-        F.sum(
-            F.conv(F.substring(F.sha2(key, 256), 17, 15), 16, 10).cast("decimal(38,0)")
-        ).alias("d2"),
+    tag, row = content_tag(
+        delta,
+        key,
         # width = |evicted ∪ new ids| exactly: UPDATE/DELETE ids evict,
         # INSERT/UPDATE ids place — rows with any other op count for
         # the tag (content digest) but not for the reroute width
@@ -702,9 +684,9 @@ def _cdc_delta_fingerprint_and_width(
         F.countDistinct(
             F.when(F.col(op_col).isin("INSERT", "UPDATE"), F.col(id_col))
         ).alias("nw"),
-    ).first()
+    )
     return (
-        f"n{row['n']}_a{row['d1']}_b{row['d2']}",
+        tag,
         int(row["w"] or 0),
         int(row["ev"] or 0),
         int(row["nw"] or 0),

@@ -740,7 +740,7 @@ class RollupCatalog:
         if not meta["fingerprint"].endswith("+delta"):
             meta["fingerprint"] += "+delta"
         if batch_id is not None:
-            meta["folded"] = sorted(meta["folded"] + [batch_id])[-1000:]
+            meta["folded"] = fsops.record_fold(meta["folded"], batch_id)
         self._commit_meta(name, meta, tok)
         self._gc(name, cur)
 

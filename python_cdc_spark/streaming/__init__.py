@@ -8,10 +8,13 @@ The reference's runtime is: blocking replication loop → bounded queue →
 - source loop   → ``readStream`` file source (rate-limited by
   ``maxFilesPerTrigger`` — the queue-backpressure analog)
 - queue         → the micro-batch itself
-- worker pool   → partition-parallel ``foreachBatch`` sinks
+- worker pool   → partition-parallel ``foreachBatch`` sinks, every one
+  attached by ``sink.attach``
 - ack/offset    → checkpoint commit at batch END (upgrading the
-  reference's ack-before-process to effectively-once with the
-  idempotent state sink in ``apply_stream``)
+  reference's ack-before-process to effectively-once): each sink's fold
+  is idempotent per batch id, either by construction (``apply_stream``'s
+  max-lsn merge) or through a replay ledger committed with its state
+  (``fsops.record_fold``)
 """
 
 from python_cdc_spark.streaming.apply_stream import (  # noqa: F401

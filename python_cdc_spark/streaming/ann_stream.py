@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from python_cdc_spark import fsops
+from python_cdc_spark.streaming.sink import attach
 from python_cdc_spark.streaming.state_store import BucketedStateStore
 
 
@@ -204,11 +205,4 @@ class StreamingAnnIndex:
     def start(
         self, deltas: DataFrame, checkpoint_path: str, available_now: bool = False
     ) -> StreamingQuery:
-        writer = (
-            deltas.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint_path)
-            .foreachBatch(lambda df, bid: self.merge_batch(df, bid))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return attach(deltas, self.merge_batch, checkpoint_path, available_now)

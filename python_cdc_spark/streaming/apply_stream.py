@@ -39,6 +39,7 @@ from python_cdc_spark.cdc.apply import (
     apply_changes_with_tombstones_multi,
     state_as_events,
 )
+from python_cdc_spark.streaming.sink import attach
 from python_cdc_spark.streaming.state_store import BucketedStateStore
 
 #: table-identity columns carried through the merge when the feed has
@@ -56,6 +57,18 @@ _AUX_COLS = ("schema", "table")
 #: median 6.3 s widened (4 decode tasks) and 9.4 s narrow (2 tasks).
 _WIDE_DECODE_ROWS = 200_000
 
+#: Per-batch fold plan choice. The streaming merge is the case the
+#: single-shuffle array plan was built for: prior state contributes
+#: exactly ONE event per key and a batch a bounded burst, so per-key
+#: arrays stay small and the fold is ~1.7x faster than the argmax
+#: plan's (BENCH_APPLY_PROFILE.json). The probe's per-bucket histogram
+#: is a free proxy for a hot key, since a hot key's events all hash to
+#: one bucket: a batch whose largest bucket holds over
+#: ``_AUTO_SKEW_RATIO`` x the mean of the others AND over
+#: ``_AUTO_SKEW_MIN_ROWS`` rows folds with the skew-safe argmax plan.
+_AUTO_SKEW_RATIO = 4.0
+_AUTO_SKEW_MIN_ROWS = 100_000
+
 
 class StreamingApplyChanges:
     """Continuous apply-changes into a bucket-partitioned parquet state.
@@ -71,27 +84,13 @@ class StreamingApplyChanges:
         key_col: str = "key",
         n_buckets: int = 64,
         retention: int = 2,
-        fold_plan: str = "auto",
     ) -> None:
         self.spark = spark
         self.state_path = state_path
         self.key_col = key_col
         self.n_buckets = n_buckets
-        # Physical fold strategy for the per-batch merge. The streaming
-        # merge is the case the single-shuffle array plan was built for:
-        # prior state contributes exactly ONE event per key and a batch
-        # a bounded burst, so per-key arrays stay small and the fold is
-        # ~1.7x faster than the argmax plan's (BENCH_APPLY_PROFILE.json).
-        # "auto" (the default) reads the probe's per-bucket histogram
-        # and falls back to the skew-safe argmax plan for a batch whose
-        # largest bucket is both over auto_skew_ratio x the mean and
-        # over auto_skew_min_rows absolute — the bucket histogram is a
-        # free proxy for a hot key, since a hot key's events all hash
-        # to one bucket. Pass "array_fold"/"argmax" to pin the plan.
-        self.fold_plan = fold_plan
-        self.auto_skew_ratio = 4.0
-        self.auto_skew_min_rows = 100_000
-        #: plan the most recent merge actually used (observability)
+        #: plan the most recent merge actually used (observability;
+        #: chosen per batch, see _AUTO_SKEW_RATIO)
         self.last_fold_plan: str | None = None
         # versions of history read_at() can time-travel to (storage
         # cost: superseded bucket files for that many commits)
@@ -319,22 +318,17 @@ class StreamingApplyChanges:
         batch_buckets = [r["bucket"] for r in probe]
         if not batch_buckets:
             return []
-        if self.fold_plan == "auto":
-            counts = [r["__n"] for r in probe]
-            mx = max(counts)
-            # compare the hottest bucket against the MEAN OF THE OTHERS
-            # (max-vs-overall-mean is bounded by the occupied-bucket
-            # count, so it can never fire when a burst lands in one of
-            # two buckets); a store configured with one bucket should
-            # pin the plan explicitly
-            others = (sum(counts) - mx) / max(1, len(counts) - 1)
-            skewed = (
-                mx > self.auto_skew_ratio * max(others, 1.0)
-                and mx > self.auto_skew_min_rows
-            )
-            plan = "argmax" if skewed else "array_fold"
-        else:
-            plan = self.fold_plan
+        counts = [r["__n"] for r in probe]
+        mx = max(counts)
+        # compare the hottest bucket against the MEAN OF THE OTHERS
+        # (max-vs-overall-mean is bounded by the occupied-bucket count,
+        # so it can never fire when a burst lands in one of two buckets)
+        others = (sum(counts) - mx) / max(1, len(counts) - 1)
+        skewed = (
+            mx > _AUTO_SKEW_RATIO * max(others, 1.0)
+            and mx > _AUTO_SKEW_MIN_ROWS
+        )
+        plan = "argmax" if skewed else "array_fold"
         self.last_fold_plan = plan
         live_buckets = [int(b) for b in self.store._load_manifest()["buckets"]]
         if has_truncate:
@@ -410,14 +404,7 @@ class StreamingApplyChanges:
         replacement for the reference's replication slot
         (``postgre_cdc_consumer.py:47-58``): deleting it == dropping the
         slot (reprocess from scratch)."""
-        writer = (
-            events.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint_path)
-            .foreachBatch(lambda df, bid: self.merge_batch(df, bid))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return attach(events, self.merge_batch, checkpoint_path, available_now)
 
 
 class StreamingWireApplyChanges(StreamingApplyChanges):
@@ -577,14 +564,9 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         available_now: bool = False,
     ) -> StreamingQuery:
         """Attach to a streaming RAW-frame feed (lsn, ts, frame binary)."""
-        writer = (
-            frames.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint_path)
-            .foreachBatch(lambda df, bid: self.merge_wire_batch(df, bid))
+        return attach(
+            frames, self.merge_wire_batch, checkpoint_path, available_now
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
 
 def drop_checkpoint(checkpoint_path: str) -> None:

@@ -28,6 +28,7 @@ from python_cdc_spark.operators.bm25_index import (
     build_bm25_index,
     cdc_bm25_update,
 )
+from python_cdc_spark.streaming.sink import attach
 
 
 class StreamingBm25Index:
@@ -112,11 +113,4 @@ class StreamingBm25Index:
     def start(
         self, deltas: DataFrame, checkpoint_path: str, available_now: bool = False
     ) -> StreamingQuery:
-        writer = (
-            deltas.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint_path)
-            .foreachBatch(lambda df, bid: self.merge_batch(df, bid))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return attach(deltas, self.merge_batch, checkpoint_path, available_now)

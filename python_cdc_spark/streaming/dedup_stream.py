@@ -37,6 +37,7 @@ from python_cdc_spark.operators.incremental_dedup import (
     cdc_dedup_index_update,
     incremental_dedup_update,
 )
+from python_cdc_spark.streaming.sink import attach
 
 
 class StreamingCorpusDedup:
@@ -60,11 +61,9 @@ class StreamingCorpusDedup:
         return set(fsops.read_json(self._folded_path, []))
 
     def _mark_folded(self, batch_id: int) -> None:
-        # Spark replays only recent uncommitted batches, so the last 1000
-        # ids suffice (the sketch and PCA guards keep the same tail)
-        ids = self._folded_ids()
-        ids.add(batch_id)
-        fsops.publish_json(self._folded_path, sorted(ids)[-1000:])
+        fsops.publish_json(
+            self._folded_path, fsops.record_fold(self._folded_ids(), batch_id)
+        )
 
     def bootstrap(self, docs: DataFrame) -> None:
         """Seed the index from an existing corpus (batch build)."""
@@ -96,13 +95,7 @@ class StreamingCorpusDedup:
 
     def start(self, stream: DataFrame, checkpoint: str, available_now: bool = True):
         """Attach to a streaming DataFrame of documents."""
-        writer = (
-            stream.writeStream.option("checkpointLocation", checkpoint)
-            .foreachBatch(lambda df, bid: self.fold_batch(df, bid))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return attach(stream, self.fold_batch, checkpoint, available_now)
 
 
 class StreamingCdcCorpusDedup(StreamingCorpusDedup):

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from python_cdc_spark import fsops
 from python_cdc_spark.operators.pca import model_from_suffstats, suffstats
+from python_cdc_spark.streaming.sink import attach
 
 
 class StreamingPCA:
@@ -89,8 +90,7 @@ class StreamingPCA:
         meta["s"] = (np.asarray(meta["s"]) + s).tolist()
         meta["g"] = (np.asarray(meta["g"]) + g.reshape(-1)).tolist()
         if batch_id is not None:
-            # bounded tail: Spark only replays recent uncommitted batches
-            meta["folded"] = sorted(meta["folded"] + [batch_id])[-1000:]
+            meta["folded"] = fsops.record_fold(meta["folded"], batch_id)
         self._commit(meta)
 
     # -- reads ------------------------------------------------------------
@@ -109,11 +109,4 @@ class StreamingPCA:
     # -- streaming driver ---------------------------------------------------
 
     def start(self, stream: DataFrame, checkpoint: str, available_now: bool = True):
-        writer = (
-            stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(lambda df, bid: self.fold_batch(df, bid))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return attach(stream, self.fold_batch, checkpoint, available_now)

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from python_cdc_spark import fsops
 from python_cdc_spark.plans.rollup import RollupCatalog
 from python_cdc_spark.streaming.apply_stream import StreamingApplyChanges
+from python_cdc_spark.streaming.sink import attach
 
 
 class StreamingRollupMaintenance:
@@ -66,13 +67,7 @@ class StreamingRollupMaintenance:
 
     def start(self, stream: DataFrame, checkpoint: str, available_now: bool = True):
         """Attach to a streaming DataFrame of fact rows."""
-        writer = (
-            stream.writeStream.option("checkpointLocation", checkpoint)
-            .foreachBatch(lambda df, bid: self.fold_batch(df, bid))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return attach(stream, self.fold_batch, checkpoint, available_now)
 
 
 class StreamingCdcRollupMaintenance(StreamingApplyChanges):

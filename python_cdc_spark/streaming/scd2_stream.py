@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from python_cdc_spark.cdc.scd2 import scd2_history
+from python_cdc_spark.streaming.sink import attach
 from python_cdc_spark.streaming.state_store import BucketedStateStore
 
 
@@ -150,11 +151,4 @@ class StreamingScd2:
     def start(
         self, events: DataFrame, checkpoint_path: str, available_now: bool = False
     ) -> StreamingQuery:
-        writer = (
-            events.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint_path)
-            .foreachBatch(lambda df, bid: self.merge_batch(df, bid))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return attach(events, self.merge_batch, checkpoint_path, available_now)

@@ -1,5 +1,5 @@
-"""Streaming sketch maintenance: HLL registers and count-min counters
-folded per micro-batch.
+"""Streaming sketch maintenance: HLL registers and count-min counters,
+KLL quantile buffers and a Misra-Gries summary folded per micro-batch.
 
 The batch sketches (``queries/sketches.py``) exist because register /
 counter state is a *mergeable partial aggregate*; this module is the
@@ -9,22 +9,25 @@ estimates are always available without rescanning history. That is the
 100 TB stream-analytics shape — state size is independent of stream
 length.
 
-Fold algebra (both are idempotent-by-replay when guarded by the meta
-pointer below):
+Fold algebra of the HLL/CM pair (idempotent-by-replay when guarded by
+the meta pointer below):
 
 - HLL:  new_registers = (old ∪ batch) groupBy bucket -> max(rho)
 - CM:   new_counters  = (old ∪ batch) groupBy (row, bucket) -> sum(n)
 
-Restart semantics: each fold writes a NEW version directory
+Restart semantics live in one place, :class:`_VersionedSketch`, the
+base of every sketch here: each fold writes a NEW version directory
 (``v<N>``; a leftover directory from a crashed attempt is deleted and
 rewritten — the write is deterministic), then commits by atomically
-replacing ``_meta.json`` = {version, folded batch ids} in ONE
-``os.replace``. Version and replay guard travel together, so a crash
-on either side of the commit point leaves a state where the batch is
-either wholly unfolded (replay refolds from the OLD version) or wholly
-folded (replay is skipped) — counters can never double-count. The
-previous version survives one generation so a concurrent reader never
-races a deletion.
+replacing ``_meta.json`` = {version, folded batch ids, format} in ONE
+``fsops.publish_json``. Version and replay guard travel together, so a
+crash on either side of the commit point leaves a state where the
+batch is either wholly unfolded (replay refolds from the OLD version)
+or wholly folded (replay is skipped) — counters can never
+double-count. The previous version survives one generation so a
+concurrent reader never races a deletion. Each sketch class keeps only
+its algebra (one ``_fold`` returning the frames to write) and its
+reads.
 
 Single writer; ``state_path`` must be a LOCAL filesystem path (markers
 use ``os`` primitives while parquet goes through Spark's Hadoop FS —
@@ -34,13 +37,13 @@ same constraint as ``streaming/state_store.py`` and the dedup index).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_cdc_spark import fsops
 from python_cdc_spark.queries.sketches import _GOLD, _mix32
+from python_cdc_spark.streaming.sink import attach
 
 #: On-disk sketch-state format. Bumped when the hash geometry (or any
 #: register/bucket placement rule) changes, because persisted registers
@@ -50,20 +53,105 @@ from python_cdc_spark.queries.sketches import _GOLD, _mix32
 _HLL_CM_FORMAT = 2
 #: KLL buffer layout version (value/rowid buffers, no key hashing).
 _KLL_FORMAT = 1
+#: MG summary layout version (string key + count, NULL keys skipped).
+_MG_FORMAT = 1
+
+_HLL_SCHEMA = "bucket long, r int"
+_CM_SCHEMA = "i int, bucket long, n long"
+_KLL_SCHEMA = "bucket long, level int, v double, rid long"
 
 
-def _read_meta(meta_path: str, want: int) -> dict:
-    """The committed meta (an empty one before the first fold),
-    refusing state written under a different sketch format: folding
-    new-geometry updates into old-geometry registers never errors but
-    double-places keys (ADVICE r6 #5), so the caller must rebuild."""
-    meta = fsops.read_json(meta_path)
-    if meta is None:
-        return {"version": 0, "folded": []}
-    return fsops.check_format(meta, want, meta_path)
+class _VersionedSketch:
+    """The versioned commit every streaming sketch shares: ``v<N>``
+    state directories under ``state_path`` and one ``_meta.json``
+    pointer that carries the version, the replay ledger, the format
+    stamp and any extra totals the sketch keeps. Subclasses set
+    ``_FORMAT`` and implement ``_fold``."""
+
+    _FORMAT: int
+
+    def __init__(self, spark: SparkSession, state_path: str):
+        self.spark = spark
+        self.state_path = state_path
+        fsops.makedirs(state_path)
+
+    # -- meta pointer (atomic commit of version + replay guard) --------
+
+    @property
+    def _meta_path(self) -> str:
+        return os.path.join(self.state_path, "_meta.json")
+
+    def _meta(self) -> dict:
+        """The committed meta (an empty one before the first fold),
+        refusing state written under a different sketch format: folding
+        new-geometry updates into old-geometry registers never errors
+        but double-places keys (ADVICE r6 #5), so the caller must
+        rebuild."""
+        meta = fsops.read_json(self._meta_path)
+        if meta is None:
+            return {"version": 0, "folded": []}
+        return fsops.check_format(meta, self._FORMAT, self._meta_path)
+
+    def _commit(self, meta: dict) -> None:
+        fsops.publish_json(self._meta_path, {**meta, "format": self._FORMAT})
+
+    def _vdir(self, version: int) -> str:
+        return os.path.join(self.state_path, f"v{version}")
+
+    def _read(self, schema: str, part: str = "") -> DataFrame:
+        """The committed version's ``part`` frame (``""`` = the version
+        directory itself); empty before the first fold."""
+        v = self._meta()["version"]
+        if v == 0:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            os.path.join(self._vdir(v), part) if part else self._vdir(v)
+        )
+
+    # -- fold -----------------------------------------------------------
+
+    def _fold(self, batch: DataFrame, meta: dict) -> tuple[dict, dict]:
+        """The sketch's algebra over a non-empty batch: ``({part:
+        frame}, extra meta)`` for the version after ``meta``'s."""
+        raise NotImplementedError
+
+    def fold_batch(self, batch: DataFrame, batch_id: int | None = None) -> None:
+        meta = self._meta()
+        if batch_id is not None:
+            if batch_id in meta["folded"]:
+                return  # checkpoint replay after a crash past the commit
+            meta["folded"] = fsops.record_fold(meta["folded"], batch_id)
+        if batch.isEmpty():
+            if batch_id is not None:
+                self._commit(meta)
+            return
+        parts, extra = self._fold(batch, meta)
+        nxt = meta["version"] + 1
+        out = self._vdir(nxt)
+        fsops.remove_tree(out)  # crashed attempt: rewrite deterministically
+        for part, frame in parts.items():
+            frame.coalesce(1).write.parquet(
+                os.path.join(out, part) if part else out
+            )
+        self._commit({**meta, **extra, "version": nxt})
+        # sweep EVERY version older than the previous one (not just
+        # nxt-2): a crash between a past commit and its cleanup must not
+        # leak an orphaned directory for the stream's lifetime
+        for entry in fsops.list_dir(self.state_path):
+            if (
+                entry.startswith("v")
+                and entry[1:].isdigit()
+                and int(entry[1:]) < nxt - 1
+            ):
+                fsops.remove_tree(os.path.join(self.state_path, entry))
+
+    # -- streaming attach ----------------------------------------------
+
+    def start(self, stream: DataFrame, checkpoint: str, available_now: bool = True):
+        return attach(stream, self.fold_batch, checkpoint, available_now)
 
 
-class StreamingSketchAggregator:
+class StreamingSketchAggregator(_VersionedSketch):
     """Maintains one HLL (distinct keys) and one count-min sketch
     (key frequencies) over a bigint key column of a stream.
 
@@ -76,6 +164,8 @@ class StreamingSketchAggregator:
     negative keys into the hash domain consistently on build and probe.
     """
 
+    _FORMAT = _HLL_CM_FORMAT
+
     def __init__(
         self,
         spark: SparkSession,
@@ -85,38 +175,12 @@ class StreamingSketchAggregator:
         cm_d: int = 4,
         cm_w: int = 1024,
     ):
-        self.spark = spark
-        self.state_path = state_path
+        super().__init__(spark, state_path)
         self.key_col = key_col
         self.p_bits = p_bits
         self.m = 1 << p_bits
         self.cm_d = cm_d
         self.cm_w = cm_w
-        os.makedirs(state_path, exist_ok=True)
-
-    # -- meta pointer (atomic commit of version + replay guard) --------
-
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.state_path, "_meta.json")
-
-    def _meta(self) -> dict:
-        return _read_meta(self._meta_path, _HLL_CM_FORMAT)
-
-    def _commit(self, version: int, folded: list) -> None:
-        # Spark only replays recent uncommitted batches, so the replay
-        # guard needs a bounded tail, not every id since stream birth
-        fsops.publish_json(
-            self._meta_path,
-            {
-                "version": version,
-                "folded": sorted(folded)[-1000:],
-                "format": _HLL_CM_FORMAT,
-            },
-        )
-
-    def _vdir(self, version: int) -> str:
-        return os.path.join(self.state_path, f"v{version}")
 
     # -- sketch construction -------------------------------------------
 
@@ -163,69 +227,31 @@ class StreamingSketchAggregator:
 
     # -- fold -----------------------------------------------------------
 
-    def fold_batch(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        meta = self._meta()
-        if batch_id is not None and batch_id in meta["folded"]:
-            return  # checkpoint replay after a crash past the commit
-        if batch.isEmpty():
-            if batch_id is not None:
-                self._commit(meta["version"], meta["folded"] + [batch_id])
-            return
+    def _fold(self, batch: DataFrame, meta: dict) -> tuple[dict, dict]:
         hll_new = self._batch_hll(batch)
         cm_new = self._batch_cm(batch)
-        cur = meta["version"]
-        if cur > 0:
-            old = self._vdir(cur)
+        if meta["version"] > 0:
             hll_new = (
-                self.spark.read.schema("bucket long, r int")
-                .parquet(os.path.join(old, "hll"))
+                self._read(_HLL_SCHEMA, "hll")
                 .unionAll(hll_new)
                 .groupBy("bucket")
                 .agg(F.max("r").cast("int").alias("r"))
             )
             cm_new = (
-                self.spark.read.schema("i int, bucket long, n long")
-                .parquet(os.path.join(old, "cm"))
+                self._read(_CM_SCHEMA, "cm")
                 .unionAll(cm_new)
                 .groupBy("i", "bucket")
                 .agg(F.sum("n").cast("long").alias("n"))
             )
-        nxt = cur + 1
-        out = self._vdir(nxt)
-        if os.path.exists(out):  # crashed attempt: rewrite deterministically
-            shutil.rmtree(out)
-        hll_new.coalesce(1).write.parquet(os.path.join(out, "hll"))
-        cm_new.coalesce(1).write.parquet(os.path.join(out, "cm"))
-        folded = meta["folded"] + ([batch_id] if batch_id is not None else [])
-        self._commit(nxt, folded)
-        # sweep EVERY version older than the previous one (not just
-        # cur-1): a crash between a past commit and its cleanup must not
-        # leak an orphaned directory for the stream's lifetime
-        for entry in os.listdir(self.state_path):
-            if (
-                entry.startswith("v")
-                and entry[1:].isdigit()
-                and int(entry[1:]) < nxt - 1
-            ):
-                shutil.rmtree(os.path.join(self.state_path, entry))
+        return {"hll": hll_new, "cm": cm_new}, {}
 
     # -- reads ----------------------------------------------------------
 
     def registers(self) -> DataFrame:
-        v = self._meta()["version"]
-        if v == 0:
-            return self.spark.createDataFrame([], "bucket long, r int")
-        return self.spark.read.schema("bucket long, r int").parquet(
-            os.path.join(self._vdir(v), "hll")
-        )
+        return self._read(_HLL_SCHEMA, "hll")
 
     def counters(self) -> DataFrame:
-        v = self._meta()["version"]
-        if v == 0:
-            return self.spark.createDataFrame([], "i int, bucket long, n long")
-        return self.spark.read.schema("i int, bucket long, n long").parquet(
-            os.path.join(self._vdir(v), "cm")
-        )
+        return self._read(_CM_SCHEMA, "cm")
 
     def distinct_estimate(self) -> float:
         """Raw HLL estimate from the current registers (same estimator
@@ -273,19 +299,8 @@ class StreamingSketchAggregator:
             .agg(F.min("n").cast("long").alias("cm_estimate"))
         )
 
-    # -- streaming attach ----------------------------------------------
 
-    def start(self, stream: DataFrame, checkpoint: str, available_now: bool = True):
-        writer = (
-            stream.writeStream.option("checkpointLocation", checkpoint)
-            .foreachBatch(lambda df, bid: self.fold_batch(df, bid))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-
-class KllStreamSketch:
+class KllStreamSketch(_VersionedSketch):
     """Mergeable streaming quantile sketch (KLL-style level buffers).
 
     State is per-(bucket, level) buffers of (value, rid) pairs: an item
@@ -306,10 +321,12 @@ class KllStreamSketch:
     oracle-replayable bit-exact variant is the batch query
     ``sketch_kll_quantiles`` (fixed one-shot compaction depth).
 
-    Restart semantics are identical to :class:`StreamingSketchAggregator`
-    (same versioned dirs + atomic meta commit + replay guard + GC sweep).
-    Single writer; ``state_path`` must be LOCAL.
+    Restart semantics come from :class:`_VersionedSketch` (versioned
+    dirs + atomic meta commit + replay guard + GC sweep). Single writer;
+    ``state_path`` must be LOCAL.
     """
+
+    _FORMAT = _KLL_FORMAT
 
     def __init__(
         self,
@@ -320,44 +337,14 @@ class KllStreamSketch:
         k: int = 256,
         n_buckets: int = 8,
     ):
-        self.spark = spark
-        self.state_path = state_path
+        super().__init__(spark, state_path)
         self.value_col = value_col
         self.id_col = id_col
         self.k = k
         self.n_buckets = n_buckets
-        os.makedirs(state_path, exist_ok=True)
-
-    # meta pointer: shares the aggregator's layout
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.state_path, "_meta.json")
-
-    def _meta(self) -> dict:
-        return _read_meta(self._meta_path, _KLL_FORMAT)
-
-    def _commit(self, version: int, folded: list) -> None:
-        fsops.publish_json(
-            self._meta_path,
-            {
-                "version": version,
-                "folded": sorted(folded)[-1000:],
-                "format": _KLL_FORMAT,
-            },
-        )
-
-    def _vdir(self, version: int) -> str:
-        return os.path.join(self.state_path, f"v{version}")
 
     def state(self) -> DataFrame:
-        v = self._meta()["version"]
-        if v == 0:
-            return self.spark.createDataFrame(
-                [], "bucket long, level int, v double, rid long"
-            )
-        return self.spark.read.schema(
-            "bucket long, level int, v double, rid long"
-        ).parquet(self._vdir(v))
+        return self._read(_KLL_SCHEMA)
 
     def _compact(self, st: DataFrame) -> DataFrame:
         """Apply the even-index promotion until every (bucket, level)
@@ -389,14 +376,7 @@ class KllStreamSketch:
             )
             st = keep.unionByName(promoted).localCheckpoint(eager=True)
 
-    def fold_batch(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        meta = self._meta()
-        if batch_id is not None and batch_id in meta["folded"]:
-            return  # checkpoint replay after a crash past the commit
-        if batch.isEmpty():
-            if batch_id is not None:
-                self._commit(meta["version"], meta["folded"] + [batch_id])
-            return
+    def _fold(self, batch: DataFrame, meta: dict) -> tuple[dict, dict]:
         new0 = batch.select(
             (
                 _mix32(F.col(self.id_col).bitwiseAND(F.lit((1 << 32) - 1)))
@@ -406,23 +386,8 @@ class KllStreamSketch:
             F.col(self.value_col).cast("double").alias("v"),
             F.col(self.id_col).cast("long").alias("rid"),
         )
-        cur = meta["version"]
-        st = self.state().unionByName(new0) if cur > 0 else new0
-        st = self._compact(st)
-        nxt = cur + 1
-        out = self._vdir(nxt)
-        if os.path.exists(out):  # crashed attempt: rewrite deterministically
-            shutil.rmtree(out)
-        st.coalesce(1).write.parquet(out)
-        folded = meta["folded"] + ([batch_id] if batch_id is not None else [])
-        self._commit(nxt, folded)
-        for entry in os.listdir(self.state_path):
-            if (
-                entry.startswith("v")
-                and entry[1:].isdigit()
-                and int(entry[1:]) < nxt - 1
-            ):
-                shutil.rmtree(os.path.join(self.state_path, entry))
+        st = self.state().unionByName(new0) if meta["version"] > 0 else new0
+        return {"": self._compact(st)}, {}
 
     def quantile_estimates(self, qs: list[float]) -> dict[float, float]:
         """Weighted-rank estimates from the current state. The state is
@@ -448,17 +413,8 @@ class KllStreamSketch:
                     break
         return out
 
-    def start(self, stream: DataFrame, checkpoint: str, available_now: bool = True):
-        writer = (
-            stream.writeStream.option("checkpointLocation", checkpoint)
-            .foreachBatch(lambda df, bid: self.fold_batch(df, bid))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
-
-class MgStreamSketch:
+class MgStreamSketch(_VersionedSketch):
     """Streaming Misra-Gries summary: the frequent-items member of the
     streaming sketch family (batch twin: ``operators/heavy_hitters.py``).
 
@@ -482,11 +438,14 @@ class MgStreamSketch:
     stream length. ``total()`` tracks the folded item count for
     threshold arithmetic.
 
-    Restart semantics are identical to
-    :class:`StreamingSketchAggregator` (versioned dirs + atomic meta
-    commit carrying the replay guard AND the running total, so a
-    crash-replay can neither double-count the summary nor the total).
-    Single writer; ``state_path`` must be LOCAL.
+    Restart semantics come from :class:`_VersionedSketch` (versioned
+    dirs + atomic meta commit carrying the replay guard AND the running
+    total, so a crash-replay can neither double-count the summary nor
+    the total). Single writer; ``state_path`` must be LOCAL.
+
+    NULL keys are not items: like the batch ``exact_heavy_hitters``
+    (which counts N over the NULL-filtered frame), a fold drops them
+    before counting, so ``total()`` and ``candidates()`` never see one.
 
     KEY-TYPE COERCION: the persisted summary schema is fixed at
     ``{key_col} string, c long`` and ``fold_batch`` casts the key to
@@ -500,6 +459,8 @@ class MgStreamSketch:
     schema-stable across callers.
     """
 
+    _FORMAT = _MG_FORMAT
+
     def __init__(
         self,
         spark: SparkSession,
@@ -507,42 +468,13 @@ class MgStreamSketch:
         key_col: str,
         capacity: int = 512,
     ):
-        self.spark = spark
-        self.state_path = state_path
+        super().__init__(spark, state_path)
         self.key_col = key_col
         self.capacity = capacity
-        os.makedirs(state_path, exist_ok=True)
-
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.state_path, "_meta.json")
-
-    def _meta(self) -> dict:
-        return fsops.read_json(
-            self._meta_path, {"version": 0, "folded": [], "n_total": 0}
-        )
-
-    def _commit(self, version: int, folded: list, n_total: int) -> None:
-        fsops.publish_json(
-            self._meta_path,
-            {
-                "version": version,
-                "folded": sorted(folded)[-1000:],
-                "n_total": int(n_total),
-            },
-        )
-
-    def _vdir(self, version: int) -> str:
-        return os.path.join(self.state_path, f"v{version}")
 
     def summary(self) -> DataFrame:
         """(key, c) — MG lower-bound counters, ≤ capacity rows."""
-        v = self._meta()["version"]
-        if v == 0:
-            return self.spark.createDataFrame([], f"{self.key_col} string, c long")
-        return self.spark.read.schema(f"{self.key_col} string, c long").parquet(
-            self._vdir(v)
-        )
+        return self._read(f"{self.key_col} string, c long")
 
     def candidates(self) -> DataFrame:
         """Keys guaranteed to include every item with lifetime
@@ -551,21 +483,15 @@ class MgStreamSketch:
 
     def total(self) -> int:
         """Items folded so far (crash-consistent with the summary)."""
-        return int(self._meta()["n_total"])
+        return int(self._meta().get("n_total", 0))
 
-    def fold_batch(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        meta = self._meta()
-        if batch_id is not None and batch_id in meta["folded"]:
-            return  # checkpoint replay after a crash past the commit
-        if batch.isEmpty():
-            if batch_id is not None:
-                self._commit(meta["version"], meta["folded"] + [batch_id], meta["n_total"])
-            return
-        bc = batch.select(F.col(self.key_col).cast("string").alias(self.key_col))
+    def _fold(self, batch: DataFrame, meta: dict) -> tuple[dict, dict]:
+        bc = batch.select(
+            F.col(self.key_col).cast("string").alias(self.key_col)
+        ).filter(F.col(self.key_col).isNotNull())
         n_batch = bc.count()
         merged = bc.groupBy(self.key_col).agg(F.count(F.lit(1)).cast("long").alias("c"))
-        cur = meta["version"]
-        if cur > 0:
+        if meta["version"] > 0:
             merged = (
                 self.summary()
                 .unionByName(merged)
@@ -583,26 +509,4 @@ class MgStreamSketch:
             merged = merged.filter(F.col("c") > sub).select(
                 self.key_col, (F.col("c") - sub).cast("long").alias("c")
             )
-        nxt = cur + 1
-        out = self._vdir(nxt)
-        if os.path.exists(out):  # crashed attempt: rewrite deterministically
-            shutil.rmtree(out)
-        merged.coalesce(1).write.parquet(out)
-        folded = meta["folded"] + ([batch_id] if batch_id is not None else [])
-        self._commit(nxt, folded, meta["n_total"] + n_batch)
-        for entry in os.listdir(self.state_path):
-            if (
-                entry.startswith("v")
-                and entry[1:].isdigit()
-                and int(entry[1:]) < nxt - 1
-            ):
-                shutil.rmtree(os.path.join(self.state_path, entry))
-
-    def start(self, stream: DataFrame, checkpoint: str, available_now: bool = True):
-        writer = (
-            stream.writeStream.option("checkpointLocation", checkpoint)
-            .foreachBatch(lambda df, bid: self.fold_batch(df, bid))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return {"": merged}, {"n_total": meta.get("n_total", 0) + n_batch}

@@ -73,12 +73,15 @@ def test_apply_matches_sequential_reference(spark, events):
 def _norm_tomb(df):
     return sorted(
         (
-            r["key"],
-            None if r["values"] is None else dict(r["values"]),
-            r["last_lsn"],
-            r["del_lsn"],
-        )
-        for r in df.collect()
+            (
+                r["key"],
+                None if r["values"] is None else dict(r["values"]),
+                r["last_lsn"],
+                r["del_lsn"],
+            )
+            for r in df.collect()
+        ),
+        key=lambda t: (t[0] is not None, t[0] or ""),
     )
 
 
@@ -137,6 +140,8 @@ def test_fold_plans_agree_truncate_multi_and_hint(spark):
         ev(5, "INSERT", "public", "t1", "k2", {"id": "k2", "c": None}),
         ev(6, "DELETE", "public", "t2", "k1", None),
         ev(7, "INSERT", "public", "t2", "k1", {"id": "k1", "b": "7"}),
+        # keyless row: its NULL key is a group of its own on both plans
+        ev(8, "INSERT", "public", "t2", None, {"a": "2"}),
     ]
     df = spark.createDataFrame(rows, CDC_EVENT_SCHEMA).withColumn(
         "key", F.coalesce(F.col("new_values")["id"], F.col("old_values")["id"])
@@ -145,11 +150,14 @@ def test_fold_plans_agree_truncate_multi_and_hint(spark):
     def norm_multi(out):
         return sorted(
             (
-                r["schema"], r["table"], r["key"],
-                None if r["values"] is None else dict(r["values"]),
-                r["last_lsn"], r["del_lsn"],
-            )
-            for r in out.collect()
+                (
+                    r["schema"], r["table"], r["key"],
+                    None if r["values"] is None else dict(r["values"]),
+                    r["last_lsn"], r["del_lsn"],
+                )
+                for r in out.collect()
+            ),
+            key=lambda t: (t[0], t[1], t[2] is not None, t[2] or ""),
         )
 
     a = norm_multi(apply_changes_with_tombstones_multi(df, "key", plan="argmax"))
@@ -162,6 +170,7 @@ def test_fold_plans_agree_truncate_multi_and_hint(spark):
     assert as_map[("public", "t1", "k1")] is None
     assert as_map[("public", "t2", "k1")] == {"id": "k1", "b": "7"}
     assert as_map[("public", "t1", "k2")] == {"id": "k2", "c": None}
+    assert as_map[("public", "t2", None)] == {"a": "2"}
 
     # a carried bucket (a function of the key) changes no value, and
     # every output row, the truncate's synthesized deletes included,

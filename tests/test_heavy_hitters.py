@@ -69,17 +69,22 @@ def test_streaming_mg_matches_batch_heavy_hitters(spark, tmp_path):
     guarantee: stream-candidates + exact recount equals the one-pass
     batch exact_heavy_hitters over the same data. Replay is a no-op for
     both the summary and the running total; a fresh instance resumes
-    the committed state."""
+    the committed state. NULL keys (more of them than any real key) are
+    not items, as in the batch operator: neither counted in total() nor
+    kept as a candidate."""
     from python_cdc_spark.streaming.sketch_stream import MgStreamSketch
 
-    df = _zipfish(spark).localCheckpoint(eager=True)
-    n = df.count()
+    nulls = spark.range(4000).select(F.lit(None).cast("string").alias("key"))
+    df = _zipfish(spark).unionByName(nulls).localCheckpoint(eager=True)
+    n = df.filter(F.col("key").isNotNull()).count()
     mg = MgStreamSketch(spark, str(tmp_path / "mg"), "key", capacity=64)
-    splits = [df.filter(F.crc32(F.col("key")) % 4 == i) for i in range(4)]
+    split = F.coalesce(F.crc32(F.col("key")), F.lit(0)) % 4
+    splits = [df.filter(split == i) for i in range(4)]
     for i, part in enumerate(splits):
         mg.fold_batch(part, batch_id=i)
     assert mg.total() == n
     assert mg.summary().count() <= 64
+    assert mg.candidates().filter(F.col("key").isNull()).count() == 0
 
     before = sorted(map(tuple, mg.summary().collect()))
     mg.fold_batch(splits[0], batch_id=0)  # checkpoint replay

@@ -11,6 +11,10 @@
 - JSON files are read through ``fsops.read_json``, which tells a missing
   file from a corrupt one, so ``json.load(`` appears only in
   ``fsops.py``.
+- Streaming sinks attach through ``streaming/sink.attach``, so
+  ``.foreachBatch(`` appears only in ``streaming/sink.py``.
+- Replay ledgers keep their bounded tail through ``fsops.record_fold``,
+  so ``[-1000:]`` appears only in ``fsops.py``.
 """
 
 from __future__ import annotations
@@ -29,6 +33,8 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "python_cdc_spark"
         ("json.dump(", "fsops.py"),
         ("rename_no_clobber(", "fsops.py"),
         ("json.load(", "fsops.py"),
+        (".foreachBatch(", "streaming/sink.py"),
+        ("[-1000:]", "fsops.py"),
     ],
 )
 def test_concern_lives_in_one_module(needle, owner):

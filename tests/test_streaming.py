@@ -1314,7 +1314,13 @@ def test_streaming_mode_mismatch_raises(spark, tmp_path):
         applier.merge_batch(bare, 1)
 
 
-def test_sketch_state_format_mismatch_refuses_resume(spark, tmp_path):
+@pytest.mark.parametrize(
+    "sketch_cls, fmt",
+    [("StreamingSketchAggregator", 2), ("MgStreamSketch", 1)],
+)
+def test_sketch_state_format_mismatch_refuses_resume(
+    spark, tmp_path, sketch_cls, fmt
+):
     """Sketch state written under an older hash geometry must refuse to
     resume (ADVICE r6 #5): folding masked-key placements into unmasked
     registers never errors, it just corrupts estimates. The format tag
@@ -1322,22 +1328,20 @@ def test_sketch_state_format_mismatch_refuses_resume(spark, tmp_path):
     old format."""
     import json as _json
 
-    from python_cdc_spark.streaming.sketch_stream import (
-        StreamingSketchAggregator,
-    )
+    from python_cdc_spark.streaming import sketch_stream
 
     path = str(tmp_path / "sk")
-    agg = StreamingSketchAggregator(spark, path, "k")
+    agg = getattr(sketch_stream, sketch_cls)(spark, path, "k")
     agg.fold_batch(spark.createDataFrame([(1,), (2,)], "k bigint"), batch_id=0)
     meta_path = os.path.join(path, "_meta.json")
     meta = _json.load(open(meta_path))
-    assert meta["format"] == 2  # stamped on every commit
+    assert meta["format"] == fmt  # stamped on every commit
 
     # tamper: simulate state persisted by the pre-mask build
     del meta["format"]
     with open(meta_path, "w") as f:
         _json.dump(meta, f)
-    fresh = StreamingSketchAggregator(spark, path, "k")
+    fresh = getattr(sketch_stream, sketch_cls)(spark, path, "k")
     with pytest.raises(ValueError, match="format"):
         fresh.fold_batch(
             spark.createDataFrame([(3,)], "k bigint"), batch_id=1
@@ -1583,19 +1587,20 @@ def test_wire_batch_job_count(spark, tmp_path):
     assert applier.current_state().count() == 50
 
 
-def test_fold_plan_auto_detects_bucket_skew(spark, tmp_path):
-    """fold_plan='auto' picks the single-shuffle array plan for a
-    balanced batch and falls back to the skew-safe argmax plan when one
-    bucket holds a hot key's burst (the probe's histogram is the free
-    skew signal); pinning the plan overrides the heuristic. State must
-    be correct regardless of which plan merged which batch."""
+def test_fold_plan_auto_detects_bucket_skew(spark, tmp_path, monkeypatch):
+    """The merge picks the single-shuffle array plan for a balanced
+    batch and falls back to the skew-safe argmax plan when one bucket
+    holds a hot key's burst (the probe's histogram is the free skew
+    signal). State must be correct regardless of which plan merged
+    which batch."""
     from python_cdc_spark.schemas import CDC_EVENT_SCHEMA
     from python_cdc_spark.streaming import StreamingApplyChanges
+    from python_cdc_spark.streaming import apply_stream
 
+    monkeypatch.setattr(apply_stream, "_AUTO_SKEW_MIN_ROWS", 10)  # test size
     applier = StreamingApplyChanges(
         spark, str(tmp_path / "state"), "key", n_buckets=4
     )
-    applier.auto_skew_min_rows = 10  # test-size threshold
 
     def events_df(rows):
         import datetime as dt
@@ -1619,7 +1624,6 @@ def test_fold_plan_auto_detects_bucket_skew(spark, tmp_path):
     applier.merge_batch(events_df(hot), 1)
     assert applier.last_fold_plan == "argmax"
 
-    applier.fold_plan = "array_fold"
     applier.merge_batch(
         events_df([_ev(300, "UPDATE", "7", {"id": "7", "v": "final"})]), 2
     )
