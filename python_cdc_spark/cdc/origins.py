@@ -14,6 +14,16 @@ recent marker frame at-or-before the event's LSN, where BEGIN resets
 the origin to NULL (local) and ``O`` sets it. That is a global as-of
 over the LSN axis.
 
+The streaming wire path (``StreamingWireApplyChanges.merge_wire_batch``)
+does not use this module's as-of: it resolves origins inside the frame
+decode (``pgoutput.decode_frames`` with per-partition seeds, the
+serial loop cut into LSN-contiguous partitions), seeding each partition
+from the per-partition last markers of :func:`last_marker_col`. The
+bucket-parallel as-of below remains for feeds of pre-decoded events or
+markers and for the composite queries, and both paths share
+:func:`filter_by_origin`'s spec rules (``pgoutput.origin_allow_list``)
+and the ``O`` name slice (``pgoutput.origin_frame_name``).
+
 Scale shape (the part that matters at 100 TB): txn markers are
 O(transactions) while events are O(rows), and there is no natural
 partition key for a global ordered scan. We use the bucket-parallel
@@ -32,16 +42,20 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from python_cdc_spark.cdc.pgoutput import EVENT_TAGS
+from python_cdc_spark.cdc.pgoutput import EVENT_TAGS, origin_allow_list
 
 
 def _origin_name(frame_col: str) -> Column:
     """The name an ``O`` frame carries. All-JVM: it is the trailing
     cstring of the frame (tag byte + Int64 commit LSN + name + NUL),
-    sliced with binary substring/decode — no UDF."""
-    return F.decode(
-        F.expr(f"substring({frame_col}, 10, length({frame_col}) - 10)"),
-        "UTF-8",
+    sliced with binary substring — no UDF. Invalid UTF-8 is replaced
+    with U+FFFD (``pgoutput.origin_frame_name`` decodes the same way),
+    so a malformed name marks its transaction remote instead of failing
+    the whole batch with ``MALFORMED_CHARACTER_CODING``."""
+    return F.make_valid_utf8(
+        F.expr(
+            f"substring({frame_col}, 10, length({frame_col}) - 10)"
+        ).cast("string")
     )
 
 
@@ -239,18 +253,15 @@ def filter_by_origin(
     originated transactions (origin NULL — the loop-breaking setting),
     and an iterable of names keeps local txns plus those origins (an
     extension PostgreSQL spells as per-origin filtering in custom
-    output plugins)."""
-    if origin == "any":
+    output plugins). The rules are ``pgoutput.origin_allow_list``'s,
+    which the in-decode filter applies too."""
+    allowed = origin_allow_list(origin)
+    if allowed is None:
         return events
-    if origin == "none":
-        return events.filter(F.col("origin").isNull())
-    # a bare origin name is a one-element allow-list — without this,
-    # list("region_b") would silently become a list of CHARACTERS and
-    # filter out nearly everything
-    allowed = [origin] if isinstance(origin, str) else list(origin)
-    return events.filter(
-        F.col("origin").isNull() | F.col("origin").isin(allowed)
-    )
+    keep = F.col("origin").isNull()
+    if allowed:
+        keep = keep | F.col("origin").isin(sorted(allowed))
+    return events.filter(keep)
 
 
 def last_marker(frames: DataFrame, frame_col: str = "frame"):

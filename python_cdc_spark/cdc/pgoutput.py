@@ -15,9 +15,14 @@ Here the same wire format is handled in two Spark passes:
    overwrite semantics correct under distributed decode: each DML
    resolves the relation version in force at its own LSN.
 2. ``decode_frames`` — Arrow-batched ``mapInPandas`` over the data
-   frames (``I``/``U``/``D``), each worker decoding with the broadcast
-   registry. Frames referencing an unregistered relid are dropped, as
-   the reference does with a warning (``pg_output_parser.py:138-141``).
+   frames (``I``/``U``/``D``/``T``), each worker decoding with the
+   broadcast registry. Frames referencing an unregistered relid are
+   dropped, as the reference does with a warning
+   (``pg_output_parser.py:138-141``). Given per-partition origin seeds,
+   the same loop also resolves each transaction's replication origin —
+   the reference's serial ``B``/``O`` state (``pg_output_parser.py:32-39``)
+   cut into LSN-contiguous partitions — and drops the DML of
+   transactions the subscription's ``origin`` rejects.
 
 Wire format implemented from the public PostgreSQL docs
 (protocol/logicalrep-message-formats, proto_version 1 — the version the
@@ -29,8 +34,11 @@ reference requests at ``postgre_cdc_consumer.py:77``):
 - ``I``: relid int32, 'N', TupleData.
 - ``U``: relid int32, optional ('K'|'O') TupleData, 'N', TupleData.
 - ``D``: relid int32, ('K'|'O') TupleData.
-- ``B``/``C``: transaction markers (skipped, like
-  ``pg_output_parser.py:32-37``).
+- ``B``/``C``: transaction markers. They decode to no event; with
+  origin seeds a ``B`` resets the transaction's origin to local.
+- ``O``: Int64 commit LSN, origin name cstr. No event; with origin
+  seeds it sets the transaction's origin (``cdc/origins.py`` holds the
+  Spark-side as-of resolution of the same semantics).
 - TupleData: ncols int16, per column one of 'n' (null), 'u' (TOASTed
   unchanged → the ``[unchanged]`` sentinel), 't' int32 len + bytes
   (UTF-8 text, matching the reference's text decoding,
@@ -50,7 +58,7 @@ repo's analog of the reference's ``test_changes.py`` change generator.
 from __future__ import annotations
 
 import struct
-from typing import Any, Iterator
+from typing import Any, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,6 +69,30 @@ from python_cdc_spark.schemas import CDC_EVENT_SCHEMA, UNCHANGED_SENTINEL
 #: Update, Delete, Truncate); every other tag decodes to nothing. Shared
 #: with the origins probe, which must see every event-bearing frame.
 EVENT_TAGS = ("I", "U", "D", "T")
+
+
+def origin_frame_name(buf: bytes) -> str:
+    """The name an ``O`` frame carries: the bytes after the tag and the
+    Int64 commit LSN, less the trailing NUL — the slice
+    ``origins._origin_name`` takes on the Spark side. Invalid UTF-8
+    decodes with U+FFFD replacement on both sides, so a malformed name
+    still marks its transaction remote instead of failing the batch."""
+    return buf[9:-1].decode("utf-8", errors="replace")
+
+
+def origin_allow_list(origin: str | Iterable[str]) -> frozenset[str] | None:
+    """The subscription's ``origin`` parameter as the set of remote
+    origin names whose transactions are kept (local ones always are):
+    None for ``"any"`` (keep everything), empty for ``"none"`` (local
+    only), else the named origins. A bare name is a one-element list —
+    without that, ``list("region_b")`` would silently become a list of
+    characters and filter out nearly everything."""
+    if origin == "any":
+        return None
+    if origin == "none":
+        return frozenset()
+    return frozenset([origin] if isinstance(origin, str) else origin)
+
 
 # ---------------------------------------------------------------------------
 # encoding (fixture/test producer side)
@@ -324,6 +356,9 @@ def decode_frames(
     frames: DataFrame,
     frame_col: str = "frame",
     registry: dict[int, dict] | dict[int, list[tuple[int, dict]]] | None = None,
+    *,
+    origin_seeds: dict[int, str | None] | None = None,
+    origin: str | Iterable[str] = "any",
 ) -> DataFrame:
     """Pass 2: binary pgoutput frames → typed CDC events.
 
@@ -344,17 +379,35 @@ def decode_frames(
     (on a real wire ``R`` always precedes the relation's first DML in
     a session, so this arises only in synthetic/file feeds — the
     forgiving choice keeps snapshot-style fixtures decodable).
+
+    ``origin_seeds`` (``{partition id: origin or None}``) turns on
+    origin resolution in the decode loop. Each partition of ``frames``
+    must hold one LSN-contiguous run of the feed, sorted by LSN with a
+    marker before a DML at the same LSN, and its seed is the origin in
+    force at the run's start (None = local). A ``B`` frame resets the
+    current origin to local, an ``O`` frame sets it
+    (:func:`origin_frame_name`), and an event frame whose current origin
+    ``origin`` rejects (:func:`origin_allow_list`) is dropped. The seed
+    is looked up by the decoding task's partition id, so the decode must
+    run in the tasks that read ``frames``' partitions (no coalesce in
+    between). Without seeds every event frame decodes.
     """
     from bisect import bisect_right
 
     if registry is None:
         registry = relation_registry_versions(frames, frame_col)
     breg = spark.sparkContext.broadcast(_normalize_registry(registry))
+    allowed = origin_allow_list(origin)
 
     def decode(batches: Iterator["Any"]) -> Iterator["Any"]:
         import pandas as pd
 
         reg = breg.value
+        current = None
+        if origin_seeds is not None:
+            from pyspark import TaskContext
+
+            current = origin_seeds.get(TaskContext.get().partitionId())
 
         def rel_at(relid: int, lsn: int) -> dict | None:
             entry = reg.get(relid)
@@ -377,7 +430,18 @@ def decode_frames(
                     buf = bytes(buf)
                     tag = chr(buf[0]) if buf else "?"
                     if tag not in EVENT_TAGS:
+                        if origin_seeds is not None:
+                            if tag == "B":
+                                current = None
+                            elif tag == "O":
+                                current = origin_frame_name(buf)
                         continue
+                    if (
+                        current is not None
+                        and allowed is not None
+                        and current not in allowed
+                    ):
+                        continue  # a rejected origin's transaction
                     if tag == "T":
                         # Truncate: Int32 nrelations, Int8 options
                         # (CASCADE/RESTART IDENTITY — decoded, not

@@ -46,15 +46,18 @@ from python_cdc_spark.streaming.state_store import BucketedStateStore
 #: them — they scope TRUNCATE expansion (and the state fold) per table
 _AUX_COLS = ("schema", "table")
 
-#: Wire micro-batches of at least this many rows are repartitioned to
-#: executor parallelism before the Python frame decode: a file-source
-#: batch has only file-count partitions, so a big batch would otherwise
-#: decode nearly serially. The count comes from the batch's one
-#: pre-decode aggregate, so the gate costs nothing extra. Below it the
-#: shuffle's fixed cost beats the decode win, and latency-sized batches
-#: stay zero-copy. Widening pays at scale: a 400k-frame, 7.8 MB
-#: single-file batch through ``merge_wire_batch`` on 4 cores took a
-#: median 6.3 s widened (4 decode tasks) and 9.4 s narrow (2 tasks).
+#: Wire micro-batches of at least this many rows are range-repartitioned
+#: on ``lsn`` to executor parallelism before the Python frame decode: a
+#: file-source batch has only file-count partitions, so a big batch
+#: would otherwise decode nearly serially. The count comes from the
+#: batch's one pre-decode aggregate, so the gate costs nothing extra.
+#: Below it the shuffle's fixed cost beats the decode win, and
+#: latency-sized batches stay zero-copy. A range (not round-robin)
+#: split keeps each partition one LSN-contiguous run, which the
+#: in-decode origin resolution needs. Widening pays at scale: a
+#: 400k-frame, 7.8 MB single-file batch through ``merge_wire_batch`` on
+#: 4 cores took a median 6.3 s widened (4 decode tasks) and 9.4 s narrow
+#: (2 tasks).
 _WIDE_DECODE_ROWS = 200_000
 
 #: Per-batch fold plan choice. The streaming merge is the case the
@@ -293,7 +296,7 @@ class StreamingApplyChanges:
         # fold+commit write. Materialise it once (lazily: the probe's job
         # fills it) so the write reads those blocks instead of re-running
         # the batch's upstream lineage — for a wire batch, the Python
-        # frame decode, key extraction and the origins window.
+        # frame decode (origin filter included) and key extraction.
         batch = (
             batch.select(
                 "lsn", "operation", "new_values", *aux, F.col(self.key_col)
@@ -439,13 +442,14 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         self.registry: dict[int, dict] = dict(initial_registry or {})
         self._registry_path = state_path.rstrip("/") + "_registry.json"
         # Subscription origin parameter ("any" | "none" | iterable of
-        # allowed origin names): with anything but "any", each batch's
-        # events are resolved against B/O txn markers and filtered
-        # BEFORE the fold — the loop-breaking subscriber semantics of
-        # bidirectional replication (cdc/origins.py). The carry (last
-        # marker of the previous batch) persists next to the registry so
-        # a transaction spanning micro-batches — or a restart — keeps
-        # its origin.
+        # allowed origin names): with anything but "any", the frame
+        # decode resolves each DML's transaction origin from the B/O
+        # markers and drops rejected ones BEFORE the fold — the
+        # loop-breaking subscriber semantics of bidirectional
+        # replication (cdc/origins.py). The carry (last marker of the
+        # previous batch) persists next to the registry so a
+        # transaction spanning micro-batches — or a restart — keeps its
+        # origin.
         self.origin = origin
         self._origin_path = state_path.rstrip("/") + "_origin.json"
         # before/after are pinned per batch_id so a crash-replayed batch
@@ -472,44 +476,45 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         fsops.publish_json(path, obj)
 
     def merge_wire_batch(self, frames: DataFrame, batch_id: int | None = None) -> None:
-        """One micro-batch of raw frames: registry refresh → decode → merge.
+        """One micro-batch of raw frames: registry refresh → decode (with
+        origin resolution) → merge.
 
-        A file-source micro-batch arrives with as many partitions as it
-        has FILES (often a handful), which runs the Python frame decode
-        nearly serially on a wide executor. The batch is materialized
-        ONCE, so the pre-decode aggregate, the decode and the merge all
-        read memory, not three file scans. That aggregate also counts
-        the batch's rows, and the count alone decides the decode width:
-        a batch of at least ``_WIDE_DECODE_ROWS`` rows is repartitioned
-        to the session's parallelism so the decode runs executor-wide,
-        and a smaller one skips the shuffle, whose fixed cost would
-        dominate a latency-sized batch."""
-        from python_cdc_spark.cdc.origins import last_marker_col
+        The batch is sorted by LSN within each partition (a marker before
+        a DML at the same LSN) and materialized ONCE, so the pre-decode
+        aggregate, the decode and the merge all read memory, not three
+        file scans. That aggregate runs per partition: it answers the lag
+        stamp, the row count, the batch's R frames, each partition's LSN
+        range and its last B/O marker in one job, with at most one row
+        per partition.
+
+        With origin filtering on, the driver orders the partitions by
+        their first LSN and prefix-scans their last markers from the
+        persisted carry, so each partition's decode starts from the
+        origin in force at its first frame and drops the DML of rejected
+        transactions itself — no separate origins plan. That needs each
+        partition to be one LSN-contiguous run: a batch whose partitions'
+        ranges overlap (the file source packed non-adjacent files into
+        one partition) is range-repartitioned on ``lsn``, as is any batch
+        of at least ``_WIDE_DECODE_ROWS`` rows, so the decode runs
+        executor-wide; a smaller contiguous batch skips the shuffle,
+        whose fixed cost would dominate a latency-sized batch."""
         from python_cdc_spark.cdc.pgoutput import (
             _LSN_MIN,
             _parse_relation_frame,
             decode_frames,
         )
 
-        frames = frames.localCheckpoint(eager=True)
-        # the one pre-decode scan: lag stamp, row count, the batch's R
-        # frames and the origin carry's last B/O marker
-        one = frames.agg(
-            F.max("ts").alias("mx"),
-            F.count(F.lit(1)).alias("n"),
-            # O(DDL events) in the batch — metadata-scale collect
-            F.collect_list(
-                F.when(
-                    F.substring("frame", 1, 1) == "R",
-                    F.struct("lsn", "frame"),
-                )
-            ).alias("rels"),
-            last_marker_col().alias("marker"),
-        ).first()
-        rel_rows = one["rels"] or []
-        if one["n"] >= _WIDE_DECODE_ROWS:
+        filtering = self.origin != "any"
+        frames = _lsn_sorted(frames).localCheckpoint(eager=True)
+        parts = _partition_summary(frames)
+        n_rows = sum(r["n"] for r in parts)
+        if n_rows >= _WIDE_DECODE_ROWS or (filtering and _overlapping(parts)):
             par = self.spark.sparkContext.defaultParallelism
-            frames = frames.repartition(par).localCheckpoint(eager=True)
+            frames = _lsn_sorted(
+                frames.repartitionByRange(par, "lsn")
+            ).localCheckpoint(eager=True)
+            if filtering:
+                parts = _partition_summary(frames)
         # The batch decodes with an LSN-VERSIONED registry: the carried
         # registry (previous batches / snapshot seed) is valid from the
         # start of the LSN axis, and each R frame in THIS batch opens a
@@ -520,6 +525,7 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         versions: dict[int, list] = {
             relid: [(_LSN_MIN, rel)] for relid, rel in self.registry.items()
         }
+        rel_rows = [rel for r in parts for rel in r["rels"] or []]
         if rel_rows:
             for row in sorted(rel_rows, key=lambda r: r["lsn"]):
                 relid, rel = _parse_relation_frame(bytes(row["frame"]))
@@ -527,35 +533,30 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
                 self.registry[relid] = rel  # latest-wins carry for the NEXT batch
             self._save_json(self._registry_path, self.registry)
 
-        events = decode_frames(self.spark, frames, registry=versions)
-        if self.origin != "any":
-            from python_cdc_spark.cdc.origins import (
-                annotate_origins,
-                filter_by_origin,
-            )
-
+        seeds = None
+        if filtering:
             st = self._origin_state
             seed = (
                 st["before"]
                 if batch_id is not None and st["batch_id"] == batch_id
                 else st["after"]
             )
-            marker = one["marker"]
-            events = filter_by_origin(
-                annotate_origins(
-                    self.spark, events, frames, initial_origin=seed
-                ),
-                self.origin,
-            ).drop("origin")
+            seeds, after = _origin_seeds(parts, seed)
             self._origin_state = {
-                "batch_id": batch_id,
-                "before": seed,
-                "after": marker["origin"] if marker is not None else seed,
+                "batch_id": batch_id, "before": seed, "after": after
             }
             self._save_json(self._origin_path, self._origin_state)
+        events = decode_frames(
+            self.spark, frames, registry=versions,
+            origin_seeds=seeds, origin=self.origin,
+        )
         self.merge_batch(self.key_extractor(events), batch_id)
         # state is durable now — the capture→applied gap is the e2e lag
-        self.record_latency(batch_id, one["mx"], one["n"])
+        self.record_latency(
+            batch_id,
+            max((r["mx"] for r in parts if r["mx"] is not None), default=None),
+            n_rows,
+        )
 
     def start_wire(
         self,
@@ -567,6 +568,62 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         return attach(
             frames, self.merge_wire_batch, checkpoint_path, available_now
         )
+
+
+def _lsn_sorted(frames: DataFrame) -> DataFrame:
+    """Frames in LSN order within each partition, a transaction marker
+    before a DML at the same LSN (the as-of tie rule of
+    ``origins.annotate_origins_from_markers``). No shuffle."""
+    from python_cdc_spark.cdc.pgoutput import EVENT_TAGS
+
+    return frames.sortWithinPartitions(
+        "lsn", F.substring("frame", 1, 1).isin(*EVENT_TAGS)
+    )
+
+
+def _partition_summary(frames: DataFrame) -> list:
+    """The wire batch's one pre-decode scan, one row per non-empty
+    partition: its partition id, newest capture timestamp, row count,
+    LSN range, R frames (O(DDL events)) and last B/O marker — at most
+    parallelism rows, a driver-scale collect."""
+    from python_cdc_spark.cdc.origins import last_marker_col
+
+    return (
+        frames.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(
+            F.max("ts").alias("mx"),
+            F.count(F.lit(1)).alias("n"),
+            F.min("lsn").alias("lo"),
+            F.max("lsn").alias("hi"),
+            F.collect_list(
+                F.when(
+                    F.substring("frame", 1, 1) == "R",
+                    F.struct("lsn", "frame"),
+                )
+            ).alias("rels"),
+            last_marker_col().alias("marker"),
+        )
+        .collect()
+    )
+
+
+def _overlapping(parts: list) -> bool:
+    """Whether two partitions' LSN ranges meet or overlap, so that
+    partitions are not LSN-contiguous runs."""
+    spans = sorted((r["lo"], r["hi"]) for r in parts)
+    return any(lo <= hi for (_, hi), (lo, _) in zip(spans, spans[1:]))
+
+
+def _origin_seeds(parts: list, carry: str | None) -> tuple[dict, str | None]:
+    """Each partition's starting origin, ``{partition id: origin}``, by a
+    prefix scan of the partitions' last markers in LSN order from the
+    carry of earlier batches; also the carry after this batch."""
+    seeds = {}
+    for r in sorted(parts, key=lambda r: r["lo"]):
+        seeds[r["pid"]] = carry
+        if r["marker"] is not None:
+            carry = r["marker"]["origin"]
+    return seeds, carry
 
 
 def drop_checkpoint(checkpoint_path: str) -> None:

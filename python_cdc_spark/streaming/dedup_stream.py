@@ -39,6 +39,9 @@ from python_cdc_spark.operators.incremental_dedup import (
 )
 from python_cdc_spark.streaming.sink import attach
 
+#: ``_folded.json`` layout version (``{"format", "folded": [batch ids]}``).
+_FOLDED_FORMAT = 1
+
 
 class StreamingCorpusDedup:
     def __init__(
@@ -58,11 +61,22 @@ class StreamingCorpusDedup:
         return os.path.join(self.index_path, "_folded.json")
 
     def _folded_ids(self) -> set:
-        return set(fsops.read_json(self._folded_path, []))
+        ledger = fsops.read_json(self._folded_path)
+        if ledger is None:
+            return set()
+        return set(
+            fsops.check_format(ledger, _FOLDED_FORMAT, self._folded_path)[
+                "folded"
+            ]
+        )
 
     def _mark_folded(self, batch_id: int) -> None:
         fsops.publish_json(
-            self._folded_path, fsops.record_fold(self._folded_ids(), batch_id)
+            self._folded_path,
+            {
+                "format": _FOLDED_FORMAT,
+                "folded": fsops.record_fold(self._folded_ids(), batch_id),
+            },
         )
 
     def bootstrap(self, docs: DataFrame) -> None:

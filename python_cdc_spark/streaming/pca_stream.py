@@ -34,6 +34,9 @@ from python_cdc_spark import fsops
 from python_cdc_spark.operators.pca import model_from_suffstats, suffstats
 from python_cdc_spark.streaming.sink import attach
 
+#: ``_meta.json`` layout version (n, Σx, XᵀX, replay ledger, dims).
+_PCA_FORMAT = 1
+
 
 class StreamingPCA:
     """foreachBatch folder of PCA sufficient statistics."""
@@ -58,19 +61,22 @@ class StreamingPCA:
         return os.path.join(self.state_path, "_meta.json")
 
     def _meta(self) -> dict:
-        return fsops.read_json(
-            self._meta_path,
-            {
+        """The committed meta, or empty stats when nothing is folded yet.
+        Every reader goes through here, so a meta without the format
+        stamp is refused (``fsops.check_format``) before any use."""
+        meta = fsops.read_json(self._meta_path)
+        if meta is None:
+            return {
                 "n": 0,
                 "s": [0.0] * self.dims,
                 "g": [0.0] * (self.dims * self.dims),
                 "folded": [],
                 "dims": self.dims,
-            },
-        )
+            }
+        return fsops.check_format(meta, _PCA_FORMAT, self._meta_path)
 
     def _commit(self, meta: dict) -> None:
-        fsops.publish_json(self._meta_path, meta)
+        fsops.publish_json(self._meta_path, {**meta, "format": _PCA_FORMAT})
 
     # -- fold -------------------------------------------------------------
 

@@ -15,10 +15,14 @@
   ``.foreachBatch(`` appears only in ``streaming/sink.py``.
 - Replay ledgers keep their bounded tail through ``fsops.record_fold``,
   so ``[-1000:]`` appears only in ``fsops.py``.
+- The streaming wire path resolves transaction origins inside the frame
+  decode, so nothing under ``streaming/`` uses the Spark-side as-of
+  (``annotate_origins``) or its filter (``filter_by_origin``).
 """
 
 from __future__ import annotations
 
+import ast
 import pathlib
 
 import pytest
@@ -44,3 +48,15 @@ def test_concern_lives_in_one_module(needle, owner):
         if p.relative_to(PKG) != pathlib.Path(owner) and needle in p.read_text()
     )
     assert offenders == [], f"{needle!r} outside {owner}: {offenders}"
+
+
+@pytest.mark.parametrize("name", ["annotate_origins", "filter_by_origin"])
+def test_streaming_does_not_use_as_of_origins(name):
+    offenders = sorted(
+        str(p.relative_to(PKG))
+        for p in (PKG / "streaming").rglob("*.py")
+        for node in ast.walk(ast.parse(p.read_text()))
+        if (isinstance(node, ast.alias) and node.name == name)
+        or (isinstance(node, ast.Attribute) and node.attr == name)
+    )
+    assert offenders == [], f"{name} used under streaming/: {offenders}"

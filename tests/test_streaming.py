@@ -831,10 +831,42 @@ def test_corpus_dedup_folded_ids_keep_a_bounded_tail(tmp_path):
     from python_cdc_spark.streaming.dedup_stream import StreamingCorpusDedup
 
     dd = StreamingCorpusDedup(None, str(tmp_path))
-    fsops.publish_json(dd._folded_path, list(range(1000)))
+    fsops.publish_json(
+        dd._folded_path, {"format": 1, "folded": list(range(1000))}
+    )
     dd._mark_folded(1000)
     ids = dd._folded_ids()
     assert len(ids) == 1000 and 1000 in ids and 0 not in ids
+
+
+@pytest.mark.parametrize("sink", ["StreamingPCA", "StreamingCorpusDedup"])
+def test_sink_ledger_format_mismatch_refuses_resume(tmp_path, sink):
+    """The PCA meta and the corpus-dedup replay ledger carry
+    ``"format": 1`` on every commit, and every reader refuses an
+    unstamped file (the pre-stamp layout) instead of reading it through
+    (no Spark: both are plain JSON)."""
+    import json as _json
+
+    from python_cdc_spark import fsops
+    from python_cdc_spark.streaming.dedup_stream import StreamingCorpusDedup
+    from python_cdc_spark.streaming.pca_stream import StreamingPCA
+
+    if sink == "StreamingPCA":
+        st = StreamingPCA(None, str(tmp_path), dims=2, k=1)
+        path, reads = st._meta_path, (st.model, st.rows_folded)
+        st._commit(st._meta())
+        unstamped = {"n": 0, "s": [0.0] * 2, "g": [0.0] * 4,
+                     "folded": [], "dims": 2}
+    else:
+        st = StreamingCorpusDedup(None, str(tmp_path))
+        path, reads = st._folded_path, (st._folded_ids,)
+        st._mark_folded(0)
+        unstamped = [0]
+    assert _json.load(open(path))["format"] == 1
+    fsops.publish_json(path, unstamped)
+    for read in reads:
+        with pytest.raises(ValueError, match="format"):
+            read()
 
 
 def test_wide_decode_row_gate(spark, tmp_path, monkeypatch):
@@ -1563,28 +1595,215 @@ def test_wire_batch_creates_missing_state_parent(spark, tmp_path):
     ]
 
 
-def test_wire_batch_job_count(spark, tmp_path):
-    """Job receipt for one warm wire micro-batch (origin filter on):
-    one pre-decode scan answers the lag stamp, R frames and the origin
-    carry, the keyed batch is materialised once for the bucket probe and
-    the write, and the array fold starts from the store's bucket
-    clustering, so Spark drops the commit's repartition and the fold
-    runs inside the executor-width write tasks. Each of those lost jobs
-    or stages; a re-added scan, re-run or shuffle shows up here."""
+def _wire_batch_receipt(spark, tmp_path, origin):
+    """``(jobs, stages)`` of one warm wire micro-batch merged with
+    ``origin``, after a first batch has left prior state."""
     sc = spark.sparkContext
-    applier = _wire_applier(spark, str(tmp_path / "state"), origin="none")
+    applier = _wire_applier(spark, str(tmp_path / "state"), origin=origin)
     applier.merge_wire_batch(_wire_feed(spark, 60), batch_id=0)  # prior state
     batch = _wire_feed(spark, 60, lsn0=1000)
-    sc.setJobGroup("wire_receipt", "wire_receipt")
+    group = f"wire_receipt_{origin}"  # the tracker keeps finished groups
+    sc.setJobGroup(group, group)
     try:
         applier.merge_wire_batch(batch, batch_id=1)
     finally:
         sc.setJobGroup(None, None)
     tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup("wire_receipt")
+    jobs = tracker.getJobIdsForGroup(group)
     stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
-    assert (len(jobs), stages) == (10, 16)
-    assert applier.current_state().count() == 50
+    return (len(jobs), stages), applier.current_state().count()
+
+
+def test_wire_batch_job_count(spark, tmp_path):
+    """Job receipt for one warm wire micro-batch (origin filter on): the
+    frames are sorted and materialised once, one per-partition pre-decode
+    scan answers the lag stamp, R frames, LSN ranges and each partition's
+    last origin marker, the decode resolves and filters origins in its
+    own loop (no separate origins plan), the keyed batch is materialised
+    once for the bucket probe and the write, and the array fold starts
+    from the store's bucket clustering, so Spark drops the commit's
+    repartition and the fold runs inside the executor-width write tasks.
+    Each of those lost jobs or stages; a re-added scan, re-run or shuffle
+    shows up here."""
+    receipt, n_state = _wire_batch_receipt(spark, tmp_path, "none")
+    assert receipt == (7, 10)
+    assert n_state == 50
+
+
+def test_wire_batch_job_count_origin_any(spark, tmp_path):
+    """The same receipt with origin filtering off (the catch-up path):
+    the per-partition scan only changes shape, and nothing is added."""
+    receipt, n_state = _wire_batch_receipt(spark, tmp_path, "any")
+    assert receipt == (7, 10)
+    assert n_state == 50
+
+
+def _origin_feed():
+    """``(lsn, frame)`` rows of seven transactions over keys 1-7: local
+    ones, two replayed from ``region_b`` and one from ``region_c``,
+    whose ``O`` frame shares its LSN with (and is listed after) the
+    transaction's first DML."""
+    from python_cdc_spark.cdc.pgoutput import (
+        encode_begin,
+        encode_commit,
+        encode_delete,
+        encode_insert,
+        encode_origin,
+        encode_relation,
+        encode_update,
+    )
+
+    txns = [
+        (None, [encode_insert(9, ["1", "a"]), encode_insert(9, ["2", "a"])]),
+        ("region_b", [encode_insert(9, ["3", "b"]), encode_update(9, ["1", "b"])]),
+        (None, [encode_insert(9, ["4", "c"]), encode_delete(9, ["2", None])]),
+        ("region_c", [encode_insert(9, ["5", "d"])]),
+        (None, [encode_update(9, ["3", "e"])]),
+        ("region_b", [encode_insert(9, ["6", "f"]), encode_delete(9, ["4", None])]),
+        (None, [encode_insert(9, ["7", "g"])]),
+    ]
+    rows = [(1, encode_relation(9, "public", "users", ["id", "v"]))]
+    for origin, dml in txns:
+        rows.append((len(rows) + 1, encode_begin()))
+        if origin == "region_c":
+            lsn = len(rows) + 1  # marker and first DML share one LSN
+            rows += [(lsn, dml[0]), (lsn, encode_origin(7, origin))]
+            dml = dml[1:]
+        elif origin is not None:
+            rows.append((len(rows) + 1, encode_origin(7, origin)))
+        rows += [(len(rows) + 1 + i, f) for i, f in enumerate(dml)]
+        rows.append((len(rows) + 1, encode_commit()))
+    return rows
+
+
+def _frames_in_parts(spark, rows, cuts, path):
+    """``rows`` as an (lsn, ts, frame) file-source batch with one parquet
+    file, hence one partition, per slice between consecutive ``cuts``."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    schema = "lsn bigint, ts timestamp, frame binary"
+    bounds = [0, *cuts, len(rows)]
+    for a, b in zip(bounds, bounds[1:]):
+        spark.createDataFrame(
+            [(lsn, t0, bytearray(f)) for lsn, f in rows[a:b]], schema
+        ).coalesce(1).write.mode("append").parquet(path)
+    out = spark.read.schema(schema).parquet(path)
+    assert out.rdd.getNumPartitions() == len(bounds) - 1
+    return out
+
+
+def test_in_decode_origins_match_as_of_path(spark, tmp_path, monkeypatch):
+    """The wire path resolves origins inside the decode from per-partition
+    seeds; the state it merges must equal the kept as-of path
+    (annotate_origins -> filter_by_origin -> apply_changes_all_tables)
+    over the same frames. Every batch has a transaction spanning two
+    partitions and a marker sharing its DML's LSN; the cases add
+    overlapping partitions (round-robin, so the batch is range-
+    repartitioned), an allow-list, a replayed batch id (re-seeded from
+    ``before``) and a widened batch."""
+    from python_cdc_spark.cdc.apply import apply_changes_all_tables
+    from python_cdc_spark.cdc.origins import annotate_origins, filter_by_origin
+    from python_cdc_spark.cdc.pgoutput import decode_frames
+    from python_cdc_spark.streaming import apply_stream as ap
+
+    rows = _origin_feed()
+    o_at = [i for i, (_, f) in enumerate(rows) if f[:1] == b"O"]
+    # cut right after region_b's first O (its DML is in the next
+    # partition), inside the next local txn, and after the last O
+    cuts = [o_at[0] + 1, o_at[0] + 5, o_at[-1] + 1]
+    whole = _frames_in_parts(spark, rows, cuts, str(tmp_path / "whole"))
+
+    def state(df):
+        return sorted(
+            (r["key"], r["values"]["v"], r["last_lsn"]) for r in df.collect()
+        )
+
+    def as_of(origin):
+        events = decode_frames(spark, whole)
+        kept = filter_by_origin(
+            annotate_origins(spark, events, whole, bucket_width=8), origin
+        ).drop("origin")
+        return state(apply_changes_all_tables(
+            kept.withColumn("key", F.coalesce(
+                F.col("new_values")["id"], F.col("old_values")["id"]
+            ))
+        ))
+
+    overlapped = []
+    real_overlapping = ap._overlapping
+    monkeypatch.setattr(
+        ap, "_overlapping",
+        lambda parts: overlapped.append(real_overlapping(parts)) or overlapped[-1],
+    )
+    first, rest = rows[: o_at[-1] + 1], rows[o_at[-1] + 1:]
+    cases = {
+        "overlap": ("none", [(0, whole.repartition(3))]),
+        "allow": (["region_b"], [(0, whole)]),
+        "replay": ("none", [
+            (0, _frames_in_parts(spark, first, [o_at[0] + 1], str(tmp_path / "a"))),
+            (1, _frames_in_parts(spark, rest, [], str(tmp_path / "b"))),
+            (1, spark.read.parquet(str(tmp_path / "b"))),
+        ]),
+    }
+    want = {"none": as_of("none"), "allow": as_of(["region_b"])}
+    assert [k for k, _, _ in want["none"]] == ["1", "3", "4", "7"]
+    assert [k for k, _, _ in want["allow"]] == ["1", "3", "6", "7"]
+    for name, (origin, batches) in cases.items():
+        applier = _wire_applier(spark, str(tmp_path / name), origin=origin)
+        for bid, frames in batches:
+            applier.merge_wire_batch(frames, batch_id=bid)
+        got = state(applier.current_state())
+        assert got == want["allow" if name == "allow" else "none"], name
+        if name == "overlap":
+            assert overlapped[-1] is True
+        if name == "replay":
+            assert applier._origin_state == {
+                "batch_id": 1, "before": "region_b", "after": None
+            }
+    monkeypatch.setattr(ap, "_WIDE_DECODE_ROWS", 1)
+    applier = _wire_applier(spark, str(tmp_path / "wide"), origin="none")
+    applier.merge_wire_batch(whole, batch_id=0)
+    assert state(applier.current_state()) == want["none"]
+
+
+def test_malformed_origin_name_does_not_fail_the_batch(spark, tmp_path):
+    """An ``O`` frame whose name is not UTF-8 must not fail the micro-batch
+    (a streaming query would fail on it at every restart): the name
+    decodes with U+FFFD replacement on both the in-decode and the
+    Spark-side path, and the transaction still counts as remote."""
+    import datetime as dt
+    import struct
+
+    from python_cdc_spark.cdc.origins import annotate_origins
+    from python_cdc_spark.cdc.pgoutput import (
+        decode_frames,
+        encode_begin,
+        encode_insert,
+        encode_relation,
+    )
+
+    bad_o = b"O" + struct.pack(">q", 7) + b"\xff\xfeabc\x00"
+    frames = [
+        encode_relation(9, "public", "users", ["id", "v"]),
+        encode_begin(), bad_o, encode_insert(9, ["1", "remote"]),
+        encode_begin(), encode_insert(9, ["2", "local"]),
+    ]
+    t0 = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(i + 1, t0, bytearray(f)) for i, f in enumerate(frames)],
+        "lsn bigint, ts timestamp, frame binary",
+    ).coalesce(1)
+    name = "\ufffd\ufffdabc"
+    applier = _wire_applier(spark, str(tmp_path / "state"), origin="none")
+    applier.merge_wire_batch(df, batch_id=0)
+    assert [r["key"] for r in applier.current_state().collect()] == ["2"]
+    ann = annotate_origins(spark, decode_frames(spark, df), df)
+    assert sorted(
+        (r["new_values"]["id"], r["origin"]) for r in ann.collect()
+    ) == [("1", name), ("2", None)]
+    kept = decode_frames(spark, df, origin_seeds={0: None}, origin=[name])
+    assert kept.count() == 2
 
 
 def test_fold_plan_auto_detects_bucket_skew(spark, tmp_path, monkeypatch):
