@@ -382,21 +382,29 @@ def state_as_events(state: DataFrame, key_col: str = "key") -> DataFrame:
     sentinel / delete-boundary semantics compose across batches: a live
     row becomes INSERT@last_lsn, a tombstone DELETE@del_lsn (BOTH rows
     for keys that were deleted then re-inserted). Table-identity columns
-    (multi-table state) ride along. The replay-path building block of
-    the streaming merge (``streaming/apply_stream.py``)."""
+    (multi-table state) ride along. One pass over ``state`` (each row
+    expands to its one or two events), so a scan under it runs once.
+    The replay-path building block of the streaming merge and of the
+    merge-on-read state's read fold (``streaming/apply_stream.py``)."""
     aux = [F.col(c) for c in ("schema", "table") if c in state.columns]
-    inserts = state.filter(F.col("values").isNotNull()).select(
-        F.col("last_lsn").alias("lsn"),
-        F.lit("INSERT").alias("operation"),
-        F.col("values").alias("new_values"),
+    insert = F.when(
+        F.col("values").isNotNull(),
+        F.struct(
+            F.col("last_lsn").alias("lsn"),
+            F.lit("INSERT").alias("operation"),
+            F.col("values").alias("new_values"),
+        ),
+    )
+    delete = F.when(
+        F.col("del_lsn").isNotNull(),
+        F.struct(
+            F.col("del_lsn").alias("lsn"),
+            F.lit(OP_DELETE).alias("operation"),
+            F.lit(None).cast("map<string,string>").alias("new_values"),
+        ),
+    )
+    return state.select(
+        F.explode(F.filter(F.array(insert, delete), lambda e: e.isNotNull())).alias("__e"),
         *aux,
         F.col(key_col),
-    )
-    deletes = state.filter(F.col("del_lsn").isNotNull()).select(
-        F.col("del_lsn").alias("lsn"),
-        F.lit(OP_DELETE).alias("operation"),
-        F.lit(None).cast("map<string,string>").alias("new_values"),
-        *aux,
-        F.col(key_col),
-    )
-    return inserts.unionByName(deletes)
+    ).select("__e.lsn", "__e.operation", "__e.new_values", *aux, F.col(key_col))

@@ -2,34 +2,43 @@
 
 Replaces the reference's print-only workers (``cdc_consumer.py:43-74``)
 with a real incremental state sink. Per micro-batch, ``foreachBatch``
-merges the batch's events into a persistent keyed state table:
+merges the batch's events into a persistent keyed state table; the
+state is the fold of every layer committed so far:
 
-    state ⊎ batch = apply_changes(state-as-events ∪ batch-events)
+    state = apply_changes(base-as-events ∪ run_1-as-events ∪ … ∪ run_k-as-events)
+    run_{k+1} = apply_changes(batch-events)
 
 Exactly-once story (the reference acks BEFORE processing → at-most-once,
 ``postgre_cdc_consumer.py:98-99``; we upgrade): the streaming checkpoint
 replays an uncommitted batch after a crash, and the merge is idempotent
 — replaying the same events cannot change the folded state (per-key
-max-lsn semantics), so replay converges. Each state write commits
+max-lsn semantics), so replay converges: a batch replayed after its
+run was committed adds a duplicate run, which folds to the same rows. Each state write commits
 atomically through :class:`~python_cdc_spark.streaming.state_store.
 BucketedStateStore` (immutable version dirs + manifest swap) — a crash
 mid-write leaves the previous state intact; a transactional table
 format (Delta/Iceberg MERGE) remains the managed-production upgrade.
 
 Scale design: state is hash-bucketed on key into ``n_buckets``
-partitions; a micro-batch rewrites ONLY the buckets its keys touch
-(the store reads just the touched buckets' rows and commits them as a
-new version of one file per write task), so per-batch cost is
-O(batch + touched_state), not O(total_state). The fold groups on
-``(bucket, key)`` and, on the array plan, starts from the store's own
-bucket clustering, so fold and commit share one shuffle.
+partitions and kept merge-on-read (``state_store`` module docstring):
+a micro-batch folds ONLY its own events and commits the result as one
+delta run per bucket it touches, so a commit is O(batch), not
+O(touched_state). Reads fold a bucket's base and runs through the same
+fold. Compaction is amortised: once a bucket's runs hold more rows than
+its base (or it has more than ten runs), the next commit also folds
+that bucket's layers with its batch into a new base, so a base is
+rewritten only after about as many rows arrived in runs as it holds.
+The fold groups on ``(bucket, key)`` and, on the array plan, starts
+from the store's own bucket clustering, so fold and commit share one
+shuffle.
 """
 
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -60,6 +69,10 @@ _AUX_COLS = ("schema", "table")
 #: (2 tasks).
 _WIDE_DECODE_ROWS = 200_000
 
+#: on-disk format of the registry and origin carry pins
+#: (``{"format", "batch_id", "before", "after"}``)
+_PIN_FORMAT = 1
+
 #: Per-batch fold plan choice. The streaming merge is the case the
 #: single-shuffle array plan was built for: prior state contributes
 #: exactly ONE event per key and a batch a bounded burst, so per-key
@@ -71,6 +84,21 @@ _WIDE_DECODE_ROWS = 200_000
 #: ``_AUTO_SKEW_MIN_ROWS`` rows folds with the skew-safe argmax plan.
 _AUTO_SKEW_RATIO = 4.0
 _AUTO_SKEW_MIN_ROWS = 100_000
+
+
+class BatchShape(NamedTuple):
+    """What one scan of a batch already told its caller: its row count,
+    whether it may hold a TRUNCATE, and its LSN range (``None`` bounds
+    for an empty batch)."""
+
+    rows: int
+    truncates: bool
+    lo: int | None
+    hi: int | None
+
+
+def _max(*values):
+    return max((v for v in values if v is not None), default=None)
 
 
 class StreamingApplyChanges:
@@ -98,7 +126,11 @@ class StreamingApplyChanges:
         # versions of history read_at() can time-travel to (storage
         # cost: superseded bucket files for that many commits)
         self.retention = retention
-        self.store = BucketedStateStore(spark, state_path)
+        self.store = BucketedStateStore(spark, state_path, fold=self._fold_layers)
+        #: what the most recent merge did (observability, served by
+        #: ``latency_report``): fold plan, commit kind, the deepest
+        #: bucket's run count and the events the fold took in
+        self.last_batch: dict | None = None
         #: rolling capture→applied latency samples (see
         #: ``record_latency`` / ``latency_report``) — populated by the
         #: wire path where frames carry capture timestamps
@@ -151,9 +183,21 @@ class StreamingApplyChanges:
         slope at a rate whose p50 was LOWER than the slower phase's).
         ``perfbench/run.py --workload wire`` measures this lag
         (``latency_p50_s``, ``latency.p95_s``) under an open loop at a
-        fixed offered rate."""
+        fixed offered rate.
+
+        ``last_fold_plan`` and ``last_batch`` describe the most recent
+        merge: its fold plan, commit kind (``base``, ``run`` or
+        ``compaction``), the deepest bucket's run count after it, the
+        events its fold took in and, on the wire path, the data frames
+        (I/U/D/T) they were decoded from — read from the batch's own
+        pre-decode aggregate and the commit's Observations, no extra
+        job."""
+        last = {} if self.last_batch is None else {
+            "last_fold_plan": self.last_batch["fold_plan"],
+            "last_batch": self.last_batch,
+        }
         if not self._latency:
-            return {"batches_measured": 0}
+            return {"batches_measured": 0, **last}
         lags = sorted(s["capture_to_apply_sec"] for s in self._latency)
         seq = [s["capture_to_apply_sec"] for s in self._latency]
         span = self._latency[-1]["applied_at"] - self._latency[0]["applied_at"]
@@ -168,6 +212,7 @@ class StreamingApplyChanges:
             "applied_eps_window": round(events / span, 1) if span > 0 else None,
             "lag_trend_sec_per_batch": round(trend, 4),
             "saturated": len(seq) >= 8 and trend > 0.2,
+            **last,
         }
 
     # -- state table ------------------------------------------------------
@@ -218,8 +263,8 @@ class StreamingApplyChanges:
         ``snapshot`` carries ``key_col`` plus the row columns; all
         columns (key included, matching the decode path's new_values)
         are string-cast into the values map. Call once on an empty
-        state; committing over all buckets makes the bootstrap itself
-        crash-atomic (same manifest swap as every other commit).
+        state; the bootstrap is one commit, so it is crash-atomic (same
+        manifest swap as every other commit).
 
         For a stream whose events carry ``schema``/``table`` (decoded
         wire frames), pass both here so the seeded state is in the same
@@ -228,11 +273,13 @@ class StreamingApplyChanges:
         seeded)."""
         if (schema is None) != (table is None):
             raise ValueError("pass schema and table together (or neither)")
-        existing = self.store.read()
-        if existing is not None:
-            if schema is None or "table" not in existing.columns:
+        live = self.store.live_buckets()
+        if live:
+            if schema is None or "table" not in self.store.schema().fieldNames():
                 raise ValueError("bootstrap requires an empty state store")
-            already = existing.filter(
+            # any layer row of the table means it was seeded; the raw
+            # layers answer that without the read fold's shuffle
+            already = self.store.read_layers(live).filter(
                 (F.col("schema") == schema) & (F.col("table") == table)
             ).head(1)
             if already:
@@ -258,18 +305,47 @@ class StreamingApplyChanges:
             )
             .withColumn("bucket", self._bucket(F.col(self.key_col)))
         )
-        if existing is not None:
-            # repeat multi-table seed: commit() replaces every touched
-            # bucket wholesale, so prior tables' rows must ride along
-            state = existing.select(state.columns).unionByName(state)
-        self.store.commit(state, list(range(self.n_buckets)))
+        # a run commit: the first seed lands as every bucket's base, a
+        # repeat multi-table seed as one run over the tables seeded so
+        # far (its keys are new, so the read fold just unions them)
+        high = self.store.meta().get("after")
+        self.store.commit(
+            state, list(range(self.n_buckets)), compact=[],
+            meta={"batch_id": None, "before": high, "after": _max(high, snapshot_lsn)},
+        )
 
     # -- merge ------------------------------------------------------------
 
-    def merge_batch(self, batch: DataFrame, batch_id: int | None = None) -> list[int]:
+    def merge_batch(
+        self,
+        batch: DataFrame,
+        batch_id: int | None = None,
+        *,
+        shape: BatchShape | None = None,
+    ) -> list[int]:
         """Merge one (micro-)batch of events into the state table.
-        Returns the bucket ids the batch touched (for derived-state
+        Returns the bucket ids whose state changed (for derived-state
         maintainers layered on top, e.g. StreamingIncrementalAgg).
+
+        The batch is folded ON ITS OWN and committed as one delta run
+        per bucket it touches (``state_store`` module docstring): no
+        prior state is read or rewritten, so a commit costs O(batch).
+        The buckets whose runs crossed the store's read-amplification
+        bound are compacted by the same commit: their base and runs,
+        re-encoded as events, ride through the batch's one fold and are
+        written back as a new base.
+
+        A run is exact because its events all come after every event
+        the state already holds: then folding the batch alone and
+        folding its result after the older layers equals folding the
+        events in LSN order. The store records the highest LSN
+        committed; a batch reaching at or below it (late WAL, the
+        overlap of a snapshot and the stream) compacts every live
+        bucket instead, which folds it with the whole prior state as
+        before. A replay of the last committed batch id is checked
+        against the mark from before its first attempt, so the replay
+        of a run commits the same run again, and the duplicate folds
+        to the same rows.
 
         ``schema``/``table`` columns, when the feed carries both, are
         kept through the merge and persisted in the state ("multi-table
@@ -279,74 +355,73 @@ class StreamingApplyChanges:
         single-table state (or vice versa) raises, because the two key
         spaces cannot be reconciled after the fact.
 
-        A batch containing a TRUNCATE widens the merge to EVERY live
-        bucket: the truncate event is keyless (it hashes to one
-        arbitrary bucket), but it must tombstone matching keys in all
-        buckets — restricting the merge to the batch's own buckets
-        would silently leave truncated rows alive elsewhere. Cost is
-        O(total state) for that batch, which is also the semantic
-        floor: a truncate genuinely touches every key of its table.
-        (A per-table bucket index would prune this to the table's own
-        buckets; at one-table-per-stream granularity it is the same
-        set.)"""
+        A batch containing a TRUNCATE compacts EVERY live bucket: the
+        truncate event is keyless (it hashes to one arbitrary bucket),
+        but it must tombstone matching keys in all buckets — a run
+        restricted to the batch's own keys would silently leave
+        truncated rows alive elsewhere. Cost is O(total state) for that
+        batch, which is also the semantic floor: a truncate genuinely
+        touches every key of its table.
+
+        A caller that has already scanned the batch (the wire path's
+        pre-decode aggregate) passes what it learned as ``shape``; a
+        TRUNCATE false positive or a too-wide LSN range only costs a
+        compaction. Without it, or for a batch of at least
+        ``_AUTO_SKEW_MIN_ROWS`` rows (the only size the skew check can
+        fire at), one probe job answers the same questions plus the
+        bucket histogram the skew check reads."""
         aux = [c for c in _AUX_COLS if c in batch.columns]
         if len(aux) != len(_AUX_COLS):
             aux = []  # need BOTH columns for per-table semantics
-        # The keyed batch is read by two actions: the probe below and the
-        # fold+commit write. Materialise it once (lazily: the probe's job
-        # fills it) so the write reads those blocks instead of re-running
-        # the batch's upstream lineage — for a wire batch, the Python
-        # frame decode (origin filter included) and key extraction.
-        batch = (
-            batch.select(
-                "lsn", "operation", "new_values", *aux, F.col(self.key_col)
-            )
-            .withColumn("bucket", self._bucket(F.col(self.key_col)))
-            .localCheckpoint(eager=False)
-        )
-
-        # one probe job answers both questions (bucket set + truncate
-        # presence)
-        probe = (
-            batch.groupBy("bucket")
-            .agg(
-                F.max(
-                    F.when(F.col("operation") == "TRUNCATE", 1).otherwise(0)
-                ).alias("__t"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .collect()
-        )
-        has_truncate = any(r["__t"] for r in probe)
-        batch_buckets = [r["bucket"] for r in probe]
-        if not batch_buckets:
+        batch = batch.select(
+            "lsn", "operation", "new_values", *aux, F.col(self.key_col)
+        ).withColumn("bucket", self._bucket(F.col(self.key_col)))
+        if shape is not None and shape.rows == 0:
             return []
-        counts = [r["__n"] for r in probe]
-        mx = max(counts)
-        # compare the hottest bucket against the MEAN OF THE OTHERS
-        # (max-vs-overall-mean is bounded by the occupied-bucket count,
-        # so it can never fire when a burst lands in one of two buckets)
-        others = (sum(counts) - mx) / max(1, len(counts) - 1)
-        skewed = (
-            mx > _AUTO_SKEW_RATIO * max(others, 1.0)
-            and mx > _AUTO_SKEW_MIN_ROWS
-        )
+        skewed = False
+        if shape is None or shape.rows >= _AUTO_SKEW_MIN_ROWS:
+            # The keyed batch is read by two actions: the probe and the
+            # fold+commit write. Materialise it once (lazily: the
+            # probe's job fills it) so the write reads those blocks
+            # instead of re-running the batch's upstream lineage.
+            batch = batch.localCheckpoint(eager=False)
+            probe = (
+                batch.groupBy("bucket")
+                .agg(
+                    F.max(
+                        F.when(F.col("operation") == "TRUNCATE", 1).otherwise(0)
+                    ).alias("__t"),
+                    F.count(F.lit(1)).alias("__n"),
+                    F.min("lsn").alias("__lo"),
+                    F.max("lsn").alias("__hi"),
+                )
+                .collect()
+            )
+            if not probe:
+                return []
+            counts = [r["__n"] for r in probe]
+            shape = BatchShape(
+                sum(counts),
+                any(r["__t"] for r in probe),
+                min(r["__lo"] for r in probe),
+                max(r["__hi"] for r in probe),
+            )
+            mx = max(counts)
+            # compare the hottest bucket against the MEAN OF THE OTHERS
+            # (max-vs-overall-mean is bounded by the occupied-bucket
+            # count, so it can never fire when a burst lands in one of
+            # two buckets)
+            others = (sum(counts) - mx) / max(1, len(counts) - 1)
+            skewed = (
+                mx > _AUTO_SKEW_RATIO * max(others, 1.0)
+                and mx > _AUTO_SKEW_MIN_ROWS
+            )
         plan = "argmax" if skewed else "array_fold"
         self.last_fold_plan = plan
-        live_buckets = [int(b) for b in self.store._load_manifest()["buckets"]]
-        if has_truncate:
-            touched = sorted(set(live_buckets) | set(batch_buckets))
-            prior = self.store.read()
-        else:
-            touched = batch_buckets
-            prior = self.store.read(touched)
 
-        mode_probe = prior
-        if mode_probe is None and live_buckets:
-            # live state outside the touched buckets still fixes the mode
-            mode_probe = self.store.read(live_buckets[:1])
-        if mode_probe is not None:
-            state_aux = [c for c in _AUX_COLS if c in mode_probe.columns]
+        schema = self.store.schema()
+        if schema is not None:
+            state_aux = [c for c in _AUX_COLS if c in schema.fieldNames()]
             if bool(aux) != bool(state_aux):
                 raise ValueError(
                     "feed/state table-identity mismatch: the batch "
@@ -357,21 +432,27 @@ class StreamingApplyChanges:
                     "multi-table stream)"
                 )
 
-        fold = (
-            apply_changes_with_tombstones_multi
-            if aux
-            else apply_changes_with_tombstones
+        # the LSN high-water mark the batch started from, pinned per
+        # batch id like the wire carries: a replay is checked against
+        # the mark from before its first attempt
+        mark = self.store.meta() or {"batch_id": None, "before": None, "after": None}
+        high = _pinned(mark, batch_id, mark["after"])
+        in_order = shape.lo is None or high is None or shape.lo > high
+        compact = (
+            self.store.overdue()
+            if in_order and not shape.truncates
+            else self.store.live_buckets()
         )
-        # Prior state re-encoded as events rides through the same fold as
-        # the batch. Tombstoned fold: every previously-present key yields
-        # a row, so a touched bucket can never silently vanish from the
-        # commit.
-        events = batch
+        folded = Observation()
+        events = batch.observe(folded, F.count(F.lit(1)).alias("n"))
+        prior = self.store.read_layers(compact)
         if prior is not None:
-            events = events.unionByName(
-                state_as_events(prior.drop("bucket"), self.key_col)
-                .withColumn("bucket", self._bucket(F.col(self.key_col)))
-            )
+            # the compacted buckets' layers ride through the same fold
+            # as the batch; tombstoned fold: every previously-present
+            # key yields a row, so a compacted bucket can never silently
+            # vanish from the commit
+            events = events.unionByName(self._layer_events(prior))
+        everywhere = list(range(self.n_buckets))
         if plan == "array_fold":
             # Cluster the fold input exactly as the commit will: the
             # fold's groupBy(bucket, key) then needs no exchange, and
@@ -380,18 +461,53 @@ class StreamingApplyChanges:
             # The argmax plan is left alone — its per-column shuffles are
             # its hot-key protection — and the commit clusters its output
             # instead.
-            events = self.store.cluster(events, touched)
-        new_state = fold(
+            events = self.store.cluster(events, everywhere)
+        new_state = self._fold(aux)(
             events, self.key_col,
-            plan=plan, has_truncates=has_truncate, bucket_col="bucket",
+            plan=plan, has_truncates=shape.truncates, bucket_col="bucket",
         )
         # The store writes a NEW immutable version dir while the fold's
-        # lineage reads the old one (no self-overwrite hazard), then the
-        # manifest swap commits atomically; vacuum reclaims superseded
-        # and orphaned versions.
-        self.store.commit(new_state, touched)
+        # lineage reads the old ones (no self-overwrite hazard), then
+        # the manifest swap commits atomically; vacuum reclaims
+        # superseded and orphaned versions.
+        self.store.commit(
+            new_state, everywhere, compact=compact,
+            meta={"batch_id": batch_id, "before": high, "after": _max(high, shape.hi)},
+        )
         self.store.vacuum(retain_last=self.retention)
-        return touched
+        self.last_batch = {
+            "fold_plan": plan,
+            "commit_kind": self.store.last_commit["kind"],
+            "max_bucket_runs": self.store.last_commit["max_runs"],
+            "events_folded": int(folded.get["n"]),
+        }
+        return self.store.last_commit["buckets"]
+
+    @staticmethod
+    def _fold(aux: list[str]):
+        return (
+            apply_changes_with_tombstones_multi
+            if aux
+            else apply_changes_with_tombstones
+        )
+
+    def _layer_events(self, layers: DataFrame) -> DataFrame:
+        """State rows of the store's layers re-encoded as events, bucket
+        column included."""
+        return state_as_events(layers.drop("bucket"), self.key_col).withColumn(
+            "bucket", self._bucket(F.col(self.key_col))
+        )
+
+    def _fold_layers(self, layers: DataFrame) -> DataFrame:
+        """The store's read fold: the rows of a bucket's base and runs
+        re-encoded as events and folded by LSN into one row per key —
+        the merge's own fold, so a layered read and a compaction agree
+        by construction. Layers hold state rows only (no TRUNCATE)."""
+        aux = [c for c in _AUX_COLS if c in layers.columns]
+        return self._fold(aux)(
+            self._layer_events(layers), self.key_col,
+            plan="array_fold", has_truncates=False, bucket_col="bucket",
+        )
 
     # -- streaming driver -------------------------------------------------
 
@@ -423,8 +539,11 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
     ``R`` message (``pg_output_parser.py:88-93``).
 
     The merged registry is persisted (atomic tmp+rename) next to the
-    state table so a restart resumes with the schemas learned so far;
-    replaying R-frames after a crash is idempotent (later LSN wins).
+    state table so a restart resumes with the schemas learned so far.
+    Like the origin carry, it is pinned per batch id with the registry
+    the batch started from, so a batch replayed after a crash decodes
+    its pre-DDL frames with the schema in force before its own ``R``
+    frames, not the one it published on its first attempt.
     """
 
     def __init__(
@@ -455,25 +574,16 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         # before/after are pinned per batch_id so a crash-replayed batch
         # re-seeds with the carry it saw the FIRST time, not its own
         # post-batch marker (the rollup stream's state-version-pin
-        # pattern applied to the origin carry).
-        self._origin_state: dict = {
-            "batch_id": None, "before": None, "after": None
+        # pattern applied to the origin carry and the registry).
+        self._origin_state = _read_pin(self._origin_path)
+        reg = _read_pin(self._registry_path)
+        self._registry_state = {
+            "batch_id": reg["batch_id"],
+            "before": _relids(reg["before"]),
+            "after": _relids(reg["after"]),
         }
-        self._load_registry()
-
-    def _load_registry(self) -> None:
-        persisted = fsops.read_json(self._registry_path, {})
         # learned schemas win over the constructor's initial seed
-        self.registry.update({int(k): v for k, v in persisted.items()})
-        self._origin_state = fsops.read_json(self._origin_path, self._origin_state)
-
-    @staticmethod
-    def _save_json(path: str, obj) -> None:
-        """Atomic tmp+rename save beside the state; the state path's
-        parent may not exist yet (the first batch runs before the store's
-        first commit creates it)."""
-        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-        fsops.publish_json(path, obj)
+        self.registry.update(self._registry_state["after"] or {})
 
     def merge_wire_batch(self, frames: DataFrame, batch_id: int | None = None) -> None:
         """One micro-batch of raw frames: registry refresh → decode (with
@@ -483,9 +593,12 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         a DML at the same LSN) and materialized ONCE, so the pre-decode
         aggregate, the decode and the merge all read memory, not three
         file scans. That aggregate runs per partition: it answers the lag
-        stamp, the row count, the batch's R frames, each partition's LSN
-        range and its last B/O marker in one job, with at most one row
-        per partition.
+        stamp, the row count, the data and TRUNCATE frame counts, the
+        batch's R frames, each partition's LSN range and its last B/O
+        marker in one job, with at most one row per partition, and its
+        job fills the (lazily taken) checkpoint. It also tells the merge
+        all its bucket probe would (``BatchShape``), so a batch below
+        ``_AUTO_SKEW_MIN_ROWS`` rows commits its run with no probe job.
 
         With origin filtering on, the driver orders the partitions by
         their first LSN and prefix-scans their last markers from the
@@ -505,7 +618,8 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         )
 
         filtering = self.origin != "any"
-        frames = _lsn_sorted(frames).localCheckpoint(eager=True)
+        # lazy: the summary's own job fills the checkpoint
+        frames = _lsn_sorted(frames).localCheckpoint(eager=False)
         parts = _partition_summary(frames)
         n_rows = sum(r["n"] for r in parts)
         if n_rows >= _WIDE_DECODE_ROWS or (filtering and _overlapping(parts)):
@@ -522,35 +636,47 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         # rename between two inserts of the same micro-batch) decodes
         # each side with the schema in force at its LSN instead of
         # letting the batch's last R frame rewrite history.
+        carried = _pinned(self._registry_state, batch_id, self.registry)
         versions: dict[int, list] = {
-            relid: [(_LSN_MIN, rel)] for relid, rel in self.registry.items()
+            relid: [(_LSN_MIN, rel)] for relid, rel in carried.items()
         }
         rel_rows = [rel for r in parts for rel in r["rels"] or []]
+        self.registry = dict(carried)
         if rel_rows:
             for row in sorted(rel_rows, key=lambda r: r["lsn"]):
                 relid, rel = _parse_relation_frame(bytes(row["frame"]))
                 versions.setdefault(relid, []).append((int(row["lsn"]), rel))
                 self.registry[relid] = rel  # latest-wins carry for the NEXT batch
-            self._save_json(self._registry_path, self.registry)
+            self._registry_state = {
+                "batch_id": batch_id, "before": carried, "after": self.registry
+            }
+            _save_pin(self._registry_path, self._registry_state)
 
         seeds = None
         if filtering:
-            st = self._origin_state
-            seed = (
-                st["before"]
-                if batch_id is not None and st["batch_id"] == batch_id
-                else st["after"]
+            seed = _pinned(
+                self._origin_state, batch_id, self._origin_state["after"]
             )
             seeds, after = _origin_seeds(parts, seed)
             self._origin_state = {
                 "batch_id": batch_id, "before": seed, "after": after
             }
-            self._save_json(self._origin_path, self._origin_state)
+            _save_pin(self._origin_path, self._origin_state)
         events = decode_frames(
             self.spark, frames, registry=versions,
             origin_seeds=seeds, origin=self.origin,
         )
-        self.merge_batch(self.key_extractor(events), batch_id)
+        self.merge_batch(
+            self.key_extractor(events), batch_id,
+            shape=BatchShape(
+                n_rows,
+                any(r["t"] for r in parts),
+                min((r["lo"] for r in parts), default=None),
+                max((r["hi"] for r in parts), default=None),
+            ),
+        )
+        if self.last_batch is not None:
+            self.last_batch["data_frames_in"] = sum(r["dml"] for r in parts)
         # state is durable now — the capture→applied gap is the e2e lag
         self.record_latency(
             batch_id,
@@ -570,6 +696,37 @@ class StreamingWireApplyChanges(StreamingApplyChanges):
         )
 
 
+def _read_pin(path: str) -> dict:
+    """A persisted ``{batch_id, before, after}`` carry pin, refusing an
+    unstamped file (fsops.check_format)."""
+    pin = fsops.read_json(path)
+    if pin is None:
+        return {"batch_id": None, "before": None, "after": None}
+    fsops.check_format(pin, _PIN_FORMAT, path)
+    return {k: pin[k] for k in ("batch_id", "before", "after")}
+
+
+def _save_pin(path: str, pin: dict) -> None:
+    """Atomic tmp+rename save of a carry pin beside the state; the state
+    path's parent may not exist yet (the first batch runs before the
+    store's first commit creates it)."""
+    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+    fsops.publish_json(path, {"format": _PIN_FORMAT, **pin})
+
+
+def _relids(registry: dict | None) -> dict | None:
+    """A registry read back from JSON, relation ids as ints again."""
+    return None if registry is None else {int(k): v for k, v in registry.items()}
+
+
+def _pinned(pin: dict, batch_id: int | None, latest):
+    """The carry a batch starts from: the one it saw on its first
+    attempt when it is the pinned batch replaying, else ``latest``."""
+    if batch_id is not None and pin["batch_id"] == batch_id:
+        return pin["before"]
+    return latest
+
+
 def _lsn_sorted(frames: DataFrame) -> DataFrame:
     """Frames in LSN order within each partition, a transaction marker
     before a DML at the same LSN (the as-of tie rule of
@@ -584,20 +741,25 @@ def _lsn_sorted(frames: DataFrame) -> DataFrame:
 def _partition_summary(frames: DataFrame) -> list:
     """The wire batch's one pre-decode scan, one row per non-empty
     partition: its partition id, newest capture timestamp, row count,
-    LSN range, R frames (O(DDL events)) and last B/O marker — at most
-    parallelism rows, a driver-scale collect."""
+    data (I/U/D/T) and TRUNCATE frame counts, LSN range, R frames
+    (O(DDL events)) and last B/O marker — at most parallelism rows, a
+    driver-scale collect."""
     from python_cdc_spark.cdc.origins import last_marker_col
+    from python_cdc_spark.cdc.pgoutput import EVENT_TAGS
 
+    tag = F.substring("frame", 1, 1)
     return (
         frames.groupBy(F.spark_partition_id().alias("pid"))
         .agg(
             F.max("ts").alias("mx"),
             F.count(F.lit(1)).alias("n"),
+            F.count_if(tag.isin(*EVENT_TAGS)).alias("dml"),
+            F.count_if(tag == "T").alias("t"),
             F.min("lsn").alias("lo"),
             F.max("lsn").alias("hi"),
             F.collect_list(
                 F.when(
-                    F.substring("frame", 1, 1) == "R",
+                    tag == "R",
                     F.struct("lsn", "frame"),
                 )
             ).alias("rels"),

@@ -13,18 +13,18 @@ the bucketed-state access pattern needs:
 - Data files are IMMUTABLE. Version ``N`` of the state writes only the
   touched buckets' rows, as plain ``<path>/v<N>/part-*.parquet`` files;
   nothing is ever overwritten in place.
-- A single JSON manifest maps bucket → the version that holds its
-  current data. Commit = write the new version's files, then swap the
-  manifest via write-temp + atomic rename. A crash anywhere before the
-  rename leaves the old manifest — and therefore a fully consistent
-  old state — in place; the orphaned ``v<N>`` directory is garbage,
-  reclaimed by :meth:`vacuum`.
-- Reads group the live buckets by the version that holds them and scan
-  each of those version dirs once, filtered to ``bucket IN (the
-  buckets the manifest maps to that version)``; the scans are unioned.
-  The filter is what makes the layout correct, not only fast: a
-  version dir still holds the rows of buckets that a later version has
-  rewritten, and those stale rows must never be served.
+- A single JSON manifest maps bucket → the versions that hold its
+  current data (a base and its delta runs, below). Commit = write the
+  new version's files, then swap the manifest via write-temp + atomic
+  rename. A crash anywhere before the rename leaves the old manifest —
+  and therefore a fully consistent old state — in place; the orphaned
+  ``v<N>`` directory is garbage, reclaimed by :meth:`vacuum`.
+- Reads scan the version dirs the wanted buckets map to in one scan,
+  filtered to ``bucket IN (the wanted buckets)`` and to rows whose
+  version is at least their bucket's base. The filter is what makes the
+  layout correct, not only fast: a version dir still holds the rows of
+  buckets that a later version has rewritten, and those stale rows must
+  never be served.
 
 Single-writer by design: ``foreachBatch`` serializes micro-batches, so
 no manifest lock is needed. The atomic-rename primitive is
@@ -33,29 +33,66 @@ too, while S3 would need a DFS committer or a real table format — at
 which point Delta/Iceberg MERGE is the drop-in upgrade (interface
 unchanged: read / commit / vacuum).
 
-Scale: per-batch write cost stays O(touched buckets), manifest size is
+Scale: per-batch write cost stays O(touched buckets) for a base commit
+and O(the commit's own rows) for a run commit, manifest size is
 O(n_buckets) (a few KB at 64–4096 buckets), and vacuum is O(versions)
 directory removals — nothing here scans the full state.
 
-Layout (manifest ``"format": 2``): one file per write task, not one per
-bucket. ``commit`` hash-repartitions its input on ``bucket`` into
-``min(touched, parallelism)`` write tasks (:meth:`BucketedStateStore.
-cluster`), sorts each task's rows by bucket and writes one file per
-task, so each bucket's rows sit in exactly one file of its version and
-a 64-bucket commit on a 4-core executor creates 4 files instead of 64
-(at micro-batch sizes a file's create, checksum and committer rename
-cost more than its rows). A caller that ends its plan in ``cluster``
-(the streaming apply fold) gets the commit's repartition dropped by
-Spark, whose partitioning check finds the input already clustered; its
-work then runs inside the write tasks. Manifests of the earlier
-directory-per-bucket layout carry no ``format`` and are refused with a
-``ValueError`` — drop the state and its streaming checkpoint and
-rebuild.
+Write layout: one file per write task, not one per bucket. ``commit``
+hash-repartitions its input on ``bucket`` into ``min(touched,
+parallelism)`` write tasks (:meth:`BucketedStateStore.cluster`), sorts
+each task's rows by bucket and writes one file per task, so each
+bucket's rows sit in exactly one file of its version and a 64-bucket
+commit on a 4-core executor creates 4 files instead of 64 (at
+micro-batch sizes a file's create, checksum and committer rename cost
+more than its rows). A caller that ends its plan in ``cluster`` (the
+streaming apply fold) gets the commit's repartition dropped by Spark,
+whose partitioning check finds the input already clustered; its work
+then runs inside the write tasks.
+
+Merge-on-read (manifest ``"format": 3``): the manifest maps each
+bucket to ``{"base", "rows", "runs", "run_rows"}`` -- the version
+holding its base rows, their count, the versions of the delta runs
+committed over that base (oldest first) and their summed row count.
+
+- A *base commit* (``commit(state, touched)``) replaces every touched
+  bucket wholesale: the bucket's base becomes the new version and its
+  runs are dropped. Every store that has no ``fold`` commits only this
+  way and reads exactly as a flat versioned table.
+- A *run commit* (``commit(state, touched, compact=[...])``, a store
+  built with a ``fold``) writes the same kind of version dir, but each
+  written bucket outside ``compact`` gets it appended as one more run
+  (a bucket with no state yet takes it as its base); the buckets in
+  ``compact`` are replaced wholesale, as by a base commit. A run holds
+  one row per key the commit saw, so a commit costs O(its own rows),
+  not O(the state).
+- A read scans a run-free bucket's base as is, and passes the base and
+  runs of every other bucket through ``fold``, which collapses the
+  layers into one row per key (the streaming apply store folds them
+  through the same event fold its merge uses; ``streaming/
+  apply_stream.py``). Time travel reads a retained snapshot the same
+  way.
+- Compaction bound: a bucket is *overdue* (:meth:`overdue`) once its
+  runs hold more rows than its base, or once it has more than
+  ``_MAX_RUNS`` runs (after Structured Streaming's
+  ``minDeltasForSnapshot``, 10). A read of a bucket then folds at most
+  about twice its base (plus the rows of the commit that crossed the
+  bound), and at most ``_MAX_RUNS + 2`` layers. The writer compacts
+  overdue buckets in its next commit, so a base is rewritten only after
+  about as many rows arrived in runs as it holds: rewrite work stays
+  proportional to the rows committed. Row counts come from an
+  ``Observation`` on the commit's own write (no extra job).
+- ``vacuum`` counts every base and run version the manifest or a
+  retained snapshot references as live.
+
+Manifests of the earlier layouts are refused with a ``ValueError``
+(``fsops.check_format``): the directory-per-bucket layout (no
+``format``) and the flat bucket -> version map (``"format": 2``) --
+drop the state and its streaming checkpoint and rebuild.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 
@@ -67,15 +104,29 @@ from python_cdc_spark import fsops
 
 _MANIFEST = "_manifest.json"
 #: on-disk layout version every manifest records (module docstring)
-_FORMAT = 2
+_FORMAT = 3
+#: compaction bound (module docstring): a bucket with more runs than
+#: this, or whose runs hold more rows than its base, is overdue
+_MAX_RUNS = 10
 
 
 class BucketedStateStore:
-    """Versioned bucketed parquet state with atomic commits."""
+    """Versioned bucketed parquet state with atomic commits.
 
-    def __init__(self, spark: SparkSession, path: str) -> None:
+    ``fold`` collapses the rows of several layers of the same buckets
+    (a base and its delta runs, bucket column included) into one row
+    per key with the store's schema. A store built with one may take
+    run commits (``commit(..., compact=...)``); without one every
+    commit is a base commit."""
+
+    def __init__(self, spark: SparkSession, path: str, fold=None) -> None:
         self.spark = spark
         self.path = path.rstrip("/")
+        self.fold = fold
+        #: what the most recent commit did (observability): version,
+        #: kind ("base", "run" or "compaction"), buckets changed, rows
+        #: written and the deepest bucket's run count after it
+        self.last_commit: dict | None = None
 
     # -- manifest ---------------------------------------------------------
 
@@ -115,6 +166,28 @@ class BucketedStateStore:
     def version(self) -> int:
         return self._load_manifest()["version"]
 
+    def schema(self) -> StructType | None:
+        """The schema the last commit recorded, or ``None`` before the
+        first commit (a manifest read, no Spark job)."""
+        recorded = self._load_manifest().get("schema")
+        return None if recorded is None else StructType.fromJson(json.loads(recorded))
+
+    def meta(self) -> dict:
+        """The ``meta`` object the last commit recorded (``{}`` if none)."""
+        return self._load_manifest().get("meta") or {}
+
+    def live_buckets(self) -> list[int]:
+        return sorted(int(b) for b in self._load_manifest()["buckets"])
+
+    def overdue(self) -> list[int]:
+        """Buckets whose layered read crossed the compaction bound
+        (module docstring), for the writer to compact next."""
+        return sorted(
+            int(b)
+            for b, e in self._load_manifest()["buckets"].items()
+            if len(e["runs"]) > _MAX_RUNS or e["run_rows"] > e["rows"]
+        )
+
     # -- read -------------------------------------------------------------
 
     def read(self, buckets: list[int] | None = None) -> DataFrame | None:
@@ -122,7 +195,7 @@ class BucketedStateStore:
         ``None`` if the store holds no state. ``buckets`` restricts the
         read to those buckets: only the version dirs holding them are
         scanned, each filtered to its live buckets (:meth:`_scan`)."""
-        return self._scan(self._load_manifest(), buckets)
+        return self._read(self._load_manifest(), buckets)
 
     def read_at(self, version: int, buckets: list[int] | None = None) -> DataFrame | None:
         """Time travel: the state exactly as committed at ``version``.
@@ -139,32 +212,73 @@ class BucketedStateStore:
         if not os.path.isfile(snap):
             raise FileNotFoundError(f"no committed manifest for version {version}")
         manifest = fsops.check_format(fsops.read_json(snap), _FORMAT, snap)
-        return self._scan(manifest, buckets)
+        return self._read(manifest, buckets)
 
-    def _scan(self, manifest: dict, buckets: list[int] | None) -> DataFrame | None:
-        """Union of one scan per version dir holding live buckets, each
-        filtered to ``bucket IN`` the buckets ``manifest`` maps to that
-        version — the filter drops the stale rows an older version still
-        holds for buckets a later version rewrote. Every scan uses the
-        schema recorded at commit time (a schemaless read costs one
-        footer-inference job per micro-batch); files committed before a
-        column was added read as NULL for it, which is exactly the
-        schema-evolution semantics the apply store wants."""
-        wanted = None if buckets is None else {int(b) for b in buckets}
-        by_version: dict[int, list[int]] = {}
-        for b, v in manifest["buckets"].items():
-            if wanted is None or int(b) in wanted:
-                by_version.setdefault(v, []).append(int(b))
+    def read_layers(self, buckets: list[int]) -> DataFrame | None:
+        """Every layer row (base and runs, unfolded) of ``buckets``, or
+        ``None`` when none of them holds state: the input a compacting
+        writer folds together with its batch."""
+        manifest = self._load_manifest()
+        return self._scan(manifest, _layers(manifest, buckets, runs=True))
+
+    def _read(self, manifest: dict, buckets: list[int] | None) -> DataFrame | None:
+        """Run-free buckets scanned as they are, the others' layers
+        through ``fold``."""
+        wanted = (
+            [int(b) for b in manifest["buckets"]] if buckets is None else buckets
+        )
+        entries = manifest["buckets"]
+        layered = [b for b in wanted if entries.get(str(b), {}).get("runs")]
+        flat = self._scan(manifest, _layers(manifest, wanted, runs=False, skip=layered))
+        if not layered:
+            return flat
+        if self.fold is None:
+            raise ValueError(
+                f"{self.path} holds delta runs; open it with the fold of "
+                "the store that wrote them"
+            )
+        folded = self.fold(self._scan(manifest, _layers(manifest, layered, runs=True)))
+        return folded if flat is None else flat.unionByName(folded)
+
+    def _scan(self, manifest: dict, by_version: dict[int, list[int]]) -> DataFrame | None:
+        """One scan of the version dirs in ``by_version``, keeping the
+        rows of the buckets it maps to them. A version dir also holds
+        the rows of buckets a later version replaced wholesale; those
+        stale rows must never be served. Every version the manifest
+        references that holds a bucket's rows is that bucket's base, one
+        of its runs (newer than the base), or older than its base, so a
+        row is live exactly when its version is at least its bucket's
+        base — one lookup per row, however many versions are open (the
+        version comes from the row's file path; a one-version scan needs
+        no test).
+
+        One scan node, not one per version: Spark packs the versions'
+        small files into parallelism-sized tasks, where per-version
+        scans would cost at least one task per file (a layered read
+        opens many versions). The filter is one SQL expression (a
+        per-bucket literal list costs one JVM call per bucket); its
+        ``bucket IN`` reaches the parquet scan as a pushed ``In``
+        filter. Every scan uses the schema recorded at commit time (a
+        schemaless read costs one footer-inference job per micro-batch);
+        files committed before a column was added read as NULL for it,
+        which is exactly the schema-evolution semantics the apply store
+        wants."""
         if not by_version:
             return None
         schema = StructType.fromJson(json.loads(manifest["schema"]))
-        scans = [
+        wanted = sorted({b for bs in by_version.values() for b in bs})
+        cond = f"bucket IN ({', '.join(map(str, wanted))})"
+        if len(by_version) > 1:
+            bases = ", ".join(
+                f"{b}, {manifest['buckets'][str(b)]['base']}" for b in wanted
+            )
+            version = r"regexp_extract(_metadata.file_path, '/v([0-9]+)/[^/]*$', 1)"
+            cond += f" AND CAST({version} AS INT) >= map({bases})[bucket]"
+        return (
             self.spark.read.schema(schema)
-            .parquet(self._vdir(v))
-            .filter(F.col("bucket").isin(sorted(bs)))
-            for v, bs in sorted(by_version.items())
-        ]
-        return functools.reduce(DataFrame.union, scans)
+            .parquet(*[self._vdir(v) for v in sorted(by_version)])
+            .filter(F.expr(cond))
+        )
 
     # -- write ------------------------------------------------------------
 
@@ -178,21 +292,35 @@ class BucketedStateStore:
         par = int(self.spark.sparkContext.defaultParallelism)
         return df.repartition(max(1, min(len(touched), par)), "bucket")
 
-    def commit(self, state: DataFrame, touched: list[int]) -> int:
-        """Atomically replace the state of ``touched`` buckets.
+    def commit(
+        self,
+        state: DataFrame,
+        touched: list[int],
+        compact: list[int] | None = None,
+        meta: dict | None = None,
+    ) -> int:
+        """Atomically commit ``state`` as a new version; returns it.
 
         ``state`` must carry an integral ``bucket`` column and contain
-        only rows for ``touched`` buckets. Returns the committed version.
-        A touched bucket with no surviving rows is dropped from the
-        manifest (its state is now empty).
+        only rows for ``touched`` buckets. Without ``compact`` this is a
+        base commit: every touched bucket is replaced wholesale, and a
+        touched bucket with no surviving rows is dropped from the
+        manifest (its state is now empty). With ``compact`` (a store
+        built with a ``fold``) only the ``compact`` buckets are replaced
+        so; each other bucket ``state`` holds rows for gets them as one
+        more delta run, or as its base when it held no state (module
+        docstring). ``meta``, a small JSON object, is recorded in the
+        manifest with the commit (atomically; :meth:`meta` reads it
+        back); without it the previous commit's is carried.
 
         The commit owns the bucket clustering, so callers pass ``state``
         in whatever partitioning their plan left: it goes through
         :meth:`cluster`, is sorted by bucket within each task and
         written as one ``v<N>/part-*.parquet`` file per task. A bucket
-        never spans two tasks, so each touched bucket's rows sit in
-        exactly one file. The buckets actually written come from an
-        ``Observation`` on the write itself (no extra job).
+        never spans two tasks, so each bucket's rows sit in exactly one
+        file. The buckets written and their row counts come from an
+        ``Observation`` on the write itself (no extra job): an
+        ``histogram_numeric`` with a bin per touched bucket is exact.
 
         r13: the commit follows the maintained structures'
         stage-and-claim + CAS protocol (fsops): the version's files are
@@ -204,25 +332,43 @@ class BucketedStateStore:
         within one stream, so in the common case the CAS always wins;
         a second WRITER PROCESS on the same store now loses cleanly
         (fsops.ConcurrentWriterError) instead of corrupting state."""
+        if compact is not None and self.fold is None:
+            raise ValueError("a run commit needs a store built with a fold")
         manifest, tok = self._load_manifest_with_token()
         os.makedirs(self.path, exist_ok=True)
         staging = fsops.staging(self.path)
         obs = Observation()
+        bins = F.lit(max(2, len(touched)))
         (
             self.cluster(state, touched)
             .sortWithinPartitions("bucket")
-            .observe(obs, F.collect_set("bucket").alias("written"))
+            .observe(obs, F.histogram_numeric("bucket", bins).alias("rows"))
             .write.mode("errorifexists")
             .parquet(staging)
         )
-        written = {int(b) for b in obs.get["written"]}
+        rows = {int(r["x"]): int(r["y"]) for r in obs.get["rows"] or []}
         new_version = fsops.claim(staging, self._vdir, manifest["version"] + 1)
+        replace = set(touched if compact is None else compact)
         buckets = dict(manifest["buckets"])
-        for b in touched:
-            if b in written:
-                buckets[str(b)] = new_version
+        appended = {
+            b for b in rows
+            if compact is not None and b not in replace and str(b) in buckets
+        }
+        for b in appended:
+            prior = buckets[str(b)]
+            buckets[str(b)] = {
+                **prior,
+                "runs": [*prior["runs"], new_version],
+                "run_rows": prior["run_rows"] + rows[b],
+            }
+        for b in (replace | set(rows)) - appended:
+            if b in rows:
+                buckets[str(b)] = {
+                    "base": new_version, "rows": rows[b], "runs": [], "run_rows": 0
+                }
             else:
                 buckets.pop(str(b), None)  # bucket emptied by this batch
+        compacted = [b for b in compact or [] if str(b) in manifest["buckets"]]
         self._save_manifest(
             {
                 "format": _FORMAT,
@@ -231,9 +377,17 @@ class BucketedStateStore:
                 # recorded so reads open with an explicit schema (zero
                 # inference job)
                 "schema": state.schema.json(),
+                "meta": manifest.get("meta") if meta is None else meta,
             },
             expected_token=tok,
         )
+        self.last_commit = {
+            "version": new_version,
+            "kind": "compaction" if compacted else "run" if appended else "base",
+            "buckets": sorted(replace | set(rows)),
+            "rows": sum(rows.values()),
+            "max_runs": max((len(e["runs"]) for e in buckets.values()), default=0),
+        }
         return new_version
 
     # -- maintenance ------------------------------------------------------
@@ -242,8 +396,8 @@ class BucketedStateStore:
         """``(removable, live)``, both relative to the store path.
 
         ``live`` holds every version dir the current manifest or a
-        retained snapshot references, plus the retained snapshots
-        themselves. ``retain_last=N`` keeps N SUPERSEDED manifest
+        retained snapshot references as a base or a run, plus the
+        retained snapshots themselves. ``retain_last=N`` keeps N SUPERSEDED manifest
         snapshots below the always-live current one, so ``read_at(cur -
         N)`` keeps working — the meaning every maintained structure
         gives it (``maintenance.py`` module docstring). ``removable``
@@ -254,13 +408,13 @@ class BucketedStateStore:
         live concurrent writer). The one derivation behind both
         :meth:`vacuum` and ``maintenance.vacuum``."""
         manifest = self._load_manifest()
-        live = {f"v{v}" for v in manifest["buckets"].values()}
+        live = {f"v{v}" for v in _layers(manifest, None, runs=True)}
         cur = manifest["version"]
         for version in range(max(1, cur - retain_last), cur + 1):
             snap = f"_manifest_v{version}.json"
             m = fsops.read_json(os.path.join(self.path, snap))
             if m is not None:
-                live |= {f"v{v}" for v in m["buckets"].values()}
+                live |= {f"v{v}" for v in _layers(m, None, runs=True)}
             live.add(snap)
         removable = []
         for entry in fsops.list_dir(self.path):
@@ -289,3 +443,22 @@ class BucketedStateStore:
             fsops.remove_tree(full)
             removed.append(full)
         return removed
+
+
+def _layers(
+    manifest: dict,
+    buckets: list[int] | None,
+    runs: bool,
+    skip: list[int] = (),
+) -> dict[int, list[int]]:
+    """``{version: [bucket, ...]}`` of the layers ``manifest`` maps
+    ``buckets`` (all of them when ``None``, minus ``skip``) to: each
+    bucket's base, and with ``runs`` its runs too."""
+    entries = manifest["buckets"]
+    wanted = entries if buckets is None else {str(b) for b in buckets} & set(entries)
+    out: dict[int, list[int]] = {}
+    for b in set(wanted) - {str(b) for b in skip}:
+        e = entries[b]
+        for v in [e["base"], *(e["runs"] if runs else [])]:
+            out.setdefault(v, []).append(int(b))
+    return out

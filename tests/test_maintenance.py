@@ -369,3 +369,22 @@ def test_state_store_direct_vacuum_matches_unified(spark, tmp_path):
             ]
         with pytest.raises(FileNotFoundError):
             store.read_at(cur - 3)
+
+    # run commits: a bucket's base and every run over it stay live
+    latest = lambda df: df.groupBy("bucket").agg(  # noqa: E731
+        F.max("key").alias("key"), F.max("val").alias("val")
+    )
+    for store in (direct, unified):
+        store.fold = latest
+        for i in (6, 7):
+            df = spark.createDataFrame(
+                [(i, i * 10, 0)], "key long, val long, bucket long"
+            )
+            store.commit(df, [0], compact=[])
+    direct.vacuum(retain_last=0)
+    vacuum(spark, unified.path, retain_last=0)
+    assert survivors(direct.path) == survivors(unified.path) == [
+        "_manifest_v8.json", "v6", "v7", "v8"
+    ]
+    for store in (direct, unified):
+        assert [(r["key"], r["val"]) for r in store.read().collect()] == [(7, 70)]

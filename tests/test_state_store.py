@@ -79,7 +79,8 @@ def test_untouched_buckets_survive_later_commits(spark, store):
     got = {(r["key"], r["val"]) for r in store.read().collect()}
     assert got == {("a", 1), ("b", 20)}
     manifest = json.load(open(os.path.join(store.path, "_manifest.json")))
-    assert manifest["buckets"] == {"0": 1, "1": 2}
+    assert {b: e["base"] for b, e in manifest["buckets"].items()} == {"0": 1, "1": 2}
+    assert all(e["runs"] == [] for e in manifest["buckets"].values())
 
 
 def test_crash_before_manifest_swap_preserves_old_state(spark, store):
@@ -163,6 +164,55 @@ def test_legacy_manifest_is_refused(spark, store):
         with pytest.raises(ValueError, match="rebuild") as err:
             op()
         assert legacy in str(err.value)
+
+
+def test_format2_manifest_is_refused(spark, store):
+    """Manifests of the flat bucket -> version layout (``"format": 2``)
+    are refused, not read as a base-only format-3 store."""
+    os.makedirs(store.path)
+    flat = os.path.join(store.path, "_manifest.json")
+    with open(flat, "w") as fh:
+        json.dump({"format": 2, "version": 1, "buckets": {"0": 1}}, fh)
+    with pytest.raises(ValueError, match="format 2") as err:
+        store.read()
+    assert flat in str(err.value)
+
+
+def test_bucket_filter_is_one_pushed_in(spark, store):
+    """Each version's bucket filter reaches the parquet scan as one
+    pushed ``In`` filter."""
+    store.commit(_df(spark, [("a", 1, 0), ("b", 2, 1), ("c", 3, 2)]), [0, 1, 2])
+    plan = store.read([0, 2])._jdf.queryExecution().executedPlan().toString()
+    assert "In(bucket, [0,2])" in plan, plan
+
+
+def test_run_commits_fold_on_read(spark, tmp_path):
+    """A store with a fold appends a run commit's rows to the buckets
+    that hold state (a bucket with none takes them as its base), reads
+    a run-free bucket as it is and folds the others' layers, and
+    replaces the ``compact`` buckets wholesale."""
+    store = BucketedStateStore(
+        spark, str(tmp_path / "state"),
+        fold=lambda df: df.groupBy("bucket", "key").agg(F.max("val").alias("val")),
+    )
+    store.commit(_df(spark, [("a", 1, 0), ("b", 2, 1)]), [0, 1])
+    v = store.commit(_df(spark, [("a", 5, 0), ("c", 3, 2)]), [0, 1, 2], compact=[])
+    assert store.last_commit["kind"] == "run"
+    manifest = json.load(open(os.path.join(store.path, "_manifest.json")))
+    assert manifest["buckets"]["0"] == {"base": 1, "rows": 1, "runs": [v], "run_rows": 1}
+    assert manifest["buckets"]["2"] == {"base": v, "rows": 1, "runs": [], "run_rows": 0}
+
+    def rows(df):
+        return sorted((r["key"], r["val"], r["bucket"]) for r in df.collect())
+
+    assert rows(store.read()) == [("a", 5, 0), ("b", 2, 1), ("c", 3, 2)]
+    assert store.overdue() == []
+    store.commit(_df(spark, [("a", 7, 0)]), [0, 1, 2], compact=[])
+    assert store.overdue() == [0]  # two run rows over a one-row base
+    store.commit(_df(spark, [("a", 7, 0)]), [0, 1, 2], compact=[0])
+    assert store.last_commit["kind"] == "compaction"
+    assert store.overdue() == []
+    assert rows(store.read()) == [("a", 7, 0), ("b", 2, 1), ("c", 3, 2)]
 
 
 def test_crash_replay_commits_over_orphan(spark, store):

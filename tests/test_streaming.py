@@ -978,6 +978,17 @@ def test_wire_apply_latency_metric_exists_and_bounded(spark, tmp_path):
                 body = _json.loads(resp.read())
         assert body["apply_latency"]["batches_measured"] >= 1
         assert body["apply_latency"]["capture_to_apply_sec_p50"] < 120.0
+        # the last batch: its fold plan, commit kind (a first batch on
+        # empty state lands as the base), deepest run count, and data
+        # frames in vs events folded
+        assert body["apply_latency"]["last_fold_plan"] == "array_fold"
+        assert body["apply_latency"]["last_batch"] == {
+            "fold_plan": "array_fold",
+            "commit_kind": "base",
+            "max_bucket_runs": 0,
+            "events_folded": 2,
+            "data_frames_in": 2,
+        }
     finally:
         q.stop()
         q.awaitTermination(60)
@@ -1595,46 +1606,66 @@ def test_wire_batch_creates_missing_state_parent(spark, tmp_path):
     ]
 
 
-def _wire_batch_receipt(spark, tmp_path, origin):
+def _wire_batch_receipt(spark, tmp_path, origin, warm=1):
     """``(jobs, stages)`` of one warm wire micro-batch merged with
-    ``origin``, after a first batch has left prior state."""
+    ``origin`` after ``warm`` batches have left prior state, the state's
+    row count and the merge's commit kind."""
     sc = spark.sparkContext
     applier = _wire_applier(spark, str(tmp_path / "state"), origin=origin)
-    applier.merge_wire_batch(_wire_feed(spark, 60), batch_id=0)  # prior state
-    batch = _wire_feed(spark, 60, lsn0=1000)
-    group = f"wire_receipt_{origin}"  # the tracker keeps finished groups
+    for bid in range(warm):  # prior state
+        applier.merge_wire_batch(_wire_feed(spark, 60, lsn0=1 + 1000 * bid), bid)
+    batch = _wire_feed(spark, 60, lsn0=1000 * warm + 1)
+    group = f"wire_receipt_{origin}_{warm}"  # the tracker keeps finished groups
     sc.setJobGroup(group, group)
     try:
-        applier.merge_wire_batch(batch, batch_id=1)
+        applier.merge_wire_batch(batch, batch_id=warm)
     finally:
         sc.setJobGroup(None, None)
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
-    return (len(jobs), stages), applier.current_state().count()
+    kind = applier.last_batch["commit_kind"]
+    return (len(jobs), stages), applier.current_state().count(), kind
 
 
 def test_wire_batch_job_count(spark, tmp_path):
     """Job receipt for one warm wire micro-batch (origin filter on): the
-    frames are sorted and materialised once, one per-partition pre-decode
-    scan answers the lag stamp, R frames, LSN ranges and each partition's
-    last origin marker, the decode resolves and filters origins in its
-    own loop (no separate origins plan), the keyed batch is materialised
-    once for the bucket probe and the write, and the array fold starts
-    from the store's bucket clustering, so Spark drops the commit's
-    repartition and the fold runs inside the executor-width write tasks.
-    Each of those lost jobs or stages; a re-added scan, re-run or shuffle
-    shows up here."""
-    receipt, n_state = _wire_batch_receipt(spark, tmp_path, "none")
-    assert receipt == (7, 10)
+    frames are sorted and materialised once, lazily, by the one
+    per-partition pre-decode scan, which answers the lag stamp, row
+    count, TRUNCATE presence, R frames, LSN ranges and each partition's
+    last origin marker; the decode resolves and filters origins in its
+    own loop (no separate origins plan); the batch is folded on its own
+    and committed as a delta run (no prior-state read, no bucket probe),
+    and the array fold starts from the store's bucket clustering, so
+    Spark drops the commit's repartition and the fold runs inside the
+    executor-width write tasks. Each of those lost jobs or stages; a
+    re-added scan, re-run or shuffle shows up here."""
+    receipt, n_state, kind = _wire_batch_receipt(spark, tmp_path, "none")
+    assert kind == "run"
+    assert receipt == (4, 6)
     assert n_state == 50
 
 
 def test_wire_batch_job_count_origin_any(spark, tmp_path):
     """The same receipt with origin filtering off (the catch-up path):
     the per-partition scan only changes shape, and nothing is added."""
-    receipt, n_state = _wire_batch_receipt(spark, tmp_path, "any")
-    assert receipt == (7, 10)
+    receipt, n_state, kind = _wire_batch_receipt(spark, tmp_path, "any")
+    assert kind == "run"
+    assert receipt == (4, 6)
+    assert n_state == 50
+
+
+def test_wire_batch_job_count_compaction(spark, tmp_path, monkeypatch):
+    """Job receipt for a compacting wire batch: the overdue buckets'
+    base and runs are scanned into the batch's one fold and written
+    back as a new base by the same write, so compaction adds scans to
+    the write's map stage but no job or stage of its own."""
+    from python_cdc_spark.streaming import state_store
+
+    monkeypatch.setattr(state_store, "_MAX_RUNS", 0)  # one run is overdue
+    receipt, n_state, kind = _wire_batch_receipt(spark, tmp_path, "any", warm=2)
+    assert kind == "compaction"
+    assert receipt == (4, 6)
     assert n_state == 50
 
 
@@ -1996,6 +2027,197 @@ def test_streaming_apply_across_batches_matches_one_shot_fold(spark, tmp_path):
         apply_changes_with_tombstones, lambda r: r["key"],
     )
     assert got == {"5": {"id": "5", "v": "e"}}
+
+
+def _layered_applier(spark, path):
+    from python_cdc_spark.streaming.apply_stream import StreamingApplyChanges
+
+    return StreamingApplyChanges(spark, path, "key", n_buckets=4)
+
+
+def _mor_ev(lsn, op, key, **vals):
+    """One single-table event row for ``_truncate_ev_df``."""
+    image = None if op in ("DELETE", "TRUNCATE") else {"id": key, **vals}
+    return (lsn, op, "public", "t", image, key)
+
+
+def _one_shot(spark, rows):
+    """The one-shot fold's live rows of ``rows``: ``{key: values}``."""
+    from python_cdc_spark.cdc.apply import apply_changes_with_tombstones_multi
+
+    full = apply_changes_with_tombstones_multi(
+        _truncate_ev_df(spark, rows), "key", plan="array_fold"
+    ).filter(F.col("values").isNotNull())
+    return {r["key"]: dict(r["values"]) for r in full.collect()}
+
+
+def _live(df):
+    return {
+        r["key"]: dict(r["values"])
+        for r in df.filter(F.col("values").isNotNull()).collect()
+    }
+
+
+def test_merge_on_read_matches_one_shot_fold_across_compactions(
+    spark, tmp_path, monkeypatch
+):
+    """Merge-on-read state equals the one-shot fold of the concatenated
+    feed after every batch, across run commits and the compactions
+    between them: TOAST sentinels resolve across runs and across a
+    compaction, a late event below a key's delete horizon (it reaches
+    below the committed LSN, so its batch compacts) does not resurrect
+    the key, and a TRUNCATE clears keys held in runs. ``read_at`` of
+    every earlier version returns the state as it was then, across the
+    compactions."""
+    from python_cdc_spark.schemas import UNCHANGED_SENTINEL as U
+    from python_cdc_spark.streaming import state_store
+
+    monkeypatch.setattr(state_store, "_MAX_RUNS", 1)  # two runs compact
+    applier = _layered_applier(spark, str(tmp_path / "state"))
+    applier.retention = 20  # keep every version for read_at
+    e = _mor_ev
+    batches = [
+        [e(1, "INSERT", "1", a="a1", b="b1"), e(2, "INSERT", "2", a="a2", b="b2"),
+         e(3, "INSERT", "3", a="a3", b="b3"), e(4, "DELETE", "3")],
+        [e(10, "UPDATE", "1", a="a1'", b=U), e(11, "INSERT", "4", a="a4", b="b4")],
+        [e(20, "UPDATE", "1", a=U, b="b1'"), e(21, "UPDATE", "2", a=U, b=U)],
+        [e(30, "UPDATE", "4", a="a4'", b=U), e(31, "INSERT", "5", a="a5", b="b5")],
+        [e(40, "UPDATE", "1", a="a1''", b=U)],
+        [e(2, "UPDATE", "3", a="GHOST", b="GHOST")],  # late, below del_lsn 4
+        [e(60, "UPDATE", "2", a="a2'", b=U)],
+        [e(70, "TRUNCATE", None), e(71, "INSERT", "6", a="a6", b="b6")],
+        [e(80, "UPDATE", "1", a=U, b="b1''"), e(81, "UPDATE", "6", a=U, b="b6'")],
+    ]
+    fed, kinds, history = [], [], []
+    for bid, rows in enumerate(batches):
+        applier.merge_batch(_truncate_ev_df(spark, rows), bid)
+        fed += rows
+        kinds.append(applier.last_batch["commit_kind"])
+        got = _live(applier.current_state())
+        assert got == _one_shot(spark, fed), bid
+        history.append((applier.store.version, got))
+    assert kinds[:2] == ["base", "run"]
+    assert "compaction" in kinds[2:4]  # key 1's bucket: two runs
+    assert kinds[5] == "compaction"  # the late event
+    assert kinds[6] == "run"
+    assert kinds[7] == "compaction"  # the TRUNCATE
+    assert kinds[8] == "run"
+    assert got == {"1": {"id": "1", "b": "b1''"}, "6": {"id": "6", "a": "a6", "b": "b6'"}}
+    for version, state in history:
+        assert _live(applier.store.read_at(version)) == state, version
+
+
+def test_replayed_run_batch_duplicates_its_run(spark, tmp_path):
+    """A batch whose run was committed but whose streaming commit was
+    not is replayed under the same batch id: it commits the same run
+    again, and the duplicate folds to the same state."""
+    from python_cdc_spark.schemas import UNCHANGED_SENTINEL as U
+
+    applier = _layered_applier(spark, str(tmp_path / "state"))
+    b0 = [_mor_ev(i, "INSERT", str(i), a=f"a{i}", b=f"b{i}") for i in range(1, 9)]
+    b1 = [_mor_ev(10 + i, "UPDATE", str(i), a=U, b=f"b{i}'") for i in range(1, 5)]
+    b1.append(_mor_ev(20, "DELETE", "5"))
+    applier.merge_batch(_truncate_ev_df(spark, b0), 0)
+    applier.merge_batch(_truncate_ev_df(spark, b1), 1)
+    once = _live(applier.current_state())
+    applier.merge_batch(_truncate_ev_df(spark, b1), 1)  # the replay
+    assert applier.last_batch["commit_kind"] == "run"
+    manifest = json.load(open(os.path.join(applier.state_path, "_manifest.json")))
+    assert max(len(e["runs"]) for e in manifest["buckets"].values()) == 2
+    assert _live(applier.current_state()) == once == _one_shot(spark, b0 + b1)
+
+
+def test_crash_mid_compaction_keeps_layers_and_replay_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A compacting commit that dies after its version is written and
+    before the manifest swap leaves the base and runs it was folding
+    readable as they were; the replayed batch compacts them and
+    converges on the one-shot fold, and the crashed attempt's version
+    dir is vacuum fodder."""
+    from python_cdc_spark.schemas import UNCHANGED_SENTINEL as U
+    from python_cdc_spark.streaming import state_store
+    from python_cdc_spark.streaming.state_store import BucketedStateStore
+
+    monkeypatch.setattr(state_store, "_MAX_RUNS", 0)  # one run compacts
+    applier = _layered_applier(spark, str(tmp_path / "state"))
+    b0 = [_mor_ev(i, "INSERT", str(i), a=f"a{i}", b=f"b{i}") for i in range(1, 9)]
+    b1 = [_mor_ev(10 + i, "UPDATE", str(i), a=U, b=f"b{i}'") for i in range(1, 9)]
+    b2 = [_mor_ev(30, "UPDATE", "1", a="a1'", b=U), _mor_ev(31, "DELETE", "2")]
+    applier.merge_batch(_truncate_ev_df(spark, b0), 0)
+    applier.merge_batch(_truncate_ev_df(spark, b1), 1)
+    assert applier.last_batch["commit_kind"] == "run"
+    before = _live(applier.current_state())
+    crashed = os.path.join(applier.state_path, f"v{applier.store.version + 1}")
+
+    def crash(self, manifest, expected_token):
+        raise RuntimeError("crash before the manifest swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(BucketedStateStore, "_save_manifest", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            applier.merge_batch(_truncate_ev_df(spark, b2), 2)
+    assert os.path.isdir(crashed)  # written, never committed
+    assert _live(applier.current_state()) == before == _one_shot(spark, b0 + b1)
+    applier.merge_batch(_truncate_ev_df(spark, b2), 2)  # the replay
+    assert applier.last_batch["commit_kind"] == "compaction"
+    assert _live(applier.current_state()) == _one_shot(spark, b0 + b1 + b2)
+    assert not os.path.isdir(crashed)
+
+
+def test_wire_registry_pin_survives_crash_before_commit(spark, tmp_path, monkeypatch):
+    """A wire batch publishes the relation registry its ``R`` frames
+    produce before its state commit. If it dies in between, the replayed
+    batch must still decode its pre-DDL frames with the schema in force
+    before its own ``R`` frame (the registry is pinned per batch id like
+    the origin carry), not the one its first attempt published. Both
+    carry files are format-stamped."""
+    import datetime as dt
+
+    from python_cdc_spark.cdc.pgoutput import encode_insert, encode_relation
+    from python_cdc_spark.streaming.state_store import BucketedStateStore
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    def frames_df(rows):
+        return spark.createDataFrame(
+            [(lsn, t0, bytearray(f)) for lsn, f in rows],
+            "lsn bigint, ts timestamp, frame binary",
+        )
+
+    b0 = frames_df([
+        (1, encode_relation(9, "public", "accounts", ["id", "amount"])),
+        (2, encode_insert(9, ["1", "10"])),
+    ])
+    b1 = frames_df([
+        (10, encode_insert(9, ["3", "30"])),
+        (11, encode_relation(9, "public", "accounts", ["id", "amount_usd"])),
+        (12, encode_insert(9, ["2", "20"])),
+    ])
+    path = str(tmp_path / "state")
+    _wire_applier(spark, path).merge_wire_batch(b0, batch_id=0)
+
+    def crash(self, *a, **kw):
+        raise RuntimeError("crash before the state commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(BucketedStateStore, "commit", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            _wire_applier(spark, path).merge_wire_batch(b1, batch_id=1)
+    fresh = _wire_applier(spark, path)  # restart after the crash
+    fresh.merge_wire_batch(b1, batch_id=1)
+    assert _live(fresh.current_state()) == {
+        "1": {"id": "1", "amount": "10"},
+        "3": {"id": "3", "amount": "30"},
+        "2": {"id": "2", "amount_usd": "20"},
+    }
+    assert fresh.registry[9]["columns"] == ["id", "amount_usd"]
+    for suffix in ("_registry.json", "_origin.json"):
+        with open(path + suffix, "w") as fh:
+            json.dump({"batch_id": None, "before": None, "after": None}, fh)
+        with pytest.raises(ValueError, match="format"):
+            _wire_applier(spark, path)
+        os.remove(path + suffix)
 
 
 def test_streaming_ann_index_matches_rebuild_and_replays_safely(spark, tmp_path):
