@@ -377,6 +377,54 @@ def apply_changes_typed(
     return state.select(*cols)
 
 
+def apply_changes_typed_split(
+    events: DataFrame, key_col: str, columns: dict[str, str], split: int
+) -> DataFrame:
+    """:func:`apply_changes_typed` of the events at or below LSN ``split``
+    and of all of them, from ONE keyed aggregate (one shuffle for both
+    states). Returns ``(key_col, touched, before, after)``: ``touched``
+    says the key has an event above ``split``; ``before`` and ``after``
+    are structs ``(live, last_lsn, *columns)``, ``live`` false where the
+    key has no row in that state.
+
+    Each column's value is the latest event, by LSN, among the key's
+    DELETEs and the events carrying a cell for it (the TOAST sentinel
+    carries none): a DELETE winning means the column has no value after
+    the key's last delete, as in the tombstoned fold. The same race
+    over DELETEs and events carrying any cell decides ``live`` and
+    ``last_lsn``. TRUNCATE is not expanded, so on a feed without it
+    (``cdc/feed.events_as_cdc_feed``) both states equal
+    :func:`apply_changes_typed`'s."""
+    lsn = F.col("lsn")
+    deleted = F.col("operation") == OP_DELETE
+    vals = F.coalesce(F.col("new_values"), F.create_map().cast("map<string,string>"))
+
+    def carries(v: Column) -> Column:
+        return v.isNull() | (v != UNCHANGED_SENTINEL)
+
+    race = deleted | (F.size(F.map_filter(vals, lambda k, v: carries(v))) > 0)
+
+    def state(upto: Column) -> Column:
+        out = [
+            F.coalesce(~F.max_by(deleted, F.when(race & upto, lsn)), F.lit(False)).alias("live"),
+            F.max(F.when(race & upto, lsn)).alias("last_lsn"),
+        ]
+        for name, dtype in columns.items():
+            has = deleted | (F.map_contains_key(vals, name) & carries(vals[name]))
+            out.append(
+                F.max_by(F.when(~deleted, vals[name]), F.when(has & upto, lsn))
+                .cast(dtype)
+                .alias(name)
+            )
+        return F.struct(*out)
+
+    return events.groupBy(key_col).agg(
+        (F.max(lsn) > F.lit(split)).alias("touched"),
+        state(lsn <= F.lit(split)).alias("before"),
+        state(F.lit(True)).alias("after"),
+    )
+
+
 def state_as_events(state: DataFrame, key_col: str = "key") -> DataFrame:
     """Re-encode folded state rows as a minimal event feed so the fold's
     sentinel / delete-boundary semantics compose across batches: a live

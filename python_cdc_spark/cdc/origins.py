@@ -166,7 +166,7 @@ def annotate_origins_from_markers(
     that join nothing) skip the distinct-buckets probe over ``events``;
     ``marker_lasts`` likewise skips the per-bucket last-marker collect
     (sorted ``(bucket, origin)``, one row per marker-bearing bucket).
-    The defaults derive both from the DataFrames as before."""
+    Left as None, they come from one aggregate over the DataFrames."""
     bucket = (F.col("lsn") / F.lit(int(bucket_width))).cast("bigint")
 
     if marker_lasts is None:
@@ -201,18 +201,45 @@ def annotate_origins_from_markers(
     # Cross-bucket carry: last marker per marker-bucket (≤ 1 row per
     # bucket — metadata scale), forward-filled on the driver across the
     # distinct buckets events actually occupy, broadcast-joined back.
+    # Whichever of the two the caller did not supply comes from ONE
+    # grouped aggregate over the markers and events tagged by side (one
+    # collect, not one per probe).
+    sides = []
     if marker_lasts is None:
-        marker_lasts = sorted(
-            (
-                (r["__b"], r["__last"]["origin"])
-                for r in markers.groupBy(bucket.alias("__b"))
-                .agg(F.max_by(F.struct("origin"), "lsn").alias("__last"))
-                .collect()
-            ),
+        sides.append(
+            markers.select(
+                bucket.alias("__b"),
+                F.struct("origin").alias("__m"),
+                F.col("lsn").alias("__at"),
+                F.lit(False).alias("__ev"),
+            )
         )
-    event_buckets = sorted(
-        r["__b"] for r in events.select(bucket.alias("__b")).distinct().collect()
-    ) if event_buckets is None else sorted(event_buckets)
+    if event_buckets is None:
+        sides.append(
+            events.select(
+                bucket.alias("__b"),
+                F.lit(None).cast("struct<origin:string>").alias("__m"),
+                F.lit(None).cast("long").alias("__at"),
+                F.lit(True).alias("__ev"),
+            )
+        )
+    if sides:
+        probe = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
+        rows = (
+            probe.groupBy("__b")
+            .agg(
+                F.max_by("__m", "__at").alias("__last"),  # NULL __at: events
+                F.max("__ev").alias("__has_ev"),
+            )
+            .collect()
+        )
+        if marker_lasts is None:
+            marker_lasts = sorted(
+                (r["__b"], r["__last"]["origin"]) for r in rows if r["__last"] is not None
+            )
+        if event_buckets is None:
+            event_buckets = [r["__b"] for r in rows if r["__has_ev"]]
+    event_buckets = sorted(event_buckets)
     carry_rows = []
     carry = initial_origin
     i = 0

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_cdc_spark.schemas import ANALYTIC_TABLES
+from python_cdc_spark.session import cluster
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -111,17 +112,85 @@ def write_partitioned(
     filter on a partition column eliminates whole directories before
     any file is opened (``PartitionFilters`` in the scan node).
 
-    ``repartition(partition_cols)`` co-locates each output partition's
-    rows into ``target_files_per_partition`` tasks first — without it,
-    every task writes a file into every partition directory, the classic
-    small-files explosion (tasks × partitions files; at 100 TB that's
-    millions of tiny files and a crushed namenode/listing path).
+    ``session.cluster`` co-locates each output partition's rows into
+    ``target_files_per_partition`` of the executor-width write tasks
+    first — without it, every task writes a file into every partition
+    directory, the classic small-files explosion (tasks × partitions
+    files; at 100 TB that's millions of tiny files and a crushed
+    namenode/listing path).
     """
     cols = [F.col(c) for c in partition_cols]
     if target_files_per_partition > 1:
         # salt so each output partition spreads over N write tasks
         cols.append(F.spark_partition_id() % target_files_per_partition)
-    df.repartition(*cols).write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    cluster(df, cols).write.mode(mode).partitionBy(*partition_cols).parquet(path)
+
+
+def write_tables(tables: dict[str, DataFrame], out: str) -> None:
+    """Write each ``{name: frame}`` as the parquet directory
+    ``<out>/<name>`` in ONE Spark job (one write job floor instead of
+    one per table): the frames union by name under a table
+    discriminator, the write partitions by it at one task per table
+    (``session.cluster``), and each partition directory is renamed to
+    its table's name. A table with no rows still gets its (empty)
+    directory. ``out`` is the caller's own staging directory.
+
+    Every file carries the union's columns, the other tables'
+    null-filled, so read each table back with its own schema: a
+    fixed-schema read prunes the rest at the scan. Columns that two
+    frames share by name must share their type."""
+    tag = "__table"
+    frames = [df.withColumn(tag, F.lit(name)) for name, df in tables.items()]
+    union = frames[0]
+    for df in frames[1:]:
+        union = union.unionByName(df, allowMissingColumns=True)
+    cluster(union, [tag], len(frames)).write.mode("overwrite").partitionBy(tag).parquet(out)
+    for name in tables:
+        part = os.path.join(out, f"{tag}={name}")
+        if os.path.isdir(part):
+            os.rename(part, os.path.join(out, name))
+        else:
+            os.makedirs(os.path.join(out, name))
+
+
+def column_range(spark: SparkSession, sf_dir: str, name: str, col: str) -> tuple:
+    """``(min, max)`` of integer column ``col`` of analytic table ``name``.
+
+    Read from the parquet footers' row-group statistics in this process —
+    exact for integers, and no Spark job (Spark's own parquet reader
+    cannot answer MIN/MAX from footers). A file without statistics for
+    the column, or one this process cannot open, falls back to one
+    aggregate over the table."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    lo = hi = None
+    try:
+        files = [path] if os.path.isfile(path) else sorted(
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if not f.startswith(("_", "."))  # Spark's hidden-file rule
+        )
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            j = md.schema.names.index(col)
+            kind = md.schema.column(j)
+            if kind.physical_type not in ("INT32", "INT64") or kind.logical_type.type not in (
+                "NONE", "INT",
+            ):
+                raise ValueError(f"{col} is not a plain integer column")
+            for i in range(md.num_row_groups):
+                c = md.row_group(i).column(j)
+                st = c.statistics
+                if c.num_values == 0 or (st is not None and st.null_count == c.num_values):
+                    continue  # no non-null value in this row group
+                if st is None or not st.has_min_max:
+                    raise ValueError(f"no statistics for {col} in {f}")
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+    except (OSError, ValueError):
+        return tuple(table(spark, sf_dir, name).agg(F.min(col), F.max(col)).first())
+    return lo, hi
 
 
 def compact_parquet(

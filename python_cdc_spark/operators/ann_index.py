@@ -32,11 +32,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from python_cdc_spark import fsops
 from python_cdc_spark.io import write_partitioned
+from python_cdc_spark.session import cluster
 
 
 def source_fingerprint(*paths: str) -> str:
@@ -428,7 +429,7 @@ def append_to_ivfpq_index(
     )
     n = cells_new.select("neighbor_id").distinct().count()
     (
-        cells_new.repartition("cell")
+        cluster(cells_new, ["cell"])
         .write.mode("append")
         .partitionBy("cell")
         .parquet(os.path.join(out_dir, "cells.parquet"))
@@ -537,6 +538,11 @@ def maintain_ivf_lists_cdc(
     ``needs_refit`` escalation (frozen placement decays under covariate
     shift — measured curve in SCALE.md) keeps working across folds.
     Returns fold stats for receipts: touched/total cells, row counts.
+
+    Two actions besides the checkpoints: ONE aggregate over the tagged
+    union of victims' old cells, placed rows and victims answers the
+    touched set and both counts, and the write observes the cells the
+    rewrite leaves non-empty.
     """
     cells_path = os.path.join(out_dir, "cells.parquet")
     centroids = _read_index_table(spark, out_dir, "centroids")
@@ -562,38 +568,47 @@ def maintain_ivf_lists_cdc(
     ).localCheckpoint(eager=False)
 
     # touched = victims' current cells (column-pruned scan joined with
-    # the broadcast delta ids) ∪ upserts' target cells. Both collects
-    # are delta-bounded (≤ |delta| cell ids), never corpus-scale.
-    old_cells = (
+    # the broadcast delta ids) ∪ upserts' target cells; the tag column
+    # says which side a row came from, so the same aggregate counts the
+    # placed rows and the victims. Delta-bounded (≤ |delta| cell ids),
+    # never corpus-scale.
+    side = F.col("__side")
+    probe = (
         idx.select("neighbor_id", "cell")
         .join(F.broadcast(victims), "neighbor_id", "left_semi")
-        .select("cell")
-        .distinct()
+        .select("cell", F.lit("old").alias("__side"))
+        .unionByName(new_rows.select("cell", F.lit("new").alias("__side")))
+        .unionByName(
+            victims.select(F.lit(None).cast("int").alias("cell"), F.lit("victim").alias("__side"))
+        )
+        .agg(
+            F.collect_set("cell").alias("touched"),
+            F.count(F.when(side == "new", 1)).alias("n_upserts"),
+            F.count(F.when(side == "victim", 1)).alias("n_victims"),
+        )
+        .first()
     )
-    new_cells = new_rows.select("cell").distinct()
-    touched = sorted(
-        {int(r["cell"]) for r in old_cells.unionByName(new_cells).distinct().collect()}
-    )
-
-    n_upserts = new_rows.count()
-    n_victims = victims.count()
+    touched = sorted(int(c) for c in probe["touched"])
+    n_upserts, n_victims = int(probe["n_upserts"]), int(probe["n_victims"])
     survivors = (
         idx.filter(F.col("cell").isin(touched))
         .join(F.broadcast(victims), "neighbor_id", "left_anti")
     )
-    new_contents = survivors.unionByName(new_rows).localCheckpoint(eager=True)
-    present = {int(r["cell"]) for r in new_contents.select("cell").distinct().collect()}
-
     # dynamic overwrite replaces exactly the partitions present in the
-    # written frame; set per write, so an overwrite another thread runs
-    # in this session keeps the session's mode
+    # written frame, at commit, after every task read its survivors; set
+    # per write, so an overwrite another thread runs in this session
+    # keeps the session's mode. The cells it writes are observed in the
+    # write tasks (above the shuffle, so an empty rewrite still reports).
+    written = Observation()
     (
-        new_contents.repartition("cell")
+        cluster(survivors.unionByName(new_rows), ["cell"], len(touched))
+        .observe(written, F.collect_set("cell").alias("cells"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell")
         .parquet(cells_path)
     )
+    present = {int(c) for c in written.get["cells"]}
     # a touched cell with zero survivors and zero arrivals vanishes from
     # the dynamic write — drop its directory so readers don't resurrect
     # pre-fold rows

@@ -31,12 +31,12 @@ the four folds:
 - ``globals`` (n_docs, sum_dl) updates by two additions.
 
 Fold shape (r11 verdict #2: ONE multi-output pass, not ~12 sequential
-jobs): the checkpointed delta yields tag + touched buckets in one
-aggregate; then ONE combined frame — tokenized new postings ∪ the
-touched buckets' old postings flagged evicted-or-kept — is
-materialized once, and every output (df deltas, globals deltas, new
-postings buckets, new doclen buckets) derives from it lazily. Eight
-Spark jobs total, four of which are the output writes themselves.
+jobs): the delta's checkpoint job observes its tag and touched buckets;
+then ONE combined frame — tokenized new postings ∪ the touched buckets'
+old postings flagged evicted-or-kept — is materialized once, and every
+output (df deltas, new postings buckets, new doclen buckets, and the
+globals deltas observed on the bucket write) derives from it lazily.
+Four actions in all: the two checkpoints and the two output writes.
 
 Crash exactness (r10 verdict #2 / ADVICE): counter arithmetic is NOT
 replay-idempotent, so the fold is staged-then-published — all new
@@ -90,14 +90,14 @@ from __future__ import annotations
 import functools
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from python_cdc_spark import fsops
-from python_cdc_spark.functions.digest import content_tag
+from python_cdc_spark.functions.digest import tagged_checkpoint
 from python_cdc_spark.functions.literals import literal_df
 from python_cdc_spark.functions.text import tokens
-from python_cdc_spark.session import run_concurrent
+from python_cdc_spark.session import cluster, run_concurrent
 
 
 def phrase_df(spark: SparkSession, phrase: tuple[str, ...]) -> DataFrame:
@@ -148,15 +148,6 @@ def _doc_tf(
         F.count(F.lit(1)).cast("long").alias("tf"),
         F.sort_array(F.collect_list((F.col("pos") + 1).cast("int"))).alias("positions"),
     ).withColumn("bucket", _bucket(F.col("doc_id")))
-
-
-def _doclen_of(postings: DataFrame) -> DataFrame:
-    """doclen is derivable: dl == Σ tf per doc (total token count)."""
-    return (
-        postings.groupBy("doc_id", "bucket")
-        .agg(F.sum("tf").cast("long").alias("dl"))
-        .select("doc_id", "dl", "bucket")
-    )
 
 
 # --- pointer ---------------------------------------------------------------
@@ -334,45 +325,63 @@ def _write_buckets_fused(
     postings: DataFrame,
     touched: list[int],
     ptr: dict,
-    doclen: DataFrame | None = None,
+    counters: Observation | None = None,
 ) -> tuple[dict[str, int], dict[str, int]]:
     """Stage the touched buckets of BOTH per-bucket tables — postings
-    and the derived doclen — in ONE Spark write (r13 verdict #5): the
-    two frames union with a ``kind`` discriminator and partition by
-    (kind, pb), so a fold pays one write job instead of two. The staged
-    ``kind=<table>/pb=<b>`` dirs rename into exactly the same versioned
-    bucket locations as before — the directory-pruned read contract is
-    untouched, and each read's fixed schema prunes the other kind's
-    null-filled columns at the parquet scan.
+    and the derived doclen — in ONE Spark write (r13 verdict #5),
+    partitioned by (kind, pb). The staged ``kind=<table>/pb=<b>`` dirs
+    rename into exactly the same versioned bucket locations as before —
+    the directory-pruned read contract is untouched, and each read's
+    fixed schema prunes the other kind's null-filled columns at the
+    parquet scan.
 
-    ``postings`` must be the KEPT rows (post-eviction); ``doclen``
-    (doc_id, dl, bucket) is derived from them when not supplied — a
-    caller that already rolled the kept rows up per doc passes it to
-    skip the second aggregation. Returns (postings entries, doclen
-    entries)."""
-    dl_null = F.lit(None).cast("long").alias("dl")
-    p_part = postings.select(
-        "doc_id", "token", "tf", "positions", dl_null, "bucket",
-        F.lit("postings").alias("kind"),
+    ``postings`` rows are clustered on their bucket at executor width
+    (``session.cluster``): a task holds whole buckets, so each staged
+    bucket dir gets ONE file, and a doc's doclen (dl = Σ tf) is a window
+    over its rows inside that task — no aggregation shuffle of its own.
+    Each row is written as itself plus, for one row per doc, the doc's
+    doclen row. The fold's rows carry ``__new``/``__ev`` flags (one
+    source branch each, so they partition the window with the doc):
+    ``__ev`` rows, the evicted old images, are written as nothing, and
+    ``counters`` observes the evicted and placed docs' counts and
+    lengths (``ev_n``, ``ev_s``, ``nw_n``, ``nw_s``) on the write itself.
+    Returns (postings entries, doclen entries)."""
+    flags = [c for c in ("__new", "__ev") if c in postings.columns]
+    doc = Window.partitionBy("doc_id", "bucket", *flags)
+    rows = cluster(postings, ["bucket"], len(touched)).select(
+        "*",
+        F.sum("tf").over(doc).cast("long").alias("dl"),
+        (F.row_number().over(doc.orderBy("token")) == 1).alias("__first"),
     )
-    d_part = (_doclen_of(postings) if doclen is None else doclen).select(
+    if counters is not None:
+        first, ev, new = F.col("__first"), F.col("__ev"), F.col("__new")
+        rows = rows.observe(
+            counters,
+            F.count(F.when(first & ev, 1)).alias("ev_n"),
+            F.sum(F.when(first & ev, F.col("dl"))).alias("ev_s"),
+            F.count(F.when(first & new, 1)).alias("nw_n"),
+            F.sum(F.when(first & new, F.col("dl"))).alias("nw_s"),
+        )
+    kinds = F.when(F.col("__first"), F.array(F.lit("postings"), F.lit("doclen"))).otherwise(
+        F.array(F.lit("postings"))
+    )
+    if "__ev" in flags:
+        kinds = F.when(F.col("__ev"), F.array().cast("array<string>")).otherwise(kinds)
+    is_p = F.col("kind") == "postings"
+    staged = rows.select("*", F.explode(kinds).alias("kind")).select(
         "doc_id",
-        F.lit(None).cast("string").alias("token"),
-        F.lit(None).cast("long").alias("tf"),
-        F.lit(None).cast("array<int>").alias("positions"),
-        F.col("dl"),
+        F.when(is_p, F.col("token")).alias("token"),
+        F.when(is_p, F.col("tf")).alias("tf"),
+        F.when(is_p, F.col("positions")).alias("positions"),
+        F.when(~is_p, F.col("dl")).alias("dl"),
         "bucket",
-        F.lit("doclen").alias("kind"),
+        "kind",
+        F.col("bucket").alias("pb"),
     )
     staging = fsops.staging(path)
-    # Repartition ON (kind, bucket) so each staged bucket dir gets ONE
-    # file instead of one per upstream task: without it a 32-task frame
-    # x 64 buckets fragments into ~2k tiny files and every later
-    # directory-pruned read pays file-open overhead per fragment.
+    # already clustered on the bucket: Spark drops this repartition
     (
-        p_part.unionByName(d_part)
-        .withColumn("pb", F.col("bucket"))
-        .repartition(F.col("kind"), F.col("pb"))
+        cluster(staged, ["bucket"], len(touched))
         .write.partitionBy("kind", "pb")
         .mode("overwrite")
         .parquet(staging)
@@ -465,27 +474,29 @@ def cdc_bm25_update(
     (crash after publish, or an at-least-once stream redelivering a
     batch) is a no-op via the pointer's fold ledger.
 
-    One multi-output pass (r11 verdict #2): after the delta checkpoint
-    and a single tag+touched aggregate, ONE combined frame (new
-    postings ∪ touched old postings flagged evicted/kept) feeds every
-    output — df counters, globals, new postings buckets, and new
-    doclen buckets (doclen is Σ tf, so the old doclen dirs are never
-    even read).
+    One multi-output pass (r11 verdict #2): the delta checkpoint's own
+    job observes the replay tag and the touched bucket set, then ONE
+    combined frame (new postings ∪ touched old postings flagged
+    evicted/kept) feeds every output — df counters, globals, new
+    postings buckets, and new doclen buckets (doclen is Σ tf, so the old
+    doclen dirs are never even read). The counters are observed on the
+    bucket write: no probe job of its own.
     """
     delta = delta.select(
         F.col(op_col).alias("__op"),
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias(text_col),
-    ).localCheckpoint(eager=True)
-    # one aggregate: replay tag digests + the touched bucket set (a pure
-    # function of the delta's ids — crc32 bucketing needs no index probe)
+    )
+    # observed on the checkpoint: replay tag digests + the touched bucket
+    # set (a pure function of the delta's ids — crc32 bucketing needs no
+    # index probe)
     key = F.concat_ws(
         ":",
         F.col("__op"),
         F.col("doc_id").cast("string"),
         F.coalesce(F.col(text_col), F.lit("\x00")),
     )
-    tag, row = content_tag(
+    delta, tag, row = tagged_checkpoint(
         delta, key, F.collect_set(_bucket(F.col("doc_id"))).alias("bs")
     )
     if batch_tag is not None:
@@ -517,24 +528,6 @@ def cdc_bm25_update(
         )
         .localCheckpoint(eager=True)
     )
-    # --- per-doc rollup (r14): one token→doc aggregation reused twice --
-    # A doc's rows share their flags per source branch, so grouping on
-    # (doc_id, bucket, flags) yields ≤2 rows per doc: its new image
-    # and/or its old image. This frame IS the doclen table for the kept
-    # side (dl = Σ tf), and the fold counters are a distinct-free
-    # aggregate over it — replacing a 3-job countDistinct Expand over
-    # token-level rows AND the doclen groupBy inside the bucket write.
-    per_doc = (
-        combined.groupBy("doc_id", "bucket", "__new", "__ev")
-        .agg(F.sum("tf").cast("long").alias("dl"))
-        .localCheckpoint(eager=True)
-    )
-    st = per_doc.agg(
-        F.count(F.when(F.col("__ev"), 1)).alias("ev_n"),
-        F.sum(F.when(F.col("__ev"), F.col("dl"))).alias("ev_s"),
-        F.count(F.when(F.col("__new"), 1)).alias("nw_n"),
-        F.sum(F.when(F.col("__new"), F.col("dl"))).alias("nw_s"),
-    ).first()
     # df counters by UNION + one groupBy — no join: the old table's rows
     # carry their df, placed rows +1, evicted rows −1, one shuffle total
     old_df = read_df_table(spark, path)
@@ -549,27 +542,26 @@ def cdc_bm25_update(
         .agg(F.sum("df").alias("df"))
         .filter(F.col("df") > 0)
     )
-    g = read_globals(spark, path)
-    n_docs = int(g["n_docs"]) - int(st["ev_n"] or 0) + int(st["nw_n"] or 0)
-    sum_dl = int(g["sum_dl"]) - int(st["ev_s"] or 0) + int(st["nw_s"] or 0)
 
     # --- stage touched buckets + meta, then publish --------------------
-    # the three staged outputs share no paths and all derive from the
+    # the two staged outputs share no paths and both derive from the
     # checkpointed frame, so they run as CONCURRENT Spark jobs — the
-    # publish (pointer swap) still happens only after every one landed
-    kept = combined.filter(~F.col("__ev")).select(
-        "doc_id", "token", "tf", "positions", "bucket"
-    )
-    # kept docs carry exactly one per_doc group (new XOR old-kept), so
-    # the filtered rollup IS the new doclen rows — no second groupBy
-    kept_dl = per_doc.filter(~F.col("__ev")).select("doc_id", "dl", "bucket")
+    # publish (pointer swap) still happens only after both landed. The
+    # bucket write drops the evicted rows and observes the fold counters
+    # (r14: a doc's rows share their flags per source branch, so each
+    # doc counts once per image, new and/or old — distinct-free).
+    counters = Observation()
     meta_v = ptr["meta"] + 1
     # the CLAIMED meta slot (≥ the hint) comes back from _write_meta
     meta_v, (p_entries, d_entries) = run_concurrent(
         spark,
         functools.partial(_write_meta, spark, path, meta_v, new_df),
-        functools.partial(_write_buckets_fused, path, kept, touched, ptr, kept_dl),
+        functools.partial(_write_buckets_fused, path, combined, touched, ptr, counters),
     )
+    st = counters.get
+    g = read_globals(spark, path)
+    n_docs = int(g["n_docs"]) - int(st["ev_n"] or 0) + int(st["nw_n"] or 0)
+    sum_dl = int(g["sum_dl"]) - int(st["ev_s"] or 0) + int(st["nw_s"] or 0)
     nxt = {
         "meta": meta_v,
         "postings": {
@@ -603,6 +595,18 @@ def cdc_bm25_update(
 # --- search ----------------------------------------------------------------
 
 
+def _matched_postings(post: DataFrame) -> tuple[DataFrame, list[int]]:
+    """``post`` (term-matched postings) checkpointed — a search scans it
+    twice, for the doclen bucket set and for the match — with the
+    buckets it hits (≤ N_BUCKETS values) observed on the checkpoint's
+    own job: the doclen read is pruned to them with no probe job."""
+    obs = Observation()
+    post = post.observe(obs, F.collect_set("bucket").alias("bs")).localCheckpoint(
+        eager=True
+    )
+    return post, sorted(int(b) for b in obs.get["bs"])
+
+
 def bm25_search(
     spark: SparkSession,
     path: str,
@@ -621,23 +625,15 @@ def bm25_search(
     compiled by Spark's InferWindowGroupLimit to
     ``TakeOrderedAndProject(limit=k)`` — pinned in tests/test_plans.py.
     """
-    from pyspark.sql import Window
-
     g = read_globals(spark, path)
     n_docs, sum_dl = int(g["n_docs"]), int(g["sum_dl"])
     avgdl = float(sum_dl) / n_docs if n_docs else 0.0
     ptr = read_ptr(path)
     df_t = read_df_table(spark, path).filter(F.col("token").isin(*terms))
-    tf = (
+    tf, hit_buckets = _matched_postings(
         _read_table(spark, path, "postings", _POSTINGS_SCHEMA, ptr)
         .filter(F.col("token").isin(*terms))
         .select("doc_id", "token", "tf", "bucket")
-        .localCheckpoint(eager=True)  # scanned twice: bucket probe + join
-    )
-    # collect_set in one full aggregate (≤ N_BUCKETS values) instead of
-    # distinct().collect(): one Spark job, no exchange materialization
-    hit_buckets = sorted(
-        int(b) for b in tf.agg(F.collect_set("bucket")).first()[0]
     )
     dl = _read_table(spark, path, "doclen", _DOCLEN_SCHEMA, ptr, hit_buckets).select(
         "doc_id", "dl"
@@ -689,8 +685,6 @@ def bm25_phrase_search(
     registered ``text_bm25_phrase_search`` so the DuckDB oracle can
     gate a CDC-maintained index byte-for-byte.
     """
-    from pyspark.sql import Window
-
     ptr = read_ptr(path)
     if not ptr["pos"]:
         raise ValueError(
@@ -701,15 +695,10 @@ def bm25_phrase_search(
     n_docs, sum_dl = int(g["n_docs"]), int(g["sum_dl"])
     avgdl = float(sum_dl) / n_docs if n_docs else 0.0
     ph = phrase_df(spark, phrase)
-    post = (
+    post, hit_buckets = _matched_postings(
         _read_table(spark, path, "postings", _POSTINGS_SCHEMA, ptr)
         .filter(F.col("token").isin(*phrase))
         .select("doc_id", "token", "positions", "bucket")
-        .localCheckpoint(eager=True)  # scanned twice: bucket probe + match
-    )
-    # same single-job probe as bm25_search (≤ N_BUCKETS values)
-    hit_buckets = sorted(
-        int(b) for b in post.agg(F.collect_set("bucket")).first()[0]
     )
     occ = (
         post.join(F.broadcast(ph), post["token"] == ph["term"])

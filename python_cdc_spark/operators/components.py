@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: edge-count ceiling for the single-task union-find path. One task
@@ -113,11 +113,17 @@ def connected_components(
     # edge pipeline (for verified near-dup pairs, the entire LSH +
     # verify plan — doubled work and doubled broadcasts; the r10 gates
     # wave caught the doubled copy amplifying a driver OOM at sf10).
-    # Lazy checkpoint: the count() below is the materializing action.
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    ).localCheckpoint(eager=False)
-    if e.count() <= _LOCAL_CC_MAX_EDGES:
+    # The edge count that picks the plan is observed on the checkpoint's
+    # own job.
+    n_edges = Observation()
+    e = (
+        edges.select(
+            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
+        )
+        .observe(n_edges, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    if n_edges.get["n"] <= _LOCAL_CC_MAX_EDGES:
         # re-used across plan branches by every caller → checkpoint so
         # the union-find task runs once, not once per branch
         return _components_single_task(e).localCheckpoint(eager=False)

@@ -38,13 +38,14 @@ from python_cdc_spark.functions.text import (
     word_ngrams_from_tokens,
 )
 
-def _spread(df: DataFrame) -> DataFrame:
+def _spread(df: DataFrame, *cols: str) -> DataFrame:
     """Ensure at least default-parallelism partitions before an
     expression-heavy narrow stage (hash-work per row dwarfs the shuffle
-    cost of a few KB of text)."""
+    cost of a few KB of text). With ``cols`` the rows are hash-spread on
+    them, so a later aggregation keyed on them needs no shuffle."""
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
+        return df.repartition(sc.defaultParallelism, *cols)
     return df
 
 
@@ -64,7 +65,11 @@ def _gram_cells(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     into a column before the gram transform — inline tokenization
     re-runs the regex split per gram element (r13: 12.6 s -> 0.45 s
     for the sf0.1 gram pass; see word_ngrams_from_tokens)."""
-    base = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")))
+    # spread on the id: the per-document aggregations over the cells
+    # (signatures, set sizes) then run without a shuffle
+    base = _spread(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")), "id"
+    )
     toked = base.select("id", tokens(F.col("__text")).alias("__toks"))
     return toked.select(
         "id",

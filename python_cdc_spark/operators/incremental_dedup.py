@@ -74,14 +74,14 @@ from __future__ import annotations
 import functools
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from python_cdc_spark import fsops
-from python_cdc_spark.functions.digest import content_tag
+from python_cdc_spark.functions.digest import content_tag, tagged_checkpoint
+from python_cdc_spark.io import write_tables
 from python_cdc_spark.operators.components import connected_components
 from python_cdc_spark.operators.dedup import _gram_cells, minhash_signatures
-from python_cdc_spark.session import run_concurrent
 
 _N, _K, _BANDS, _THRESHOLD = 3, 8, 4, 0.5
 _TABLES = ("cells", "bands", "sizes")
@@ -167,7 +167,10 @@ def _delta_tables(
     # fold casts); enforcing it here lets every read use the fixed
     # ``_TABLE_SCHEMAS`` instead of paying schema inference per dir
     docs = docs.select(F.col(id_col).cast("long").alias(id_col), text_col)
-    cells = _gram_cells(docs, text_col, id_col, _N).localCheckpoint(eager=False)
+    # not checkpointed: the cells are spread on the id, so the signature
+    # and size aggregations run in the tokenizing tasks, and one write of
+    # the three tables reuses that one shuffle
+    cells = _gram_cells(docs, text_col, id_col, _N)
     sigs = minhash_signatures(
         docs, text_col, id_col, n=_N, k=_K, one_permutation=True, cells=cells
     )
@@ -316,12 +319,11 @@ def read_index_tables(
 
     The evicted-id set at a generation boundary depends only on the set
     of strictly-later delta dirs — not on which table is being read —
-    so one distinct frame per boundary, lazily checkpointed, is shared
-    by every table in ``names``: the first consumer materializes the
-    scan+distinct once, later consumers only re-broadcast the
-    checkpointed partitions (r13: a fold read all three tables through
-    separate calls and paid the evicted scan + distinct exchange +
-    broadcast build three times per boundary)."""
+    so one frame per boundary is shared by every table in ``names``,
+    and a plan reading several of them broadcasts it once (r13: a fold
+    read all three tables through separate calls and paid the evicted
+    scan and broadcast build three times per boundary). It needs no
+    distinct: an id listed twice anti-joins the same rows."""
     ptr = _read_base_ptr(path)
     deltas = _committed_delta_dirs(path, ptr)
     evs = [
@@ -336,13 +338,7 @@ def read_index_tables(
         if not later:
             return None
         if later not in ev_frames:
-            ev_frames[later] = (
-                spark.read.schema(_EVICTED_SCHEMA)
-                .parquet(*later)
-                .select("id")
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
+            ev_frames[later] = spark.read.schema(_EVICTED_SCHEMA).parquet(*later)
         return ev_frames[later]
 
     out: dict[str, DataFrame] = {}
@@ -479,10 +475,9 @@ def build_dedup_index(
     base, nxt = _claim_base(
         path,
         nxt,
-        lambda stage: [
-            t.write.mode("overwrite").parquet(os.path.join(stage, sub))
-            for t, sub in zip(_delta_tables(docs, text_col, id_col), _TABLES)
-        ],
+        lambda stage: write_tables(
+            dict(zip(_TABLES, _delta_tables(docs, text_col, id_col))), stage
+        ),
     )
     # exact corpus size recorded in the pointer: folds derive their
     # reroute denominator from metadata instead of scanning sizes
@@ -614,9 +609,9 @@ def incremental_dedup_update(
     new_comp = new_comp.localCheckpoint(eager=True)  # sever lineage before swap
 
     # fold the delta in all-or-nothing: write the three tables into the
-    # tag's subdirectory, then the _COMMITTED marker (atomic create)
-    for name, df in (("cells", d_cells), ("bands", d_bands), ("sizes", d_sizes)):
-        df.write.mode("overwrite").parquet(os.path.join(delta_dir, name))
+    # tag's subdirectory (one job), then the _COMMITTED marker (atomic
+    # create)
+    write_tables(dict(zip(_TABLES, (d_cells, d_bands, d_sizes))), delta_dir)
     fsops.write_marker(os.path.join(delta_dir, "_COMMITTED"), str(tag))
     _swap_components(path, new_comp)
     return new_comp
@@ -644,53 +639,6 @@ def _corpus_count(spark: SparkSession, path: str, ptr: dict) -> int | None:
             return None
         n += int(c.get("new", 0)) - int(c.get("evicted", 0))
     return max(n, 0)
-
-
-def _cdc_delta_fingerprint_and_width(
-    delta: DataFrame, id_col: str, op_col: str, text_col: str
-) -> tuple[str, int, int, int]:
-    """``(tag, distinct id count, evicted id count, placed id count)``
-    from ONE aggregate action. The tag is a content tag for the CDC
-    delta: like ``_delta_fingerprint`` but the digest covers (op, id,
-    TEXT) — op so an INSERT-then-DELETE of the same ids in two later
-    folds cannot collide, and text (r10 ADVICE) so a second UPDATE wave
-    over the same id multiset with different content cannot alias an
-    earlier fold's tag and rewrite its generation (which would let later
-    generations' evicted lists suppress the newest images). The fold
-    needs all four (the tag names
-    the delta dir; the width feeds the reroute-fraction check; the
-    evicted/placed counts maintain the pointer-tracked corpus size),
-    and fusing them saves whole Spark jobs per fold (r13 pass)."""
-    key = F.concat_ws(
-        ":",
-        F.col(op_col),
-        F.col(id_col).cast("string"),
-        F.coalesce(F.col(text_col), F.lit("\x00")),
-    )
-    tag, row = content_tag(
-        delta,
-        key,
-        # width = |evicted ∪ new ids| exactly: UPDATE/DELETE ids evict,
-        # INSERT/UPDATE ids place — rows with any other op count for
-        # the tag (content digest) but not for the reroute width
-        F.countDistinct(
-            F.when(
-                F.col(op_col).isin("INSERT", "UPDATE", "DELETE"), F.col(id_col)
-            )
-        ).alias("w"),
-        F.countDistinct(
-            F.when(F.col(op_col).isin("UPDATE", "DELETE"), F.col(id_col))
-        ).alias("ev"),
-        F.countDistinct(
-            F.when(F.col(op_col).isin("INSERT", "UPDATE"), F.col(id_col))
-        ).alias("nw"),
-    )
-    return (
-        tag,
-        int(row["w"] or 0),
-        int(row["ev"] or 0),
-        int(row["nw"] or 0),
-    )
 
 
 def cdc_dedup_index_update(
@@ -737,12 +685,22 @@ def cdc_dedup_index_update(
         F.col(op_col).alias("__op"),
         F.col(id_col).cast("long").alias(id_col),
         F.col(text_col).alias(text_col),
-    ).localCheckpoint(eager=False)
-    # one aggregate action yields the content tag, the delta's
-    # distinct-id width (reroute check input), and the evicted/placed
-    # id counts (pointer-tracked corpus-size maintenance)
-    tag, n_delta_ids, n_ev_ids, n_new_ids = _cdc_delta_fingerprint_and_width(
-        delta, id_col, "__op", text_col
+    )
+    # The content tag names the delta dir, observed on the delta's own
+    # checkpoint job. Its digest covers (op, id, TEXT): op so an
+    # INSERT-then-DELETE of the same ids in two later folds cannot
+    # collide, and text (r10 ADVICE) so a second UPDATE wave over the
+    # same id multiset with different content cannot alias an earlier
+    # fold's tag and rewrite its generation (which would let later
+    # generations' evicted lists suppress the newest images).
+    delta, tag, _ = tagged_checkpoint(
+        delta,
+        F.concat_ws(
+            ":",
+            F.col("__op"),
+            F.col(id_col).cast("string"),
+            F.coalesce(F.col(text_col), F.lit("\x00")),
+        ),
     )
     if batch_tag is not None:
         tag = batch_tag
@@ -758,36 +716,38 @@ def cdc_dedup_index_update(
         seq = max(seq, g + 1)
     delta_dir = os.path.join(root, f"g{seq:06d}-{tag}")
 
-    # lazy checkpoint: the parquet write below materializes it
-    evicted = (
-        delta.filter(F.col("__op").isin("UPDATE", "DELETE"))
-        .select(F.col(id_col).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    # one row per delta id with what its ops do: UPDATE/DELETE evict,
+    # INSERT/UPDATE place (rows with any other op count for the tag but
+    # nowhere else). Its checkpoint job observes the delta's distinct-id
+    # counts: the width feeds the reroute-fraction check, the
+    # evicted/placed counts the pointer-tracked corpus size.
+    op = F.col("__op")
+    widths = Observation()
+    counted = F.col("id").isNotNull()
+    ids = (
+        delta.groupBy(F.col(id_col).alias("id"))
+        .agg(
+            F.max(op.isin("UPDATE", "DELETE")).alias("ev"),
+            F.max(op.isin("INSERT", "UPDATE")).alias("nw"),
+            F.max(op.isin("INSERT", "UPDATE", "DELETE")).alias("any"),
+        )
+        .observe(
+            widths,
+            *[F.count(F.when(counted & F.col(c), 1)).alias(c) for c in ("any", "ev", "nw")],
+        )
+        .localCheckpoint(eager=True)
     )
+    n_delta_ids, n_ev_ids, n_new_ids = (int(widths.get[c]) for c in ("any", "ev", "nw"))
+    evicted = ids.filter("ev").select("id")
     new_docs = delta.filter(F.col("__op").isin("INSERT", "UPDATE")).select(
         id_col, text_col
     )
     d_cells, d_bands, d_sizes = _delta_tables(new_docs, text_col, id_col)
-    d_bands = d_bands.localCheckpoint(eager=False)
-    # the four delta dirs are path-disjoint plans over a 1-delta-wide
-    # checkpointed frame — submit them as CONCURRENT jobs (guide §2.6:
-    # overlap independent jobs) instead of paying four job floors in
-    # sequence; the _COMMITTED marker still lands only after all four
-    writes = [
-        ("cells", d_cells),
-        ("bands", d_bands),
-        ("sizes", d_sizes),
-        ("evicted", evicted),
-    ]
-    run_concurrent(
-        spark,
-        *(
-            functools.partial(
-                df.write.mode("overwrite").parquet, os.path.join(delta_dir, name)
-            )
-            for name, df in writes
-        ),
+    # the four delta tables go out in ONE Spark write (io.write_tables);
+    # the _COMMITTED marker still lands only after it
+    write_tables(
+        {"cells": d_cells, "bands": d_bands, "sizes": d_sizes, "evicted": evicted},
+        delta_dir,
     )
     # corpus-size sidecar (metadata: feeds _corpus_count) rides in the
     # delta dir, before the marker so a committed delta always has it
@@ -832,9 +792,9 @@ def cdc_dedup_index_update(
             .distinct()
         )
         pairs = _verify_pairs(cand, post_cells, post_sizes, _THRESHOLD)
-        new_comp = connected_components(pairs, "id_a", "id_b").localCheckpoint(
-            eager=True
-        )
+        # checkpointed by connected_components, materialized by the swap's
+        # write: the result outlives the index directory
+        new_comp = connected_components(pairs, "id_a", "id_b")
         _swap_components(path, new_comp)
         return new_comp
     # partners: every doc whose band collides with a new image's band
@@ -893,9 +853,7 @@ def cdc_dedup_index_update(
             .distinct()
         )
         pairs = _verify_pairs(cand, post_cells, post_sizes, _THRESHOLD)
-        new_comp = connected_components(pairs, "id_a", "id_b").localCheckpoint(
-            eager=True
-        )
+        new_comp = connected_components(pairs, "id_a", "id_b")
         _swap_components(path, new_comp)
         return new_comp
     mb = post_bands.join(members, "id", "left_semi")

@@ -59,8 +59,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_cdc_spark import fsops
+from python_cdc_spark.io import write_tables
 from python_cdc_spark.operators.ann_index import META_FORMAT, index_is_current
-from python_cdc_spark.session import run_concurrent
 
 _DEC = "decimal(30,10)"
 _KINDS = ("sum", "count", "min", "max", "hll")
@@ -200,7 +200,6 @@ class RollupCatalog:
         src: DataFrame,
         dims: dict[str, str],
         measures: dict[str, tuple[str, str]],
-        checkpoint: bool = False,
     ) -> tuple[DataFrame, dict[str, DataFrame]]:
         """Cube tables (scalar partials incl. the hidden support count,
         hll register tables) from ``src`` raw rows.
@@ -210,9 +209,7 @@ class RollupCatalog:
         scalar kind (decimal sum, count, min/max, support) re-aggregates
         exactly over the bucket sub-groups, and the pre-aggregate IS the
         register table. That halves the dominant cost of both a full
-        build and a state-path refresh (two scans → one). ``checkpoint``
-        eagerly materializes the register-scale pre-aggregate so the two
-        downstream writes don't re-run the scan. With zero or several
+        build and a state-path refresh (two scans → one). With zero or several
         hll measures the per-table plans run as before (several hll
         measures hash different expressions — no shared grouping)."""
         from python_cdc_spark.queries.sketches import _mix32
@@ -238,11 +235,15 @@ class RollupCatalog:
         rho = F.when(w == 0, F.lit(rest + 1)).otherwise(
             F.lit(rest + 1) - F.length(F.bin(w))
         )
-        pre = src.groupBy(*dim_cols, (h % _HLL_M).alias("bucket")).agg(
-            *build, F.max(rho).cast("int").alias("r")
+        # A lazy checkpoint: the version's fused write (one job for both
+        # tables) computes it once and both tables read it. Without one,
+        # column pruning would split it into two differently-pruned
+        # aggregates, each with its own shuffle.
+        pre = (
+            src.groupBy(*dim_cols, (h % _HLL_M).alias("bucket"))
+            .agg(*build, F.max(rho).cast("int").alias("r"))
+            .localCheckpoint(eager=False)
         )
-        if checkpoint:
-            pre = pre.localCheckpoint(eager=True)
         scalar_df = pre.groupBy(*list(dims)).agg(*merge)
         regs = pre.select(*list(dims), "bucket", "r")
         return scalar_df, {alias: regs}
@@ -264,27 +265,17 @@ class RollupCatalog:
         footer inference Spark runs per schemaless read — r13
         job-floor pass; measured 1 job per spark.read.parquet call)."""
         out = fsops.staging(os.path.join(self.base_dir, name))
-        jobs = []
-        if scalar_df is not None:
-            jobs.append(("data", scalar_df))
-        jobs.extend((f"hll_{a}", df) for a, df in hll_dfs.items())
-        schemas = {sub: df.schema.json() for sub, df in jobs}
-        # The version's tables are independent plans writing to disjoint
-        # subdirectories — submit them as CONCURRENT Spark jobs. For an
-        # incremental refresh each job is small and overhead-bound
-        # (planning + commit, not scan), so overlapping them roughly
-        # halves the wall clock; for a full build the scans time-share
-        # the executor cores with no correctness interaction. The
-        # version is not live until _commit_meta swaps the pointer, so
-        # a failure in any job (re-raised here) leaves only an orphaned
-        # dir for the next attempt's rmtree.
-        run_concurrent(
-            self.spark,
-            *(
-                functools.partial(df.write.parquet, os.path.join(out, sub))
-                for sub, df in jobs
-            ),
-        )
+        tables = {"data": scalar_df} if scalar_df is not None else {}
+        tables.update((f"hll_{a}", df) for a, df in hll_dfs.items())
+        schemas = {sub: df.schema.json() for sub, df in tables.items()}
+        # The version's tables go out in ONE Spark write (io.write_tables):
+        # they share the cube's upstream plan (the (dims, bucket)
+        # pre-aggregate of a one-hll cube), so one job runs it once where
+        # per-table writes ran it per table, and pay one write job floor.
+        # The version is not live until _commit_meta swaps the pointer, so
+        # a failed write leaves only an orphaned dir for the next
+        # attempt's rmtree.
+        write_tables(tables, out)
         return fsops.claim(out, functools.partial(self._vdir, name), version), schemas
 
     def _read_version_table(self, name: str, meta: dict, sub: str) -> DataFrame:
@@ -339,8 +330,7 @@ class RollupCatalog:
         # the hidden support count is always materialized (even for
         # hll-only cubes): group liveness under deletes needs it
         scalar_df, hll_dfs = self._build_tables(
-            src, dims, {a: tuple(v) for a, v in measures.items()},
-            checkpoint=True,
+            src, dims, {a: tuple(v) for a, v in measures.items()}
         )
         version, schemas = self._write_version(name, version, scalar_df, hll_dfs)
         self._commit_meta(
@@ -585,9 +575,7 @@ class RollupCatalog:
                 # complete unpartitioned state: a direct rebuild is one
                 # scan with no old-cube read — the measured-faster plan
                 self.last_refresh_plan = "full_rebuild"
-                scalar_df, hll_dfs = self._build_tables(
-                    state, dims, measures, checkpoint=True
-                )
+                scalar_df, hll_dfs = self._build_tables(state, dims, measures)
                 self._publish_refresh(name, meta, tok, scalar_df, hll_dfs, batch_id)
                 return
             if state_path is None:
@@ -700,12 +688,9 @@ class RollupCatalog:
                     )
 
             # one-scan rebuild of the affected groups (shared (dims,
-            # bucket) pre-aggregate when the cube has one hll measure;
-            # eagerly checkpointed at register scale so the table
-            # writes don't re-scan the pruned state)
-            rebuilt, reb_hll = self._build_tables(
-                pruned, dims, measures, checkpoint=True
-            )
+            # bucket) pre-aggregate when the cube has one hll measure,
+            # run once by the version's fused write)
+            rebuilt, reb_hll = self._build_tables(pruned, dims, measures)
             scalar_df = untouched.select(cols).unionByName(
                 rebuilt.select(cols)
             )
@@ -790,6 +775,12 @@ class RollupCatalog:
         params = meta["params"]
         scalar = [m for m in measures if params["measures"][m][0] != "hll"]
         hll = [m for m in measures if params["measures"][m][0] == "hll"]
+        # At the rollup's own grain every stored table already holds one
+        # row per group (one per group and hll bucket for registers) —
+        # every write path groups or unions disjoint group sets — so the
+        # re-aggregation would be an identity and its shuffle is skipped.
+        # Stored partials already carry the re-aggregated types.
+        exact = set(dims) == set(params["dims"])
 
         def checked_filter(frame: DataFrame) -> DataFrame:
             # Analysis-time guard on the predicate SQL itself (not just
@@ -822,13 +813,15 @@ class RollupCatalog:
                     aggs.append(F.min(col).alias(alias))
                 else:
                     aggs.append(F.max(col).alias(alias))
-            parts.append(df.groupBy(*dims).agg(*aggs))
+            parts.append(
+                df.select(*dims, *scalar) if exact else df.groupBy(*dims).agg(*aggs)
+            )
         for alias in hll:
             regs = self._read_version_table(name, meta, f"hll_{alias}")
             if predicate:
                 regs = checked_filter(regs)
             # fold away the dims being rolled up: registers merge by MAX
-            folded = regs.groupBy(*dims, "bucket").agg(
+            folded = regs if exact else regs.groupBy(*dims, "bucket").agg(
                 F.max("r").cast("int").alias("r")
             )
             parts.append(

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from python_cdc_spark.cdc.apply import apply_changes_typed, latest_per_key
 from python_cdc_spark.cdc.feed import events_as_cdc_feed
-from python_cdc_spark.io import table
+from python_cdc_spark.io import table, write_partitioned
 from python_cdc_spark.cdc.scd2 import scd2_history
 from python_cdc_spark.queries.helpers import dec_sum
 from python_cdc_spark.queries.registry import register
@@ -276,7 +276,7 @@ def cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "feed is split at the median LSN, a cube (count/sum/max + HLL "
     "distinct-users sketch) is built over the prefix state, and the "
     "I/U/D suffix folds in as SIGNED row-image deltas "
-    "(cdc/ivm.signed_state_deltas -> plans/rollup.refresh_cdc). The "
+    "(the touched keys' before/after rows -> plans/rollup.refresh_cdc). The "
     "oracle aggregates the fully-applied final state directly, so the "
     "gate proves maintained-cube == direct-rebuild through inserts, "
     "updates, TOAST carry-forward, and deletes",
@@ -295,25 +295,37 @@ def rollup_cdc_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
 
-    from python_cdc_spark.cdc.ivm import signed_state_deltas
+    from python_cdc_spark.cdc.apply import apply_changes_typed_split
+    from python_cdc_spark.io import column_range
     from python_cdc_spark.operators.ann_index import source_fingerprint
     from python_cdc_spark.plans.rollup import RollupCatalog, finalize_sum_double
 
     types = {"value": "double", "event_type": "string"}
     feed = events_as_cdc_feed(spark, sf_dir)
-    # deterministic split point: midpoint of the LSN range (one
-    # metadata-scale row to the driver); the maintained result is
-    # split-independent, which is exactly what the oracle checks
-    lo, hi = feed.agg(F.min("lsn"), F.max("lsn")).first()
+    # deterministic split point: midpoint of the LSN range, read from the
+    # events file's footer statistics (the feed's lsn IS event_id; no
+    # Spark job); the maintained result is split-independent, which is
+    # exactly what the oracle checks
+    lo, hi = column_range(spark, sf_dir, "events", "event_id")
     split = (int(lo) + int(hi)) // 2
-    base = feed.filter(F.col("lsn") <= split)
-    delta = feed.filter(F.col("lsn") > split)
-    # each state feeds several consumers (cube build scans the scalar
-    # and register tables separately; the refresh reads plus/minus/
-    # state) — materialize the two window-heavy folds ONCE instead of
-    # letting the lazy DAG recompute them per consumer
-    state0 = apply_changes_typed(base, "key", types).localCheckpoint(eager=True)
-    state1 = apply_changes_typed(feed, "key", types).localCheckpoint(eager=True)
+    # both states from ONE keyed fold (the feed carries no TRUNCATE),
+    # materialized once: the cube build scans state0, the refresh reads
+    # plus/minus/state1. The signed deltas are the touched keys' rows
+    # of each state (cdc/ivm.signed_state_deltas' contract), here a
+    # filter on the fold's own flag instead of a join with the delta
+    both = apply_changes_typed_split(feed, "key", types, split).localCheckpoint(
+        eager=True
+    )
+
+    def rows(side: str, cond) -> DataFrame:
+        return both.filter(cond).select(
+            "key", *[F.col(f"{side}.{c}").alias(c) for c in ("last_lsn", *types)]
+        )
+
+    state0 = rows("before", F.col("before.live"))
+    state1 = rows("after", F.col("after.live"))
+    plus = rows("after", F.col("touched") & F.col("after.live"))
+    minus = rows("before", F.col("touched") & F.col("before.live"))
 
     cache_key = hashlib.md5(
         os.path.abspath(sf_dir.rstrip("/")).encode()
@@ -334,7 +346,6 @@ def rollup_cdc_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         fingerprint=source_fingerprint(os.path.join(sf_dir, "events.parquet")),
     )
-    plus, minus = signed_state_deltas(state0, state1, delta.select("key"), ["key"])
     # deliberately exercise the affected-group FOLD on complete state —
     # this gate checks the fold's algebra every round; the economics
     # warning (pass state_complete/state_path at scale) is expected here
@@ -565,7 +576,7 @@ def rollup_cdc_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = os.path.join(root, "state1")
     # the post-apply state as the apply pipeline would persist it:
     # hive-partitioned by the dim-derived band column
-    state1.write.mode("overwrite").partitionBy("key_band").parquet(state_dir)
+    write_partitioned(state1, state_dir, ["key_band"])
 
     cat = RollupCatalog(spark, os.path.join(root, "cubes"))
     cat.define(
@@ -1230,10 +1241,7 @@ def _composite_from_wire(
     # (from state0) touch disjoint paths — two more concurrent jobs
     run_concurrent(
         spark,
-        functools.partial(
-            state1.write.mode("overwrite").partitionBy("key_band").parquet,
-            state_dir,
-        ),
+        functools.partial(write_partitioned, state1, state_dir, ["key_band"]),
         functools.partial(
             cat.define,
             "e2e_cube",

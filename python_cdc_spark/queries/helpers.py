@@ -69,16 +69,20 @@ CDC_CORPUS_CTES = """bounds AS (SELECT (MAX(doc_id) * 3) // 5 AS b FROM document
     )"""
 
 
-def cdc_corpus_split(docs):
+def cdc_corpus_split(spark, sf_dir: str):
     """The Spark side of ``CDC_CORPUS_CTES`` (r10 ADVICE: one
     definition so the maintained-index gates cannot drift from the
-    shared oracle corpus). Returns ``(base, delta)``: the pre-CDC base
-    corpus (doc_id < the ~60% boundary) and the I/U/D delta whose fold
-    over it yields exactly the oracle's ``corpus`` CTE."""
+    shared oracle corpus) over the ``documents`` table of ``sf_dir``.
+    Returns ``(base, delta)``: the pre-CDC base corpus (doc_id < the
+    ~60% boundary) and the I/U/D delta whose fold over it yields exactly
+    the oracle's ``corpus`` CTE. The boundary's ``MAX(doc_id)`` comes
+    from the parquet footers (``io.column_range``), not a Spark job."""
     from pyspark.sql import functions as F
 
-    max_id = docs.agg(F.max("doc_id")).first()[0]
-    b = (int(max_id) * 3) // 5
+    from python_cdc_spark.io import column_range, table
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    b = (int(column_range(spark, sf_dir, "documents", "doc_id")[1]) * 3) // 5
     is_upd = (F.col("doc_id") < b) & (F.col("doc_id") % 17 == 0)
     is_del = (
         (F.col("doc_id") < b)

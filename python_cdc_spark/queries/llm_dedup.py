@@ -746,8 +746,7 @@ def dedup_index_cdc_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from python_cdc_spark.operators.ann_index import source_fingerprint
     from python_cdc_spark.queries.helpers import cached_pristine_base, cdc_corpus_split
 
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    base, delta = cdc_corpus_split(docs)
+    base, delta = cdc_corpus_split(spark, sf_dir)
     # gate-cost separation (r10 verdict #3): base index cached pristine
     # per testdata fingerprint; each run copies it and pays only the fold
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
@@ -758,7 +757,8 @@ def dedup_index_cdc_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         cached_pristine_base(
             cache, fp, {"v": 2}, lambda d: build_dedup_index(spark, base, d), work
         )
-        # eagerly checkpointed inside the update → outlives the tempdir
+        # checkpointed inside the update and materialized by its
+        # components write → outlives the tempdir
         return cdc_dedup_index_update(spark, work, delta)
 
 
@@ -1144,5 +1144,6 @@ def dedup_fold_narrow_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             cache, fp, {"v": 2, "scope": "full"},
             lambda d: build_dedup_index(spark, docs, d), work,
         )
-        # eagerly checkpointed inside the update → outlives the tempdir
+        # checkpointed inside the update and materialized by its
+        # components write → outlives the tempdir
         return cdc_dedup_index_update(spark, work, delta)

@@ -553,8 +553,7 @@ def _folded_bm25_index(spark: SparkSession, sf_dir: str, refold: bool = False) -
     hit = _BM25_FOLDED_CACHE.get(key)
     if not refold and hit and os.path.isfile(os.path.join(hit, "_ptr")):
         return hit
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    base, delta = cdc_corpus_split(docs)
+    base, delta = cdc_corpus_split(spark, sf_dir)
     cache_key = hashlib.md5(key[0].encode()).hexdigest()[:16]
     cache = os.path.join(".bm25_cache", cache_key)
     if hit:

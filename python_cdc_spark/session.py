@@ -19,7 +19,7 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 
@@ -121,3 +121,19 @@ def run_concurrent(spark: SparkSession, *fns: Callable[[], Any]) -> list:
         futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
     # leaving the block waited for every worker
     return [f.result() for f in futures]
+
+
+def cluster(df: DataFrame, cols: list, groups: int | None = None) -> DataFrame:
+    """``df`` hash-partitioned on ``cols`` into ``min(groups,
+    defaultParallelism)`` tasks (executor width when ``groups`` is
+    None): the one layout of a partitioned write.
+
+    ``groups`` is how many output groups (partition directories, state
+    buckets) the write holds. All rows of a group land in one task, so
+    each group gets exactly one file. The count is explicit because AQE
+    coalesces a small keyed shuffle into as few tasks as its bytes
+    need, often one, which then writes every directory serially; an
+    explicit count is never coalesced."""
+    par = int(df.sparkSession.sparkContext.defaultParallelism)
+    width = par if groups is None else min(int(groups), par)
+    return df.repartition(max(1, width), *cols)

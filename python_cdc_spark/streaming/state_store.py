@@ -101,6 +101,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from python_cdc_spark import fsops
+from python_cdc_spark.session import cluster
 
 _MANIFEST = "_manifest.json"
 #: on-disk layout version every manifest records (module docstring)
@@ -127,6 +128,9 @@ class BucketedStateStore:
         #: kind ("base", "run" or "compaction"), buckets changed, rows
         #: written and the deepest bucket's run count after it
         self.last_commit: dict | None = None
+        #: ``((version, manifest token), frame)`` of the last whole-state
+        #: read (:meth:`read`)
+        self._read_memo: tuple | None = None
 
     # -- manifest ---------------------------------------------------------
 
@@ -194,8 +198,22 @@ class BucketedStateStore:
         """Current state as a DataFrame (``bucket`` is a data column), or
         ``None`` if the store holds no state. ``buckets`` restricts the
         read to those buckets: only the version dirs holding them are
-        scanned, each filtered to its live buckets (:meth:`_scan`)."""
-        return self._read(self._load_manifest(), buckets)
+        scanned, each filtered to its live buckets (:meth:`_scan`).
+
+        The whole-state read is built once per committed manifest and
+        reused until the next commit: building a layered read's fold
+        plan costs planning time on every call, and a version's files never
+        change. The key is the manifest version and the manifest file's
+        identity token, so a store rebuilt at the same version number is
+        read afresh."""
+        manifest, tok = self._load_manifest_with_token()
+        if buckets is not None:
+            return self._read(manifest, buckets)
+        key = (manifest["version"], tok)
+        memo = self._read_memo
+        if memo is None or memo[0] != key:
+            memo = self._read_memo = (key, self._read(manifest, None))
+        return memo[1]
 
     def read_at(self, version: int, buckets: list[int] | None = None) -> DataFrame | None:
         """Time travel: the state exactly as committed at ``version``.
@@ -289,8 +307,7 @@ class BucketedStateStore:
         the same ``touched``, hands the commit a plan whose partitioning
         already matches, so Spark drops the commit's repartition and the
         caller's work between the two runs inside the write tasks."""
-        par = int(self.spark.sparkContext.defaultParallelism)
-        return df.repartition(max(1, min(len(touched), par)), "bucket")
+        return cluster(df, ["bucket"], len(touched))
 
     def commit(
         self,

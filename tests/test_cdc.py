@@ -132,6 +132,49 @@ def test_apply_changes_order_invariant(spark):
     ]
 
 
+def test_split_fold_matches_apply_typed_on_both_halves(spark):
+    """``apply_changes_typed_split`` folds both states in one aggregate:
+    its ``before`` rows equal ``apply_changes_typed`` of the prefix and
+    its ``after`` rows that of the whole feed, through TOAST
+    carry-forward, a NULL cell, an all-sentinel UPDATE, delete and
+    re-insert across the split, and keys on one side only; ``touched``
+    marks the keys with events past the split."""
+    from python_cdc_spark.cdc.apply import apply_changes_typed_split
+
+    cols = {"name": "string", "v": "double"}
+    feed = _feed(spark, [
+        _ev(1, "INSERT", None, new={"id": "1", "name": "a", "v": "1.5"}),
+        _ev(2, "INSERT", None, new={"id": "2", "name": "b", "v": "2"}),
+        _ev(3, "UPDATE", None, new={"id": "1", "name": "[unchanged]", "v": None}),
+        _ev(4, "DELETE", None, old={"id": "2"}),
+        _ev(5, "UPDATE", None, new={"id": "1", "name": "[unchanged]", "v": "[unchanged]"}),
+        _ev(6, "INSERT", None, new={"id": "2", "name": "c"}),
+        _ev(7, "INSERT", None, new={"id": "3", "name": "d", "v": "7"}),
+        _ev(8, "DELETE", None, old={"id": "1"}),
+        _ev(9, "UPDATE", None, new={"id": "3", "v": "[unchanged]", "name": "e"}),
+    ]).localCheckpoint()
+    events = feed.select("lsn", "key").collect()
+
+    def typed(df):
+        return sorted(tuple(r) for r in apply_changes_typed(df, "key", cols).collect())
+
+    def side(rows, name):
+        return sorted(
+            (r["key"], *[r[name][c] for c in ("last_lsn", *cols)])
+            for r in rows
+            if r[name]["live"]
+        )
+
+    after = typed(feed)
+    for split in (2, 5, 7):  # before a delete, a sentinel-only update, a re-insert
+        rows = apply_changes_typed_split(feed, "key", cols, split).collect()
+        assert side(rows, "before") == typed(feed.filter(F.col("lsn") <= split))
+        assert side(rows, "after") == after
+        assert {r["key"] for r in rows if r["touched"]} == {
+            e["key"] for e in events if e["lsn"] > split
+        }
+
+
 def test_scd2_versions(spark):
     rows = [
         _ev(1, "INSERT", None, new={"id": "1", "s": "a"}),

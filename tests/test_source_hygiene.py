@@ -18,6 +18,10 @@
 - The streaming wire path resolves transaction origins inside the frame
   decode, so nothing under ``streaming/`` uses the Spark-side as-of
   (``annotate_origins``) or its filter (``filter_by_origin``).
+- Every partitioned write (``.write...partitionBy(...)``) writes a frame
+  clustered by ``session.cluster`` or by a ``repartition`` with an
+  explicit partition count: a keyed shuffle without one is coalesced by
+  AQE, often into one task that writes every directory serially.
 """
 
 from __future__ import annotations
@@ -60,3 +64,56 @@ def test_streaming_does_not_use_as_of_origins(name):
         or (isinstance(node, ast.Attribute) and node.attr == name)
     )
     assert offenders == [], f"{name} used under streaming/: {offenders}"
+
+
+#: calls that keep a frame's rows and partitioning between the
+#: clustering and the write
+_PARTITION_PRESERVING = {"observe", "sortWithinPartitions"}
+
+
+def _written_frame(partition_by: ast.Call):
+    """The frame ``<frame>.write[.mode(..)...].partitionBy(..)`` writes,
+    or None when the call is not on a writer (``Window.partitionBy``)."""
+    node = partition_by.func.value
+    while True:
+        if isinstance(node, ast.Attribute) and node.attr == "write":
+            return node.value
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            node = node.func.value  # .mode(..), .option(..), .format(..)
+        else:
+            return None
+
+
+def _call_name(node) -> str | None:
+    if not isinstance(node, ast.Call):
+        return None
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _clustered(frame) -> bool:
+    while _call_name(frame) in _PARTITION_PRESERVING:
+        frame = frame.func.value
+    name = _call_name(frame)
+    if name == "cluster":
+        return True
+    if name != "repartition" or not frame.args:
+        return False
+    count = frame.args[0]  # an explicit count comes first; a column does not
+    return not (
+        isinstance(count, ast.Starred)
+        or (isinstance(count, ast.Constant) and isinstance(count.value, str))
+        or _call_name(count) in ("col", "column", "expr")
+    )
+
+
+def test_partitioned_writes_are_clustered():
+    offenders = sorted(
+        f"{p.relative_to(PKG)}:{node.lineno}"
+        for p in PKG.rglob("*.py")
+        for node in ast.walk(ast.parse(p.read_text()))
+        if _call_name(node) == "partitionBy"
+        and (frame := _written_frame(node)) is not None
+        and not _clustered(frame)
+    )
+    assert offenders == [], f"partitioned writes without an explicit count: {offenders}"

@@ -262,6 +262,30 @@ def test_vacuum_prunes_old_snapshots(spark, store):
     assert snaps() == ["_manifest_v4.json"]
 
 
+def test_whole_state_read_is_built_once_per_commit(spark, tmp_path):
+    """Reads between two commits reuse one whole-state frame (a layered
+    read's fold plan is built once); a commit invalidates it, and
+    bucket-restricted reads and ``read_at`` are never served from it."""
+    store = BucketedStateStore(
+        spark, str(tmp_path / "state"),
+        fold=lambda df: df.groupBy("bucket", "key").agg(F.max("val").alias("val")),
+    )
+
+    def rows(df):
+        return sorted((r["key"], r["val"], r["bucket"]) for r in df.collect())
+
+    v1 = store.commit(_df(spark, [("a", 1, 0), ("b", 2, 1)]), [0, 1])
+    store.commit(_df(spark, [("a", 5, 0)]), [0, 1], compact=[])  # a run
+    first = store.read()
+    assert store.read() is first
+    assert rows(first) == [("a", 5, 0), ("b", 2, 1)]
+    assert store.read([1]) is not first
+    store.commit(_df(spark, [("c", 3, 1)]), [0, 1], compact=[])
+    assert store.read() is not first
+    assert rows(store.read()) == [("a", 5, 0), ("b", 2, 1), ("c", 3, 1)]
+    assert rows(store.read_at(v1)) == [("a", 1, 0), ("b", 2, 1)]
+
+
 def test_time_travel_read_at(spark, tmp_path):
     """read_at(v) must reproduce the state as of commit v while the
     retention window keeps its files; vacuum(retain_last) preserves

@@ -91,7 +91,6 @@ def corpus_scale_main() -> None:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from python_cdc_spark.io import table
     from python_cdc_spark.operators.bm25_index import (
         bm25_search,
         build_bm25_index,
@@ -104,8 +103,7 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/repo/.sf1"
     )
     spark = get_spark()
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    base, gate_delta = cdc_corpus_split(docs)
+    base, gate_delta = cdc_corpus_split(spark, sf_dir)
     gate_delta = gate_delta.localCheckpoint(eager=True)
 
     out: dict = {"metric": "bm25_cdc_delta_width_sweep", "sf_dir": sf_dir,

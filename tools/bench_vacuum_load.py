@@ -43,7 +43,6 @@ _PHRASE = ("merge", "join")
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from python_cdc_spark.io import table
     from python_cdc_spark.maintenance import vacuum
     from python_cdc_spark.operators.bm25_index import (
         bm25_phrase_search,
@@ -65,8 +64,7 @@ def main() -> None:
         else 3
     )
     spark = get_spark()
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    base, delta = cdc_corpus_split(docs)
+    base, delta = cdc_corpus_split(spark, sf_dir)
     delta = delta.withColumn(
         "__wave", F.pmod(F.crc32(F.col("doc_id").cast("string")), F.lit(folds))
     ).localCheckpoint(eager=True)
